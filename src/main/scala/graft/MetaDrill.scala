@@ -23,8 +23,6 @@ object MetaDrill {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // dynamic-partition writers: 1000 dirs per task
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       // keep the SEED's file fan-out: planned-write would re-shuffle on
       // the partition column and collapse each dir to one file
       .config("spark.sql.optimizer.plannedWrite.enabled", "false")
@@ -362,7 +360,7 @@ object SqlScaleDrill {
 
     timed(s"seed $rows rows (sized fan-in)") {
       Upsert.upsert(spark, t, fact(0, rows), Seq("k"),
-        partitionCols = Seq("part"), partitionManifests = true)
+        partitionCols = Seq("part"))
     }
     println("[drill] seed files = " +
       PartitionSnapshots.filesMeta(spark, t).count())

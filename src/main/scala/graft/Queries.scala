@@ -2347,7 +2347,7 @@ object Queries {
       .select(col("c_custkey"), (col("c_acctbal") + lit(500.0)).as("c_acctbal"),
         lit("MOVED").as("c_mktsegment"))
     Upsert.upsert(s, path, delta, Seq("c_custkey"),
-      partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+      partitionCols = Seq("c_mktsegment"))
     Upsert.read(s, path)
       .select(col("c_custkey"), col("c_acctbal"),
         col("c_mktsegment").cast("string").as("c_mktsegment"))
@@ -2375,7 +2375,7 @@ object Queries {
         .select(col("c_custkey"), (col("c_acctbal") * 2).as("c_acctbal"),
           col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", d1, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       val d2 = t(s, dir, "customer")
         .where(col("c_custkey") <= 200 && col("c_custkey") % 3 === 0)
         .select(col("c_custkey"), (col("c_acctbal") + lit(1000.0)).as("c_acctbal"),
@@ -2429,7 +2429,7 @@ object Queries {
       .select(col("c_custkey"), (col("c_acctbal") + lit(500.0)).as("c_acctbal"),
         lit("MOVED").as("c_mktsegment"))
     Upsert.upsert(s, path, delta, Seq("c_custkey"),
-      partitionCols = Seq("c_mktsegment"), partitionManifests = true,
+      partitionCols = Seq("c_mktsegment"),
       audit = Some(df => Expectations.check(df, Seq(
         Expectations.NotNull("c_custkey"),
         Expectations.UniqueKey(Seq("c_custkey")),
@@ -2452,7 +2452,7 @@ object Queries {
       val seed = t(s, dir, "customer").where(col("c_custkey") <= 400)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/silver", seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       val g1 = graft.sources.PartitionSnapshots.read(s, s"$base/silver")
         .groupBy(col("c_mktsegment").cast("string").as("c_mktsegment"))
         .agg(count(lit(1)).as("n_rows"),
@@ -2532,7 +2532,7 @@ object Queries {
       val seed = t(s, dir, "customer").where(col("c_custkey") <= 200)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, t0, seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       val delta = t(s, dir, "customer")
         .where(col("c_custkey") <= 200 && col("c_custkey") % 6 === 0)
         .select(col("c_custkey"),
@@ -2594,7 +2594,7 @@ object Queries {
           (col("c_acctbal") + lit(500.0)).as("c_acctbal"),
           lit("MOVED").as("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", delta, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       graft.sources.PartitionSnapshots.deleteKeys(s, s"$base/t",
         t(s, dir, "customer")
           .where(col("c_custkey") <= 300 && col("c_custkey") % 11 === 0)
@@ -2622,7 +2622,7 @@ object Queries {
       val seed = t(s, dir, "customer").where(col("c_custkey") <= 300)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       val delta = t(s, dir, "customer")
         .where(col("c_custkey") <= 300 && col("c_custkey") % 7 === 0 &&
           col("c_mktsegment") === "BUILDING")
@@ -2653,7 +2653,7 @@ object Queries {
       val seed = t(s, dir, "customer").where(col("c_custkey") <= 300)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       graft.sources.PartitionSnapshots.dropPartitions(s, s"$base/t",
         m => m("c_mktsegment") == "MACHINERY")
     } + "/t"
@@ -2677,7 +2677,7 @@ object Queries {
       val seed = t(s, dir, "customer").where(col("c_custkey") <= 200)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       graft.sources.PartitionSnapshots.tagRoot(s, s"$base/t", "baseline")
       val delta = t(s, dir, "customer")
         .where(col("c_custkey") <= 200 && col("c_custkey") % 5 === 0)
@@ -2706,7 +2706,7 @@ object Queries {
       val seed = t(s, dir, "customer").where(col("c_custkey") <= 400)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       val delta = t(s, dir, "customer")
         .where(col("c_custkey") <= 430 &&
           (col("c_custkey") > 400 || col("c_custkey") % 9 === 0))
@@ -2736,7 +2736,7 @@ object Queries {
         .select(col("c_custkey"), col("c_acctbal"),
           ((col("c_custkey") - 1) / lit(100)).cast("int").as("bucket"))
       Upsert.upsert(s, s"$base/t", seed, Seq("c_custkey"),
-        partitionCols = Seq("bucket"), partitionManifests = true)
+        partitionCols = Seq("bucket"))
     } + "/t"
     graft.sources.PartitionSnapshots
       .readWhereBetween(s, path, "c_custkey", 120, 250)
@@ -2759,8 +2759,7 @@ object Queries {
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", cust.where(col("c_custkey") <= 300),
-        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"),
-        partitionManifests = true)
+        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"))
       Upsert.append(s, s"$base/t",
         cust.where(col("c_custkey") > 300 && col("c_custkey") <= 350),
         Seq("c_mktsegment"))
@@ -2789,8 +2788,7 @@ object Queries {
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", cust.where(col("c_custkey") <= 300),
-        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"),
-        partitionManifests = true)
+        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"))
       val b0 = cust.where(col("c_custkey") > 300 && col("c_custkey") <= 340)
       Upsert.append(s, s"$base/t", b0, Seq("c_mktsegment"),
         txn = Some(("q178", 0L)))
@@ -2819,7 +2817,7 @@ object Queries {
       val seed = t(s, dir, "customer").where(col("c_custkey") <= 400)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       val delta = t(s, dir, "customer")
         .where(col("c_custkey") <= 430 &&
           (col("c_custkey") > 400 || col("c_custkey") % 9 === 0))
@@ -2848,8 +2846,7 @@ object Queries {
       val cust = t(s, dir, "customer").where(col("c_custkey") <= 400)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", cust.where(col("c_custkey") <= 300),
-        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"),
-        partitionManifests = true)
+        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"))
       PartitionSnapshots.createBranch(s, s"$base/t", "staging")
       Upsert.upsert(s, s"$base/t",
         cust.where(col("c_custkey") > 300 && col("c_custkey") <= 370),
@@ -2925,7 +2922,7 @@ object Queries {
         .select(col("c_custkey"), col("c_acctbal"), col("c_nationkey"),
           col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", cust, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       val seedCount = PartitionSnapshots.read(s, s"$base/t").count()
       PartitionSnapshots.evolvePartitionSpec(s, s"$base/t",
         Seq("c_mktsegment", "c_nationkey"))
@@ -3073,7 +3070,7 @@ object Queries {
       val cust = t(s, dir, "customer").where(col("c_custkey") <= 500)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/articles", cust, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
     }
     t(s, dir, "customer")
       .where(col("c_custkey").between(100, 150) ||
@@ -3112,8 +3109,7 @@ object Queries {
       val cust = t(s, dir, "customer").where(col("c_custkey") <= 400)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", cust.where(col("c_custkey") <= 5),
-        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"),
-        partitionManifests = true)
+        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"))
       PartitionSnapshots.evolvePartitionSpec(s, s"$base/t",
         Seq("c_mktsegment", "bucket(16, c_custkey)"))
       Upsert.upsert(s, s"$base/t", cust.where(col("c_custkey") > 5),
@@ -3192,7 +3188,7 @@ object Queries {
       val cust = t(s, dir, "customer").where(col("c_custkey") <= 500)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", cust, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
     }
     t(s, dir, "customer").where(col("c_custkey").between(100, 160))
       .select(col("c_custkey"),
@@ -3232,7 +3228,7 @@ object Queries {
       val seed = t(s, dir, "customer").where(col("c_custkey") <= 300)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       // a crashed writer's never-referenced debris, aged past the TTL
       val tp = s"$base/t"
       val fs = new org.apache.hadoop.fs.Path(tp)
@@ -3274,7 +3270,7 @@ object Queries {
       val seed = t(s, dir, "customer").where(col("c_custkey") <= 400)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       val cat = new graft.sources.Catalog(s, base)
       cat.sql(
         """UPDATE t
@@ -3312,7 +3308,7 @@ object Queries {
       val seed = t(s, dir, "customer").where(col("c_custkey") <= 500)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       t(s, dir, "customer").where(col("c_custkey").between(200, 260))
         .select(col("c_custkey"),
           when(col("c_custkey") % 3 === 0, lit(-100.0)).otherwise(lit(50.0))
@@ -3364,7 +3360,7 @@ object Queries {
       val seed = t(s, dir, "customer").where(col("c_custkey") <= 300)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       val v1 = graft.sources.PartitionSnapshots
         .currentRootVersion(s, s"$base/t").get
       graft.sources.PartitionSnapshots.tagRoot(s, s"$base/t", "q195tag", v1)
@@ -3376,7 +3372,7 @@ object Queries {
           .where(col("c_custkey").between(301, 320))
           .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment")))
       Upsert.upsert(s, s"$base/t", upd, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       // an expired/unknown version must refuse loudly, never fall back
       val cat = new graft.sources.Catalog(s, base)
       val loud = try { cat.sql("SELECT * FROM t VERSION AS OF 99999"); false }
@@ -3411,7 +3407,7 @@ object Queries {
       val seed = Queries.t(s, dir, "customer").where(col("c_custkey") <= 400)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, t, seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       val pre = PartitionSnapshots.currentRootVersion(s, t).get
       PartitionSnapshots.renameColumn(s, t, "c_acctbal", "balance")
       PartitionSnapshots.renameColumn(s, t, "c_custkey", "cust_id")
@@ -3484,7 +3480,7 @@ object Queries {
       val seed = t(s, dir, "customer").where(col("c_custkey") <= 400)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, tb, seed, Seq("c_custkey"),
-        partitionCols = Seq("c_mktsegment"), partitionManifests = true)
+        partitionCols = Seq("c_mktsegment"))
       val pre = PartitionSnapshots.currentRootVersion(s, tb).get
       val preState = PartitionSnapshots.rootManifest(s, tb).get
       t(s, dir, "customer")
@@ -3530,8 +3526,7 @@ object Queries {
       val rows = t(s, dir, "customer").where(col("c_custkey") <= 390)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, tb, rows.where(col("c_custkey") % 4 === 0),
-        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"),
-        partitionManifests = true)
+        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"))
       for (i <- 1 to 3)
         Upsert.append(s, tb, rows.where(col("c_custkey") % 4 === i),
           Seq("c_mktsegment"))
@@ -3565,8 +3560,7 @@ object Queries {
       Upsert.upsert(s, s"$base/t",
         t(s, dir, "customer").where(col("c_custkey") <= 400)
           .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment")),
-        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"),
-        partitionManifests = true)
+        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"))
     }
     new graft.sources.Catalog(s, wh).sql(
       """SELECT p.partition AS partition, p.row_count AS row_count
@@ -3676,8 +3670,7 @@ object Queries {
       val cust = t(s, dir, "customer").where(col("c_custkey") <= 400)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", cust.where(col("c_custkey") <= 300),
-        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"),
-        partitionManifests = true)
+        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"))
       Upsert.append(s, s"$base/t",
         cust.where(col("c_custkey") > 300 && col("c_custkey") <= 350),
         Seq("c_mktsegment"))
@@ -3703,8 +3696,7 @@ object Queries {
       val cust = t(s, dir, "customer").where(col("c_custkey") <= 400)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       Upsert.upsert(s, s"$base/t", cust.where(col("c_custkey") % 2 === 0),
-        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"),
-        partitionManifests = true)
+        Seq("c_custkey"), partitionCols = Seq("c_mktsegment"))
       Upsert.append(s, s"$base/t", cust.where(col("c_custkey") % 2 === 1),
         Seq("c_mktsegment"))
       graft.sources.PartitionSnapshots.compact(s, s"$base/t",

@@ -16,10 +16,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     single shuffle on the key columns (or a broadcast when the source
   *     micro-batch is small — the common streaming case, which AQE picks up
   *     automatically).
-  *   - With `partitionBy`, only partitions present in the source are
-  *     rewritten (dynamic partition overwrite), mirroring Iceberg's
-  *     partition-level commit: a daily micro-batch touching 2 dates rewrites
-  *     2 partitions of a 100 TB table, not the table.
+  *   - With `partitionBy`, only partitions present in the source (or
+  *     holding a matched key) are rewritten, mirroring Iceberg's
+  *     partition-level commit: a daily micro-batch touching 2 dates
+  *     rewrites 2 partitions of a 100 TB table, not the table.
   *   - Without `partitionBy`, every merge commits a NEW immutable snapshot
   *     under `path/_versions/` and atomically swaps the `path/_current`
   *     pointer ([[graft.sources.Snapshots]]) — Iceberg-reader parity: a
@@ -33,14 +33,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     dirs a plain parquet scan ignores — deliberately: stale flat files
   *     would silently serve OLD data, an error is the honest failure).
   *
-  * Why the partitioned path keeps the flat hive layout: its commit never
-  * renames the table root (no whole-table FileNotFound window — the gap
-  * this versioning closes for the swap path), readers of UNTOUCHED
-  * partitions race nothing at all, and a touched partition's window is
-  * Spark's own dynamic-overwrite commit (per-partition delete + staged
-  * rename, metadata-speed). Versioning it whole-table would copy the full
-  * 100 TB fact per daily merge — the exact cost Snapshots' scaladoc warns
-  * against; true per-partition manifests are the documented follow-up.
+  * Partitioned tables always commit through per-partition manifests
+  * ([[graft.sources.PartitionSnapshots]]): each touched partition's
+  * rewrite is sealed into a new immutable version slot and ONE root
+  * manifest swap publishes the whole commit, so a reader sees the table
+  * before or after it, never a half-rewritten partition — the Iceberg
+  * `MERGE INTO` snapshot commit — while untouched partitions are never
+  * copied, listed or repointed. A legacy flat hive table migrates on its
+  * next upsert with zero IO (its flat partitions become implicit v0
+  * snapshots). Read partitioned tables with [[read]] too.
   */
 object Upsert {
 
@@ -186,7 +187,7 @@ object Upsert {
   }
 
   /** Throw if this writer no longer holds the lease — called immediately
-    * before each destructive commit (rename swap / dynamic overwrite), so
+    * before each visible commit (pointer or root-manifest swap), so
     * a TTL takeover during a slow merge aborts the old writer instead of
     * letting two writers interleave renames on the same directory. */
   private[graft] def assertHeld(spark: SparkSession, path: String,
@@ -309,11 +310,12 @@ object Upsert {
     fs(spark, new Path(path)).exists(new Path(path))
 
   /** Read an Upsert-maintained table: versioned layouts resolve the
-    * `_current` pointer to an immutable snapshot dir (never racing a
-    * writer); legacy flat layouts and partitioned tables fall through to a
+    * `_current` pointer to an immutable snapshot dir and manifested
+    * (partitioned) layouts their root manifest (never racing a writer);
+    * legacy flat layouts no upsert has migrated yet fall through to a
     * plain parquet read. This is THE read path for upsert tables — a raw
-    * `spark.read.parquet(path)` on a versioned table sees no data files
-    * (they live under hidden `_versions/`). */
+    * `spark.read.parquet(path)` on either layout sees no current data
+    * (it lives under hidden `_versions/`). */
   def read(spark: SparkSession, path: String): DataFrame =
     if (graft.sources.Snapshots.isVersioned(spark, path))
       graft.sources.Snapshots.read(spark, path)
@@ -372,7 +374,7 @@ object Upsert {
     * new source columns are added to the table (see [[align]]); without it
     * a schema drift fails the merge loudly (the reference's fixed-DDL
     * behavior). */
-  /** `audit` (write-audit-publish, manifested tables only): runs against
+  /** `audit` (write-audit-publish, partitioned tables only): runs against
     * the complete would-be post-merge snapshot BEFORE anything is
     * published; must return an [[Expectations.check]]-style report with
     * a `passed` column. Any failed rule aborts the commit with
@@ -384,16 +386,10 @@ object Upsert {
              evolveSchema: Boolean = false,
              lockTtlMs: Long = DefaultLockTtlMs,
              retainVersions: Int = DefaultRetainVersions,
-             partitionManifests: Boolean = false,
              audit: Option[DataFrame => DataFrame] = None,
              branch: Option[String] = None): Unit = {
-    require(partitionCols.nonEmpty || !partitionManifests,
-      "upsert: partitionManifests requires partitionCols")
-    require(audit.isEmpty || partitionManifests ||
-      (partitionCols.nonEmpty &&
-        graft.sources.PartitionSnapshots.isManifested(spark, path)),
-      "upsert: audit (write-audit-publish) requires a manifested table " +
-        "(partitionManifests = true, or a table already carrying manifests)")
+    require(audit.isEmpty || partitionCols.nonEmpty,
+      "upsert: audit (write-audit-publish) requires partitionCols")
     require(branch.isEmpty || (partitionCols.nonEmpty &&
       graft.sources.PartitionSnapshots.isManifested(spark, path)),
       "upsert: branch commits require an existing manifested table")
@@ -404,7 +400,7 @@ object Upsert {
     if (src0.isEmpty) return
     val token = acquireLock(spark, path, lockTtlMs)
     try upsertLocked(spark, path, src0, keys, insertOnly, partitionCols,
-      evolveSchema, token, retainVersions, partitionManifests, audit, branch)
+      evolveSchema, token, retainVersions, audit, branch)
     finally releaseLock(spark, path, token)
   }
 
@@ -462,7 +458,6 @@ object Upsert {
       if (head != base) {
         val changed =
           PartitionSnapshots.changedPartitions(spark, path, base, head)
-        import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         import org.apache.spark.sql.functions.col
         // partitions THIS merge rewrites: the source's own target
         // partitions, plus (for keyed merges) the partitions its matched
@@ -531,15 +526,8 @@ object Upsert {
               .distinct()
           }
         }
-        val tupleSegs: Seq[Map[String, String]] =
-          orConflict(touchedDf.collect().toSeq).map { r =>
-            partitionCols.zip(r.toSeq).map { case (c, v) =>
-              val dirVal =
-                if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-                else ExternalCatalogUtils.escapePathName(v.toString)
-              c -> s"${ExternalCatalogUtils.escapePathName(c)}=$dirVal"
-            }.toMap
-          }
+        val tupleSegs = partitionSegments(partitionCols,
+          orConflict(touchedDf.collect().toSeq))
         val overlap = changed.filter { rel =>
           val cols = PartitionSnapshots.relCols(rel)
           if (!cols.forall(partitionCols.contains)) true // unprovable → conflict
@@ -557,7 +545,7 @@ object Upsert {
         // IS the rebase — staged slots land on top of the winner's root
       }
       upsertLocked(spark, path, src0, keys, insertOnly, partitionCols,
-        evolveSchema, token, retainVersions, partitionManifests = true)
+        evolveSchema, token, retainVersions)
     } finally releaseLock(spark, path, token)
   }
 
@@ -566,15 +554,15 @@ object Upsert {
                            partitionCols: Seq[String],
                            evolveSchema: Boolean, token: String,
                            retainVersions: Int,
-                           partitionManifests: Boolean = false,
                            audit: Option[DataFrame => DataFrame] = None,
                            branch: Option[String] = None): Unit = {
     import graft.sources.PartitionSnapshots
     recoverSwap(spark, path)
-    if (partitionCols.nonEmpty)
+    val manifested = partitionCols.nonEmpty
+    if (manifested)
       require(!graft.sources.Snapshots.isVersioned(spark, path),
         s"upsert: $path is a versioned (whole-table snapshot) table; " +
-          "partition-scoped rewrite applies only to flat hive-layout tables")
+          "partition-scoped commits need a partitioned table")
     else
       // mirror of the guard above: the whole-table snapshot commit ends in
       // cleanupFlatFiles, which removes every non-hidden root entry — on a
@@ -585,24 +573,39 @@ object Upsert {
         s"upsert: $path carries partition manifests; pass its partition " +
           "columns (whole-table snapshot commits would destroy the " +
           "per-partition snapshot history)")
-    // sticky opt-in: once a table carries manifests, every later upsert
-    // commits through them — a flag forgotten on one call must not demote
-    // the table back to unsafe dynamic-overwrite commits
-    val manifested = partitionCols.nonEmpty &&
-      (partitionManifests || PartitionSnapshots.isManifested(spark, path))
     if (manifested) {
       // zero-IO migration: the marker flip makes flat partitions implicit
       // v0 snapshots; nothing moves until each partition's first commit
       PartitionSnapshots.ensureManifested(spark, path, partitionCols)
       PartitionSnapshots.cleanupStaging(spark, path)
     }
-    def commitManifested(staging: String, emptied: Set[String],
-                         schema: org.apache.spark.sql.types.StructType): Unit =
-      audit match {
-        case Some(a) => PartitionSnapshots.commitStagedAudited(spark, path,
-          staging, partitionCols, emptied, retainVersions, a, Some(schema))
-        case None => PartitionSnapshots.commitStaged(spark, path, staging,
-          partitionCols, emptied, retainVersions, Some(schema), branch)
+    // stage ONCE (hive layout, partition cols stripped into dirs) under a
+    // hidden `_staging-*` root, re-check the lease, then hand the staged
+    // dirs to a PartitionSnapshots commit (slot seal + root manifest swap)
+    def stageThen(df: DataFrame)(commit: String => Unit): Unit = {
+      val staging = s"$path/_staging-${java.util.UUID.randomUUID()}"
+      packedWriter(spark, df, partitionCols, SaveMode.ErrorIfExists)
+        .partitionBy(partitionCols: _*).parquet(staging)
+      try {
+        assertHeld(spark, path, token) // last check before the commit
+        commit(staging)
+      } finally fs(spark, new Path(staging)).delete(new Path(staging), true)
+    }
+    // readers of a touched partition keep their pinned immutable version;
+    // touched partitions that lost every row publish an EMPTY version
+    // instead of a reader-visible delete
+    def commitMerged(df: DataFrame, touched: Set[String],
+                     survivors: Map[String, Seq[(String, Seq[String])]] =
+                       Map.empty): Unit =
+      stageThen(df) { staging =>
+        audit match {
+          case Some(a) => PartitionSnapshots.commitStagedAudited(spark, path,
+            staging, partitionCols, touched, retainVersions, a,
+            Some(df.schema))
+          case None => PartitionSnapshots.commitStaged(spark, path, staging,
+            partitionCols, touched, retainVersions, Some(df.schema), branch,
+            survivors)
+        }
       }
     // hidden-partitioning: derive any transform dir columns the caller's
     // frame cannot know about — computed once here at write time, hidden
@@ -615,7 +618,7 @@ object Upsert {
       PartitionSnapshots.rootBranches(spark, path).getOrElse(n,
         throw new IllegalArgumentException(
           s"upsert: no branch '$n' at $path — createBranch first")))
-    // manifest of the target line (None for flat hive tables / a
+    // manifest of the target line (None for unpartitioned tables / a
     // manifested table before its first root commit) — drives the
     // metadata-only existence probe, the stats-pruned key lookup, and
     // the file-scoped planner
@@ -629,7 +632,8 @@ object Upsert {
     // eagerly lists every data file (~2 s at 1k partitions, ~29 s at
     // 65k files — PLANS round-11 drill). Manifested fast paths answer
     // from metadata + pruned partition reads and never force this;
-    // schema evolution, flat tables, and non-prunable keys still do.
+    // schema evolution, unpartitioned tables, and non-prunable keys
+    // still do.
     lazy val existing = branchHead match {
       case Some(v) => PartitionSnapshots.readRawOption(spark, path, asOf = v)
       case None => readTable(spark, path)
@@ -640,18 +644,8 @@ object Upsert {
       case None => existing.isEmpty
     }
     if (tableIsEmpty) {
-      if (manifested) {
-        val staging = s"$path/_staging-${java.util.UUID.randomUUID()}"
-        packedWriter(spark, srcT, partitionCols, SaveMode.ErrorIfExists)
-          .partitionBy(partitionCols: _*).parquet(staging)
-        try {
-          assertHeld(spark, path, token)
-          commitManifested(staging, Set.empty, srcT.schema)
-        } finally fs(spark, new Path(staging)).delete(new Path(staging), true)
-      } else if (partitionCols.nonEmpty) {
-        srcT.write.mode(SaveMode.Overwrite)
-          .partitionBy(partitionCols: _*).parquet(path)
-      } else commitVersion(spark, path, srcT, token, retainVersions)
+      if (manifested) commitMerged(srcT, Set.empty)
+      else commitVersion(spark, path, srcT, token, retainVersions)
       return
     }
     // schema evolution must inspect and conform the real frame — it
@@ -690,11 +684,9 @@ object Upsert {
     // ≤100k distinct-key collect — see PartitionSnapshots.keyExclusion)
     val keyPred: Option[
         graft.sources.PartitionSnapshots.PartStats => Boolean] =
-      if (manifested)
-        prunableKey.flatMap(kc => PartitionSnapshots.keyExclusion(
-          spark, src, kc, targetSchema(kc).dataType,
-          PartitionSnapshots.fieldAliases(targetSchema(kc))))
-      else None
+      prunableKey.flatMap(kc => PartitionSnapshots.keyExclusion(
+        spark, src, kc, targetSchema(kc).dataType,
+        PartitionSnapshots.fieldAliases(targetSchema(kc))))
     // STATS-PRUNED matched-key lookup: the semi/anti-join that finds
     // matched keys is the dominant cost of a small MERGE into a big
     // table (measured: ~29 s of a 29 s single-key merge at 65k files —
@@ -733,173 +725,125 @@ object Upsert {
       // an excluded partition cannot match, so it survives the anti-join
       // exactly as it would against the full table.
       val newRows = src.join(lookupTarget, keys, "left_anti")
-      if (newRows.isEmpty) return
-      val staging = s"$path/_staging-${java.util.UUID.randomUUID()}"
-      packedWriter(spark, newRows, partitionCols, SaveMode.ErrorIfExists)
-        .partitionBy(partitionCols: _*).parquet(staging)
-      try {
-        assertHeld(spark, path, token)
+      if (!newRows.isEmpty) stageThen(newRows) { staging =>
         PartitionSnapshots.commitAppendStaged(spark, path, staging,
           partitionCols, retainVersions, Some(src.schema), branch = branch)
-      } finally fs(spark, new Path(staging)).delete(new Path(staging), true)
+      }
       return
     }
-    if (partitionCols.nonEmpty) {
-      // Timestamp partition values are formatted by the writer with a
-      // pattern Row.toString doesn't reproduce — reject them loudly
-      // instead of silently missing the emptied-partition delete below.
-      // (Partition by the derived DATE instead, as the pipeline does.)
-      targetSchema.fields.filter(f => partitionCols.contains(f.name)).foreach { f =>
-        require(f.dataType != org.apache.spark.sql.types.TimestampType &&
-          f.dataType != org.apache.spark.sql.types.TimestampNTZType,
-          s"upsert: timestamp-typed partition column '${f.name}' is not supported")
-      }
-      // Partition-scoped rewrite. Touched partitions = partitions the
-      // source writes into ∪ partitions where a matched key currently
-      // lives — without the second leg a key whose partition value changes
-      // (e.g. an article's corrected publish date) would survive in its
-      // old partition as a duplicate. Finding matched keys scans only the
-      // key+partition columns of the (stats-pruned) target, the same key
-      // lookup an Iceberg MERGE performs.
-      val touched = src.select(partitionCols.map(col): _*).distinct()
-        .unionByName(lookupTarget
-          .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi")
-          .select(partitionCols.map(col): _*).distinct())
-        .distinct()
-      // materialize the touched-partition list BEFORE the overwrite — its
-      // plan reads target files the overwrite is about to delete.
-      // Directory names go through the same escaping Spark's writer uses
-      // (ExternalCatalogUtils): NULL → __HIVE_DEFAULT_PARTITION__, and
-      // URL-escaped specials (space, ':', '%') match the on-disk name —
-      // a raw "$c=$v" would silently miss them and leave stale rows.
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      def partDirs(rows: Array[org.apache.spark.sql.Row]): Set[String] =
-        rows.map(r => partitionCols.zip(r.toSeq)
-          .map { case (c, v) =>
-            val dirVal =
-              if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-              else ExternalCatalogUtils.escapePathName(v.toString)
-            s"${ExternalCatalogUtils.escapePathName(c)}=$dirVal"
-          }.mkString("/")).toSet
-      val touchedRows = touched.collect()
-      val touchedDirs = partDirs(touchedRows)
-      def mkMerged(affected: DataFrame): DataFrame =
-        if (insertOnly) affected.unionByName(src.join(affected, keys, "left_anti"))
-        else src.unionByName(affected.join(src, keys, "left_anti"))
-      if (manifested) {
-        // partitions under RETIRED specs (the table's partition spec was
-        // evolved): a manifest rel whose own layout is a proper prefix of
-        // the current spec may hold matched keys — it is touched when its
-        // dir segments agree with some touched tuple on the rel's OWN
-        // columns. Its intersecting files rewrite (re-staged under the
-        // NEW spec — Iceberg's lazy migration); the rest survive in place.
-        val tupleSegs: Seq[Map[String, String]] = touchedRows.toSeq.map { r =>
-          partitionCols.zip(r.toSeq).map { case (c, v) =>
-            val dirVal =
-              if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-              else ExternalCatalogUtils.escapePathName(v.toString)
-            c -> s"${ExternalCatalogUtils.escapePathName(c)}=$dirVal"
-          }.toMap
-        }
-        val legacyTouched: Set[String] = base.map(_.collect {
-          case (rel, state) if state != "EMPTY" &&
-            PartitionSnapshots.relCols(rel) != partitionCols &&
-            PartitionSnapshots.relCols(rel).forall(partitionCols.contains) &&
-            tupleSegs.exists(m => rel.split("/").toSeq
-              .zip(PartitionSnapshots.relCols(rel))
-              .forall { case (seg, c) => m.get(c).contains(seg) }) => rel
-        }.toSet).getOrElse(Set.empty)
-        val allTouched = touchedDirs ++ legacyTouched
-        // FILE-SCOPED MERGE (Iceberg file-level rewrite): within each
-        // touched partition only the files whose manifest-recorded key
-        // bounds can contain a source key are read and rewritten; the
-        // rest survive as file-scoped state tokens — their bytes, paths,
-        // and mtimes untouched. Engaged when a prunable non-partition
-        // key column exists — NUMERIC (interval + point-set tests,
-        // ulp-margin-safe) or STRING (the reference's sha-256 hex IDs:
-        // footer bounds are exact-or-widened and pure-ASCII bounds
-        // compare byte-identically on both sides) — and the commit
-        // isn't a WAP audit (which validates whole would-be snapshots).
-        // Falls back to the whole-partition rewrite otherwise. A table
-        // with retired-spec partitions ALWAYS routes through the
-        // path-explicit planner (a nothing-excluded predicate when the
-        // key is not prunable): old-spec rows are read from their own
-        // dirs and re-staged under the current spec, never left behind.
-        // prunableKey / keyPred are hoisted above `touched` (they also
-        // drive the stats-pruned matched-key lookup); keyPred = None
-        // with a prunable key present means all-NULL or non-ASCII keys
-        val fileScoped: Option[(Map[String, Seq[(String, Seq[String])]],
-                                Option[DataFrame])] =
-          (base, prunableKey) match {
-            case (Some(bm), Some(kc)) if audit.isEmpty =>
-              keyPred match {
-                case Some(pred) => Some(PartitionSnapshots.planFileScoped(
-                  spark, path, bm, allTouched, pred, Some(targetSchema)))
-                case None if legacyTouched.nonEmpty =>
-                  Some(PartitionSnapshots.planFileScoped(spark, path, bm,
-                    allTouched, _ => false, Some(targetSchema)))
-                case None => None // all-NULL keys match nothing
-              }
-            case (Some(bm), _) if legacyTouched.nonEmpty =>
-              // nothing-excluded predicate: no survivors — the whole-
-              // partition rewrite, but read path-explicitly so retired-
-              // spec dirs never mix layouts in one scan
-              Some(PartitionSnapshots.planFileScoped(spark, path, bm,
-                allTouched, _ => false, Some(targetSchema)))
-            case _ => None
-          }
-        val (survivors, merged) = fileScoped match {
-          case Some((surv, rewriteDf)) =>
-            (surv, mkMerged(rewriteDf.getOrElse(
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                targetSchema))))
-          case None =>
-            (Map.empty[String, Seq[(String, Seq[String])]],
-              mkMerged(target.join(broadcast(touched), partitionCols,
-                "left_semi")))
-        }
-        // stage ONCE (hive layout, partition cols stripped into dirs), then
-        // rename each staged partition dir into its version slot + swap
-        // that partition's pointer — readers of a touched partition keep
-        // their pinned immutable version; partitions that lost every row
-        // publish an EMPTY version instead of a reader-visible delete
-        val staging = s"$path/_staging-${java.util.UUID.randomUUID()}"
-        packedWriter(spark, merged, partitionCols, SaveMode.ErrorIfExists)
-          .partitionBy(partitionCols: _*).parquet(staging)
-        try {
-          assertHeld(spark, path, token) // last check before the commits
-          audit match {
-            case Some(a) => PartitionSnapshots.commitStagedAudited(spark,
-              path, staging, partitionCols, allTouched, retainVersions, a,
-              Some(merged.schema))
-            case None => PartitionSnapshots.commitStaged(spark, path,
-              staging, partitionCols, allTouched, retainVersions,
-              Some(merged.schema), branch, survivors)
-          }
-        } finally fs(spark, new Path(staging)).delete(new Path(staging), true)
-        return
-      }
-      val affected = target.join(broadcast(touched), partitionCols, "left_semi")
-      val merged = mkMerged(affected)
-      val staged = stage(spark, path, merged)
-      try {
-        val stagedDirs = partDirs(spark.read.parquet(staged)
-          .select(partitionCols.map(col): _*).distinct().collect())
-        assertHeld(spark, path, token) // last check before destructive commit
-        spark.read.parquet(staged)
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partitionCols: _*).parquet(path)
-        // Dynamic overwrite only rewrites partitions present in the output;
-        // a touched partition that lost ALL its rows must be dropped
-        // explicitly or its stale files survive.
-        (touchedDirs -- stagedDirs)
-          .foreach(p => fs(spark, new Path(path)).delete(new Path(s"$path/$p"), true))
-      } finally fs(spark, new Path(staged)).delete(new Path(staged), true)
-    } else {
+    if (!manifested) {
       commitVersion(spark, path, merge(target, src, keys, insertOnly), token,
         retainVersions)
+      return
+    }
+    // Timestamp partition values are formatted by the writer with a
+    // pattern Row.toString doesn't reproduce — reject them loudly instead
+    // of silently missing the touched partitions' on-disk dirs below.
+    // (Partition by the derived DATE instead, as the pipeline does.)
+    targetSchema.fields.filter(f => partitionCols.contains(f.name)).foreach { f =>
+      require(f.dataType != org.apache.spark.sql.types.TimestampType &&
+        f.dataType != org.apache.spark.sql.types.TimestampNTZType,
+        s"upsert: timestamp-typed partition column '${f.name}' is not supported")
+    }
+    // Partition-scoped rewrite. Touched partitions = partitions the
+    // source writes into ∪ partitions where a matched key currently
+    // lives — without the second leg a key whose partition value changes
+    // (e.g. an article's corrected publish date) would survive in its
+    // old partition as a duplicate. Finding matched keys scans only the
+    // key+partition columns of the (stats-pruned) target, the same key
+    // lookup an Iceberg MERGE performs.
+    val touched = src.select(partitionCols.map(col): _*).distinct()
+      .unionByName(lookupTarget
+        .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi")
+        .select(partitionCols.map(col): _*).distinct())
+      .distinct()
+    val tupleSegs = partitionSegments(partitionCols, touched.collect().toSeq)
+    val touchedDirs = tupleSegs.map(m => partitionCols.map(m).mkString("/")).toSet
+    def mkMerged(affected: DataFrame): DataFrame =
+      if (insertOnly) affected.unionByName(src.join(affected, keys, "left_anti"))
+      else src.unionByName(affected.join(src, keys, "left_anti"))
+    // partitions under RETIRED specs (the table's partition spec was
+    // evolved): a manifest rel whose own layout is a proper prefix of
+    // the current spec may hold matched keys — it is touched when its
+    // dir segments agree with some touched tuple on the rel's OWN
+    // columns. Its intersecting files rewrite (re-staged under the
+    // NEW spec — Iceberg's lazy migration); the rest survive in place.
+    val legacyTouched: Set[String] = base.map(_.collect {
+      case (rel, state) if state != "EMPTY" &&
+        PartitionSnapshots.relCols(rel) != partitionCols &&
+        PartitionSnapshots.relCols(rel).forall(partitionCols.contains) &&
+        tupleSegs.exists(m => rel.split("/").toSeq
+          .zip(PartitionSnapshots.relCols(rel))
+          .forall { case (seg, c) => m.get(c).contains(seg) }) => rel
+    }.toSet).getOrElse(Set.empty)
+    val allTouched = touchedDirs ++ legacyTouched
+    // FILE-SCOPED MERGE (Iceberg file-level rewrite): within each
+    // touched partition only the files whose manifest-recorded key
+    // bounds can contain a source key are read and rewritten; the
+    // rest survive as file-scoped state tokens — their bytes, paths,
+    // and mtimes untouched. Engaged when a prunable non-partition
+    // key column exists — NUMERIC (interval + point-set tests,
+    // ulp-margin-safe) or STRING (the reference's sha-256 hex IDs:
+    // footer bounds are exact-or-widened and pure-ASCII bounds
+    // compare byte-identically on both sides) — and the commit
+    // isn't a WAP audit (which validates whole would-be snapshots).
+    // Falls back to the whole-partition rewrite otherwise. A table
+    // with retired-spec partitions ALWAYS routes through the
+    // path-explicit planner (a nothing-excluded predicate when the
+    // key is not prunable): old-spec rows are read from their own
+    // dirs and re-staged under the current spec, never left behind.
+    // prunableKey / keyPred are hoisted above `touched` (they also
+    // drive the stats-pruned matched-key lookup); keyPred = None
+    // with a prunable key present means all-NULL or non-ASCII keys
+    val fileScoped: Option[(Map[String, Seq[(String, Seq[String])]],
+                            Option[DataFrame])] =
+      (base, prunableKey) match {
+        case (Some(bm), Some(kc)) if audit.isEmpty =>
+          keyPred match {
+            case Some(pred) => Some(PartitionSnapshots.planFileScoped(
+              spark, path, bm, allTouched, pred, Some(targetSchema)))
+            case None if legacyTouched.nonEmpty =>
+              Some(PartitionSnapshots.planFileScoped(spark, path, bm,
+                allTouched, _ => false, Some(targetSchema)))
+            case None => None // all-NULL keys match nothing
+          }
+        case (Some(bm), _) if legacyTouched.nonEmpty =>
+          // nothing-excluded predicate: no survivors — the whole-
+          // partition rewrite, but read path-explicitly so retired-
+          // spec dirs never mix layouts in one scan
+          Some(PartitionSnapshots.planFileScoped(spark, path, bm,
+            allTouched, _ => false, Some(targetSchema)))
+        case _ => None
+      }
+    fileScoped match {
+      case Some((survivors, rewriteDf)) =>
+        commitMerged(mkMerged(rewriteDf.getOrElse(
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            targetSchema))), allTouched, survivors)
+      case None =>
+        commitMerged(mkMerged(target.join(broadcast(touched), partitionCols,
+          "left_semi")), allTouched)
+    }
+  }
+
+  /** Each partition tuple of `rows` (values in `partitionCols` order) as
+    * column → on-disk `col=value` dir segment. Names go through the same
+    * escaping Spark's writer uses (ExternalCatalogUtils): NULL →
+    * __HIVE_DEFAULT_PARTITION__, and URL-escaped specials (space, ':',
+    * '%') match the on-disk name — a raw "$c=$v" would silently miss
+    * them and leave stale rows. */
+  private def partitionSegments(partitionCols: Seq[String],
+                                rows: Seq[org.apache.spark.sql.Row])
+      : Seq[Map[String, String]] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    rows.map { r =>
+      partitionCols.zip(r.toSeq).map { case (c, v) =>
+        val dirVal =
+          if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+          else ExternalCatalogUtils.escapePathName(v.toString)
+        c -> s"${ExternalCatalogUtils.escapePathName(c)}=$dirVal"
+      }.toMap
     }
   }
 
@@ -1134,12 +1078,5 @@ object Upsert {
     val old = new Path(path + "__old")
     if (!f.exists(p) && f.exists(old) && !f.rename(old, p))
       throw new IllegalStateException(s"upsert recovery: rename $old -> $p failed")
-  }
-
-  /** Materialize a plan that reads `path` somewhere that isn't `path`. */
-  private def stage(spark: SparkSession, path: String, df: DataFrame): String = {
-    val tmp = path + "__stage"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    tmp
   }
 }

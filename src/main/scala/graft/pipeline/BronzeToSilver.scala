@@ -216,7 +216,9 @@ object BronzeToSilver {
     "comment_interactions" -> (Seq("CommentInteractionID"), false))
 
   /** One micro-batch (or the whole corpus in batch mode) → silver upserts.
-    * Articles table is date-partitioned so the rewrite is partition-scoped.
+    * Articles table is date-partitioned, so its commit is a manifested
+    * per-partition snapshot (the reference's Iceberg MERGE semantics for
+    * streaming ingest) that rewrites only the touched dates.
     * With `metrics`, each table's upsert is metered (duration + records
     * written/read) under job_name "bronze_to_silver" — the analogue of the
     * reference's per-task pushgateway gauges
@@ -225,7 +227,8 @@ object BronzeToSilver {
                   metrics: Option[graft.metrics.MetricsRegistry] = None,
                   quarantineDir: Option[String] = None,
                   extraArticleCols: Seq[String] = Nil,
-                  partitionManifests: Boolean = false): Unit = {
+                  // ignored, kept for by-name callers: partitioned tables are manifested
+                  partitionManifests: Boolean = true): Unit = {
     if (batch.isEmpty) return
     val base = validArticles(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -252,13 +255,8 @@ object BronzeToSilver {
         // written before the column existed)
         val evolve = name == "articles" && extraArticleCols.nonEmpty
         graft.metrics.MetricsRegistry.timed(metrics, "bronze_to_silver", name) {
-          // manifested commits apply to the one PARTITIONED silver table
-          // (articles): per-date version slots + root manifest — the
-          // reference's Iceberg MERGE semantics for streaming ingest
-          // (sticky once on; see PartitionSnapshots)
           Upsert.upsert(spark, s"$warehouse/$name", df, keys, insertOnly, parts,
-            evolveSchema = evolve,
-            partitionManifests = partitionManifests && parts.nonEmpty)
+            evolveSchema = evolve)
         }
       }
     } finally base.unpersist()
@@ -273,14 +271,12 @@ object BronzeToSilver {
                topicFromPath: Boolean = true,
                quarantineDir: Option[String] = None,
                bronzeSchema: org.apache.spark.sql.types.StructType = Schemas.bronzeArticle,
-               extraArticleCols: Seq[String] = Nil,
-               partitionManifests: Boolean = false): Unit = {
+               extraArticleCols: Seq[String] = Nil): Unit = {
     val raw = spark.read.schema(bronzeSchema)
       .option("recursiveFileLookup", "true").option("mode", "PERMISSIVE")
       .json(bronzeDir)
     upsertBatch(spark, normalize(raw, topicFromPath), warehouse,
-      quarantineDir = quarantineDir, extraArticleCols = extraArticleCols,
-      partitionManifests = partitionManifests)
+      quarantineDir = quarantineDir, extraArticleCols = extraArticleCols)
   }
 
   /** Streaming run: file-arrival source, stateless, exactly-once via
@@ -291,7 +287,8 @@ object BronzeToSilver {
                 checkpoint: String, maxFilesPerTrigger: Int = 500,
                 availableNow: Boolean = false,
                 topicFromPath: Boolean = true,
-                partitionManifests: Boolean = false): StreamingQuery = {
+                // ignored, kept for by-name callers: partitioned tables are manifested
+                partitionManifests: Boolean = true): StreamingQuery = {
     val raw = spark.readStream.schema(Schemas.bronzeArticle)
       .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -300,8 +297,7 @@ object BronzeToSilver {
     val normalized = normalize(raw, topicFromPath)
     val writer = normalized.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(spark, batch, warehouse,
-          partitionManifests = partitionManifests)
+        upsertBatch(spark, batch, warehouse)
       }
       .option("checkpointLocation", checkpoint)
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()

@@ -16,7 +16,8 @@ import graft.operators.Upsert
   * All builders are pure `DataFrame => DataFrame`. Dim lookups are
   * broadcast-sized by construction (distinct authors/topics), fact joins
   * shuffle once on ArticleID; facts are written partitioned by their date
-  * key so a daily run commits only the touched partitions.
+  * key, so every fact commit is a manifested per-partition snapshot that
+  * rewrites only the touched partitions.
   */
 object SilverToGold {
 
@@ -271,8 +272,8 @@ object SilverToGold {
     * immediately — they are idempotent, additive lookups keyed by
     * deterministic surrogate hashes (Kimball practice: dims land before
     * facts), so an aborted staging leaves at most unused dim rows,
-    * never a visible fact. Gold fact tables are zero-IO migrated to
-    * manifests on first branched run. */
+    * never a visible fact. Legacy flat gold facts are zero-IO migrated
+    * to manifests on first branched run. */
   def runFromChangelogBranched(spark: SparkSession, silverWarehouse: String,
                                goldWarehouse: String, fromRootV: Long,
                                toRootV: Option[Long] = None,
@@ -284,7 +285,7 @@ object SilverToGold {
     val articles = s"$silverWarehouse/articles"
     require(PartitionSnapshots.isManifested(spark, articles),
       s"runFromChangelog needs partition manifests on $articles " +
-        "(BronzeToSilver partitionManifests = true)")
+        "(any BronzeToSilver ingest creates them)")
     val toV = toRootV.orElse(silverBranch.map(n =>
       PartitionSnapshots.rootBranches(spark, articles).getOrElse(n,
         throw new IllegalArgumentException(
@@ -334,39 +335,29 @@ object SilverToGold {
     "fact_top_comment_activity", "fact_top_comment_interaction_detail")
 
   /** Dates present in silver articles but missing from the gold fact —
-    * the backfill work-list. Both sides are PURE DIRECTORY LISTINGS: the
-    * partition values live in the hive-style dir names (`date=...`,
-    * `PublicationDateKey=...`), so no data file — not even a footer — is
-    * opened. Cheap on a 100 TB warehouse, and immune to a crashed write
-    * that left a footerless directory behind.
+    * the backfill work-list. METADATA ONLY: the silver side lists the
+    * hive-style `date=...` dirs, the gold side reads the publication
+    * fact's root manifest and keeps the partitions whose pinned state
+    * holds data, so no data file — not even a footer — is opened. Cheap
+    * on a 100 TB warehouse, and immune to a crashed write: staged slots
+    * the root never published name no date, so the date stays missing.
     * `runIncremental(missingDates(...))` is the idempotent catch-up loop
     * after downtime. */
   def missingDates(spark: SparkSession, silverWarehouse: String,
                    goldWarehouse: String): Seq[java.sql.Date] = {
-    // `requireData`: a partition only counts when it holds at least one
-    // committed data file — a crashed write can leave an EMPTY partition
-    // dir behind, and marking its date "done" would silently drop it from
-    // the catch-up work-list forever. Still metadata-only: one extra
-    // listStatus per candidate partition, no footer opened.
-    def partValues(table: String, colName: String,
-                   requireData: Boolean): Seq[String] = {
-      val root = new org.apache.hadoop.fs.Path(table)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.sources.FsUtils.listSubdirs(spark, table)
-        .filter(_.startsWith(s"$colName="))
-        .filter(d => !requireData || fs.listStatus(
-          new org.apache.hadoop.fs.Path(root, d)).exists(s => s.isFile &&
-            !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")))
-        .map(_.stripPrefix(s"$colName="))
-        .filter(_ != "__HIVE_DEFAULT_PARTITION__")
-    }
-    val silverDates = partValues(s"$silverWarehouse/articles", "date",
-        requireData = false)
+    import graft.sources.PartitionSnapshots
+    val silverDates = graft.sources.FsUtils
+      .listSubdirs(spark, s"$silverWarehouse/articles")
+      .filter(_.startsWith("date="))
+      .map(_.stripPrefix("date="))
+      .filter(_ != "__HIVE_DEFAULT_PARTITION__")
       .map(java.sql.Date.valueOf)
-    val goldKeys = partValues(
-      s"$goldWarehouse/fact_article_publication", "PublicationDateKey",
-      requireData = true)
-      .map(_.toInt).toSet
+    val goldKeys = PartitionSnapshots
+      .rootManifest(spark, s"$goldWarehouse/fact_article_publication")
+      .getOrElse(Map.empty).collect {
+        case (rel, state) if PartitionSnapshots.stateHasData(state) =>
+          rel.stripPrefix("PublicationDateKey=").toInt
+      }.toSet
     silverDates.filter { d =>
       val ld = d.toLocalDate
       !goldKeys.contains(ld.getYear * 10000 + ld.getMonthValue * 100 + ld.getDayOfMonth)
@@ -437,12 +428,15 @@ object SilverToGold {
         "dim_keyword" -> (dimKeyword(silver("keywords")), Seq("KeywordID_NK")),
         "dim_reference_source" -> (dimReferenceSource(silver("references_table")), Seq("ReferenceID_NK")),
         "dim_interaction_type" -> (dimInteractionType(silver("comment_interactions")), Seq("InteractionTypeKey")))
+      // each dimension's -1/UNKNOWN member rides in that dimension's one
+      // upsert (one commit per dimension); its key ("UNKNOWN" / -1) never
+      // collides with a real row's hashed key
+      val unknown = unknownRows(spark)
       dims.foreach { case (name, (df, keys)) =>
-        metered(name) { Upsert.upsert(spark, s"$goldWarehouse/$name", df, keys) }
-      }
-      unknownRows(spark).foreach { case (name, row) =>
-        val keys = dims.get(name).map(_._2).getOrElse(Seq(row.columns.head))
-        Upsert.upsert(spark, s"$goldWarehouse/$name", row, keys, insertOnly = true)
+        metered(name) {
+          Upsert.upsert(spark, s"$goldWarehouse/$name",
+            unknown.get(name).fold(df)(df.unionByName(_)), keys)
+        }
       }
       val ak = silver("article_keywords"); val ar = silver("article_references")
       val facts: Map[String, (DataFrame, Seq[String], Seq[String])] = Map(
@@ -472,9 +466,9 @@ object SilverToGold {
         val p = s"$goldWarehouse/$name"
         goldBranch.foreach { b =>
           // branch staging needs a manifested fact with the branch ref:
-          // migrate zero-IO (marker flip + baseline root manifest, no
-          // data touched) and fork the branch at the current main head
-          // on this table's first branched commit
+          // migrate a legacy flat fact zero-IO (marker flip + baseline
+          // root manifest, no data touched) and fork the branch at the
+          // current main head on this table's first branched commit
           import graft.sources.PartitionSnapshots
           require(graft.operators.Upsert.readOption(spark, p).nonEmpty,
             s"branched gold run needs an existing baseline at $p")

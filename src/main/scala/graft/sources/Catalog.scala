@@ -1114,8 +1114,8 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     }
     require(manifested || !matchedActs.exists(_._3 == 'd'),
       s"MERGE INTO: a DELETE clause requires a manifested target " +
-        s"('$targetName' is plain parquet — create it with " +
-        "partitionManifests = true)")
+        s"('$targetName' has none — only a table written by an upsert " +
+        "with partitionCols carries manifests)")
     def condCol(c: Option[org.apache.spark.sql.catalyst.expressions.Expression])
         : org.apache.spark.sql.Column = c.map(e => expr(e.sql)).getOrElse(lit(true))
     // first-match-wins classification: one when-chain per row set
@@ -1250,8 +1250,8 @@ final class Catalog(spark: SparkSession, warehouse: String) {
       else {
         require(manifested,
           s"MERGE INTO: WHEN NOT MATCHED BY SOURCE needs a manifested " +
-            s"target ('$targetName' is plain parquet — create it with " +
-            "partitionManifests = true)")
+            s"target ('$targetName' has none — only a table written by an " +
+            "upsert with partitionCols carries manifests)")
         Some(materialize(tgtBySource.join(src, joinCond, "left_anti"),
           bySourceActs, haveTarget = true, withPos = true))
       }
@@ -1350,8 +1350,8 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     val path = tablePath(targetName)
     require(PartitionSnapshots.isManifested(spark, path),
       s"DELETE FROM: '$targetName' is not a manifested table — row-level " +
-        "deletes need the manifest machinery (create the table with " +
-        "partitionManifests = true)")
+        "deletes need the manifest machinery (write the table with an " +
+        "upsert with partitionCols)")
     val pcols = PartitionSnapshots.partitionCols(spark, path)
     val tSchema = rowSchema(targetName)
     def canon(c: String): Option[String] =
@@ -1570,8 +1570,8 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     val path = tablePath(targetName)
     require(PartitionSnapshots.isManifested(spark, path),
       s"UPDATE: '$targetName' is not a manifested table — row-level " +
-        "updates need the manifest machinery (create the table with " +
-        "partitionManifests = true)")
+        "updates need the manifest machinery (write the table with an " +
+        "upsert with partitionCols)")
     val pcols = PartitionSnapshots.partitionCols(spark, path)
     val tSchema = rowSchema(targetName)
     def canon(c: String): String =

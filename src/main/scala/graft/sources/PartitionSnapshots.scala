@@ -3,9 +3,10 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-partition snapshot manifests — the documented follow-up to
-  * [[Snapshots]] for PARTITIONED facts, closing the one commit window the
-  * flat hive layout leaves open: Spark's dynamic partition overwrite
+/** Per-partition snapshot manifests — the commit layout of every
+  * PARTITIONED upsert table ([[Snapshots]]' discipline at partition
+  * granularity), closing the commit window a flat hive layout leaves
+  * open: Spark's dynamic partition overwrite
   * deletes a touched partition's files before the staged replacements
   * land, so a reader scanning that partition mid-commit sees it partial
   * or empty. Here every partition directory is its own tiny [[Snapshots]]

@@ -410,7 +410,7 @@ class CatalogStreamsSpec extends SparkSpec {
     // v1: seed
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // memory sink refuses checkpoint recovery; foreachBatch is the
     // recoverable collector (the production shape anyway)
     def run(rounds: (() => Unit)*): Seq[(Int, Int, String, Long)] = {
@@ -474,7 +474,7 @@ class CatalogStreamsSpec extends SparkSpec {
     val path = tmpDir("clogevo") + "/t"
     // v1: pre-evolution seed (no 'tag' column)
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // v2: additive evolution commit — 'tag' appears
     Upsert.upsert(spark, path,
       Seq((2, "p1", 20, "x")).toDF("k", "part", "v", "tag"),
@@ -507,7 +507,7 @@ class CatalogStreamsSpec extends SparkSpec {
     // v1 under spec (part); hour is a data column of the old files
     Upsert.upsert(spark, path,
       Seq((1, "p1", 3, 10), (2, "p1", 7, 20)).toDF("k", "part", "hour", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.evolvePartitionSpec(spark, path, Seq("part", "hour"))
     // v2 (new spec): insert + an update whose key lives in an OLD-spec
     // partition (lazy migration) — the feed must serve both layouts
@@ -533,7 +533,7 @@ class CatalogStreamsSpec extends SparkSpec {
     val path = tmpDir("clognow") + "/t"
     val ckpt = tmpDir("clognowckpt")
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Upsert.append(spark, path, Seq((2, "p2", 20)).toDF("k", "part", "v"),
       Seq("part"))
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[Int]
@@ -565,7 +565,7 @@ class CatalogStreamsSpec extends SparkSpec {
     val path = tmpDir("clogbr") + "/t"
     val ckpt = tmpDir("clogbrckpt")
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]
     val q = Streams.changelogStream(spark, path).writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -603,7 +603,7 @@ class CatalogStreamsSpec extends SparkSpec {
     val path = tmpDir("clogbase") + "/t"
     val meta = tmpDir("clogbasemeta")
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // source created while the table sits at v1: base=1 is PERSISTED
     val s1 = new graft.streaming.ChangelogSource(spark, path, None, meta)
     Upsert.append(spark, path, Seq((2, "p2", 20)).toDF("k", "part", "v"),
@@ -621,7 +621,7 @@ class CatalogStreamsSpec extends SparkSpec {
     import graft.sources.PartitionSnapshots
     val path = tmpDir("clogbrfeed") + "/t"
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.createBranch(spark, path, "etl")
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]
     val q = Streams.changelogStream(spark, path, branch = Some("etl"))
@@ -658,7 +658,7 @@ class CatalogStreamsSpec extends SparkSpec {
     val path = tmpDir("clogroll") + "/t"
     val meta = tmpDir("clogrollmeta")
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val s = new graft.streaming.ChangelogSource(spark, path, None, meta)
     Upsert.upsert(spark, path, Seq((2, "p1", 20)).toDF("k", "part", "v"),
       Seq("k"), partitionCols = Seq("part")) // v2
@@ -682,7 +682,7 @@ class CatalogStreamsSpec extends SparkSpec {
     val src = tmpDir("mirsrc") + "/t"
     val dst = tmpDir("mirdst") + "/t"
     Upsert.upsert(spark, src, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val inserts = Streams.changelogStream(spark, src,
         startingVersion = Some(1L))
       .where(col("change_type") === "insert").select("k", "part", "v")
@@ -752,7 +752,7 @@ class CatalogStreamsSpec extends SparkSpec {
     val ckpt = tmpDir("coexckpt")
     // seed so the batch writer has something to MERGE into
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // a batch maintenance job is MID-COMMIT (holds the lease) when the
     // stream's first micro-batch arrives: the foreachBatch append must
     // WAIT it out and land, not kill the query (the fail-fast append
@@ -798,7 +798,7 @@ class CatalogStreamsSpec extends SparkSpec {
     // and time-based expiry can really drop the early roots
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     for (i <- 0 until 8)
       Upsert.append(spark, path,
         Seq((100 + i, "p1", i)).toDF("k", "part", "v"), Seq("part"))

@@ -49,7 +49,7 @@ class ChangelogReplayMatrixSpec extends SparkSpec {
   private def seed(path: String): Unit =
     Upsert.upsert(spark, path,
       Seq((1, "p1", 3, 10), (2, "p2", 7, 20)).toDF("k", "part", "hour", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
 
   /** The kind's structural commit plus surrounding data commits — the
     * EXHAUSTIVE match that forces every new StructuralKind to register

@@ -74,7 +74,7 @@ class CommitIoFaultSpec extends SparkSpec {
     val t = s"$wh/t"
     Upsert.upsert(spark, t,
       Seq((1, "p1", 10.0), (2, "p2", 20.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     t
   }
 

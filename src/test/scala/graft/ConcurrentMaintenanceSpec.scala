@@ -27,7 +27,7 @@ class ConcurrentMaintenanceSpec extends SparkSpec {
     val path = s"$base/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // a crashed writer's debris, aged past the sweep TTL: a sealed but
     // never-rooted version slot and an abandoned staging root
     val fs = new org.apache.hadoop.fs.Path(path)

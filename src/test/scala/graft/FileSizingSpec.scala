@@ -39,7 +39,7 @@ class FileSizingSpec extends SparkSpec {
       (col("id") * 2).as("v")).repartition(8)
     withConf("graft.write.targetFileSizeBytes" -> (128L * 1024 * 1024).toString) {
       Upsert.upsert(spark, s"$wh/t", df, Seq("k"),
-        partitionCols = Seq("part"), partitionManifests = true)
+        partitionCols = Seq("part"))
     }
     dataFiles(s"$wh/t").size shouldBe 4 // exactly one per dir
     Upsert.read(spark, s"$wh/t").count() shouldBe 4000L
@@ -58,7 +58,7 @@ class FileSizingSpec extends SparkSpec {
       "graft.write.targetFileSizeBytes" -> "25600",
       "graft.write.bytesPerRowHint" -> "100") {
       Upsert.upsert(spark, s"$wh/t", df, Seq("k"),
-        partitionCols = Seq("part"), partitionManifests = true)
+        partitionCols = Seq("part"))
     }
     dataFiles(s"$wh/t").size shouldBe 4
     Upsert.read(spark, s"$wh/t").count() shouldBe 1000L
@@ -70,7 +70,7 @@ class FileSizingSpec extends SparkSpec {
       col("id").as("k"), (col("id") % 2).cast("int").as("part"),
       col("id").as("v")).repartition(4)
     Upsert.upsert(spark, s"$wh/t", df, Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     // knob-off pin: WE added nothing to the write — the fast-append of
     // an 8-task frame keeps its per-task fan-out (8 files into one dir),
     // exactly the layout the knob-on append test collapses to 1
@@ -86,7 +86,7 @@ class FileSizingSpec extends SparkSpec {
       col("id").as("k"), (col("id") % 2).cast("int").as("part"),
       col("id").as("v"))
     Upsert.upsert(spark, s"$wh/t", seed, Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     val before = dataFiles(s"$wh/t").size
     // NO bytesPerRowHint: the sampled-measure leg runs
     withConf("graft.write.targetFileSizeBytes" -> (128L * 1024 * 1024).toString) {

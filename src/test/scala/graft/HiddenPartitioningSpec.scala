@@ -18,7 +18,7 @@ class HiddenPartitioningSpec extends SparkSpec {
     val path = tmpDir("hpbkt") + "/t"
     Upsert.upsert(spark, path,
       Seq((0, "p1", 0.0)).toDF("k", "part", "v"), Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     PartitionSnapshots.evolvePartitionSpec(spark, path,
       Seq("part", "bucket(4, k)"))
     PartitionSnapshots.partitionCols(spark, path) shouldBe
@@ -71,7 +71,7 @@ class HiddenPartitioningSpec extends SparkSpec {
     Upsert.upsert(spark, path,
       Seq((0, "a", "2024-03-01 10:00:00")).toDF("k", "part", "ts")
         .withColumn("ts", col("ts").cast("timestamp")),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.evolvePartitionSpec(spark, path, Seq("part", "days(ts)"))
     val batch = Seq((1, "a", "2024-03-01 11:00:00"),
       (2, "a", "2024-03-02 09:30:00"))
@@ -97,7 +97,7 @@ class HiddenPartitioningSpec extends SparkSpec {
     Upsert.upsert(spark, path,
       Seq((1, "p1", 1.0), (2, "p2", 2.0), (3, "p1", 3.0))
         .toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.evolvePartitionSpec(spark, path,
       Seq("part", "bucket(4, k)"))
     Upsert.upsert(spark, path,
@@ -126,7 +126,7 @@ class HiddenPartitioningSpec extends SparkSpec {
     val path = s"$wh/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 1.0), (2, "p2", 2.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.evolvePartitionSpec(spark, path,
       Seq("part", "bucket(4, k)"))
     Upsert.upsert(spark, path,
@@ -154,7 +154,7 @@ class HiddenPartitioningSpec extends SparkSpec {
   test("transform evolution validates loudly") {
     val path = tmpDir("hpbad") + "/t"
     Upsert.upsert(spark, path, Seq((1, "p1", 1.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // unknown source column
     an[IllegalArgumentException] should be thrownBy
       PartitionSnapshots.evolvePartitionSpec(spark, path,

@@ -42,7 +42,7 @@ class MergePruningSpec extends SparkSpec {
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10.0), (2, "p2", 20.0), (3, "p3", 30.0))
         .toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // key 2 moves p2 → p1: the lookup must identify p2 as touched (its
     // bounds contain key 2) so the old row is deleted, not duplicated
     Upsert.upsert(spark, path, Seq((2, "p1", 21.0)).toDF("k", "part", "v"),
@@ -56,7 +56,7 @@ class MergePruningSpec extends SparkSpec {
     val path = tmpDir("mpinsonly") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10.0), (500, "p2", 20.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // source holds: a matched key (500 — its partition's bounds contain
     // it, so the anti-join sees it), and a key (900) inside NO
     // partition's bounds (pruned away — provably unmatched, inserted)
@@ -71,7 +71,7 @@ class MergePruningSpec extends SparkSpec {
     val path = tmpDir("mpnull") + "/t"
     Upsert.upsert(spark, path,
       Seq(("a", "p1", 1.0), ("b", "p2", 2.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // string keys prune through byte-order bounds; a matched ASCII key
     // updates in place
     Upsert.upsert(spark, path, Seq(("b", "p2", 22.0)).toDF("k", "part", "v"),
@@ -98,7 +98,7 @@ class MergePruningSpec extends SparkSpec {
       ((1 to 50).map(i => (i, "p1", i * 1.0)) ++
        (51 to 100).map(i => (i, "p2", 200.0 + i)) ++
        (101 to 150).map(i => (i, "p3", 400.0 + i))).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
 
     // unit: the compiled condition keeps p2/p3 and refutes p1
     val pinned = PartitionSnapshots.rootStats(spark, t)
@@ -151,7 +151,7 @@ class MergePruningSpec extends SparkSpec {
   test("empty-table probe answers from the manifest, first commit still lands") {
     val path = tmpDir("mpempty") + "/t"
     Upsert.upsert(spark, path, Seq((1, "p1", 1.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // drop the only partition: every state is EMPTY — the next merge
     // must see an empty table (metadata probe) and seed it fresh
     PartitionSnapshots.dropPartitions(spark, path,

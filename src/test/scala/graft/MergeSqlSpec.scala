@@ -28,7 +28,7 @@ class MergeSqlSpec extends SparkSpec {
     val seed = Seq((1, "p1", 10.0), (2, "p1", 20.0), (3, "p2", 30.0))
       .toDF("k", "part", "v")
     Upsert.upsert(spark, s"$wh/t", seed, Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     Seq((2, "p1", 21.0), (4, "p2", 40.0)).toDF("k", "part", "v")
       .createOrReplaceTempView("msql_src")
     val cat = new Catalog(spark, wh)
@@ -62,7 +62,7 @@ class MergeSqlSpec extends SparkSpec {
     val seed = Seq((1, "p1", 10.0), (2, "p1", 20.0), (3, "p2", 30.0))
       .toDF("k", "part", "v")
     Upsert.upsert(spark, s"$wh/t", seed, Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     val before = parquetFiles(s"$wh/t")
     // source holds one matched key (2) and one new one (5): insert-only
     // semantics must drop the matched row and append only the new one
@@ -92,8 +92,7 @@ class MergeSqlSpec extends SparkSpec {
   test("MERGE text: USING subquery, multi-part target name, case-folded ON") {
     val wh = tmpDir("msqlsub")
     Upsert.upsert(spark,
-      s"$wh/dim", Seq((1, "a"), (2, "b")).toDF("ID", "name"), Seq("ID"),
-      partitionManifests = false)
+      s"$wh/dim", Seq((1, "a"), (2, "b")).toDF("ID", "name"), Seq("ID"))
     Seq((2, "b2"), (3, "c")).toDF("ID", "name")
       .createOrReplaceTempView("msql_sub_src")
     val cat = new Catalog(spark, wh)
@@ -154,7 +153,7 @@ class MergeSqlSpec extends SparkSpec {
     Upsert.upsert(spark, s"$wh/t",
       Seq((1, "p1", 10.0, "a"), (2, "p1", 20.0, "b"), (3, "p2", 30.0, "c"))
         .toDF("k", "part", "v", "tag"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // source deliberately lacks `tag` and carries an EXTRA column the
     // assignments read — legal without evolution for assignment lists
     Seq((2, "p1", 5.0), (4, "p2", 7.0)).toDF("k", "part", "bump")
@@ -195,7 +194,7 @@ class MergeSqlSpec extends SparkSpec {
     Upsert.upsert(spark, s"$wh/t",
       Seq((1, "p1", 10.0), (2, "p1", 20.0), (3, "p2", 30.0), (4, "p2", 40.0),
         (5, "p2", 50.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Seq((1, "p1", 11.0), (6, "p2", 60.0)).toDF("k", "part", "v")
       .createOrReplaceTempView("msql_bys_src")
     val cat = new Catalog(spark, wh)
@@ -221,7 +220,7 @@ class MergeSqlSpec extends SparkSpec {
     val seed = Seq((1, "p1", 10.0), (2, "p1", 20.0), (3, "p2", 30.0),
       (4, "p2", 40.0)).toDF("k", "part", "v")
     Upsert.upsert(spark, s"$wh/t", seed, Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     // k=1: matched, new v negative → first clause (DELETE) wins
     // k=2: matched, new v positive → falls to the UPDATE clause
     // k=3: matched but BOTH conditions false → target row keeps
@@ -258,7 +257,7 @@ class MergeSqlSpec extends SparkSpec {
     val wh = tmpDir("msqlnoal")
     Upsert.upsert(spark, s"$wh/t",
       Seq((1, "p1", 10.0), (2, "p1", 20.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Seq((1, "p1", -1.0), (2, "p1", 21.0)).toDF("k", "part", "v")
       .createOrReplaceTempView("msql_noal_src")
     val cat = new Catalog(spark, wh)
@@ -277,7 +276,7 @@ class MergeSqlSpec extends SparkSpec {
     val wh = tmpDir("msqlord")
     Upsert.upsert(spark, s"$wh/t",
       Seq((1, "p1", 10.0)).toDF("k", "part", "v"), Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     Seq((1, "p1", 99.0)).toDF("k", "part", "v")
       .createOrReplaceTempView("msql_ord_src")
     val cat = new Catalog(spark, wh)
@@ -301,7 +300,7 @@ class MergeSqlSpec extends SparkSpec {
     val seed = (1 to 40).map(i => (i, if (i % 2 == 0) "p1" else "p2",
       i * 1.0)).toDF("k", "part", "v")
     Upsert.upsert(spark, s"$wh/t", seed, Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     val cat = new Catalog(spark, wh)
     val rt = s"$wh/t"
     // (1) data-column IN list → equality-delete commit (no rewrite)
@@ -336,7 +335,7 @@ class MergeSqlSpec extends SparkSpec {
     val seed = (1 to 10).map(i => (i, if (i <= 5) "p1" else "p2", i * 1.0))
       .toDF("k", "part", "v")
     Upsert.upsert(spark, s"$wh/t", seed, Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     val cat = new Catalog(spark, wh)
     val preHead = PartitionSnapshots.currentRootVersion(spark, s"$wh/t").get
     // assignment referencing another column, filtered
@@ -376,7 +375,7 @@ class MergeSqlSpec extends SparkSpec {
     val seed = (1 to 400).map(i => (i, s"p${(i - 1) / 100}", i * 1.0))
       .toDF("k", "part", "v").repartitionByRange(4, col("k"))
     Upsert.upsert(spark, s"$wh/t", seed, Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     val cat = new Catalog(spark, wh)
     // the pruned row-pos read constructs ONLY the candidate partition
     val pruned = PartitionSnapshots.readWithRowPosPruned(spark, s"$wh/t",
@@ -401,7 +400,7 @@ class MergeSqlSpec extends SparkSpec {
   test("MERGE WITH SCHEMA EVOLUTION adds the new source column") {
     val wh = tmpDir("msqlevo")
     Upsert.upsert(spark, s"$wh/t", Seq((1, "p1", 10.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Seq((2, "p1", 20.0, "x")).toDF("k", "part", "v", "extra")
       .createOrReplaceTempView("msql_evo_src")
     val cat = new Catalog(spark, wh)
@@ -422,7 +421,7 @@ class MergeSqlSpec extends SparkSpec {
     Upsert.upsert(spark, s"$wh/t",
       Seq((1, "p1", 10.0), (2, "p1", 20.0), (3, "p2", 30.0))
         .toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Seq((1, "p1", -1.0, "gone"), (2, "p1", 21.0, "x"), (4, "p2", 40.0, "y"))
       .toDF("k", "part", "v", "extra")
       .createOrReplaceTempView("msql_evog_src")
@@ -448,7 +447,7 @@ class MergeSqlSpec extends SparkSpec {
     val wh = tmpDir("msqlpcol")
     Upsert.upsert(spark, s"$wh/t",
       Seq((1, "p1", 10.0), (2, "p2", 20.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // the source LACKS the partition column entirely
     Seq((1, 11.0, "x")).toDF("k", "v", "extra")
       .createOrReplaceTempView("msql_pcol_src")

@@ -20,7 +20,7 @@ class OptimisticCommitSpec extends SparkSpec {
       path,
       Seq((1, "p1", 10.0), (2, "p2", 20.0), (3, "p3", 30.0))
         .toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     path
   }
 

@@ -50,7 +50,7 @@ class OrphanSweepSpec extends SparkSpec {
     val path = tmpDir("orph") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 1.0), (2, "p2", 2.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val before = Upsert.read(spark, path).collect().toSet
     val debris = injectCrashDebris(path)
     // dry run lists the debris, deletes nothing
@@ -71,7 +71,7 @@ class OrphanSweepSpec extends SparkSpec {
   test("young debris survives the TTL guard") {
     val path = tmpDir("orphy") + "/t"
     Upsert.upsert(spark, path, Seq((1, "p1", 1.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val f = fsOf(path)
     f.mkdirs(new Path(s"$path/_staging-young"))
     PartitionSnapshots.removeOrphans(spark, path) shouldBe Nil
@@ -82,7 +82,7 @@ class OrphanSweepSpec extends SparkSpec {
     val path = tmpDir("orphtag") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 1.0), (2, "p2", 2.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.tagRoot(spark, path, "train-v1")
     // a branch commit stages a slot only the branch's root names
     PartitionSnapshots.createBranch(spark, path, "wip")
@@ -109,7 +109,7 @@ class OrphanSweepSpec extends SparkSpec {
     // low retention so old roots (and the slots only they name) expire
     for (i <- 1 to 6)
       Upsert.upsert(spark, path, Seq((1, "p1", i * 1.0)).toDF("k", "part", "v"),
-        Seq("k"), partitionCols = Seq("part"), partitionManifests = true,
+        Seq("k"), partitionCols = Seq("part"),
         retainVersions = 2)
     import scala.jdk.CollectionConverters._
     // which roots resolve END-TO-END before the sweep? (commit-time

@@ -15,8 +15,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmansnap") + "/t"
     val t0 = Seq((1, "2024-01-01", 10), (2, "2024-01-02", 20))
       .toDF("k", "date", "v")
-    Upsert.upsert(spark, path, t0, Seq("k"), partitionCols = Seq("date"),
-      partitionManifests = true)
+    Upsert.upsert(spark, path, t0, Seq("k"), partitionCols = Seq("date"))
     val out = Upsert.read(spark, path)
     // partition column recovered from the k=v path segment, DATE-typed
     // exactly as a flat hive read would type it
@@ -33,8 +32,8 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmansticky") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
-    // second upsert WITHOUT the flag must still commit through manifests
+      Seq("k"), partitionCols = Seq("part"))
+    // every later upsert commits through the manifests too
     Upsert.upsert(spark, path, Seq((2, "p2", 99)).toDF("k", "part", "v"),
       Seq("k"), partitionCols = Seq("part"))
     byKey(path) shouldBe Map(1 -> (("p1", 10)), 2 -> (("p2", 99)))
@@ -47,7 +46,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmanmove") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Upsert.upsert(spark, path, Seq((1, "p2", 11)).toDF("k", "part", "v"),
       Seq("k"), partitionCols = Seq("part"))
     // no stale row in p1, both rows in p2
@@ -68,7 +67,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val flatFiles = new java.io.File(s"$path/part=p2").listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).toSet
     Upsert.upsert(spark, path, Seq((3, "p2", 99)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     byKey(path) shouldBe
       Map(1 -> (("p1", 10)), 2 -> (("p2", 20)), 3 -> (("p2", 99)))
     // untouched p1 was never rewritten, listed into staging, or repointed:
@@ -85,7 +84,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmanexp") + "/t"
     Seq((1, "p1", 10)).toDF("k", "part", "v").write.partitionBy("part").parquet(path)
     Upsert.upsert(spark, path, Seq((1, "p1", 11)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true,
+      Seq("k"), partitionCols = Seq("part"),
       retainVersions = 2)
     // one real version: v0 still inside the retention window
     new java.io.File(s"$path/part=p1").listFiles()
@@ -102,7 +101,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmancrash") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // simulate a writer that died after renaming its staged dir into the
     // v2 slot but before _SUCCESS/publish: complete data, unpublished
     Seq((1, 99)).toDF("k", "v").write
@@ -140,7 +139,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmanvac") + "/t"
     (0 to 6).foreach { i =>
       Upsert.upsert(spark, path, Seq((1, "p1", i)).toDF("k", "part", "v"),
-        Seq("k"), partitionCols = Seq("part"), partitionManifests = true,
+        Seq("k"), partitionCols = Seq("part"),
         retainVersions = 2)
     }
     val vs = graft.sources.Snapshots.versions(spark, s"$path/part=p1")
@@ -156,7 +155,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
       keys.map(k => (s"$part-$k", part, v)).toDF("k", "part", "v")
     Upsert.upsert(spark, path,
       state("p1", 0).unionByName(state("p2", 0)), Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val reader = new Thread(() => {
@@ -213,7 +212,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmanroot") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.rootManifest(spark, path) shouldBe
       Some(Map("part=p1" -> "v00000001", "part=p2" -> "v00000001"))
     // a key moves: touched partitions advance, the emptied one goes EMPTY.
@@ -234,7 +233,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmanroottt") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Upsert.upsert(spark, path, Seq((1, "p2", 11)).toDF("k", "part", "v"),
       Seq("k"), partitionCols = Seq("part"))
     // current: the key moved; asOf the first root version: the seed state,
@@ -253,7 +252,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v")
       .write.partitionBy("part").parquet(path)
     Upsert.upsert(spark, path, Seq((2, "p2", 99)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // untouched p1 pinned at its implicit flat v0; touched p2 at v1
     PartitionSnapshots.rootManifest(spark, path) shouldBe
       Some(Map("part=p1" -> "FLAT", "part=p2" -> "v00000001"))
@@ -263,7 +262,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
   test("reads resolve through the manifest, not directory listing") {
     val path = tmpDir("pmanrootlist") + "/t"
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // files dropped into the table dir OUTSIDE a manifest commit (a
     // half-done distcp, a rogue writer) are invisible until committed —
     // the Iceberg contract, and the proof reads never list-and-guess
@@ -275,7 +274,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmanrootatomic") + "/t"
     def state(v: Int) = Seq((1, "p1", v), (2, "p2", v)).toDF("k", "part", "v")
     Upsert.upsert(spark, path, state(0), Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val reader = new Thread(() => {
@@ -322,7 +321,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
       .unionByName(Seq((1000, "p2", 0)).toDF("k", "part", "v").coalesce(1))
       .write.partitionBy("part").parquet(path)
     Upsert.upsert(spark, path, Seq((1000, "p2", 1)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val before = PartitionSnapshots.rootManifest(spark, path).get
     before("part=p1") shouldBe "FLAT"
     dataFileCount(s"$path/part=p1") should be >= 8
@@ -346,7 +345,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmanchanges") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20), (3, "p2", 30)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Upsert.upsert(spark, path, Seq((2, "p2", 21)).toDF("k", "part", "v"),
       Seq("k"), partitionCols = Seq("part"))
     // poison the untouched partition's pinned data dir: if the changelog
@@ -373,7 +372,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
       .unionByName(Seq((100, "p2", 0)).toDF("k", "part", "v").coalesce(1))
       .write.partitionBy("part").parquet(path)
     Upsert.upsert(spark, path, Seq((100, "p2", 1)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.compact(spark, path, minFiles = 2)
       .keySet shouldBe Set("part=p1")
     // the rewrite changed bytes-on-disk, not content: the feed is empty
@@ -389,7 +388,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
         Expectations.NotNull("k")))
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true,
+      Seq("k"), partitionCols = Seq("part"),
       audit = Some(gate))
     byKey(path) shouldBe Map(1 -> (("p1", 10)), 2 -> (("p2", 20)))
     // the rejected merge: v=999 breaks the range rule over the WOULD-BE
@@ -415,7 +414,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmanguard") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // both whole-table snapshot commits end in cleanupFlatFiles, which
     // would delete every k=v partition dir (and its immutable _versions
     // history) while the root manifest survived pointing at nothing —
@@ -440,7 +439,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmanwapthrow") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // a rule naming a column the table does not have: the audit plan
     // throws AnalysisException — not a clean failed-rules report
     val broken: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
@@ -482,7 +481,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val gate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       df => Expectations.check(df, Seq(Expectations.InRange("v", 0, 100)))
     Upsert.upsert(spark, path, Seq((1, "p1", 11)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true,
+      Seq("k"), partitionCols = Seq("part"),
       audit = Some(gate))
     byKey(path) shouldBe Map(1 -> (("p1", 11)))
     // no marker survives anywhere under the partition
@@ -498,7 +497,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmandelta") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 0), (2, "p2", 0), (3, "p3", 0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // first commit: a FULL manifest naming all three partitions
     rootFile(path, 1, "manifest").isFile shouldBe true
     // touching 1 of 3 partitions writes a DELTA: parent line + ONE entry,
@@ -543,7 +542,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmandeltafork") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Upsert.upsert(spark, path, Seq((2, "p2", 21)).toDF("k", "part", "v"),
       Seq("k"), partitionCols = Seq("part"))
     rootFile(path, 2, "delta").isFile shouldBe true
@@ -566,7 +565,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     // the newest root version — a delta whose parents it just deleted
     (0 to 3).foreach { i =>
       Upsert.upsert(spark, path, Seq((1, "p1", i)).toDF("k", "part", "v"),
-        Seq("k"), partitionCols = Seq("part"), partitionManifests = true,
+        Seq("k"), partitionCols = Seq("part"),
         retainVersions = 1)
     }
     // v4 is a delta; its chain v1(full)..v3 must have survived vacuum
@@ -592,7 +591,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
   test("a crash between slot seal and root publish is a clean abort") {
     val path = tmpDir("pmansealcrash") + "/t"
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // simulate a writer that died AFTER sealing its new slot (_SUCCESS)
     // but BEFORE the root manifest publish — the commit point was never
     // reached, so this must read as if the commit never happened
@@ -613,7 +612,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
   test("a lagging partition pointer heals on the partition's next commit") {
     val path = tmpDir("pmanptrlag") + "/t"
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Upsert.upsert(spark, path, Seq((1, "p1", 11)).toDF("k", "part", "v"),
       Seq("k"), partitionCols = Seq("part"))
     // simulate a crash between the root publish and the pointer swap:
@@ -642,7 +641,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
       Seq("p1", "p2").flatMap(p => keys.map(k => (s"$p-$k", p, v)))
         .toDF("k", "part", "v").repartition(4) // fragmented: compactable
     Upsert.upsert(spark, path, state(0), Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true,
+      partitionCols = Seq("part"),
       retainVersions = 2)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -693,7 +692,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmanappend") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val v1Files = new java.io.File(s"$path/part=p1/_versions/v00000001")
       .listFiles().map(f => f.getName -> f.lastModified()).toMap
     Upsert.append(spark, path, Seq((3, "p1", 30)).toDF("k", "part", "v"),
@@ -730,7 +729,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmaninsapp") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // k=1 exists (kept as-is, its partition NOT rewritten); k=3 is new
     Upsert.upsert(spark, path,
       Seq((1, "p1", 99), (3, "p1", 30)).toDF("k", "part", "v"),
@@ -753,7 +752,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
   test("idempotent txn appends: same (appId, version) never commits twice") {
     val path = tmpDir("ptxn") + "/t"
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val b0 = Seq((2, "p1", 20)).toDF("k", "part", "v")
     Upsert.append(spark, path, b0, Seq("part"), txn = Some(("ingest", 0L)))
     // props recorded on the committing root (Iceberg snapshot summary)
@@ -784,7 +783,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
       spark.range(10000).selectExpr(s"id * 4 + $i AS k", "'p1' AS part",
         "CAST(id AS INT) AS v"))
     Upsert.upsert(spark, path, stripes.head, Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     stripes.tail.foreach(df => Upsert.append(spark, path, df, Seq("part")))
     val res = PartitionSnapshots.compact(spark, path,
       targetFileBytes = 16L * 1024, sortWithin = Seq("k"))
@@ -821,7 +820,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
         "CAST((id * 4 + " + i + ") / 1000 AS INT) AS part",
         "CAST(id AS INT) AS v"))
     Upsert.upsert(spark, path, stripes.head, Seq("k"),
-      partitionCols = Seq("part"), partitionManifests = true)
+      partitionCols = Seq("part"))
     stripes.tail.foreach(df => Upsert.append(spark, path, df, Seq("part")))
     val res = PartitionSnapshots.compact(spark, path,
       targetFileBytes = 8L * 1024, sortWithin = Seq("k"))
@@ -860,7 +859,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmeta") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Upsert.append(spark, path, Seq((3, "p1", 30)).toDF("k", "part", "v"),
       Seq("part"), txn = Some(("meta", 0L)))
     PartitionSnapshots.deleteKeys(spark, path, Seq(2).toDF("k")) shouldBe true
@@ -899,7 +898,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pexpire") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 0), (2, "p2", 0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // v2..v12: enough commits that the delta chain rebases and old
     // chains become droppable
     (1 to 11).foreach { i =>
@@ -939,7 +938,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pbranch") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.createBranch(spark, path, "etl")
     // two commits to the branch: a merge, then a fast append
     Upsert.upsert(spark, path, Seq((1, "p1", 11)).toDF("k", "part", "v"),
@@ -996,7 +995,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
   test("interleaved main and branch writers stay isolated under lease contention") {
     val path = tmpDir("pbrcon") + "/t"
     Upsert.upsert(spark, path, Seq((0, "p1", 0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.createBranch(spark, path, "side")
     def loop(n: Int)(body: Int => Unit): Thread = new Thread(() => {
       var i = 1
@@ -1028,7 +1027,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
   test("branch slots above main never force rebases nor recycle version numbers") {
     val path = tmpDir("pbrdelta") + "/t"
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.createBranch(spark, path, "b")
     Upsert.upsert(spark, path, Seq((2, "p1", 20)).toDF("k", "part", "v"),
       Seq("k"), partitionCols = Seq("part"), branch = Some("b")) // v2
@@ -1056,7 +1055,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
   test("schema evolution staged on a branch publishes with the fast-forward") {
     val path = tmpDir("pbrevo") + "/t"
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.createBranch(spark, path, "evo")
     // the branch adds a column; main's pinned schema is untouched
     Upsert.upsert(spark, path,
@@ -1076,7 +1075,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
   test("published branch heads: txn stamps reach main, pointer loss resolves to them") {
     val path = tmpDir("pbrpub") + "/t"
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.createBranch(spark, path, "in")
     Upsert.append(spark, path, Seq((2, "p1", 20)).toDF("k", "part", "v"),
       Seq("part"), txn = Some(("app", 7L)), branch = Some("in")) // v2
@@ -1103,7 +1102,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pfdedup") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (3, "p2", 30)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Upsert.append(spark, path, Seq((2, "p1", 20)).toDF("k", "part", "v"),
       Seq("part")) // p1 now a two-part union
     // one delete commit hitting BOTH partitions: the ref lands on every
@@ -1123,7 +1122,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     Upsert.upsert(spark, path,
       (1 to 20).map(k => (k, if (k <= 10) "p1" else "p2", k * 1.5))
         .toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // count(*) answered from the manifest alone — and exactly
     PartitionSnapshots.rowCount(spark, path) shouldBe Some(20L)
     // per-partition bounds harvested from the footers Spark already wrote
@@ -1151,7 +1150,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     Upsert.upsert(spark, path,
       (1 to 30).map(k => (k, s"p${(k - 1) / 10 + 1}", k * 10))
         .toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val out = PartitionSnapshots.readWhereBetween(spark, path, "k", 12, 18)
     out.collect().map(_.getAs[Int]("k")).sorted shouldBe (12 to 18).toArray
     // the scan was planned from manifest bounds: only p2's files appear
@@ -1168,7 +1167,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     Upsert.upsert(spark, path,
       (1 to n).map(k => (k, if (k % 2 == 0) "p1" else "p2", k * 10))
         .toDF("k", "part", "v").repartition(4),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true,
+      Seq("k"), partitionCols = Seq("part"),
       retainVersions = 2)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -1213,7 +1212,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmanrollback") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Upsert.upsert(spark, path, Seq((1, "p2", 11)).toDF("k", "part", "v"),
       Seq("k"), partitionCols = Seq("part"))
     byKey(path) shouldBe Map(1 -> (("p2", 11)), 2 -> (("p2", 20)))
@@ -1231,7 +1230,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmandrop") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20), (3, "p3", 30)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val preDrop = PartitionSnapshots.rootVersions(spark, path).max
     // values arrive unescaped; the predicate picks two of three
     PartitionSnapshots.dropPartitions(spark, path,
@@ -1254,7 +1253,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmantag") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true,
+      Seq("k"), partitionCols = Seq("part"),
       retainVersions = 1)
     PartitionSnapshots.tagRoot(spark, path, "train-2024.06")
     PartitionSnapshots.rootTags(spark, path) shouldBe Map("train-2024.06" -> 1L)
@@ -1282,7 +1281,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmanevo") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // evolving merge touches ONLY p2 — p1's files never learn the column
     Upsert.upsert(spark, path,
       Seq((2, "p2", 21, "x")).toDF("k", "part", "v", "extra"),
@@ -1303,7 +1302,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmandel") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p1", 20), (3, "p2", 30)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val preDelete = PartitionSnapshots.rootVersions(spark, path).max
     val p1Files = new java.io.File(s"$path/part=p1/_versions/v00000001")
       .listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
@@ -1328,7 +1327,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmandelseq") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p1", 20), (3, "p2", 30)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.deleteKeys(spark, path, Seq(Tuple1(2)).toDF("k"))
     // MERGE re-inserting the deleted key: the touched partition's rewrite
     // reads delete-applied data, commits a PLAIN state, and the new row
@@ -1346,7 +1345,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmandelcmp") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p1", 20), (3, "p2", 30)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true,
+      Seq("k"), partitionCols = Seq("part"),
       retainVersions = 1)
     PartitionSnapshots.deleteKeys(spark, path, Seq(Tuple1(1)).toDF("k"),
       retainVersions = 1)
@@ -1385,7 +1384,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmandelcdc") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p1", 20), (3, "p2", 30)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val v1 = PartitionSnapshots.rootVersions(spark, path).max
     PartitionSnapshots.deleteKeys(spark, path, Seq(Tuple1(2)).toDF("k"))
     val v2 = PartitionSnapshots.rootVersions(spark, path).max
@@ -1398,7 +1397,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmandelguard") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     an[IllegalArgumentException] should be thrownBy
       PartitionSnapshots.deleteKeys(spark, path, Seq(Tuple1("p1")).toDF("part"))
     an[IllegalArgumentException] should be thrownBy
@@ -1419,7 +1418,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pmandelwap") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p1", -5)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.deleteKeys(spark, path, Seq(Tuple1(2)).toDF("k"))
     // the rule rejects negative v; the only negative row is DELETED, so
     // the audit must pass — it validates what readers would actually scan
@@ -1436,8 +1435,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     // spec (date): hour is an ordinary DATA column of the old files
     val seed = Seq((1, "2024-01-01", 3, 10), (2, "2024-01-01", 7, 20),
       (3, "2024-01-02", 5, 30)).toDF("k", "date", "hour", "v")
-    Upsert.upsert(spark, path, seed, Seq("k"), partitionCols = Seq("date"),
-      partitionManifests = true)
+    Upsert.upsert(spark, path, seed, Seq("k"), partitionCols = Seq("date"))
     PartitionSnapshots.evolvePartitionSpec(spark, path, Seq("date", "hour"))
     PartitionSnapshots.partitionCols(spark, path) shouldBe Seq("date", "hour")
     // the old layout is still the whole table; hour comes from the files
@@ -1488,8 +1486,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     // seed ONE partition as three range-disjoint files (k slices)
     val seed = (1 to 300).map(i => (i, "p1", i * 10)).toDF("k", "part", "v")
       .repartitionByRange(3, $"k")
-    Upsert.upsert(spark, path, seed, Seq("k"), partitionCols = Seq("part"),
-      partitionManifests = true)
+    Upsert.upsert(spark, path, seed, Seq("k"), partitionCols = Seq("part"))
     val v1 = new java.io.File(s"$path/part=p1/_versions/v00000001")
     val before = v1.listFiles().filter(f =>
       f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
@@ -1554,8 +1551,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pfsgap") + "/t"
     val seed = (1 to 300).map(i => (i, "p1", i * 10)).toDF("k", "part", "v")
       .repartitionByRange(3, $"k")
-    Upsert.upsert(spark, path, seed, Seq("k"), partitionCols = Seq("part"),
-      partitionManifests = true)
+    Upsert.upsert(spark, path, seed, Seq("k"), partitionCols = Seq("part"))
     // merge the two EXTREMES: the interval [2, 299] covers every file,
     // but the point set {2, 299} leaves the middle file's range in a
     // gap — it must survive untouched
@@ -1579,8 +1575,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val seed = (1 to 300)
       .map(i => (f"id$i%05d", "p1", i)).toDF("k", "part", "v")
       .repartitionByRange(3, $"k")
-    Upsert.upsert(spark, path, seed, Seq("k"), partitionCols = Seq("part"),
-      partitionManifests = true)
+    Upsert.upsert(spark, path, seed, Seq("k"), partitionCols = Seq("part"))
     // one key in the FIRST lexicographic slice: the other two files'
     // string bounds provably exclude it and must survive by token
     Upsert.upsert(spark, path,
@@ -1610,8 +1605,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val path = tmpDir("pfsretain") + "/t"
     val seed = (1 to 300).map(i => (i, "p1", i)).toDF("k", "part", "v")
       .repartitionByRange(3, $"k")
-    Upsert.upsert(spark, path, seed, Seq("k"), partitionCols = Seq("part"),
-      partitionManifests = true)
+    Upsert.upsert(spark, path, seed, Seq("k"), partitionCols = Seq("part"))
     // churn many single-key merges well past retainVersions: v00000001
     // still holds live survivor files and must never be vacuumed
     (1 to 6).foreach { i =>
@@ -1684,7 +1678,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     // with the row-count key and decodeStats threw NumberFormatException
     Upsert.upsert(spark, path,
       Seq((1, "p1", 5L), (2, "p2", 7L)).toDF("k", "part", "rows"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // fast append exercises the stats-MERGE path (decode prior + encode)
     Upsert.append(spark, path,
       Seq((3, "p1", 9L)).toDF("k", "part", "rows"), Seq("part"))
@@ -1701,7 +1695,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
   test("branch append aligns against the branch head's evolved schema") {
     val path = tmpDir("pbrappevo") + "/t"
     Upsert.upsert(spark, path, Seq((1, "p1", 10)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.createBranch(spark, path, "evo")
     Upsert.upsert(spark, path,
       Seq((2, "p1", 20, "x")).toDF("k", "part", "v", "tag"),
@@ -1730,7 +1724,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     Upsert.upsert(spark, path,
       Seq((1, "p1", 1.0, "a"), (2, "p2", 2.0, "b"))
         .toDF("k", "part", "v", "extra"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // direct API overwrite of p1 with a df LACKING `extra`
     PartitionSnapshots.overwritePartitions(spark, path,
       Seq((10, "p1", 10.0)).toDF("k", "part", "v"))
@@ -1761,7 +1755,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     Upsert.upsert(spark, path,
       Seq(("99999999999999999999", 1, 1.0), ("12345678901234567890123", 2, 2.0))
         .toDF("big", "k", "v"),
-      Seq("k"), partitionCols = Seq("big"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("big"))
     val meta = PartitionSnapshots.tableRowSchema(spark, path).get
     val frame = Upsert.read(spark, path).schema
     meta("big").dataType shouldBe frame("big").dataType
@@ -1770,7 +1764,7 @@ class PartitionSnapshotsSpec extends SparkSpec {
     val tp = tmpDir("rowschemats") + "/t"
     Upsert.upsert(spark, tp,
       Seq(("2024-01-01 10:11:12", 1, 1.0)).toDF("ts", "k", "v"),
-      Seq("k"), partitionCols = Seq("ts"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("ts"))
     val metaT = PartitionSnapshots.tableRowSchema(spark, tp).get
     metaT("ts").dataType shouldBe
       Upsert.read(spark, tp).schema("ts").dataType

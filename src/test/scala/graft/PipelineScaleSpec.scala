@@ -39,7 +39,7 @@ class PipelineScaleSpec extends SparkSpec {
     BronzeToSilver.runBatch(spark, root, wh)
     val silverSecs = (System.nanoTime() - t0) / 1e9
 
-    val articles = spark.read.parquet(s"$wh/articles")
+    val articles = graft.operators.Upsert.read(spark, s"$wh/articles")
     articles.count() shouldBe 20000
     // hive partition layout by date → partition pruning works downstream
     val parts = FsUtils.listSubdirs(spark, s"$wh/articles").filter(_.startsWith("date="))
@@ -56,13 +56,13 @@ class PipelineScaleSpec extends SparkSpec {
     Files.createDirectories(p2.getParent)
     Files.writeString(p2, articleJson(99999, 0))
     BronzeToSilver.runBatch(spark, root + "2", wh)
-    spark.read.parquet(s"$wh/articles").count() shouldBe 20001
+    graft.operators.Upsert.read(spark, s"$wh/articles").count() shouldBe 20001
     new java.io.File(otherPart).lastModified() shouldBe before
 
     val t1 = System.nanoTime()
     SilverToGold.run(spark, wh, gold)
     val goldSecs = (System.nanoTime() - t1) / 1e9
-    val fact = spark.read.parquet(s"$gold/fact_article_publication")
+    val fact = graft.operators.Upsert.read(spark, s"$gold/fact_article_publication")
     fact.count() shouldBe 20001
     graft.operators.Upsert.read(spark, s"$gold/dim_author").count() shouldBe 212 // 211 + UNKNOWN
     graft.operators.Upsert.read(spark, s"$gold/dim_date").count() shouldBe 30

@@ -62,7 +62,7 @@ class PipelineSpec extends SparkSpec {
     silver(wh, "articles").collect().map(_.toSeq).toSet shouldBe before
 
     SilverToGold.run(spark, wh, gold)
-    val fact = spark.read.parquet(s"$gold/fact_article_publication")
+    val fact = graft.operators.Upsert.read(spark, s"$gold/fact_article_publication")
     fact.count() shouldBe 2
     val f1 = fact.where(col("PublicationDateKey") === 20251010).collect()(0)
     f1.getAs[Int]("WordCountInMainContent") shouldBe 5
@@ -82,7 +82,8 @@ class PipelineSpec extends SparkSpec {
 
     // gold re-run idempotent too
     SilverToGold.run(spark, wh, gold)
-    spark.read.parquet(s"$gold/fact_article_publication").count() shouldBe 2
+    graft.operators.Upsert.read(spark, s"$gold/fact_article_publication")
+      .count() shouldBe 2
   }
 
   test("schema evolution end to end: new bronze column flows to silver and gold with NULL backfill") {
@@ -120,7 +121,7 @@ class PipelineSpec extends SparkSpec {
 
     // gold: the publication fact evolves through the same align path
     SilverToGold.run(spark, wh, gold, extraArticleCols = Seq("read_time_secs"))
-    val fact = spark.read.parquet(s"$gold/fact_article_publication")
+    val fact = graft.operators.Upsert.read(spark, s"$gold/fact_article_publication")
     fact.columns should contain("read_time_secs")
     fact.count() shouldBe 3
     fact.where(col("PublicationDateKey") === 20251012)
@@ -198,22 +199,22 @@ class PipelineSpec extends SparkSpec {
     val d2 = java.sql.Date.valueOf("2025-10-11")
     // empty gold → both days pending
     SilverToGold.missingDates(spark, wh, gold) shouldBe Seq(d1, d2)
+    SilverToGold.runIncremental(spark, wh, gold, Seq(d1))
+    SilverToGold.missingDates(spark, wh, gold) shouldBe Seq(d2)
+
+    // a crashed write of day 2: complete data sealed into a version slot
+    // (with _SUCCESS) that no root manifest ever published must NOT mark
+    // its date done
+    val fact = s"$gold/fact_article_publication"
+    graft.operators.Upsert.read(spark, fact).drop("PublicationDateKey")
+      .write.parquet(s"$fact/PublicationDateKey=20251011/_versions/v00000001")
+    SilverToGold.missingDates(spark, wh, gold) shouldBe Seq(d2)
+
     // catch-up loop: run what's missing, then nothing is
     SilverToGold.runIncremental(spark, wh, gold,
       SilverToGold.missingDates(spark, wh, gold))
     SilverToGold.missingDates(spark, wh, gold) shouldBe Nil
-    spark.read.parquet(s"$gold/fact_article_publication").count() shouldBe 2
-
-    // a crashed write's EMPTY partition dir must NOT mark its date done
-    val ghost = new java.io.File(
-      s"$gold/fact_article_publication/PublicationDateKey=20251012")
-    ghost.mkdirs() shouldBe true
-    SilverToGold.missingDates(spark, wh, gold) shouldBe Nil // not a silver date
-    val ghost2 = new java.io.File(
-      s"$gold/fact_article_publication/PublicationDateKey=20251011")
-    // empty out day 2's partition to simulate the crash
-    ghost2.listFiles().foreach(_.delete())
-    SilverToGold.missingDates(spark, wh, gold) shouldBe Seq(d2)
+    graft.operators.Upsert.read(spark, fact).count() shouldBe 2
   }
 
   test("changelog-driven gold derives its day work-list from silver's root manifests") {
@@ -228,7 +229,7 @@ class PipelineSpec extends SparkSpec {
       Files.writeString(p, json)
     }
     writeFixtures(day12Root)
-    BronzeToSilver.runBatch(spark, day12Root, wh, partitionManifests = true)
+    BronzeToSilver.runBatch(spark, day12Root, wh)
     val articles = s"$wh/articles"
     val v1 = graft.sources.PartitionSnapshots.rootVersions(spark, articles).last
     SilverToGold.run(spark, wh, goldInc) // gold current as of silver root v1
@@ -240,7 +241,7 @@ class PipelineSpec extends SparkSpec {
       """{"title":"Bai 3","url":"https://e.vn/a3","author":"Cuc","topic":"x","sub_topic":null,"publish_date":"1760270400000","description":"d3","main_content":"tám chín mười","keywords":["k1"],"references":["r2"],"comment_count":0,"top_comments":[],"ingested_at":"2025-10-12T15:00:00","year":2025,"month":10,"day":12}""")
     put(day3Root, "vnexpress/kinh-doanh/2025/10/11/a2.json",
       """{"title":"Bai 2 sua","url":"https://e.vn/a2","author":"Binh","topic":"x","sub_topic":null,"publish_date":"1760197020000","description":"d2 updated","main_content":"sáu bảy tám","keywords":["k2","k3"],"references":[],"comment_count":0,"top_comments":[],"ingested_at":"2025-10-12T15:00:00","year":2025,"month":10,"day":11}""")
-    BronzeToSilver.runBatch(spark, day3Root, wh, partitionManifests = true)
+    BronzeToSilver.runBatch(spark, day3Root, wh)
     val v2 = graft.sources.PartitionSnapshots.rootVersions(spark, articles).last
     v2 should be > v1
 
@@ -287,37 +288,15 @@ class PipelineSpec extends SparkSpec {
       val s = silver(whStream, name).collect().map(_.toSeq).toSet
       withClue(name) { s shouldBe b }
     }
-  }
-
-  test("streaming ingest with manifested commits equals the flat-layout run") {
-    val root = tmpDir("bronzeM")
-    val whFlat = tmpDir("silverMF")
-    val whMan = tmpDir("silverMM")
-    val ckpt = tmpDir("ckptM")
-    writeFixtures(root)
-
-    BronzeToSilver.runBatch(spark, root, whFlat)
-    // the Iceberg-MERGE shape: micro-batch MERGEs committed per date
-    // partition as version slots + a root manifest per batch
-    val q = BronzeToSilver.runStream(spark, root, whMan, ckpt,
-      maxFilesPerTrigger = 2, availableNow = true, partitionManifests = true)
-    q.awaitTermination(120000) shouldBe true
-
-    for (name <- graft.core.Schemas.silverTables) {
-      val f = silver(whFlat, name).collect().map(_.toSeq).toSet
-      val m = silver(whMan, name).collect().map(_.toSeq).toSet
-      withClue(name) { m shouldBe f }
-    }
-    // articles (the partitioned table) committed through the manifests:
-    // one root manifest per micro-batch that touched it, every partition
-    // pinned; the dimension tables kept their whole-table snapshot layout
+    // the Iceberg-MERGE shape: articles (the partitioned table) committed
+    // each micro-batch through the manifests, every partition pinned; the
+    // dimension tables kept their whole-table snapshot layout
     import graft.sources.PartitionSnapshots
-    PartitionSnapshots.isManifested(spark, s"$whMan/articles") shouldBe true
-    PartitionSnapshots.rootVersions(spark, s"$whMan/articles")
+    PartitionSnapshots.rootVersions(spark, s"$whStream/articles")
       .nonEmpty shouldBe true
-    PartitionSnapshots.rootManifest(spark, s"$whMan/articles").get.values
-      .foreach(_ should fullyMatch regex "v\\d{8,}|FLAT|EMPTY")
-    PartitionSnapshots.isManifested(spark, s"$whMan/authors") shouldBe false
+    PartitionSnapshots.rootManifest(spark, s"$whStream/articles").get.values
+      .foreach(_ should fullyMatch regex "v\\d{8,}|EMPTY")
+    PartitionSnapshots.isManifested(spark, s"$whStream/authors") shouldBe false
   }
 
   test("gold merge that loses its lease mid-merge aborts at assertHeld; successor's output survives") {
@@ -464,7 +443,7 @@ class PipelineSpec extends SparkSpec {
     val gold = tmpDir("goldWap")
     val goldRef = tmpDir("goldWapRef")
     writeFixtures(root)
-    BronzeToSilver.runBatch(spark, root, wh, partitionManifests = true)
+    BronzeToSilver.runBatch(spark, root, wh)
     SilverToGold.run(spark, wh, gold) // baseline gold from silver main
     val articles = s"$wh/articles"
     val factPath = s"$gold/fact_article_publication"
@@ -525,7 +504,7 @@ class PipelineSpec extends SparkSpec {
     Upsert.upsert(spark,
       path, Seq((1, "p1", 10), (2, "p2", 20), (3, "p3", 30))
         .toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // first run = full refresh
     FlatView.exportMirror(spark, path, mirror).sorted shouldBe
       Seq("part=p1", "part=p2", "part=p3")
@@ -566,7 +545,7 @@ class PipelineSpec extends SparkSpec {
     val path = tmpDir("mirrorevo") + "/t"
     Upsert.upsert(spark, path,
       Seq((1, "p1", 3, 10)).toDF("k", "part", "hour", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.evolvePartitionSpec(spark, path, Seq("part", "hour"))
     Upsert.upsert(spark, path,
       Seq((2, "p1", 7, 20)).toDF("k", "part", "hour", "v"),
@@ -575,6 +554,57 @@ class PipelineSpec extends SparkSpec {
     // mirror/part=p1/hour=7 — refuse loudly instead
     an[IllegalArgumentException] should be thrownBy
       FlatView.exportMirror(spark, path, tmpDir("mirrorevodst") + "/m")
+  }
+
+  test("gold facts commit through manifests: a fact's export mirror equals the table") {
+    import graft.operators.Upsert
+    import graft.sources.PartitionSnapshots
+    val root = tmpDir("bronzeGM")
+    val wh = tmpDir("silverGM")
+    val gold = tmpDir("goldGM")
+    writeFixtures(root)
+    BronzeToSilver.runBatch(spark, root, wh)
+    SilverToGold.run(spark, wh, gold)
+    for (t <- Seq("fact_article_publication", "fact_article_keyword",
+        "fact_article_reference", "fact_top_comment_activity",
+        "fact_top_comment_interaction_detail"))
+      withClue(t) {
+        PartitionSnapshots.currentRootVersion(spark, s"$gold/$t") shouldBe defined
+      }
+    val fact = s"$gold/fact_article_publication"
+    val mirror = tmpDir("goldMirror") + "/m"
+    FlatView.exportMirror(spark, fact, mirror).sorted shouldBe
+      Seq("PublicationDateKey=20251010", "PublicationDateKey=20251011")
+    val cols = Upsert.read(spark, fact).columns.toSeq.map(col)
+    spark.read.parquet(mirror).select(cols: _*).collect().map(_.toSeq).toSet shouldBe
+      Upsert.read(spark, fact).select(cols: _*).collect().map(_.toSeq).toSet
+  }
+
+  test("each UNKNOWN member lands in its dimension's one metered upsert") {
+    import graft.operators.Upsert
+    val root = tmpDir("bronzeGU")
+    val wh = tmpDir("silverGU")
+    val gold = tmpDir("goldGU")
+    writeFixtures(root)
+    BronzeToSilver.runBatch(spark, root, wh)
+    val reg = new graft.metrics.MetricsRegistry(spark)
+    try SilverToGold.run(spark, wh, gold, Some(reg)) finally reg.close()
+    // 7 dimensions + 5 facts, each one metered scope: no unmetered
+    // side commits
+    val scopes = reg.report().filter(_.jobName == "silver_to_gold")
+    scopes.size shouldBe 12
+    scopes.map(_.taskId).distinct.size shouldBe 12
+    for (dim <- Seq("dim_date", "dim_author", "dim_topic", "dim_sub_topic",
+        "dim_keyword", "dim_reference_source", "dim_interaction_type"))
+      withClue(dim) {
+        graft.sources.Snapshots.versions(spark, s"$gold/$dim").size shouldBe 1
+      }
+    SilverToGold.unknownRows(spark).foreach { case (dim, row) =>
+      withClue(dim) {
+        Upsert.read(spark, s"$gold/$dim")
+          .where(col(row.columns.head) === -1L).count() shouldBe 1
+      }
+    }
   }
 }
 

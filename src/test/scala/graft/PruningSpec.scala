@@ -193,8 +193,7 @@ class PruningSpec extends SparkSpec {
     val path = tmpDir("listprune") + "/t"
     val df = (1 to 5000).map(i => (i.toLong, i % 50, i * 1.5))
       .toDF("k", "part", "v")
-    Upsert.upsert(spark, path, df, Seq("k"), partitionCols = Seq("part"),
-      partitionManifests = true)
+    Upsert.upsert(spark, path, df, Seq("k"), partitionCols = Seq("part"))
     // a point-partition filter lists exactly ONE of the 50 dirs
     val one = Upsert.read(spark, path).where(col("part") === 7)
     one.count() shouldBe 100L
@@ -232,8 +231,7 @@ class PruningSpec extends SparkSpec {
       (3L, null, 3.0), (4L, "2024-01-03", 4.0))
       .toDF("k", "day", "v")
       .withColumn("day", col("day").cast("date"))
-    Upsert.upsert(spark, path, df, Seq("k"), partitionCols = Seq("day"),
-      partitionManifests = true)
+    Upsert.upsert(spark, path, df, Seq("k"), partitionCols = Seq("day"))
     // IN-list on the date pcol lists exactly its two dirs
     val in2 = Upsert.read(spark, path)
       .where(col("day").isin("2024-01-01", "2024-01-03"))

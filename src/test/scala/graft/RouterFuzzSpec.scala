@@ -42,7 +42,7 @@ class RouterFuzzSpec extends SparkSpec {
     val t = s"$wh/t"
     Upsert.upsert(spark, t,
       (1 to 4).map(i => (i, "p1", i * 1.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Seq((999, "p1", 9.0)).toDF("k", "part", "v")
       .createOrReplaceTempView("fuzz_src")
     val cat = new graft.sources.Catalog(spark, wh)

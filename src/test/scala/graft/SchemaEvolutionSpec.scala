@@ -22,7 +22,7 @@ class SchemaEvolutionSpec extends SparkSpec {
     Upsert.upsert(spark, t,
       Seq((1, "p1", 10, "a"), (2, "p1", 20, "b"), (3, "p2", 30, "c"))
         .toDF("k", "part", "v", "tag"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     t
   }
 

@@ -20,7 +20,7 @@ class SqlSurfaceSpec extends SparkSpec {
     val wh = tmpDir("sqlins")
     Upsert.upsert(spark, s"$wh/t",
       Seq((1, "p1", 10.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val cat = new Catalog(spark, wh)
     val pre = PartitionSnapshots.currentRootVersion(spark, s"$wh/t").get
         // positional VALUES follow the table's column order — partition
@@ -54,7 +54,7 @@ class SqlSurfaceSpec extends SparkSpec {
     Upsert.upsert(spark, s"$wh/t",
       Seq((1, "p1", 10.0), (2, "p1", 20.0), (3, "p2", 30.0))
         .toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val cat = new Catalog(spark, wh)
     val pre = PartitionSnapshots.currentRootVersion(spark, s"$wh/t").get
     cat.sql("INSERT OVERWRITE t VALUES (9, 90.0, 'p1')")
@@ -70,7 +70,7 @@ class SqlSurfaceSpec extends SparkSpec {
     val wh = tmpDir("sqlddl")
     Upsert.upsert(spark, s"$wh/t",
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val cat = new Catalog(spark, wh)
     cat.sql("ALTER TABLE t ADD COLUMN note STRING")
       .columns should contain("note")
@@ -107,7 +107,7 @@ class SqlSurfaceSpec extends SparkSpec {
       Set((1, "A"), (2, "B"))
     // TRUNCATE: metadata-only EMPTY flip on a manifested table
     Upsert.upsert(spark, s"$wh/m", Seq((1, "p1", 1.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val pre = PartitionSnapshots.currentRootVersion(spark, s"$wh/m").get
     cat.sql("TRUNCATE TABLE m").count() shouldBe 0L
     PartitionSnapshots.read(spark, s"$wh/m", asOf = pre).count() shouldBe 1L
@@ -134,7 +134,7 @@ class SqlSurfaceSpec extends SparkSpec {
     Upsert.upsert(spark, s"$wh/t",
       Seq(("05", "p1", 1.0), ("5", "p1", 2.0), ("7", "p2", 3.0))
         .toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val cat = new Catalog(spark, wh)
     cat.sql("UPDATE t SET v = 9.0 WHERE k = 5")
       .where(col("v") === 9.0).count() shouldBe 2L // BOTH '05' and '5'
@@ -187,7 +187,7 @@ class SqlSurfaceSpec extends SparkSpec {
     // fragment two partitions with several appends
     Upsert.upsert(spark, t, Seq((1, "p1", 1.0), (2, "p2", 2.0))
       .toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     for (i <- 3 to 10)
       Upsert.append(spark, t,
         Seq((i, if (i % 2 == 0) "p2" else "p1", i.toDouble))
@@ -256,7 +256,7 @@ class SqlSurfaceSpec extends SparkSpec {
     val cat = new Catalog(spark, wh)
     Upsert.upsert(spark, s"$wh/dim",
       Seq((1, "p1", 1.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Seq((1, 2)).toDF("a", "b").write.parquet(s"$wh/flat")
     val st = cat.sql("SHOW TABLES")
     st.columns.toSeq shouldBe Seq("namespace", "tableName", "isTemporary")
@@ -299,7 +299,7 @@ class SqlSurfaceSpec extends SparkSpec {
     val t = s"$wh/t"
     Upsert.upsert(spark, t,
       Seq((1, "p1", 1.0), (2, "p2", 2.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Upsert.append(spark, t, Seq((3, "p1", 3.0)).toDF("k", "part", "v"),
       Seq("part"))
     PartitionSnapshots.tagRoot(spark, t, "audit")

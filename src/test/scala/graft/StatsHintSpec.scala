@@ -33,7 +33,7 @@ class StatsHintSpec extends SparkSpec {
     val rows = (1 to 300).map(i =>
       (i, "p1", rnd.alphanumeric.take(4096).mkString))
     Upsert.upsert(spark, t, rows.toDF("k", "part", "txt"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
 
     val onDisk = dataFileBytes(t)
     onDisk should be > 500000L // sanity: the strings really are wide
@@ -53,11 +53,11 @@ class StatsHintSpec extends SparkSpec {
     val t = tmpDir("bfold") + "/t"
     Upsert.upsert(spark, t,
       (1 to 50).map(i => (i, s"p${i % 2}", s"v$i")).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     // a second commit touches ONE partition; the other's stats (incl.
     // bytes) carry forward as the encoded string
     Upsert.upsert(spark, t, Seq((1, "p0", "V1")).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val stats = PartitionSnapshots.rootStats(spark, t)
     stats.keySet shouldBe Set("part=p0", "part=p1")
     stats.values.foreach(_.bytes should be > 0L)
@@ -71,7 +71,7 @@ class StatsHintSpec extends SparkSpec {
     // sidecars prove one part free of any single probe key
     Upsert.upsert(spark, t,
       (1 to 200).map(i => (i, "p1", i * 1.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Upsert.append(spark, t,
       (201 to 400).map(i => (i, "p1", i * 1.0)).toDF("k", "part", "v"),
       Seq("part"))

@@ -20,12 +20,12 @@ class TimeTravelSqlSpec extends SparkSpec {
     val wh = tmpDir("ttsql")
     Upsert.upsert(spark, s"$wh/t",
       Seq((1, "p1", 10.0), (2, "p2", 20.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val v1 = PartitionSnapshots.currentRootVersion(spark, s"$wh/t").get
     PartitionSnapshots.tagRoot(spark, s"$wh/t", "audit2026", v1)
     Upsert.upsert(spark, s"$wh/t",
       Seq((2, "p2", 99.0), (3, "p1", 30.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val cat = new Catalog(spark, wh)
     // current sees the second commit
     cat.sql("SELECT sum(v) AS s FROM t").head().getDouble(0) shouldBe 139.0
@@ -50,13 +50,13 @@ class TimeTravelSqlSpec extends SparkSpec {
     val wh = tmpDir("ttts")
     Upsert.upsert(spark, s"$wh/t",
       Seq((1, "p1", 1.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     Thread.sleep(1100) // distinct commit mtimes at 1s FS granularity
     val between = new java.sql.Timestamp(System.currentTimeMillis())
     Thread.sleep(1100)
     Upsert.upsert(spark, s"$wh/t",
       Seq((1, "p1", 2.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val cat = new Catalog(spark, wh)
     val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd HH:mm:ss.SSS")
     fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
@@ -89,7 +89,7 @@ class TimeTravelSqlSpec extends SparkSpec {
       cat.sql("SELECT * FROM flat VERSION AS OF 1")
     // unknown tag on a manifested table names the tags it has
     Upsert.upsert(spark, s"$wh/m", Seq((1, "p1", 1.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     an[IllegalArgumentException] should be thrownBy
       cat.sql("SELECT * FROM m VERSION AS OF 'nosuchtag'")
     // expired manifested root fails loudly too
@@ -101,13 +101,13 @@ class TimeTravelSqlSpec extends SparkSpec {
     val wh = tmpDir("ttbr")
     val t = s"$wh/t"
     Upsert.upsert(spark, t, Seq((1, "p1", 1.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.createBranch(spark, t, "wip")
     Thread.sleep(1100)
     // the branch commit creates the NEWEST root slot — but it was never
     // the published state, so a now-timestamp must resolve past it
     Upsert.upsert(spark, t, Seq((1, "p1", 99.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true,
+      Seq("k"), partitionCols = Seq("part"),
       branch = Some("wip"))
     val cat = new Catalog(spark, wh)
     cat.sql("SELECT v FROM t TIMESTAMP AS OF '2099-01-01 00:00:00'")
@@ -118,11 +118,11 @@ class TimeTravelSqlSpec extends SparkSpec {
     val wh = tmpDir("ttrb")
     val t = s"$wh/t"
     Upsert.upsert(spark, t, Seq((1, "p1", 1.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     val v1 = PartitionSnapshots.currentRootVersion(spark, t).get
     Thread.sleep(1100)
     Upsert.upsert(spark, t, Seq((1, "p1", 2.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     PartitionSnapshots.rollbackRoot(spark, t, v1)
     val cat = new Catalog(spark, wh)
     // the abandoned v2 slot is newer on disk but off the published line
@@ -132,7 +132,7 @@ class TimeTravelSqlSpec extends SparkSpec {
     // invisible to timestamps between the old and new commits
     Thread.sleep(1100)
     Upsert.upsert(spark, t, Seq((2, "p1", 3.0)).toDF("k", "part", "v"),
-      Seq("k"), partitionCols = Seq("part"), partitionManifests = true)
+      Seq("k"), partitionCols = Seq("part"))
     cat.sql("SELECT sum(v) AS s FROM t TIMESTAMP AS OF '2099-01-01 00:00:00'")
       .head().getDouble(0) shouldBe 4.0
     // flat snapshot tables: the pointer bounds the candidates

@@ -43,7 +43,7 @@ class UpsertSpec extends SparkSpec {
     // key 1 re-arrives with a corrected date: must not survive in the old partition
     val src = Seq((1, "2025-10-10", 99)).toDF("k", "date", "v")
     Upsert.upsert(spark, path, src, Seq("k"), partitionCols = Seq("date"))
-    val out = spark.read.parquet(path)
+    val out = Upsert.read(spark, path)
     out.where($"k" === 1).collect().map(r =>
       (r.getAs[Any]("date").toString, r.getAs[Int]("v"))).toSeq shouldBe
       Seq(("2025-10-10", 99))
@@ -54,11 +54,15 @@ class UpsertSpec extends SparkSpec {
     val path = tmpDir("upserte") + "/t"
     val t0 = Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v")
     Upsert.upsert(spark, path, t0, Seq("k"), partitionCols = Seq("part"))
-    // the only p1 row migrates to p2 → partition p1 must disappear
+    // the only p1 row migrates to p2 → partition p1 must disappear from
+    // the current snapshot (its dir survives for readers pinned on v1)
     Upsert.upsert(spark, path, Seq((1, "p2", 11)).toDF("k", "part", "v"),
       Seq("k"), partitionCols = Seq("part"))
-    spark.read.parquet(path).count() shouldBe 2
-    new java.io.File(s"$path/part=p1").exists() shouldBe false
+    Upsert.read(spark, path).count() shouldBe 2
+    Upsert.read(spark, path).where($"part" === "p1").count() shouldBe 0
+    graft.sources.PartitionSnapshots.stateHasData(
+      graft.sources.PartitionSnapshots.rootManifest(spark, path).get(
+        "part=p1")) shouldBe false
   }
 
   test("upsert recovers a table stranded mid-swap") {
@@ -90,7 +94,7 @@ class UpsertSpec extends SparkSpec {
     Thread.sleep(1100)
     val src = Seq((2, "p1", 99)).toDF("k", "part", "v")
     Upsert.upsert(spark, path, src, Seq("k"), partitionCols = Seq("part"))
-    val after = spark.read.parquet(path)
+    val after = Upsert.read(spark, path)
     after.count() shouldBe 3
     after.where($"k" === 2).select("v").collect()(0).getInt(0) shouldBe 99
     // untouched partition directory was not rewritten
