@@ -288,15 +288,41 @@ class PipelineSpec extends SparkSpec {
       val s = silver(whStream, name).collect().map(_.toSeq).toSet
       withClue(name) { s shouldBe b }
     }
-    // the Iceberg-MERGE shape: articles (the partitioned table) committed
-    // each micro-batch through the manifests, every partition pinned; the
-    // dimension tables kept their whole-table snapshot layout
+  }
+
+  test("streaming ingest with manifested commits equals the flat-layout run") {
+    val root = tmpDir("bronzeM")
+    val whBatch = tmpDir("silverMF")
+    val whMan = tmpDir("silverMM")
+    val ckpt = tmpDir("ckptM")
+    writeFixtures(root)
+
+    // there is no flat route left: the batch reference is manifested too,
+    // and the by-name partitionManifests flag still compiles and is ignored
+    BronzeToSilver.runBatch(spark, root, whBatch)
+    // the Iceberg-MERGE shape: micro-batch MERGEs committed per date
+    // partition as version slots + a root manifest per batch
+    val q = BronzeToSilver.runStream(spark, root, whMan, ckpt,
+      maxFilesPerTrigger = 2, availableNow = true, partitionManifests = false)
+    q.awaitTermination(120000) shouldBe true
+
+    for (name <- graft.core.Schemas.silverTables) {
+      val b = silver(whBatch, name).collect().map(_.toSeq).toSet
+      val m = silver(whMan, name).collect().map(_.toSeq).toSet
+      withClue(name) { m shouldBe b }
+    }
+    // articles (the partitioned table) committed through the manifests:
+    // one root manifest per micro-batch that touched it, every partition
+    // pinned; the dimension tables kept their whole-table snapshot layout
     import graft.sources.PartitionSnapshots
-    PartitionSnapshots.rootVersions(spark, s"$whStream/articles")
+    for (wh <- Seq(whBatch, whMan)) withClue(wh) {
+      PartitionSnapshots.isManifested(spark, s"$wh/articles") shouldBe true
+      PartitionSnapshots.isManifested(spark, s"$wh/authors") shouldBe false
+    }
+    PartitionSnapshots.rootVersions(spark, s"$whMan/articles")
       .nonEmpty shouldBe true
-    PartitionSnapshots.rootManifest(spark, s"$whStream/articles").get.values
+    PartitionSnapshots.rootManifest(spark, s"$whMan/articles").get.values
       .foreach(_ should fullyMatch regex "v\\d{8,}|EMPTY")
-    PartitionSnapshots.isManifested(spark, s"$whStream/authors") shouldBe false
   }
 
   test("gold merge that loses its lease mid-merge aborts at assertHeld; successor's output survives") {
