@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Print formatted physical plans for selected queries (plan audit tool).
   * Usage: runMain graft.Explain [queryName ...] (default: a representative set) */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q01_pricing_agg", "q02_filter_project", "q05_join_enrich",
         "q06_flat_view", "q07_topk_window", "q24_minhash_dedup", "q27_knn_brute_force")

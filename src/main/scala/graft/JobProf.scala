@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev measurement harness (guide §1.5/§7.3): per-JOB accounting for one
   * query invocation. Statement-style queries (MERGE/DELETE SQL, commit
@@ -16,13 +15,7 @@ object JobProf {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
     case class Job(id: Int, start: Long, var end: Long = -1L,
                    var tasks: Int = 0, var site: String = "")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()

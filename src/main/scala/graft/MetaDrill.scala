@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Metadata-scale drill: drive one
@@ -19,15 +18,10 @@ object MetaDrill {
   def main(args: Array[String]): Unit = {
     val parts = args.headOption.map(_.toInt).getOrElse(1000)
     val filesPer = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep the SEED's file fan-out: planned-write would re-shuffle on
-      // the partition column and collapse each dir to one file
-      .config("spark.sql.optimizer.plannedWrite.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // keep the SEED's file fan-out: planned-write would re-shuffle on
+    // the partition column and collapse each dir to one file
+    val spark = LocalSession("ERROR",
+      Map("spark.sql.optimizer.plannedWrite.enabled" -> "false"))
     import spark.implicits._
     import graft.operators.Upsert
     import graft.sources.PartitionSnapshots
@@ -233,12 +227,7 @@ object ChainDrill {
   def main(args: Array[String]): Unit = {
     val commits = args.headOption.map(_.toInt).getOrElse(5000)
     val parts = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR", Map("spark.sql.shuffle.partitions" -> "4"))
     import spark.implicits._
     import graft.operators.Upsert
     import graft.sources.PartitionSnapshots
@@ -335,15 +324,9 @@ object SqlScaleDrill {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(6_000_000L)
     val parts = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the r13 write-side sizing knob ON — this drill is its data-decade
-      .config("graft.write.targetFileSizeBytes",
-        (128L * 1024 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the r13 write-side sizing knob ON — this drill is its data-decade
+    val spark = LocalSession("ERROR",
+      Map("graft.write.targetFileSizeBytes" -> (128L * 1024 * 1024).toString))
     import spark.implicits._
     import graft.operators.Upsert
     import graft.sources.PartitionSnapshots

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev profiling harness: run named queries N times in ONE warm JVM to
   * separate real plan cost from JIT/GC/bench-order noise (the per-round
   * Bench runs everything sequentially in one JVM, where one quadratic
@@ -25,13 +24,7 @@ object Prof {
     val names =
       if (rest == Seq("ALL")) SparkEntry.queries.keys.toSeq.sorted
       else rest
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
     val best = scala.collection.mutable.LinkedHashMap[String, Double]()
     for (q <- names) {
       for (r <- 1 to 3) {

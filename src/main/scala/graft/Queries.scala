@@ -2958,10 +2958,10 @@ object Queries {
       val stage = java.nio.file.Files
         .createTempDirectory("graft_q185_stage").toString
       val wh = s"$stage/wh"
-      // one table per layout kind the catalog records
+      // one table per layout: flat, unpartitioned manifested, partitioned
       t(s, dir, "region").write.parquet(s"$wh/region") // flat
       Upsert.upsert(s, s"$wh/nation", t(s, dir, "nation"),
-        Seq("n_nationkey")) // whole-table snapshot pointer
+        Seq("n_nationkey")) // one implicit partition: slots + pointer at the root
       // manifested, with a FILE-SCOPED history: range-disjoint seed
       // files, then a narrow-band merge → survivor file tokens in the
       // state the foreign resolver must honor
@@ -2992,9 +2992,10 @@ object Queries {
   /** EXTERNAL CATALOG MANIFEST ([[graft.sources.Catalog
     * .writeCatalogManifest]] — the engine-external enumeration point,
     * Iceberg's catalog file reduced to one `_catalog` manifest): the
-    * staged warehouse holds one table per layout kind (flat parquet,
-    * whole-table snapshot pointer, per-partition manifests with a
-    * file-scoped state), and BOTH sides enumerate and resolve it from
+    * staged warehouse holds one table per layout (flat parquet, an
+    * unpartitioned manifested table whose root-level slot pointer the
+    * oracle follows, per-partition manifests with a file-scoped state),
+    * and BOTH sides enumerate and resolve it from
     * the catalog file alone — the Spark side through
     * [[graft.sources.Catalog.tablesFromManifest]]/`readFromManifest`
     * (zero directory listing), the DuckDB oracle in pure SQL: read_text
@@ -4501,8 +4502,8 @@ object Queries {
         |  ON t.id1 = p.id1 AND t.id2 = p.id2
         |GROUP BY fam""".stripMargin,
     // q185: DuckDB enumerates the warehouse from the catalog manifest
-    // alone and resolves each table by its recorded kind — flat files,
-    // snapshot pointer, or the root-manifest chain with the full state
+    // alone and resolves each table by its layout — flat files, the
+    // root-level slot pointer, or the root-manifest chain with the full state
     // grammar (multi-part unions + file-scoped survivor tokens)
     "q185_catalog_manifest" ->
       """WITH RECURSIVE

@@ -27,16 +27,7 @@ object ScaleGen {
     val Array(srcDir, outDir, kStr) = args
     val k = kStr.toInt
     require(k >= 1, "k must be >= 1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     def src(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")

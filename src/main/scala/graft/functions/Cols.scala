@@ -82,12 +82,20 @@ object Cols {
   /** Polymorphic publish_date → timestamp.
     * Numeric ≤13 chars: epoch seconds, or millis when >9999999999 (÷1000);
     * otherwise ISO / dd/MM cascade, each leg null-on-mismatch
-    * (reference: gcs_bronze_to_silver.py:525-562). */
+    * (reference: gcs_bronze_to_silver.py:525-562).
+    * The normalized string feeds 16 sub-expressions, so it is bound ONCE
+    * as a lambda variable: inlined per use, a filter on the result (the
+    * hygiene gate) generated a method beyond the JVM's 64 KB limit and
+    * fell back from whole-stage codegen on every batch. */
   def parsePublishTs(raw: Column): Column = {
     val norm = coalesce(
       when(tryLong(raw).isNotNull, raw),
       normalizeVnDatetime(raw),
       raw)
+    element_at(transform(array(norm), (n: Column) => parseNormalizedTs(n)), 1)
+  }
+
+  private def parseNormalizedTs(norm: Column): Column = {
     val asLong = tryLong(norm)
     val epochTs = when(asLong > lit(9999999999L),
         to_timestamp(from_unixtime((asLong / 1000).cast("long"))))

@@ -65,8 +65,8 @@ object Cdc {
   /** Maintain a queryable snapshot table at `path` from a STREAMING
     * changelog: every micro-batch folds its I/U/D rows into the current
     * snapshot ([[applyChangesTo]]) and atomically replaces the table
-    * ([[graft.operators.Upsert.replace]] — staged swap, single-writer
-    * lease, crash recovery). Checkpoint + the keyed latest-wins fold make
+    * ([[graft.operators.Upsert.replace]] — one root manifest swap,
+    * single-writer lease, crash recovery). Checkpoint + the keyed latest-wins fold make
     * redelivered batches idempotent — the same exactly-once contract as
     * the bronze→silver stream, extended with a delete lane. Per batch the
     * cost is one key exchange over (snapshot ∪ batch); at 100 TB the

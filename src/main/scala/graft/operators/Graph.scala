@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Snapshots
 
 /** Distributed connected components over a pair/edge DataFrame — the step
   * that turns near-dup PAIRS (MinHash/SimHash/cosine candidates, e.g.
@@ -459,19 +458,26 @@ object Graph {
     } finally unpersist(sym)
   }
 
+  /** Commit one round's state as the whole of `stateTable`, keeping every
+    * earlier round's version (no retention) for inspection. */
+  private def commitRound(spark: SparkSession, stateTable: String,
+                          state: DataFrame): Unit =
+    Upsert.replace(spark, stateTable, state, retainVersions = Int.MaxValue)
+
   /** [[pageRank]] with durable per-round state: after every
     * `checkpointEvery` completed rounds (and after the last), the
     * (node, rank) snapshot is committed — with a `__round` marker — to the
-    * [[graft.sources.Snapshots]] table at `stateTable`. A restarted job
+    * table at `stateTable` ([[Upsert.replace]]). A restarted job
     * resumes from the latest committed round instead of round 0, so a
     * 100-round run over a real link graph survives a driver loss at the
     * cost of re-running at most `checkpointEvery − 1` rounds.
     *
-    * Bit-identical resume: each Snapshots commit is an atomic
-    * version-directory write (Parquet round-trips longs exactly), and the
+    * Bit-identical resume: each commit is an atomic version-directory
+    * write published by one root manifest swap (Parquet round-trips
+    * longs exactly), and every round's state is retained; the
     * iteration is all-integer, so resume(k)+run(k..n) produces exactly the
     * same rank set as a straight run(0..n) — pinned by spec. Local
-    * checkpoints (lineage control, session-lifetime) and Snapshots commits
+    * checkpoints (lineage control, session-lifetime) and table commits
     * (durability, restart-lifetime) serve different failure domains; this
     * uses both. */
   def pageRankResumable(spark: SparkSession, edges: DataFrame,
@@ -495,8 +501,7 @@ object Graph {
       .localCheckpoint()
     val base = lit(3L * scale / 20L)
     val resumed: Option[(Int, DataFrame)] =
-      Snapshots.currentVersion(spark, stateTable).map { _ =>
-        val st = Snapshots.read(spark, stateTable)
+      Upsert.readOption(spark, stateTable).map { st =>
         val round = st.select(max(col("__round"))).head().getInt(0)
         (round, st.select("node", "rank"))
       }
@@ -510,8 +515,7 @@ object Graph {
         ranks = next
         done += 1
         if (done % checkpointEvery == 0 || done == iterations)
-          Snapshots.commit(spark, stateTable,
-            ranks.withColumn("__round", lit(done)))
+          commitRound(spark, stateTable, ranks.withColumn("__round", lit(done)))
       }
       ranks
     } catch {
@@ -535,8 +539,7 @@ object Graph {
     val sym = checkpointSized(symmetrized(edges, src, dst, selfLoops = true)
       .distinct())
     val resumed: Option[(Int, Boolean, DataFrame)] =
-      Snapshots.currentVersion(spark, stateTable).map { _ =>
-        val st = Snapshots.read(spark, stateTable)
+      Upsert.readOption(spark, stateTable).map { st =>
         val head = st.select(max(col("__round")), max(col("__converged"))).head()
         (head.getInt(0), head.getBoolean(1), st.select("node", "component"))
       }
@@ -571,9 +574,8 @@ object Graph {
         labels = next
         iter += 1
         if (iter % checkpointEvery == 0 || converged)
-          Snapshots.commit(spark, stateTable,
-            labels.withColumn("__round", lit(iter))
-              .withColumn("__converged", lit(converged)))
+          commitRound(spark, stateTable, labels.withColumn("__round", lit(iter))
+            .withColumn("__converged", lit(converged)))
       }
       require(converged,
         s"connectedComponents did not converge in $maxIter rounds — " +

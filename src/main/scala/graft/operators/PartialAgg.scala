@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * rows. This is exactly the partial→final split Spark's own hash
   * aggregate performs inside one query, lifted to a persistable,
   * cross-run artifact (store the partials with
-  * [[graft.sources.Snapshots]] or any sink).
+  * [[graft.operators.Upsert]] or any sink).
   *
   * The state is (n, sum, min, max, sum-of-squares) with sums routed
   * through DECIMAL — exact integer-like addition, so merging states in ANY

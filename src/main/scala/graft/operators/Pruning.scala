@@ -30,7 +30,11 @@ object Pruning {
   /** Write `df` as parquet with footer bloom filters on `bloomCols` (for
     * point-lookup row-group skipping) and optional value clustering via
     * `sortCols` (tight min/max stats per row group for range predicates).
-    * The sort is within partitions only — no extra shuffle is introduced. */
+    * The sort is within partitions only — no extra shuffle is introduced.
+    * Filters are adaptive: the writer keeps candidates of several sizes
+    * and stores the smallest that holds the column chunk's distinct
+    * values at the target false-positive rate, so a ten-row file does
+    * not carry a filter sized for the 1 MB default cap. */
   def writeWithBloomFilters(df: DataFrame, path: String,
                             bloomCols: Seq[String],
                             sortCols: Seq[String] = Nil,
@@ -40,9 +44,13 @@ object Pruning {
         df.sortWithinPartitions(sortCols.map(df.col): _*)
       else df
     var w = sorted.write.mode(SaveMode.Overwrite)
+    // candidates halve from the 1 MB cap: eleven reach down to 1 KB
     bloomCols.foreach { c =>
       w = w.option(s"parquet.bloom.filter.enabled#$c", "true")
+        .option(s"parquet.bloom.filter.candidates.number#$c", "11")
     }
+    if (bloomCols.nonEmpty)
+      w = w.option("parquet.bloom.filter.adaptive.enabled", "true")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(path)
   }

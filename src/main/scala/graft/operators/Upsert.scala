@@ -20,28 +20,27 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     holding a matched key) are rewritten, mirroring Iceberg's
   *     partition-level commit: a daily micro-batch touching 2 dates
   *     rewrites 2 partitions of a 100 TB table, not the table.
-  *   - Without `partitionBy`, every merge commits a NEW immutable snapshot
-  *     under `path/_versions/` and atomically swaps the `path/_current`
-  *     pointer ([[graft.sources.Snapshots]]) — Iceberg-reader parity: a
-  *     reader resolves the pointer to a complete, immutable version dir, so
-  *     no reader ever observes a missing table or a half-written merge, no
-  *     matter how it races the writer. Old versions are retained
-  *     (`retainVersions`) for in-flight readers and time travel, then
-  *     vacuumed — the same reader-vs-expiration contract as Iceberg's
-  *     expire_snapshots. Read versioned tables with [[read]], not
-  *     `spark.read.parquet(path)` (the data lives in hidden `_`-prefixed
-  *     dirs a plain parquet scan ignores — deliberately: stale flat files
-  *     would silently serve OLD data, an error is the honest failure).
+  *   - Without `partitionBy`, the table is ONE implicit partition (rel
+  *     `""`, its slots at the table root): a keyed merge rewrites it
+  *     whole, an insert-only merge fast-appends only the new keys' rows.
   *
-  * Partitioned tables always commit through per-partition manifests
-  * ([[graft.sources.PartitionSnapshots]]): each touched partition's
-  * rewrite is sealed into a new immutable version slot and ONE root
-  * manifest swap publishes the whole commit, so a reader sees the table
-  * before or after it, never a half-rewritten partition — the Iceberg
-  * `MERGE INTO` snapshot commit — while untouched partitions are never
-  * copied, listed or repointed. A legacy flat hive table migrates on its
-  * next upsert with zero IO (its flat partitions become implicit v0
-  * snapshots). Read partitioned tables with [[read]] too.
+  * Every commit — partitioned or not, merge, append or [[replace]] — goes
+  * through per-partition manifests ([[graft.sources.PartitionSnapshots]]):
+  * each touched partition's new data is sealed into a new immutable
+  * version slot and ONE root manifest swap publishes the whole commit, so
+  * a reader sees the table before or after it, never a half-rewritten
+  * partition — the Iceberg `MERGE INTO` snapshot commit — while untouched
+  * partitions are never copied, listed or repointed. Old versions are
+  * retained (`retainVersions`) for in-flight readers and time travel,
+  * then vacuumed — the same reader-vs-expiration contract as Iceberg's
+  * expire_snapshots. A legacy flat table, or a whole-table `_versions`
+  * table from before the one route, migrates on its next commit with
+  * zero IO (its flat files, or its current slot, become the partition's
+  * first state).
+  * Read through [[read]], not `spark.read.parquet(path)`: the data lives
+  * in hidden `_`-prefixed dirs a plain parquet scan ignores —
+  * deliberately: stale flat files would silently serve OLD data, an
+  * error is the honest failure.
   */
 object Upsert {
 
@@ -64,7 +63,7 @@ object Upsert {
     * short enough that a crashed writer doesn't wedge the table for long. */
   val DefaultLockTtlMs: Long = 15 * 60 * 1000L
 
-  /** Versions kept after each whole-table commit (current + 3 prior): a
+  /** Versions kept per partition after each commit (current + 3 prior): a
     * reader that pinned a version stays valid until 3 further commits
     * land — at any realistic merge cadence, orders of magnitude longer
     * than a scan. Raise it for long-running readers; never below 1. */
@@ -309,17 +308,15 @@ object Upsert {
   def tableExists(spark: SparkSession, path: String): Boolean =
     fs(spark, new Path(path)).exists(new Path(path))
 
-  /** Read an Upsert-maintained table: versioned layouts resolve the
-    * `_current` pointer to an immutable snapshot dir and manifested
-    * (partitioned) layouts their root manifest (never racing a writer);
-    * legacy flat layouts no upsert has migrated yet fall through to a
-    * plain parquet read. This is THE read path for upsert tables — a raw
-    * `spark.read.parquet(path)` on either layout sees no current data
-    * (it lives under hidden `_versions/`). */
+  /** Read an Upsert-maintained table: a manifested table (every table an
+    * upsert has committed to, partitioned or not) resolves its root
+    * manifest to immutable version dirs (never racing a writer); a legacy
+    * flat table no upsert has migrated yet falls through to a plain
+    * parquet read. This is THE read path for upsert tables — a raw
+    * `spark.read.parquet(path)` on a manifested table sees no current
+    * data (it lives under hidden `_versions/`). */
   def read(spark: SparkSession, path: String): DataFrame =
-    if (graft.sources.Snapshots.isVersioned(spark, path))
-      graft.sources.Snapshots.read(spark, path)
-    else if (graft.sources.PartitionSnapshots.isManifested(spark, path))
+    if (graft.sources.PartitionSnapshots.isManifested(spark, path))
       graft.sources.PartitionSnapshots.read(spark, path)
     else spark.read.parquet(path)
 
@@ -330,16 +327,13 @@ object Upsert {
       graft.sources.PartitionSnapshots.dropHidden(spark, path, _))
 
   /** Best-effort read of an existing table; None when the dir is absent,
-    * no version has been committed, or a flat dir holds no readable
-    * footers (e.g. an aborted empty write left only _SUCCESS behind —
-    * schema inference would throw). INTERNAL: manifested tables keep
-    * their hidden transform dir columns (the merge legs select them) —
-    * public callers go through [[readOption]], which strips them. */
+    * no partition holds rows, or a flat dir holds no readable footers
+    * (e.g. an aborted empty write left only _SUCCESS behind — schema
+    * inference would throw). INTERNAL: manifested tables keep their
+    * hidden transform dir columns (the merge legs select them) — public
+    * callers go through [[readOption]], which strips them. */
   private def readTable(spark: SparkSession, path: String): Option[DataFrame] =
     if (!tableExists(spark, path)) None
-    else if (graft.sources.Snapshots.isVersioned(spark, path))
-      graft.sources.Snapshots.currentVersion(spark, path)
-        .map(v => graft.sources.Snapshots.read(spark, path, asOf = v))
     else if (graft.sources.PartitionSnapshots.isManifested(spark, path))
       graft.sources.PartitionSnapshots.readRawOption(spark, path)
     else try Some(spark.read.parquet(path))
@@ -390,9 +384,8 @@ object Upsert {
              branch: Option[String] = None): Unit = {
     require(audit.isEmpty || partitionCols.nonEmpty,
       "upsert: audit (write-audit-publish) requires partitionCols")
-    require(branch.isEmpty || (partitionCols.nonEmpty &&
-      graft.sources.PartitionSnapshots.isManifested(spark, path)),
-      "upsert: branch commits require an existing manifested table")
+    require(branch.isEmpty || partitionCols.nonEmpty,
+      "upsert: branch commits need partitionCols")
     require(branch.isEmpty || audit.isEmpty,
       "upsert: pass audit OR branch — a branch IS the multi-commit " +
         "audit staging (validate with readBranch, then fastForwardRoot)")
@@ -557,47 +550,23 @@ object Upsert {
                            audit: Option[DataFrame => DataFrame] = None,
                            branch: Option[String] = None): Unit = {
     import graft.sources.PartitionSnapshots
-    recoverSwap(spark, path)
-    val manifested = partitionCols.nonEmpty
-    if (manifested)
-      require(!graft.sources.Snapshots.isVersioned(spark, path),
-        s"upsert: $path is a versioned (whole-table snapshot) table; " +
-          "partition-scoped commits need a partitioned table")
-    else
-      // mirror of the guard above: the whole-table snapshot commit ends in
-      // cleanupFlatFiles, which removes every non-hidden root entry — on a
-      // manifested table that is all the k=v partition dirs and their
-      // immutable _versions history, while the root manifest survives and
-      // points at deleted paths. Refuse loudly instead.
-      require(!PartitionSnapshots.isManifested(spark, path),
-        s"upsert: $path carries partition manifests; pass its partition " +
-          "columns (whole-table snapshot commits would destroy the " +
-          "per-partition snapshot history)")
-    if (manifested) {
-      // zero-IO migration: the marker flip makes flat partitions implicit
-      // v0 snapshots; nothing moves until each partition's first commit
-      PartitionSnapshots.ensureManifested(spark, path, partitionCols)
-      PartitionSnapshots.cleanupStaging(spark, path)
-    }
-    // stage ONCE (hive layout, partition cols stripped into dirs) under a
-    // hidden `_staging-*` root, re-check the lease, then hand the staged
-    // dirs to a PartitionSnapshots commit (slot seal + root manifest swap)
-    def stageThen(df: DataFrame)(commit: String => Unit): Unit = {
-      val staging = s"$path/_staging-${java.util.UUID.randomUUID()}"
-      packedWriter(spark, df, partitionCols, SaveMode.ErrorIfExists)
-        .partitionBy(partitionCols: _*).parquet(staging)
-      try {
-        assertHeld(spark, path, token) // last check before the commit
-        commit(staging)
-      } finally fs(spark, new Path(staging)).delete(new Path(staging), true)
-    }
+    // a branch merge targets the BRANCH head's snapshot, never main
+    val branchHead: Option[Long] = branch.map(n =>
+      PartitionSnapshots.rootBranches(spark, path).getOrElse(n,
+        throw new IllegalArgumentException(
+          s"upsert: no branch '$n' at $path — createBranch first")))
+    // zero-IO migration (a legacy flat or whole-table `_versions` table
+    // gets its marker; nothing moves until each partition's first
+    // commit) — and the one layout guard: the marker's partition columns
+    // must be the caller's, partitioned or not
+    prepareCommit(spark, path, partitionCols)
     // readers of a touched partition keep their pinned immutable version;
     // touched partitions that lost every row publish an EMPTY version
     // instead of a reader-visible delete
     def commitMerged(df: DataFrame, touched: Set[String],
                      survivors: Map[String, Seq[(String, Seq[String])]] =
                        Map.empty): Unit =
-      stageThen(df) { staging =>
+      stageThen(spark, path, token, df, partitionCols) { staging =>
         audit match {
           case Some(a) => PartitionSnapshots.commitStagedAudited(spark, path,
             staging, partitionCols, touched, retainVersions, a,
@@ -610,29 +579,19 @@ object Upsert {
     // hidden-partitioning: derive any transform dir columns the caller's
     // frame cannot know about — computed once here at write time, hidden
     // again by every public read (no-op for untransformed tables)
-    val srcT =
-      if (manifested) PartitionSnapshots.applyTransforms(spark, path, src0)
-      else src0
-    // a branch merge targets the BRANCH head's snapshot, never main
-    val branchHead: Option[Long] = branch.map(n =>
-      PartitionSnapshots.rootBranches(spark, path).getOrElse(n,
-        throw new IllegalArgumentException(
-          s"upsert: no branch '$n' at $path — createBranch first")))
-    // manifest of the target line (None for unpartitioned tables / a
-    // manifested table before its first root commit) — drives the
-    // metadata-only existence probe, the stats-pruned key lookup, and
-    // the file-scoped planner
-    val base: Option[Map[String, String]] =
-      if (!manifested) None
-      else branchHead match {
-        case Some(v) => PartitionSnapshots.rootManifest(spark, path, v)
-        case None => PartitionSnapshots.rootManifest(spark, path)
-      }
+    val srcT = PartitionSnapshots.applyTransforms(spark, path, src0)
+    // manifest of the target line (None before the table's first root
+    // commit) — drives the metadata-only existence probe, the
+    // stats-pruned key lookup, and the file-scoped planner
+    val base: Option[Map[String, String]] = branchHead match {
+      case Some(v) => PartitionSnapshots.rootManifest(spark, path, v)
+      case None => PartitionSnapshots.rootManifest(spark, path)
+    }
     // LAZY full-table frame: merely CONSTRUCTING a multi-path DataFrame
     // eagerly lists every data file (~2 s at 1k partitions, ~29 s at
     // 65k files — PLANS round-11 drill). Manifested fast paths answer
     // from metadata + pruned partition reads and never force this;
-    // schema evolution, unpartitioned tables, and non-prunable keys
+    // schema evolution, unpartitioned rewrites, and non-prunable keys
     // still do.
     lazy val existing = branchHead match {
       case Some(v) => PartitionSnapshots.readRawOption(spark, path, asOf = v)
@@ -644,8 +603,7 @@ object Upsert {
       case None => existing.isEmpty
     }
     if (tableIsEmpty) {
-      if (manifested) commitMerged(srcT, Set.empty)
-      else commitVersion(spark, path, srcT, token, retainVersions)
+      commitMerged(srcT, Set.empty)
       return
     }
     // schema evolution must inspect and conform the real frame — it
@@ -660,9 +618,11 @@ object Upsert {
     // values re-render identically). Exactly the shape readEntries
     // serves. Falls back to the real frame when nothing is pinned.
     val targetSchema: org.apache.spark.sql.types.StructType =
-      if (!manifested || evolveSchema || base.isEmpty) target.schema
+      if (evolveSchema || base.isEmpty) target.schema
       else PartitionSnapshots.mergeReadSchema(spark, path, branchHead,
         src.schema, partitionCols).getOrElse(target.schema)
+    // an unpartitioned table rewrites its one partition whole: key
+    // pruning would only add the exclusion's key-collect job
     val prunableKey =
       if (partitionCols.isEmpty) None
       else keys.find { k =>
@@ -716,24 +676,21 @@ object Upsert {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           targetSchema))
     }).getOrElse(target)
-    if (manifested && insertOnly && audit.isEmpty) {
-      // WHEN NOT MATCHED INSERT on a manifested table is a fast APPEND:
-      // only the genuinely-new keys' rows are staged and sealed as new
-      // version parts — no touched partition is rewritten, commit cost
-      // is O(new rows) however large the partitions already are. The
-      // anti-join runs against the stats-PRUNED frame: a key living in
-      // an excluded partition cannot match, so it survives the anti-join
-      // exactly as it would against the full table.
-      val newRows = src.join(lookupTarget, keys, "left_anti")
-      if (!newRows.isEmpty) stageThen(newRows) { staging =>
+    if (insertOnly && audit.isEmpty) {
+      // WHEN NOT MATCHED INSERT is a fast APPEND: only the genuinely-new
+      // keys' rows are staged and sealed as new version parts — no
+      // touched partition is rewritten, commit cost is O(new rows)
+      // however large the partitions already are. The anti-join runs
+      // against the stats-PRUNED frame: a key living in an excluded
+      // partition cannot match, so it survives the anti-join exactly as
+      // it would against the full table. No emptiness probe: a batch of
+      // only known keys stages nothing (or one empty file) and the
+      // append commit skips it.
+      stageThen(spark, path, token, src.join(lookupTarget, keys, "left_anti"),
+          partitionCols) { staging =>
         PartitionSnapshots.commitAppendStaged(spark, path, staging,
           partitionCols, retainVersions, Some(src.schema), branch = branch)
       }
-      return
-    }
-    if (!manifested) {
-      commitVersion(spark, path, merge(target, src, keys, insertOnly), token,
-        retainVersions)
       return
     }
     // Timestamp partition values are formatted by the writer with a
@@ -744,6 +701,15 @@ object Upsert {
       require(f.dataType != org.apache.spark.sql.types.TimestampType &&
         f.dataType != org.apache.spark.sql.types.TimestampNTZType,
         s"upsert: timestamp-typed partition column '${f.name}' is not supported")
+    }
+    def mkMerged(affected: DataFrame): DataFrame =
+      if (insertOnly) affected.unionByName(src.join(affected, keys, "left_anti"))
+      else src.unionByName(affected.join(src, keys, "left_anti"))
+    if (partitionCols.isEmpty) {
+      // the one implicit partition is the touched set: no touched-
+      // partition collect, no zero-column semi-join
+      commitMerged(mkMerged(target), Set(""))
+      return
     }
     // Partition-scoped rewrite. Touched partitions = partitions the
     // source writes into ∪ partitions where a matched key currently
@@ -759,9 +725,6 @@ object Upsert {
       .distinct()
     val tupleSegs = partitionSegments(partitionCols, touched.collect().toSeq)
     val touchedDirs = tupleSegs.map(m => partitionCols.map(m).mkString("/")).toSet
-    def mkMerged(affected: DataFrame): DataFrame =
-      if (insertOnly) affected.unionByName(src.join(affected, keys, "left_anti"))
-      else src.unionByName(affected.join(src, keys, "left_anti"))
     // partitions under RETIRED specs (the table's partition spec was
     // evolved): a manifest rel whose own layout is a proper prefix of
     // the current spec may hold matched keys — it is touched when its
@@ -847,36 +810,32 @@ object Upsert {
     }
   }
 
-  /** Commit `df` (whose plan may read the table's CURRENT version or its
-    * legacy flat files — the staged write lands in a fresh hidden version
-    * dir, never over its own input) as the table's next snapshot.
-    * Ownership is re-verified between the slow data write and the instant
-    * pointer swap — the merge computation is the part that can outlive the
-    * lock TTL; a writer that lost its lease mid-write leaves only an
-    * unpublished orphan dir the next vacuum collects. After the swap any
-    * legacy flat data files are removed (plain-parquet readers of a
-    * migrated table would otherwise silently read the FROZEN pre-migration
-    * state forever) and retention is enforced. */
-  private def commitVersion(spark: SparkSession, path: String, df: DataFrame,
-                            token: String, retainVersions: Int): Unit = {
-    import graft.sources.Snapshots
-    val v = Snapshots.stageVersion(spark, path, df)
-    assertHeld(spark, path, token) // last check before the visible commit
-    Snapshots.publish(spark, path, v)
-    cleanupFlatFiles(spark, path)
-    Snapshots.vacuum(spark, path, keep = math.max(1, retainVersions))
+  /** Migrate the table at `path` to the manifested layout keyed by
+    * `partitionCols` (zero IO; refuses a table keyed otherwise) and clear
+    * a crashed writer's cold staging roots. Call under the lease. */
+  private def prepareCommit(spark: SparkSession, path: String,
+                            partitionCols: Seq[String]): Unit = {
+    recoverSwap(spark, path)
+    graft.sources.PartitionSnapshots.ensureManifested(spark, path, partitionCols)
+    graft.sources.PartitionSnapshots.cleanupStaging(spark, path)
   }
 
-  /** Remove legacy flat data files left at the table root after migration
-    * to the versioned layout (crash-safe: runs after every commit, no-op
-    * once clean). Hidden `_`-entries (versions, pointer, schema sidecar)
-    * survive. */
-  private def cleanupFlatFiles(spark: SparkSession, path: String): Unit = {
-    val p = new Path(path); val f = fs(spark, p)
-    f.listStatus(p).filter { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }.foreach(st => f.delete(st.getPath, true))
+  /** Stage `df` ONCE (hive layout, partition cols stripped into dirs;
+    * plain files for an unpartitioned table) under a hidden `_staging-*`
+    * root, re-check the lease, then hand the staged dirs to a
+    * PartitionSnapshots commit (slot seal + root manifest swap). The
+    * staged write lands beside the table's data, never over it, so
+    * `df`'s plan may read the table's current state. */
+  private def stageThen(spark: SparkSession, path: String, token: String,
+                        df: DataFrame, partitionCols: Seq[String])
+                       (commit: String => Unit): Unit = {
+    val staging = s"$path/_staging-${java.util.UUID.randomUUID()}"
+    packedWriter(spark, df, partitionCols, SaveMode.ErrorIfExists)
+      .partitionBy(partitionCols: _*).parquet(staging)
+    try {
+      assertHeld(spark, path, token) // last check before the commit
+      commit(staging)
+    } finally fs(spark, new Path(staging)).delete(new Path(staging), true)
   }
 
   /** APPEND `df` to the manifested table at `path` — O(new data), the
@@ -966,9 +925,6 @@ object Upsert {
                          branch: Option[String],
                          maxWaitMs: Long): Unit = {
     import graft.sources.PartitionSnapshots
-    require(partitionCols.nonEmpty, "append: partitionCols required")
-    require(branch.isEmpty || PartitionSnapshots.isManifested(spark, path),
-      "append: branch commits require an existing manifested table")
     // same guard as the rewrite path: later partition-value rendering
     // (deleteKeys, upsert's touched-partition delete) cannot reproduce
     // the writer's timestamp dir format — never let such a table exist
@@ -981,16 +937,6 @@ object Upsert {
     if (df.isEmpty) return
     val token = acquireLockWaiting(spark, path, lockTtlMs, maxWaitMs)
     try {
-      recoverSwap(spark, path)
-      val alreadyCommitted = txn.exists { case (appId, v) =>
-        PartitionSnapshots.lastTxnVersion(spark, path,
-          s"graft.txn.$appId", branch).exists(_ >= v)
-      }
-      if (alreadyCommitted) return
-      require(!graft.sources.Snapshots.isVersioned(spark, path),
-        s"append: $path is a whole-table snapshot table")
-      PartitionSnapshots.ensureManifested(spark, path, partitionCols)
-      PartitionSnapshots.cleanupStaging(spark, path)
       // a branch append aligns against the BRANCH head's schema, never
       // main's (mirrors upsertLocked's branch-merge read): a branch that
       // evolved its schema beyond main must not have later appends
@@ -999,6 +945,12 @@ object Upsert {
         PartitionSnapshots.rootBranches(spark, path).getOrElse(n,
           throw new IllegalArgumentException(
             s"append: no branch '$n' at $path — createBranch first")))
+      prepareCommit(spark, path, partitionCols)
+      val alreadyCommitted = txn.exists { case (appId, v) =>
+        PartitionSnapshots.lastTxnVersion(spark, path,
+          s"graft.txn.$appId", branch).exists(_ >= v)
+      }
+      if (alreadyCommitted) return
       // hidden-partitioning: derive transform dir columns before the
       // drift check — the raw table side carries them, callers never do
       val dfT = PartitionSnapshots.applyTransforms(spark, path, df)
@@ -1034,39 +986,34 @@ object Upsert {
           dfT
         case None => dfT
       }
-      val staging = s"$path/_staging-${java.util.UUID.randomUUID()}"
-      packedWriter(spark, out, partitionCols, SaveMode.ErrorIfExists)
-        .partitionBy(partitionCols: _*).parquet(staging)
-      try {
-        assertHeld(spark, path, token)
-        // `out` is already conformed to the union schema when evolving
+      // `out` is already conformed to the union schema when evolving
+      stageThen(spark, path, token, out, partitionCols) { staging =>
         PartitionSnapshots.commitAppendStaged(spark, path, staging,
           partitionCols, retainVersions, Some(out.schema),
           txn.map { case (appId, v) =>
             Map(s"graft.txn.$appId" -> v.toString)
           }.getOrElse(Map.empty), branch)
-      } finally fs(spark, new Path(staging)).delete(new Path(staging), true)
+      }
     } finally releaseLock(spark, path, token)
   }
 
-  /** Full REPLACE of the table at `path` with `df` (whose plan may read
-    * the current table — the new state is staged as the next snapshot
-    * before the pointer moves), under the same single-writer lease and
-    * crash recovery as [[upsert]]. The primitive a CDC snapshot maintainer
-    * needs: merge semantics live in the caller's plan, durability
-    * semantics live here. */
+  /** Full REPLACE of the unpartitioned table at `path` with `df` (whose
+    * plan may read the current table — the new state is staged beside it
+    * and published by one root manifest swap), under the same
+    * single-writer lease and crash recovery as [[upsert]]. A partitioned
+    * table refuses (its marker names partition columns). The primitive a
+    * CDC snapshot maintainer needs: merge semantics live in the caller's
+    * plan, durability semantics live here. */
   def replace(spark: SparkSession, path: String, df: DataFrame,
               lockTtlMs: Long = DefaultLockTtlMs,
               retainVersions: Int = DefaultRetainVersions): Unit = {
     val token = acquireLock(spark, path, lockTtlMs)
     try {
-      recoverSwap(spark, path)
-      // same guard as the whole-table upsert leg: commitVersion's
-      // cleanupFlatFiles would delete a manifested table's partition dirs
-      require(!graft.sources.PartitionSnapshots.isManifested(spark, path),
-        s"replace: $path carries partition manifests; route the rewrite " +
-          "through upsert(partitionCols = ...) instead")
-      commitVersion(spark, path, df, token, retainVersions)
+      prepareCommit(spark, path, Nil)
+      stageThen(spark, path, token, df, Nil) { staging =>
+        graft.sources.PartitionSnapshots.commitStaged(spark, path, staging,
+          Nil, Set(""), retainVersions, Some(df.schema))
+      }
     } finally releaseLock(spark, path, token)
   }
 

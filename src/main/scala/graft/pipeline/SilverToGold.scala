@@ -322,8 +322,7 @@ object SilverToGold {
     }
     factTables.foreach { t =>
       val p = s"$goldWarehouse/$t"
-      if (PartitionSnapshots.isManifested(spark, p) &&
-          PartitionSnapshots.rootBranches(spark, p).contains(branch)) {
+      if (PartitionSnapshots.rootBranches(spark, p).contains(branch)) {
         PartitionSnapshots.fastForwardRoot(spark, p, branch)
         PartitionSnapshots.dropBranch(spark, p, branch)
       }
@@ -472,8 +471,7 @@ object SilverToGold {
           import graft.sources.PartitionSnapshots
           require(graft.operators.Upsert.readOption(spark, p).nonEmpty,
             s"branched gold run needs an existing baseline at $p")
-          if (!PartitionSnapshots.isManifested(spark, p))
-            PartitionSnapshots.ensureManifested(spark, p, parts)
+          PartitionSnapshots.ensureManifested(spark, p, parts)
           PartitionSnapshots.ensureRootManifest(spark, p)
           if (!PartitionSnapshots.rootBranches(spark, p).contains(b))
             PartitionSnapshots.createBranch(spark, p, b)

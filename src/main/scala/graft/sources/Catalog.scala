@@ -78,9 +78,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
         // pinned in the root) both read as schema-typed empty — a
         // legitimately empty table must never poison registerAll()
         readSidecar(name)
-          .orElse(if (PartitionSnapshots.isManifested(spark, tablePath(name)))
-            PartitionSnapshots.tableRowSchema(spark, tablePath(name))
-          else None)
+          .orElse(PartitionSnapshots.tableRowSchema(spark, tablePath(name)))
           .map(schema => spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
           .getOrElse(throw e)
@@ -300,8 +298,6 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     *                               (Iceberg's INSERT OVERWRITE
     *                               semantics, not Spark's static
     *                               whole-table default)
-    *   snapshot tables           → a new whole-table version (append =
-    *                               current ∪ rows)
     *   flat tables               → plain parquet append / dynamic
     *                               overwrite
     *
@@ -359,15 +355,10 @@ final class Catalog(spark: SparkSession, warehouse: String) {
         }: _*)
       }
     val manifested = PartitionSnapshots.isManifested(spark, path)
-    val pcols =
-      if (manifested) PartitionSnapshots.partitionCols(spark, path) else Nil
+    val pcols = PartitionSnapshots.partitionCols(spark, path)
     if (manifested) {
       if (i.overwrite) PartitionSnapshots.overwritePartitions(spark, path, out)
       else graft.operators.Upsert.append(spark, path, out, pcols)
-    } else if (Snapshots.isVersioned(spark, path)) {
-      val next = if (i.overwrite) out
-        else Snapshots.read(spark, path).unionByName(out)
-      graft.operators.Upsert.replace(spark, path, next)
     } else {
       // plain flat dir: parquet append / whole-dir overwrite. A
       // hive-partitioned FLAT table refuses — a root-level write would
@@ -714,10 +705,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     require(tableExists(name),
       s"SHOW CREATE TABLE: no table '$name' in warehouse $warehouse")
     val schema = rowSchema(name)
-    val pcols =
-      if (PartitionSnapshots.isManifested(spark, tablePath(name)))
-        PartitionSnapshots.partitionCols(spark, tablePath(name))
-      else Nil
+    val pcols = PartitionSnapshots.partitionCols(spark, tablePath(name))
     val cols = schema.fields.filterNot(f => pcols.contains(f.name))
       .map(f => s"  ${f.name} ${f.dataType.sql}").mkString(",\n")
     val partClause =
@@ -742,10 +730,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     require(tableExists(name),
       s"DESCRIBE: no table '$name' in warehouse $warehouse")
     val schema = rowSchema(name)
-    val pcols =
-      if (PartitionSnapshots.isManifested(spark, tablePath(name)))
-        PartitionSnapshots.partitionCols(spark, tablePath(name))
-      else Nil
+    val pcols = PartitionSnapshots.partitionCols(spark, tablePath(name))
     val colRows = schema.fields.toSeq.map(f =>
       (f.name, f.dataType.simpleString,
         if (f.getComment().isDefined) f.getComment().get else null))
@@ -761,9 +746,9 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     * the engine already serves through its API surface:
     *
     *   VERSION AS OF <n>      → root version n ([[PartitionSnapshots
-    *                            .read]] asOf / [[Snapshots.read]] asOf)
+    *                            .read]] asOf)
     *   VERSION AS OF <tag>    → the tagged root ([[PartitionSnapshots
-    *                            .rootTags]] — manifested tables only)
+    *                            .rootTags]])
     *   TIMESTAMP AS OF <expr> → newest retained version committed at or
     *                            before the timestamp
     *
@@ -784,16 +769,11 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     require(tableExists(name),
       s"time travel: no table '$name' in warehouse $warehouse")
     val path = tablePath(name)
-    val manifested = PartitionSnapshots.isManifested(spark, path)
-    val snap = Snapshots.isVersioned(spark, path)
-    require(manifested || snap,
+    require(PartitionSnapshots.isManifested(spark, path),
       s"time travel: '$name' is plain parquet with no version history")
     val v: Long = (tt.version, tt.timestamp) match {
       case (Some(s), _) if s.nonEmpty && s.forall(_.isDigit) => s.toLong
       case (Some(tag), _) =>
-        require(manifested,
-          s"time travel: snapshot table '$name' has no tags (numeric " +
-            "versions only)")
         PartitionSnapshots.rootTags(spark, path).getOrElse(tag,
           throw new IllegalArgumentException(
             s"time travel: no tag '$tag' at '$name' (have: " +
@@ -804,14 +784,11 @@ final class Catalog(spark: SparkSession, warehouse: String) {
           .expr(tsE.sql).cast("timestamp")).head().getTimestamp(0)
         require(ts != null,
           s"time travel: TIMESTAMP AS OF ${tsE.sql} evaluated to NULL")
-        if (manifested) PartitionSnapshots.rootVersionAt(spark, path, ts.getTime)
-        else Snapshots.versionAt(spark, path, ts.getTime)
+        PartitionSnapshots.rootVersionAt(spark, path, ts.getTime)
       case _ => throw new IllegalArgumentException(
         "time travel: statement carries neither VERSION nor TIMESTAMP")
     }
-    val df = if (manifested) PartitionSnapshots.read(spark, path, asOf = v)
-             else Snapshots.read(spark, path, asOf = v)
-    df.queryExecution.analyzed
+    PartitionSnapshots.read(spark, path, asOf = v).queryExecution.analyzed
   }
 
   /** First SQL keyword of `q`, skipping whitespace and line/block
@@ -935,10 +912,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     // plus whatever temp/global-temp views the caller registered
     registerAll()
     val path = tablePath(targetName)
-    val pcols =
-      if (PartitionSnapshots.isManifested(spark, path))
-        PartitionSnapshots.partitionCols(spark, path)
-      else Nil
+    val pcols = PartitionSnapshots.partitionCols(spark, path)
     (m.matchedActions, m.notMatchedActions) match {
       // the reference's two shapes: one straight-line upsert commit
       case (Seq(), Seq(InsertStarAction(None))) |
@@ -992,7 +966,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     * are NULL), values may reference both sides through the statement's
     * aliases and are cast to the target column's type. `WITH SCHEMA
     * EVOLUTION` admits new source columns; the union schema rides the
-    * same commit. Non-manifested (flat/snapshot) targets keep update +
+    * same commit. Non-manifested (flat) targets keep update +
     * insert support — both row sets land through ONE keyed upsert
     * commit — but DELETE and BY SOURCE clauses, and key-rewriting
     * assignments, need the manifest machinery and refuse loudly. */
@@ -1304,7 +1278,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
           insertOnly = true, partitionCols = pcols,
           evolveSchema = m.withSchemaEvolution)
     } else {
-      // flat/snapshot target: updates document-replace and inserts land
+      // flat target: updates document-replace and inserts land
       // through ONE keyed upsert commit (still a single visibility point)
       if (hasNew)
         graft.operators.Upsert.upsert(spark, path, newRows, keys,
@@ -1462,9 +1436,8 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     * schema otherwise. */
   private def rowSchema(targetName: String): StructType = {
     val path = tablePath(targetName)
-    (if (PartitionSnapshots.isManifested(spark, path))
-       PartitionSnapshots.tableRowSchema(spark, path)
-     else None).getOrElse(read(targetName).schema)
+    PartitionSnapshots.tableRowSchema(spark, path)
+      .getOrElse(read(targetName).schema)
   }
 
   private def aliasOf2(
@@ -1644,8 +1617,8 @@ final class Catalog(spark: SparkSession, warehouse: String) {
   // a foreign engine like the DuckDB oracle — enumerates and resolves
   // the warehouse from that one file, no directory walking. Kinds:
   //   flat       plain parquet dir (read the files)
-  //   snapshot   whole-table snapshot pointer (_current → _versions/vN)
-  //   manifested per-partition manifests (root pointer → manifest chain)
+  //   manifested per-partition manifests (root pointer → manifest chain),
+  //              partitioned or not
 
   private def catalogPath = new Path(warehouse, "_catalog")
 
@@ -1661,7 +1634,6 @@ final class Catalog(spark: SparkSession, warehouse: String) {
       val p = tablePath(n)
       val kind =
         if (PartitionSnapshots.isManifested(spark, p)) "manifested"
-        else if (Snapshots.isVersioned(spark, p)) "snapshot"
         else "flat"
       val schema = (try Some(read(n).schema) catch {
         case _: Exception => None
@@ -1714,14 +1686,10 @@ final class Catalog(spark: SparkSession, warehouse: String) {
       .getOrElse(throw new IllegalArgumentException(
         s"catalog: no table '$name' in $catalogPath"))
     val p = tablePath(name)
-    kind match {
-      case "manifested" => PartitionSnapshots.read(spark, p)
-      case "snapshot" => spark.read.parquet(
-        Snapshots.versionPath(p, Snapshots.currentVersion(spark, p)
-          .getOrElse(throw new IllegalStateException(
-            s"catalog: snapshot table '$name' has no committed version"))))
-      case _ => schema.foldLeft(spark.read)(_ schema _).parquet(p)
-    }
+    // a catalog file from before one commit route may still record a
+    // whole-table table as "snapshot": it reads as the manifested table it is
+    if (kind == "flat") schema.foldLeft(spark.read)(_ schema _).parquet(p)
+    else PartitionSnapshots.read(spark, p)
   }
 
   def dropTable(name: String): Unit =

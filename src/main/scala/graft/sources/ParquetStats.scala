@@ -13,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Captured columns are top-level primitives with comparable, portably
   * stringifiable stats (int32/int64/float/double + UTF-8 binary);
-  * nested fields, decimals, int96 and friends are skipped — an absent
-  * stat means "cannot prune", never a wrong answer.
+  * nested fields, decimals, int96 and friends are skipped, as are string
+  * bounds outside printable ASCII — an absent stat means "cannot prune",
+  * never a wrong answer.
   */
 object ParquetStats {
 
@@ -30,8 +31,18 @@ object ParquetStats {
     var totalBlocks = 0L
     def result: (Long, Map[String, (String, String)]) =
       (rows, mins.keySet.filterNot(poisoned)
-        .filter(c => chunkCounts(c) == totalBlocks)
+        .filter(c => chunkCounts(c) == totalBlocks &&
+          recordable(mins(c)) && recordable(maxs(c)))
         .map(c => c -> (mins(c).toString, maxs(c).toString)).toMap)
+  }
+
+  /** A string bound is kept only when it is printable ASCII: every
+    * string pruning path refuses other bounds (UTF-16 char order and
+    * UTF-8 byte order diverge outside ASCII), so recording them — long
+    * free-text titles, twice per commit — would only cost metadata. */
+  private def recordable(v: Comparable[Any]): Boolean = (v: Any) match {
+    case s: String => s.forall(c => c >= 0x20 && c < 0x7f)
+    case _ => true
   }
 
   /** Parse one file's footer directly: tail-length + magic check, one

@@ -3,14 +3,13 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-partition snapshot manifests — the commit layout of every
-  * PARTITIONED upsert table ([[Snapshots]]' discipline at partition
-  * granularity), closing the commit window a flat hive layout leaves
-  * open: Spark's dynamic partition overwrite
+/** Per-partition snapshot manifests — the ONE commit layout of every
+  * upsert table, partitioned or not, closing the commit window a flat
+  * hive layout leaves open: Spark's dynamic partition overwrite
   * deletes a touched partition's files before the staged replacements
   * land, so a reader scanning that partition mid-commit sees it partial
-  * or empty. Here every partition directory is its own tiny [[Snapshots]]
-  * table:
+  * or empty. Here every partition directory holds its own [[Snapshots]]
+  * version slots:
   *
   * {{{
   *   <table>/_partition_manifests          ← marker: partition column names
@@ -19,6 +18,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   <table>/d=2024-01-01/_current         ← per-partition pointer, atomic swap
   *   <table>/d=2024-01-02/...
   * }}}
+  *
+  * An UNPARTITIONED table is the same layout with zero partition columns
+  * (Iceberg's empty partition spec): one implicit partition, rel `""`,
+  * whose `_versions/` and `_current` sit at the table root — byte for
+  * byte the layout a whole-table snapshot table already has, so such a
+  * table migrates by writing the (empty) marker and nothing else; until
+  * then its root `_versions` alone marks it manifested.
   *
   * A commit touching 2 of 30 000 partitions stages its output ONCE
   * (one Spark job, `partitionBy` write into a hidden `_staging-*` root),
@@ -32,13 +38,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a partition segment), so a resolved read types them exactly as a flat
   * hive read would.
   *
-  * Atomicity is PER PARTITION (the granularity dynamic overwrite promises
-  * but does not deliver safely): a reader that lists the table while a
-  * multi-partition commit is mid-flight can see partition A at the new
-  * version and partition B still at the old one — never a partial
-  * partition. Cross-partition atomicity remains [[Snapshots]]' whole-table
-  * job; at 100 TB you pick the granularity per table, which is exactly the
-  * Iceberg-style trade.
+  * A reader that walks the partition POINTERS while a multi-partition
+  * commit is mid-flight can see partition A at the new version and
+  * partition B still at the old one — never a partial partition; the
+  * root manifest below is what makes the commit atomic across partitions.
   *
   * Migration from a flat hive layout moves NOTHING: writing the marker
   * file is the whole migration. Flat partition files serve as an implicit
@@ -50,7 +53,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * versions — the same reader-vs-expiration contract real versions get.
   * Consequence to document loudly: a legacy `spark.read.parquet(table)`
   * on a MIGRATED table keeps seeing each partition's implicit v0 until it
-  * is vacuumed — increasingly stale, then empty. Route reads through
+  * is vacuumed — increasingly stale, then empty. An unpartitioned
+  * table's flat files go as soon as no live state names them (its first
+  * rewrite supersedes the whole table). Route reads through
   * [[graft.operators.Upsert.read]] / [[read]].
   *
   * On top of the per-partition pointers sits a ROOT MANIFEST — the
@@ -218,42 +223,51 @@ object PartitionSnapshots {
   private[graft] def depthWaves(rels: Seq[String]): Seq[Seq[String]] =
     rels.groupBy(_.count(_ == '/')).toSeq.sortBy(-_._1).map(_._2)
 
-  /** True when `table` uses per-partition manifests (the marker file
-    * exists) — the discriminator Upsert's read/commit paths route on. */
+  /** True when `table` uses per-partition manifests: the marker file
+    * exists, or the table is a whole-table `_versions` table from before
+    * the marker — a zero-column manifested table whose one partition
+    * (rel `""`) already sits at the root in the slot layout. */
   def isManifested(spark: SparkSession, table: String): Boolean =
-    fs(spark, new Path(table)).exists(new Path(table, Marker))
+    fs(spark, new Path(table)).exists(new Path(table, Marker)) ||
+      Snapshots.isVersioned(spark, table)
 
-  /** The partition column names recorded at creation/migration time. */
+  /** The partition column names recorded at creation/migration time
+    * (none for an unpartitioned table, marked or not). */
   def partitionCols(spark: SparkSession, table: String): Seq[String] = {
     val p = new Path(table, Marker)
-    val in = fs(spark, p).open(p)
-    val s = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-    finally in.close()
+    val s = try readText(spark, p).trim
+      catch { case _: java.io.FileNotFoundException => "" }
     s.split(",").toSeq.filter(_.nonEmpty)
   }
 
-  /** Flip `table` to the manifested layout (or validate the existing
-    * marker against `cols`). Writing the marker IS the whole migration —
-    * existing flat partitions become implicit v0 snapshots, nothing moves.
-    * Call under the table's writer lease. */
+  /** Flip `table` to the manifested layout (or validate its partition
+    * columns against `cols`). Writing the marker IS the whole migration —
+    * existing flat partitions (or a flat unpartitioned table's root files,
+    * or a whole-table `_versions` table's slots) become the partitions'
+    * implicit v0 states, nothing moves. Call under the table's writer
+    * lease. */
   private[graft] def ensureManifested(spark: SparkSession, table: String,
                                       cols: Seq[String]): Unit = {
     val root = new Path(table)
     val f = fs(spark, root)
     f.mkdirs(root)
-    if (isManifested(spark, table)) {
-      val have = partitionCols(spark, table)
-      require(have == cols,
-        s"partition manifests at $table are keyed by $have, not $cols")
-    } else {
-      val p = new Path(table, Marker)
+    val have = if (isManifested(spark, table)) partitionCols(spark, table)
+      else cols
+    require(have == cols,
+      s"partition manifests at $table are keyed by $have, not $cols")
+    val p = new Path(table, Marker)
+    if (!f.exists(p)) {
       val out = f.create(p, true)
       try out.write(cols.mkString(",")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
   }
+
+  /** The directory of partition `rel` — the table root itself for the
+    * one partition (rel `""`) of an unpartitioned table. */
+  private[graft] def relPath(table: String, rel: String): String =
+    if (rel.isEmpty) table else s"$table/$rel"
 
   private val SpecsFile = "_partition_specs"
   private val TransformsFile = "_partition_transforms"
@@ -387,6 +401,9 @@ object PartitionSnapshots {
     require(isManifested(spark, table),
       s"evolvePartitionSpec: $table is not a manifested table")
     val have = partitionCols(spark, table)
+    require(have.nonEmpty,
+      s"evolvePartitionSpec: $table is unpartitioned — its root-level " +
+        "partition cannot parent partition dirs")
     // each entry is an identity column OR a hidden transform —
     // `bucket(N, col)` / `days(col)` / `truncate(W, col)` (Iceberg's
     // hidden partitioning: the dir column is derived at write, hidden
@@ -561,7 +578,7 @@ object PartitionSnapshots {
     *      table that has not been committed to yet). */
   private def resolvedDataPath(spark: SparkSession, table: String,
                                rel: String): Option[String] = {
-    val pt = s"$table/$rel"
+    val pt = relPath(table, rel)
     Snapshots.currentVersion(spark, pt)
       .orElse(latestServableSlot(spark, pt)) match {
       case Some(v) =>
@@ -1067,8 +1084,8 @@ object PartitionSnapshots {
                             base: String): Option[String] =
     base match {
       case Empty => None
-      case Flat  => Some(s"$table/$rel")
-      case v     => Some(s"$table/$rel/$VersionsDir/$v")
+      case Flat  => Some(relPath(table, rel))
+      case v     => Some(s"${relPath(table, rel)}/$VersionsDir/$v")
     }
 
   /** Apply ONE pending delete ref to a scan-rooted DataFrame — the
@@ -1734,13 +1751,13 @@ object PartitionSnapshots {
       val parts = parseParts(state).flatMap { case (b, dels) =>
         if (b == Empty || b == Flat) Seq((b, dels))
         else if (b.contains('/')) { // already file-scoped
-          val p = s"$table/$rel/$VersionsDir/$b"
+          val p = s"${relPath(table, rel)}/$VersionsDir/$b"
           val dir = p.substring(0, p.lastIndexOf('/'))
           val name = p.substring(p.lastIndexOf('/') + 1)
           if (fileStats(spark, dir).toMap.get(name).exists(excluded)) Nil
           else Seq((b, dels))
         } else {
-          val dir = s"$table/$rel/$VersionsDir/$b"
+          val dir = s"${relPath(table, rel)}/$VersionsDir/$b"
           val perFile = fileStats(spark, dir)
           val candidates = perFile.filterNot(f => excluded(f._2))
           if (candidates.size == perFile.size) Seq((b, dels))
@@ -1782,14 +1799,14 @@ object PartitionSnapshots {
                   rewrite += (((dels, relCols(rel)), p)))
               else if (b.contains('/')) {
                 // already file-scoped: survives whole or rewrites whole
-                val p = s"$table/$rel/$VersionsDir/$b"
+                val p = s"${relPath(table, rel)}/$VersionsDir/$b"
                 val dir = p.substring(0, p.lastIndexOf('/'))
                 val name = p.substring(p.lastIndexOf('/') + 1)
                 if (fileStats(spark, dir).toMap.get(name).exists(excluded))
                   keep += ((b, dels))
                 else rewrite += (((dels, relCols(rel)), p))
               } else {
-                val dir = s"$table/$rel/$VersionsDir/$b"
+                val dir = s"${relPath(table, rel)}/$VersionsDir/$b"
                 val perFile = fileStats(spark, dir)
                 val (live, dead) = perFile.partition(f => excluded(f._2))
                 if (dead.isEmpty && perFile.nonEmpty)
@@ -1937,6 +1954,7 @@ object PartitionSnapshots {
     val token = graft.operators.Upsert.acquireLock(spark, table,
       graft.operators.Upsert.DefaultLockTtlMs)
     try {
+      ensureManifested(spark, table, cols) // marks a whole-table _versions table
       cleanupStaging(spark, table)
       val base = rootManifest(spark, table)
         .getOrElse(scanStates(spark, table, cols))
@@ -1973,10 +1991,10 @@ object PartitionSnapshots {
         if (staged.isEmpty) return
         val sealedSlots = depthWaves(staged).flatMap { g =>
           inParallel(g)(rel =>
-            rel -> sealSlot(spark, s"$table/$rel", new Path(s"$staging/$rel")))
+            rel -> sealSlot(spark, relPath(table, rel), new Path(relPath(staging, rel))))
         }
         val sealedDirs = sealedSlots.map { case (rel, v) =>
-          rel -> Snapshots.versionPath(s"$table/$rel", v)
+          rel -> Snapshots.versionPath(relPath(table, rel), v)
         }
         val folded = harvestAndSidecar(spark, sealedDirs.map(_._2))
         // REPLACE: the staged slot is the partition's whole new state
@@ -1989,7 +2007,7 @@ object PartitionSnapshots {
         publishRoot(spark, table, base ++ touched, touched,
           math.max(1, retainVersions), Some(pinSchema), touchedStats)
         inParallel(sealedSlots) { case (rel, v) =>
-          Snapshots.publish(spark, s"$table/$rel", v)
+          Snapshots.publish(spark, relPath(table, rel), v)
         }
         val prot = referencedVersions(spark, table)
         inParallel(sealedSlots) { case (rel, _) =>
@@ -2135,7 +2153,7 @@ object PartitionSnapshots {
   private def scanStates(spark: SparkSession, table: String,
                          cols: Seq[String]): Map[String, String] =
     partitionDirs(spark, table, cols.size).map { rel =>
-      val pt = s"$table/$rel"
+      val pt = relPath(table, rel)
       val state = Snapshots.currentVersion(spark, pt)
         .orElse(latestServableSlot(spark, pt)) match {
         case Some(v) =>
@@ -2473,14 +2491,14 @@ object PartitionSnapshots {
     // a touched partition with zero NEW rows but surviving file-scoped
     // parts keeps exactly the survivors — no EMPTY slot is sealed for it
     val (blankedKeep, blankedEmpty) = blanked.partition(kept(_).nonEmpty)
-    blankedEmpty.foreach(rel => f.mkdirs(new Path(s"$stagingRoot/$rel")))
+    blankedEmpty.foreach(rel => f.mkdirs(new Path(relPath(stagingRoot, rel))))
     // seal on the bounded pool, DEEPEST depth groups first: a retired-
     // spec staged dir can parent a new-spec staged dir, and a parent
     // rename must never swallow a child (per-depth waves keep the rule)
     val sealedSlots = depthWaves((staged ++ blankedEmpty).toSeq)
       .flatMap { g =>
         inParallel(g)(rel =>
-          rel -> sealSlot(spark, s"$table/$rel", new Path(s"$stagingRoot/$rel")))
+          rel -> sealSlot(spark, relPath(table, rel), new Path(relPath(stagingRoot, rel))))
       }
     // a partition's new state: its SURVIVING parts (file-scoped MERGE —
     // untouched files of prior versions, kept by token with their
@@ -2508,7 +2526,7 @@ object PartitionSnapshots {
     // every file it wrote, and per-dir loops would serialize on skew.
     val sealedDirs = sealedSlots.collect {
       case (rel, v) if !blankedEmpty.contains(rel) =>
-        rel -> Snapshots.versionPath(s"$table/$rel", v)
+        rel -> Snapshots.versionPath(relPath(table, rel), v)
     }
     val folded = harvestAndSidecar(spark, sealedDirs.map(_._2))
     val sealedDirOf = sealedDirs.toMap
@@ -2553,7 +2571,7 @@ object PartitionSnapshots {
       // fan out on the bounded pool (the root publish above was the
       // single serial commit point)
       inParallel(sealedSlots) { case (rel, v) =>
-        Snapshots.publish(spark, s"$table/$rel", v)
+        Snapshots.publish(spark, relPath(table, rel), v)
       }
       val prot = referencedVersions(spark, table)
       inParallel(sealedSlots) { case (rel, _) =>
@@ -2562,9 +2580,6 @@ object PartitionSnapshots {
     }
   }
 
-  /** Post-publish hygiene for one partition: enforce snapshot retention,
-    * and expire the implicit v0 (legacy flat files) once enough real
-    * versions exist to cover every reader the retention window promises. */
   /** APPEND commit (Iceberg's fast append — O(new data), file-level
     * granularity at version-dir resolution): each staged partition dir
     * is sealed into a NEW version slot and the partition's state becomes
@@ -2586,8 +2601,17 @@ object PartitionSnapshots {
                                         branch: Option[String] = None)
       : Unit = {
     val retain = math.max(1, retainVersions)
-    val staged = phase("append: staging walk")(
-      partitionDirs(spark, stagingRoot, cols.size))
+    // footer harvest + per-dir sidecars BEFORE sealing (the sidecar rides
+    // the slot rename): an unpartitioned write of zero rows still stages
+    // one empty file, and its rel is dropped here instead of sealed — so
+    // callers need no emptiness probe (a Spark job) before staging
+    val (staged, stagedStats) = phase("append: staging walk + harvest") {
+      val dirs = partitionDirs(spark, stagingRoot, cols.size)
+      val folded = harvestAndSidecar(spark, dirs.map(relPath(stagingRoot, _)))
+      val fresh = dirs.map(rel => rel -> folded(relPath(stagingRoot, rel)))
+        .filter(_._2.rows > 0)
+      (fresh.map(_._1), fresh.toMap)
+    }
     if (staged.isEmpty) return
     val rt = s"$table/$RootDir"
     // a branch append folds onto the BRANCH head's manifest and stats
@@ -2613,7 +2637,7 @@ object PartitionSnapshots {
     val sealedSlots = phase("append: seal slots")(depthWaves(staged)
       .flatMap { g =>
         inParallel(g)(rel =>
-          rel -> sealSlot(spark, s"$table/$rel", new Path(s"$stagingRoot/$rel")))
+          rel -> sealSlot(spark, relPath(table, rel), new Path(relPath(stagingRoot, rel))))
       })
     val touched = sealedSlots.map { case (rel, v) =>
       val newPart = (f"v$v%08d", Seq.empty[String])
@@ -2621,15 +2645,8 @@ object PartitionSnapshots {
         .filterNot(_._1 == Empty)
       rel -> fmtParts(prior :+ newPart)
     }.toMap
-    // flat file-level harvest waves + per-dir sidecars (see commitStaged)
-    val appendDirs = sealedSlots.map { case (rel, v) =>
-      rel -> Snapshots.versionPath(s"$table/$rel", v)
-    }
-    val appendFolded = phase("append: footer harvest + sidecars")(
-      harvestAndSidecar(spark, appendDirs.map(_._2)))
-    val appendDirOf = appendDirs.toMap
     val touchedStats = sealedSlots.flatMap { case (rel, _) =>
-      val fresh = appendFolded(appendDirOf(rel))
+      val fresh = stagedStats(rel)
       val priorParts = base.get(rel).map(parseParts).getOrElse(Nil)
         .filterNot(_._1 == Empty)
       if (priorParts.isEmpty) Some(rel -> encodeStats(fresh))
@@ -2643,7 +2660,7 @@ object PartitionSnapshots {
         touchedStats, props, branch)) // commit point
     if (branch.isEmpty) {
       phase("append: pointer swaps")(inParallel(sealedSlots) { case (rel, v) =>
-        Snapshots.publish(spark, s"$table/$rel", v)
+        Snapshots.publish(spark, relPath(table, rel), v)
       })
       val prot = phase("append: referenced versions")(
         referencedVersions(spark, table))
@@ -2653,19 +2670,36 @@ object PartitionSnapshots {
     }
   }
 
+  /** Post-publish hygiene for one partition: enforce snapshot retention,
+    * and expire the implicit v0 (legacy flat files) once enough real
+    * versions exist to cover every reader the retention window promises
+    * — or, for an unpartitioned table, once no live state names them. */
   private def finishPartitionCommit(spark: SparkSession, table: String,
                                     rel: String, retain: Int,
                                     prot: Map[String, (Set[Long], Boolean)])
       : Unit = {
-    val pd = new Path(s"$table/$rel")
+    val pd = new Path(relPath(table, rel))
     val f = fs(spark, pd)
     // data versions the CURRENT state or a tagged root still names are
     // retention-exempt — count-based vacuum would otherwise delete an
     // append union's older parts or a tagged pin
     val (protVs, protFlat) = prot.getOrElse(rel, (Set.empty[Long], false))
-    Snapshots.vacuum(spark, s"$table/$rel", keep = retain,
+    Snapshots.vacuum(spark, relPath(table, rel), keep = retain,
       extraKeep = protVs)
-    if (!protFlat && Snapshots.versions(spark, s"$table/$rel").size >= retain)
+    // an unpartitioned table's flat root entries go as soon as no
+    // retained root names FLAT — usually at its first rewrite, which
+    // supersedes the whole table (keeping a table-sized v0 beside it would
+    // double its storage), while a root a fast append left naming
+    // `FLAT&vN` stays readable for time travel until retention drops it
+    if (rel.isEmpty) {
+      val flat = f.listStatus(pd).filter(st => !hidden(st.getPath.getName))
+      val rt = s"$table/$RootDir"
+      if (flat.nonEmpty && !protFlat && !Snapshots.versions(spark, rt)
+          .exists(v => resolveManifest(spark, rt, v).get(rel)
+            .exists(parseParts(_).exists(_._1 == Flat))))
+        flat.foreach(st => f.delete(st.getPath, true))
+    } else if (!protFlat &&
+        Snapshots.versions(spark, relPath(table, rel)).size >= retain)
       f.listStatus(pd)
         .filter(st => st.isFile && !hidden(st.getPath.getName))
         .foreach(st => f.delete(st.getPath, false))
@@ -2732,12 +2766,12 @@ object PartitionSnapshots {
     // blanked partitions (touched, zero surviving rows) ride the same
     // staged-dir → claim path as data partitions, as empty dirs
     val blanked = (emptied -- staged.toSet).toSeq
-    blanked.foreach(rel => f.mkdirs(new Path(s"$stagingRoot/$rel")))
+    blanked.foreach(rel => f.mkdirs(new Path(relPath(stagingRoot, rel))))
     // the WAP marker goes into the STAGED dirs so the claim rename carries
     // it atomically — from the first instant a slot exists it is
     // recognizably unaudited, and no read/state-scan path will serve it
     (staged ++ blanked).foreach { rel =>
-      f.create(new Path(s"$stagingRoot/$rel", WapMarker), true).close()
+      f.create(new Path(relPath(stagingRoot, rel), WapMarker), true).close()
     }
     var claimed = List.empty[(String, Long)]
     val entries =
@@ -2751,8 +2785,8 @@ object PartitionSnapshots {
         depthWaves((staged ++ blanked).toSeq)
           .foreach { g =>
             claimed = inParallel(g)(rel =>
-              rel -> claimSlot(spark, s"$table/$rel",
-                new Path(s"$stagingRoot/$rel"))).toList ::: claimed
+              rel -> claimSlot(spark, relPath(table, rel),
+                new Path(relPath(stagingRoot, rel)))).toList ::: claimed
           }
         val cm = claimed.toMap
         // same migration rule as commitStaged: a staged rel outside the
@@ -2790,21 +2824,21 @@ object PartitionSnapshots {
         // unaudited slot is left for a fallback path to trip over
         case t: Throwable =>
           claimed.foreach { case (rel, v) =>
-            f.delete(new Path(Snapshots.versionPath(s"$table/$rel", v)), true)
+            f.delete(new Path(Snapshots.versionPath(relPath(table, rel), v)), true)
           }
           throw t
       }
     // seal: drop the marker, then _SUCCESS — from here the slots are
     // ordinary committed versions and the ordering mirrors commitStaged
     inParallel(claimed) { case (rel, v) =>
-      val slot = new Path(Snapshots.versionPath(s"$table/$rel", v))
+      val slot = new Path(Snapshots.versionPath(relPath(table, rel), v))
       f.delete(new Path(slot, WapMarker), false)
       f.create(new Path(slot, "_SUCCESS"), true).close()
     }
     // flat file-level harvest waves + per-dir sidecars (see commitStaged)
     val auditedDirs = claimed.collect {
       case (rel, v) if !blanked.contains(rel) =>
-        rel -> Snapshots.versionPath(s"$table/$rel", v)
+        rel -> Snapshots.versionPath(relPath(table, rel), v)
     }
     val auditedFolded = harvestAndSidecar(spark, auditedDirs.map(_._2))
     val auditedDirOf = auditedDirs.toMap
@@ -2832,7 +2866,7 @@ object PartitionSnapshots {
         rel -> (if (blanked.contains(rel)) Empty else entries(rel))
       }, retain, schema, auditedStats) // commit point
     inParallel(claimed) { case (rel, v) =>
-      Snapshots.publish(spark, s"$table/$rel", v)
+      Snapshots.publish(spark, relPath(table, rel), v)
     }
     val prot = referencedVersions(spark, table)
     inParallel(claimed) { case (rel, _) =>
@@ -3593,7 +3627,7 @@ object PartitionSnapshots {
         // same dir parents new-spec subdirs — the walk alone skips them
         inParallel((partitionDirs(spark, table, cols.size) ++ acc.keys)
           .distinct) { rel =>
-            Snapshots.vacuum(spark, s"$table/$rel",
+            Snapshots.vacuum(spark, relPath(table, rel),
               keep = math.max(1, retainVersions),
               extraKeep = acc.getOrElse(rel, Set.empty))
           }
@@ -3764,7 +3798,7 @@ object PartitionSnapshots {
             .sortWithinPartitions(sortWithin.head, sortWithin.tail: _*)
         shaped
           .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-          .parquet(s"$staging/$rel")
+          .parquet(relPath(staging, rel))
       }
       val survivors = todo.collect {
         case (rel, _, keep, _, _) if keep.nonEmpty => rel -> keep
@@ -4200,10 +4234,10 @@ object PartitionSnapshots {
         val staged = partitionDirs(spark, staging, cols.size)
         val sealedSlots = depthWaves(staged).flatMap { g =>
           inParallel(g)(rel =>
-            rel -> sealSlot(spark, s"$table/$rel", new Path(s"$staging/$rel")))
+            rel -> sealSlot(spark, relPath(table, rel), new Path(relPath(staging, rel))))
         }
         val sealedDirs = sealedSlots.map { case (rel, v) =>
-          rel -> Snapshots.versionPath(s"$table/$rel", v)
+          rel -> Snapshots.versionPath(relPath(table, rel), v)
         }
         val folded = harvestAndSidecar(spark, sealedDirs.map(_._2))
         val sealedDirOf = sealedDirs.toMap
@@ -4244,7 +4278,7 @@ object PartitionSnapshots {
         publishRoot(spark, table, base ++ touched, touched,
           math.max(1, retainVersions), evolvedSchema, touchedStats) // commit point
         inParallel(sealedSlots) { case (rel, v) =>
-          Snapshots.publish(spark, s"$table/$rel", v)
+          Snapshots.publish(spark, relPath(table, rel), v)
         }
         val prot = referencedVersions(spark, table)
         inParallel(sealedSlots) { case (rel, _) =>
@@ -4381,8 +4415,7 @@ object PartitionSnapshots {
       def walkRels(dir: Path, rel: String): Seq[String] = {
         val subs = f.listStatus(dir).filter(_.isDirectory)
         val here =
-          if (rel.nonEmpty && subs.exists(_.getPath.getName == VersionsDir))
-            Seq(rel)
+          if (subs.exists(_.getPath.getName == VersionsDir)) Seq(rel)
           else Nil
         here ++ subs.toSeq
           .filter(st => !hidden(st.getPath.getName) &&
@@ -4393,18 +4426,19 @@ object PartitionSnapshots {
       }
       val rels = walkRels(new Path(table), "")
       doomed ++= inParallel(rels) { rel =>
-        val pt = s"$table/$rel"
+        val pt = relPath(table, rel)
+        def under(name: String) = if (rel.isEmpty) name else s"$rel/$name"
         val referenced = refVs.getOrElse(rel, Set.empty) ++
           Snapshots.pointedVersion(spark, pt) // pointer cache: belt
         val slots = Snapshots.allVersionDirs(spark, pt)
           .filterNot(referenced.contains)
           .map(v => new Path(Snapshots.versionPath(pt, v)))
           .filter(cold)
-          .map(p => s"$rel/$VersionsDir/${p.getName}")
+          .map(p => under(s"$VersionsDir/${p.getName}"))
         val staging = f.listStatus(new Path(pt, VersionsDir))
           .filter(st => st.isDirectory &&
             st.getPath.getName.startsWith(".staging-") && cold(st.getPath))
-          .map(st => s"$rel/$VersionsDir/${st.getPath.getName}")
+          .map(st => under(s"$VersionsDir/${st.getPath.getName}"))
         slots ++ staging
       }.flatten
       // 3. cold staging debris under the root chain's own versions dir
@@ -4428,7 +4462,7 @@ object PartitionSnapshots {
         }
       val out = doomed.result().distinct.sorted
       if (!dryRun)
-        inParallel(out)(rel => f.delete(new Path(s"$table/$rel"), true))
+        inParallel(out)(rel => f.delete(new Path(relPath(table, rel)), true))
       out
     } finally graft.operators.Upsert.releaseLock(spark, table, token)
   }

@@ -1,34 +1,29 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Snapshot versioning + time travel for Parquet warehouse tables — the
-  * engine's analogue of the Iceberg snapshot features the reference's
-  * README claims (reference: README.md:100-106) but never exercises in
-  * code.
+/** Version directories with an atomically swapped pointer — the storage
+  * primitive under every manifested table ([[PartitionSnapshots]]). Each
+  * partition of a manifested table, and the single implicit partition of
+  * an unpartitioned one (rel `""`, at the table root), is laid out as:
   *
-  * Layout:
   * {{{
-  *   <table>/_versions/v00000001/  ← immutable full snapshot (parquet)
-  *   <table>/_versions/v00000002/
-  *   <table>/_current              ← tiny pointer file, atomically swapped
+  *   <dir>/_versions/v00000001/  ← immutable data slot (parquet)
+  *   <dir>/_versions/v00000002/
+  *   <dir>/_current              ← tiny pointer file, atomically swapped
   * }}}
   *
-  * Each commit writes a NEW immutable version directory and then swaps the
-  * pointer (write sibling tmp → delete → rename; a reader that races the
-  * swap falls back to the newest complete snapshot, so there is no window
-  * where the table is unreadable). Unlike Iceberg's manifest reuse, every
-  * snapshot here is a full copy — simple and crash-safe, at O(table) write
-  * cost per commit. That trade is right for dimension-sized tables and
-  * per-partition-committed facts; for a 100 TB fact table, snapshot the
-  * PARTITION directories (compose with Upsert's partition-scoped rewrite),
-  * not the table root.
-  *
-  * Readers never list-and-guess: concurrent writers are out of scope
-  * (single-writer, the reference's one-Airflow-run-at-a-time schedule),
-  * but a crashed writer leaves only an orphan version dir that `vacuum`
-  * collects — the pointer still names the last complete snapshot.
+  * A slot becomes committed when it carries `_SUCCESS`; a crashed write
+  * leaves an unsealed dir no reader serves and [[vacuum]] collects. The
+  * pointer is a read cache for partition-level readers: the table's
+  * commit point is its root manifest ([[PartitionSnapshots]]), which
+  * names each partition's slot, so every write — partitioned or not —
+  * goes through one commit route ([[graft.operators.Upsert]]). A
+  * whole-table `_versions` table written before that route existed is a
+  * zero-column manifested table whose marker has not been written yet:
+  * it reads as manifested, and its next commit writes the marker, moving
+  * no data.
   */
 object Snapshots {
 
@@ -63,67 +58,6 @@ object Snapshots {
   def currentVersion(spark: SparkSession, table: String): Option[Long] =
     pointedVersion(spark, table).orElse(versions(spark, table).lastOption)
 
-  /** Newest retained version committed (dir mtime) at or before
-    * `tsMillis` — SQL `TIMESTAMP AS OF` resolution for whole-table
-    * snapshot tables; loud when the timestamp precedes retained
-    * history (see [[PartitionSnapshots.rootVersionAt]]).
-    *
-    * Resolution walks the RECORDED PUBLISHED LINEAGE from the current
-    * head (the `_parent` marker each [[publish]] writes), exactly like
-    * [[PartitionSnapshots.rootVersionAt]]'s mainLineage: a pointer
-    * ceiling alone is not enough, because a commit AFTER a rollback
-    * allocates max(existing)+1 — rollback(v1) then commit makes v3 with
-    * the abandoned v2 still BELOW the new ceiling, and a timestamp
-    * between v2's and v3's mtimes must serve v1, never the rolled-back
-    * v2. Versions without a marker (pre-upgrade) fall back to the
-    * legacy assumption that every lower committed version is ancestry. */
-  def versionAt(spark: SparkSession, table: String, tsMillis: Long): Long = {
-    val f = fs(spark, new Path(table))
-    val committed = versions(spark, table)
-    val head = pointedVersion(spark, table).orElse(committed.lastOption)
-    val lineage = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val committedSet = committed.toSet
-    var v: Option[Long] = head
-    while (v.isDefined) {
-      val cur = v.get
-      if (committedSet.contains(cur)) lineage += cur
-      v = parentOf(spark, table, cur) match {
-        // parents are strictly decreasing by construction (a commit's
-        // slot is max+1); anything else is a corrupt marker — stop
-        case Some(p) if p >= 1 && p < cur => Some(p)
-        case Some(_) => None // parent 0: the chain's first commit
-        case None => // legacy slot: adopt all lower committed versions
-          committed.filter(_ < cur).reverse.foreach(lineage += _)
-          None
-      }
-    }
-    val ok = lineage.map(lv => lv ->
-      f.getFileStatus(new Path(versionPath(table, lv))).getModificationTime)
-      .filter(_._2 <= tsMillis)
-    require(ok.nonEmpty,
-      s"versionAt: no retained snapshot at $table committed at or before " +
-        s"${new java.sql.Timestamp(tsMillis)}")
-    ok.maxBy(_._1)._1
-  }
-
-  /** The published-lineage parent recorded at [[publish]] time (`0` =
-    * first commit); None for pre-upgrade slots that never recorded one. */
-  private def parentOf(spark: SparkSession, table: String,
-                       v: Long): Option[Long] = {
-    val p = new Path(versionPath(table, v), ParentMarker)
-    val f = fs(spark, p)
-    if (!f.exists(p)) None
-    else try {
-      val in = f.open(p)
-      val s = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-      Some(s.toLong)
-    } catch { case _: Exception => None }
-  }
-
-  private val ParentMarker = "_parent"
-
   /** The pointer FILE's version only — None when the pointer is absent
     * or mid-swap, with NO newest-slot fallback. Callers that must never
     * confuse staged slots for the published state (branch-aware layers)
@@ -155,69 +89,20 @@ object Snapshots {
         .map(_.group(1).toLong)).toSeq.sorted
   }
 
-  /** True when `table` uses the versioned layout (a `_versions` dir
-    * exists) — the discriminator [[graft.operators.Upsert.read]] uses to
-    * route between pointer-resolved and plain-parquet reads. */
-  def isVersioned(spark: SparkSession, table: String): Boolean = {
+  /** True when `table` has a root-level `_versions` dir — the data slots
+    * of an unpartitioned table, marked manifested or not yet. */
+  private[sources] def isVersioned(spark: SparkSession, table: String): Boolean = {
     val dir = new Path(s"$table/$VersionsDir")
     fs(spark, dir).exists(dir)
   }
 
-  /** Write `df` as the next (not-yet-published) version dir; returns its
-    * number. The data lands in a unique hidden `.staging-*` dir first and
-    * is then atomically RENAMED into the next free version slot — two
-    * concurrent stagers (a TTL-takeover race) can never interleave files
-    * in one dir, because a rename onto an existing target fails and the
-    * loser renumbers. Readers cannot see the version until [[publish]]
-    * swaps the pointer; the stage/publish split lets a caller re-verify
-    * its write lease between the slow data write and the instant swap. An
-    * abandoned staged version is a COMPLETE dataset that merely never
-    * became current — the pointer-corrupt fallback may transiently serve
-    * it (bounded staleness, never partial data) and vacuum collects it. */
-  private[graft] def stageVersion(spark: SparkSession, table: String,
-                                  df: DataFrame): Long = {
-    val tmp = new Path(
-      s"$table/$VersionsDir/.staging-${java.util.UUID.randomUUID()}")
-    df.write.mode(SaveMode.ErrorIfExists).parquet(tmp.toString)
-    val f = fs(spark, tmp)
-    var attempt = 0
-    while (attempt < 50) {
-      val next = allVersionDirs(spark, table).lastOption.getOrElse(0L) + 1
-      if (CommitIo.current.claimSlot(f, tmp,
-          new Path(versionPath(table, next)))) return next
-      attempt += 1 // lost the slot race; renumber against the new listing
-    }
-    f.delete(tmp, true)
-    throw new IllegalStateException(
-      s"snapshot stage: could not claim a version slot at $table after 50 tries")
-  }
-
-  /** Atomically publish a staged version: after the pointer swap every new
-    * read resolves to `v`; readers mid-scan on the previous version keep
-    * their (immutable) files. The version that was current at publish
-    * time is recorded as `v`'s `_parent` FIRST (inside the immutable
-    * version dir, so it travels with the snapshot), giving [[versionAt]]
-    * the published lineage to resolve timestamps along — a crash between
-    * marker and swap leaves only an unpublished dir with a marker, which
-    * no lineage walk from any published head can reach. */
+  /** Atomically publish a sealed version: after the pointer swap every
+    * new pointer read resolves to `v`; readers mid-scan on the previous
+    * version keep their (immutable) files. */
   private[graft] def publish(spark: SparkSession, table: String, v: Long): Unit = {
-    val parent = pointedVersion(spark, table).getOrElse(0L)
-    if (parent != v) { // rollback republishes an old slot; keep ITS parent
-      val p = new Path(versionPath(table, v), ParentMarker)
-      val f = fs(spark, p)
-      val out = f.create(p, true)
-      try out.write(parent.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    swapPointer(spark, table, v)
-  }
-
-  /** Commit `df` as the next snapshot; returns the new version number. */
-  def commit(spark: SparkSession, table: String, df: DataFrame): Long = {
-    val next = stageVersion(spark, table, df)
-    publish(spark, table, next)
-    next
+    val cur = new Path(table, Pointer)
+    CommitIo.current.swapPointer(fs(spark, cur), cur,
+      vName(v).getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Read the current snapshot (time travel: pass `asOf`). Current reads
@@ -237,24 +122,12 @@ object Snapshots {
     spark.read.parquet(versionPath(table, v))
   }
 
-  /** Keyed MERGE against the current snapshot, committed as a new version
-    * (read-modify-commit; single-writer). */
-  def upsert(spark: SparkSession, table: String, source: DataFrame,
-             keys: Seq[String], insertOnly: Boolean = false): Long = {
-    val merged = currentVersion(spark, table) match {
-      case None => source
-      case Some(v) => graft.operators.Upsert.merge(
-        read(spark, table, v), source, keys, insertOnly)
-    }
-    commit(spark, table, merged)
-  }
-
   /** Repoint the table at an older snapshot (instant, nothing rewritten —
     * later versions remain until `vacuum`). */
   def rollback(spark: SparkSession, table: String, v: Long): Unit = {
     require(versions(spark, table).contains(v),
       s"cannot roll back to missing snapshot v$v at $table")
-    swapPointer(spark, table, v)
+    publish(spark, table, v)
   }
 
   /** Delete all snapshots except the current one and the newest
@@ -276,11 +149,5 @@ object Snapshots {
       .filter(st => VersionName.findFirstMatchIn(st.getPath.getName).nonEmpty ||
         System.currentTimeMillis() - st.getModificationTime > 15 * 60 * 1000L)
       .foreach(st => f.delete(st.getPath, true))
-  }
-
-  private def swapPointer(spark: SparkSession, table: String, v: Long): Unit = {
-    val cur = new Path(table, Pointer)
-    CommitIo.current.swapPointer(fs(spark, cur), cur,
-      vName(v).getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 }

@@ -63,9 +63,9 @@ object Streams {
     * when the DataFrame is created — overwriting the directory mid-query
     * yields stale rows or FileNotFoundException, NOT a refresh. To follow
     * a slowly-changing dim, rebuild the join inside `foreachBatch` (a new
-    * `spark.read` per batch) or back the dim with a snapshot/table layer
-    * ([[graft.sources.Snapshots]]) whose atomic pointer gives each read a
-    * consistent version. */
+    * `spark.read` per batch) or back the dim with an upsert table
+    * ([[graft.operators.Upsert.read]]) whose atomic root manifest gives
+    * each read a consistent version. */
   def enrichWithDim(stream: DataFrame, dim: DataFrame,
                     key: String): DataFrame =
     stream.join(broadcast(dim), Seq(key), "left")

@@ -33,6 +33,30 @@ class ColsSpec extends SparkSpec {
     ts(null) shouldBe null
   }
 
+  test("normalize + validArticles compile under whole-stage codegen, no fallback") {
+    import graft.pipeline.BronzeToSilver
+    val raw = spark.read.schema(graft.core.Schemas.bronzeArticle).json(Seq(
+      """{"url": "https://vnexpress.net/a-1.html", "title": "t",
+        |"publish_date": "Thứ sáu, 10/10/2025, 14:27 (GMT+7)"}""".stripMargin,
+      """{"url": "https://vnexpress.net/a-2.html", "title": "t",
+        |"publish_date": "1700000000"}""".stripMargin,
+      """{"url": "", "publish_date": "2025-10-10T14:27:00Z"}""").toDS())
+    // a generated method over 64 KB fails to compile; with the fallback
+    // off that failure surfaces instead of a silent interpreted re-run
+    val key = "spark.sql.codegen.fallback"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val out = BronzeToSilver.validArticles(
+        BronzeToSilver.normalize(raw, topicFromPath = false))
+        .select("url", "publish_ts").orderBy("url").collect()
+      out.map(_.getString(0)).toSeq shouldBe Seq(
+        "https://vnexpress.net/a-1.html", "https://vnexpress.net/a-2.html")
+      out.map(_.getTimestamp(1).toString).toSeq shouldBe Seq(
+        "2025-10-10 07:27:00.0", "2023-11-14 22:13:20.0")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("dateKey and safeDateKey") {
     val df = Seq("2025-10-10").toDF("v").select(
       Cols.dateKey(col("v").cast("timestamp")).as("k"),

@@ -110,7 +110,8 @@ class MergeSqlSpec extends SparkSpec {
 
   test("unsupported MERGE shapes fail loudly, not silently degrade") {
     val wh = tmpDir("msqlbad")
-    Upsert.upsert(spark, s"$wh/t", Seq((1, 1.0)).toDF("k", "v"), Seq("k"))
+    // a plain parquet dir: every upsert table is manifested
+    Seq((1, 1.0)).toDF("k", "v").write.parquet(s"$wh/t")
     Seq((1, 2.0)).toDF("k", "v").createOrReplaceTempView("msql_bad_src")
     val cat = new Catalog(spark, wh)
     // non-equi ON
@@ -324,8 +325,9 @@ class MergeSqlSpec extends SparkSpec {
     cat.sql("DELETE FROM t WHERE part = 'p2'").count() shouldBe 14L
     PartitionSnapshots.rootManifest(spark, rt).get
       .apply("part=p2") shouldBe "EMPTY"
-    // flat tables refuse loudly
-    Upsert.upsert(spark, s"$wh/flat", Seq((1, 1.0)).toDF("k", "v"), Seq("k"))
+    // flat tables refuse loudly (every upsert table is manifested; a
+    // plain parquet dir is not)
+    Seq((1, 1.0)).toDF("k", "v").write.parquet(s"$wh/flat")
     an[IllegalArgumentException] should be thrownBy
       cat.sql("DELETE FROM flat WHERE k = 1")
   }
@@ -364,7 +366,8 @@ class MergeSqlSpec extends SparkSpec {
     // unknown assigned column / non-manifested target refuse loudly
     an[IllegalArgumentException] should be thrownBy
       cat.sql("UPDATE t SET nope = 1 WHERE k = 1")
-    Upsert.upsert(spark, s"$wh/flat", Seq((1, 1.0)).toDF("k", "v"), Seq("k"))
+    // (every upsert table is manifested; a plain parquet dir is not)
+    Seq((1, 1.0)).toDF("k", "v").write.parquet(s"$wh/flat")
     an[IllegalArgumentException] should be thrownBy
       cat.sql("UPDATE flat SET v = 2.0 WHERE k = 1")
   }

@@ -415,10 +415,10 @@ class PartitionSnapshotsSpec extends SparkSpec {
     Upsert.upsert(spark, path,
       Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "part", "v"),
       Seq("k"), partitionCols = Seq("part"))
-    // both whole-table snapshot commits end in cleanupFlatFiles, which
-    // would delete every k=v partition dir (and its immutable _versions
-    // history) while the root manifest survived pointing at nothing —
-    // they must refuse a manifested table loudly instead
+    // an unpartitioned commit (an upsert without partitionCols, or a
+    // whole-table replace) into a partitioned table would stage rows
+    // with no partition dirs — the marker's partition columns make both
+    // refuse loudly before anything is staged
     an[IllegalArgumentException] should be thrownBy
       Upsert.upsert(spark, path, Seq((1, "p1", 99)).toDF("k", "part", "v"),
         Seq("k")) // partitionCols forgotten

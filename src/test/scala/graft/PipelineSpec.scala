@@ -313,11 +313,13 @@ class PipelineSpec extends SparkSpec {
     }
     // articles (the partitioned table) committed through the manifests:
     // one root manifest per micro-batch that touched it, every partition
-    // pinned; the dimension tables kept their whole-table snapshot layout
+    // pinned; the unpartitioned tables commit through the same route,
+    // as one implicit partition with no partition columns
     import graft.sources.PartitionSnapshots
     for (wh <- Seq(whBatch, whMan)) withClue(wh) {
       PartitionSnapshots.isManifested(spark, s"$wh/articles") shouldBe true
-      PartitionSnapshots.isManifested(spark, s"$wh/authors") shouldBe false
+      PartitionSnapshots.isManifested(spark, s"$wh/authors") shouldBe true
+      PartitionSnapshots.partitionCols(spark, s"$wh/authors") shouldBe Nil
     }
     PartitionSnapshots.rootVersions(spark, s"$whMan/articles")
       .nonEmpty shouldBe true

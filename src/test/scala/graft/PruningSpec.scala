@@ -89,6 +89,19 @@ class PruningSpec extends SparkSpec {
     } finally reader.close()
   }
 
+  test("bloom filters are sized to each file's distinct values, not the 1 MB cap") {
+    val dir = tmpDir("bloomsmall")
+    // ten rows: an unsized filter would take parquet's whole 1 MB budget
+    val df = (1 to 10).map(i => (i.toLong, s"key$i")).toDF("id", "nk")
+    Pruning.writeWithBloomFilters(df.coalesce(1), s"$dir/t",
+      bloomCols = Seq("nk"), sortCols = Seq("id"))
+    val files = new java.io.File(s"$dir/t").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    files should not be empty
+    files.foreach(f => withClue(f.getName) { f.length() should be < 64L * 1024 })
+    spark.read.parquet(s"$dir/t").where($"nk" === "key7").count() shouldBe 1
+  }
+
   test("z-order clustering bounds every z-column's range per file") {
     val dir = tmpDir("zorder")
     val n = 40000

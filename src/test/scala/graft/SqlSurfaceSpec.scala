@@ -171,8 +171,8 @@ class SqlSurfaceSpec extends SparkSpec {
   test("snapshot and flat tables: INSERT routes through their own commit flavors") {
     val wh = tmpDir("sqlinsf")
     val cat = new Catalog(spark, wh)
-    // snapshot (whole-table versioned)
-    graft.sources.Snapshots.commit(spark, s"$wh/s", Seq((1, 1.0)).toDF("k", "v"))
+    // snapshot (whole-table versioned: an unpartitioned manifested table)
+    Upsert.replace(spark, s"$wh/s", Seq((1, 1.0)).toDF("k", "v"))
     cat.sql("INSERT INTO s VALUES (2, 2.0)").count() shouldBe 2L
     cat.sql("INSERT OVERWRITE s VALUES (9, 9.0)").count() shouldBe 1L
     // flat unpartitioned dir

@@ -103,4 +103,21 @@ class StatsHintSpec extends SparkSpec {
     Upsert.read(spark, t).where($"v" === -1.0).select("k")
       .as[Int].collect() shouldBe Array(7)
   }
+
+  test("string bounds outside printable ASCII are not recorded") {
+    val t = tmpDir("asciibounds") + "/t"
+    Upsert.upsert(spark, t, Seq(
+      (1, "p1", "https://vnexpress.net/a-1.html", "Giá vàng tăng"),
+      (2, "p1", "https://vnexpress.net/a-2.html", "Thời sự"))
+      .toDF("k", "part", "url", "title"),
+      Seq("k"), partitionCols = Seq("part"))
+    // no pruning path accepts a non-ASCII bound, so neither the root
+    // manifest nor the per-file sidecar carries the title's
+    val part = PartitionSnapshots.rootStats(spark, t)("part=p1")
+    part.rows shouldBe 2L
+    part.cols.keySet shouldBe Set("k", "url")
+    val slot = graft.sources.Snapshots.versionPath(s"$t/part=p1", 1L)
+    PartitionSnapshots.fileStats(spark, slot).map(_._2.cols.keySet).toSet shouldBe
+      Set(Set("k", "url"))
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Upsert
-import graft.sources.{Catalog, PartitionSnapshots, Snapshots}
+import graft.sources.{Catalog, PartitionSnapshots}
 
 /** SQL time-travel read surface ([[graft.sources.Catalog.sql]] routing
   * `FROM t VERSION AS OF v / <tag>` and `TIMESTAMP AS OF ts` through the
@@ -72,12 +72,13 @@ class TimeTravelSqlSpec extends SparkSpec {
 
   test("snapshot (whole-table) versioned tables travel by number; refusals are loud") {
     val wh = tmpDir("ttsnap")
-    val v1 = Snapshots.commit(spark, s"$wh/s", Seq((1, 1.0)).toDF("k", "v"))
-    Snapshots.commit(spark, s"$wh/s", Seq((1, 1.0), (2, 2.0)).toDF("k", "v"))
+    Upsert.replace(spark, s"$wh/s", Seq((1, 1.0)).toDF("k", "v"))
+    val v1 = PartitionSnapshots.currentRootVersion(spark, s"$wh/s").get
+    Upsert.replace(spark, s"$wh/s", Seq((1, 1.0), (2, 2.0)).toDF("k", "v"))
     val cat = new Catalog(spark, wh)
     cat.sql(s"SELECT count(*) AS n FROM s VERSION AS OF $v1")
       .head().getLong(0) shouldBe 1L
-    // tags are a manifested-table concept
+    // an unknown tag fails loudly
     an[IllegalArgumentException] should be thrownBy
       cat.sql("SELECT * FROM s VERSION AS OF 'sometag'")
     // nonexistent (or expired) version fails loudly
@@ -135,12 +136,16 @@ class TimeTravelSqlSpec extends SparkSpec {
       Seq("k"), partitionCols = Seq("part"))
     cat.sql("SELECT sum(v) AS s FROM t TIMESTAMP AS OF '2099-01-01 00:00:00'")
       .head().getDouble(0) shouldBe 4.0
-    // flat snapshot tables: the pointer bounds the candidates
+    // unpartitioned (whole-table) tables: the pointer bounds the candidates
     val s = s"$wh/s"
-    val sv1 = Snapshots.commit(spark, s, Seq((1, 1.0)).toDF("k", "v"))
+    def commit(df: org.apache.spark.sql.DataFrame): Long = {
+      Upsert.replace(spark, s, df)
+      PartitionSnapshots.currentRootVersion(spark, s).get
+    }
+    val sv1 = commit(Seq((1, 1.0)).toDF("k", "v"))
     Thread.sleep(1100)
-    Snapshots.commit(spark, s, Seq((1, 1.0), (2, 2.0)).toDF("k", "v"))
-    Snapshots.rollback(spark, s, sv1)
+    commit(Seq((1, 1.0), (2, 2.0)).toDF("k", "v"))
+    PartitionSnapshots.rollbackRoot(spark, s, sv1)
     cat.sql("SELECT count(*) AS n FROM s TIMESTAMP AS OF '2099-01-01 00:00:00'")
       .head().getLong(0) shouldBe 1L
     // flat rollback THEN a new commit: v3 = max(existing)+1 repoints
@@ -148,10 +153,9 @@ class TimeTravelSqlSpec extends SparkSpec {
     // to a timestamp between v2's and v3's mtimes — the recorded
     // lineage (v3 → v1) must keep it invisible
     Thread.sleep(1100)
-    Snapshots.commit(spark, s, Seq((1, 1.0), (9, 9.0), (10, 10.0))
-      .toDF("k", "v")) shouldBe 3L
-    val f2 = new java.io.File(s"$s/_versions/v00000002")
-    val f3 = new java.io.File(s"$s/_versions/v00000003")
+    commit(Seq((1, 1.0), (9, 9.0), (10, 10.0)).toDF("k", "v")) shouldBe 3L
+    val f2 = new java.io.File(s"$s/_root/_versions/v00000002")
+    val f3 = new java.io.File(s"$s/_root/_versions/v00000003")
     val betweenFlat = new java.sql.Timestamp(
       (f2.lastModified() + f3.lastModified()) / 2)
     cat.sql(s"SELECT count(*) AS n FROM s TIMESTAMP AS OF " +

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.Upsert
 
 class UpsertSpec extends SparkSpec {
@@ -201,8 +203,9 @@ class UpsertSpec extends SparkSpec {
     import graft.sources.Snapshots
     val path = tmpDir("upsertver") + "/t"
     Upsert.upsert(spark, path, target, Seq("k"))
-    // versioned from birth: data lives under hidden _versions, pointer set
-    Snapshots.isVersioned(spark, path) shouldBe true
+    // manifested from birth: data lives under hidden _versions, pointer set
+    graft.sources.PartitionSnapshots.isManifested(spark, path) shouldBe true
+    new java.io.File(s"$path/_versions").isDirectory shouldBe true
     Snapshots.currentVersion(spark, path) shouldBe Some(1L)
     // a plain parquet read sees no data files — the loud failure mode, not
     // silent stale data
@@ -222,11 +225,10 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("a legacy flat table is migrated to the versioned layout on its next merge") {
-    import graft.sources.Snapshots
     val path = tmpDir("upsertmig") + "/t"
     target.write.parquet(path) // pre-existing flat table, written out-of-band
     Upsert.upsert(spark, path, source, Seq("k"))
-    Snapshots.isVersioned(spark, path) shouldBe true
+    graft.sources.PartitionSnapshots.isManifested(spark, path) shouldBe true
     val out = Upsert.read(spark, path)
     out.count() shouldBe 3
     out.where($"k" === 2).select("v").collect()(0).getInt(0) shouldBe 99
@@ -295,4 +297,99 @@ class UpsertSpec extends SparkSpec {
     endVals.length shouldBe 1
     endVals(0) should (be >= 1 and be <= 50)
   }
+
+  /** Relative path → (bytes, mtime) of every parquet file under `dir`. */
+  private def parquetFiles(dir: String): Map[String, (Long, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val st = java.nio.file.Files.walk(root)
+    try st.iterator().asScala.map(_.toFile)
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .map(f => root.relativize(f.toPath).toString -> (f.length, f.lastModified))
+      .toMap
+    finally st.close()
+  }
+
+  test("a whole-table _versions table migrates with no data file opened or moved") {
+    import graft.sources.{PartitionSnapshots, Snapshots}
+    val path = tmpDir("upsertwt") + "/t"
+    // the layout a whole-table snapshot commit wrote: sealed slots and the
+    // pointer at the root, no partition-manifest marker
+    Seq((1, "x", 1)).toDF("k", "name", "v").write
+      .parquet(s"$path/_versions/v00000001")
+    target.write.parquet(s"$path/_versions/v00000002")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$path/_current"), "v00000002")
+    val rows = Upsert.read(spark, path).collect().map(_.toSeq).toSet
+    rows shouldBe target.collect().map(_.toSeq).toSet
+    val before = parquetFiles(path)
+    // the migration every commit starts with: one marker write, through
+    // a file system that records each file it opens
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.opencount.impl", classOf[OpenCountingFs].getName)
+    conf.setBoolean("fs.opencount.impl.disable.cache", true)
+    OpenCountingFs.opened.clear()
+    PartitionSnapshots.ensureManifested(spark, s"opencount://$path", Nil)
+    OpenCountingFs.opened.asScala.filter(_.endsWith(".parquet")) shouldBe empty
+    new java.io.File(s"$path/_partition_manifests").isFile shouldBe true
+    parquetFiles(path) shouldBe before
+    Upsert.read(spark, path).collect().map(_.toSeq).toSet shouldBe rows
+    // its next upsert seals a new slot; the legacy slots stay in place
+    Upsert.upsert(spark, path, source, Seq("k"))
+    Snapshots.currentVersion(spark, path) shouldBe Some(3L)
+    PartitionSnapshots.rootManifest(spark, path) shouldBe Some(Map("" -> "v00000003"))
+    before.foreach { case (f, st) => parquetFiles(path).get(f) shouldBe Some(st) }
+    Upsert.read(spark, path).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSet shouldBe
+      Set((1, "a", 10), (2, "b2", 99), (3, "c", 30))
+  }
+
+  test("a legacy flat unpartitioned table drops its root parquet at its first rewrite") {
+    import graft.sources.PartitionSnapshots
+    val path = tmpDir("upsertflat") + "/t"
+    target.write.parquet(path) // pre-existing flat table, written out-of-band
+    parquetFiles(path) should not be empty
+    // the first rewrite supersedes the whole table: no root parquet left
+    Upsert.upsert(spark, path, source, Seq("k"))
+    PartitionSnapshots.rootManifest(spark, path).get("") shouldBe "v00000001"
+    parquetFiles(path).keys.filterNot(_.contains("/")) shouldBe empty
+    Upsert.read(spark, path).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSet shouldBe
+      Set((1, "a", 10), (2, "b2", 99), (3, "c", 30))
+  }
+
+  test("a fast append onto a legacy flat table keeps its flat files while a root names them") {
+    import graft.sources.PartitionSnapshots
+    val path = tmpDir("upsertflatapp") + "/t"
+    target.write.parquet(path)
+    val flat = parquetFiles(path)
+    // a fast append names FLAT beside its new part and keeps the files
+    Upsert.upsert(spark, path, Seq((7, "g", 70)).toDF("k", "name", "v"),
+      Seq("k"), insertOnly = true)
+    PartitionSnapshots.rootManifest(spark, path).get("") shouldBe
+      "FLAT&v00000001"
+    flat.foreach { case (f, st) => parquetFiles(path).get(f) shouldBe Some(st) }
+    Upsert.read(spark, path).count() shouldBe 3
+    // a rewrite after it leaves that root readable, flat files included
+    Upsert.upsert(spark, path, source, Seq("k"))
+    PartitionSnapshots.rootManifest(spark, path).get("") shouldBe "v00000002"
+    PartitionSnapshots.read(spark, path, asOf = 1L).count() shouldBe 3
+    Upsert.read(spark, path).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSet shouldBe
+      Set((1, "a", 10), (2, "b2", 99), (3, "c", 30), (7, "g", 70))
+  }
+}
+
+/** The local file system under the `opencount:` scheme, recording every
+  * path it opens for reading. */
+class OpenCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("opencount:///")
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    OpenCountingFs.opened.add(f.toString)
+    super.open(f, bufferSize)
+  }
+}
+
+object OpenCountingFs {
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
