@@ -2953,10 +2953,11 @@ object Queries {
   }
 
   private val Q185Wh = "/tmp/graft_q185_wh"
+  // The oracle reads the warehouse at a fixed path: it is built once per
+  // JVM in a staged dir, then replaces whatever an earlier run (perhaps
+  // of an older build) left there, so no run serves a stale layout.
   private def ensureQ185Warehouse(s: SparkSession, dir: String): String = {
-    if (!new java.io.File(Q185Wh).exists()) {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_q185_stage").toString
+    stagedOnce("q185", dir) { stage =>
       val wh = s"$stage/wh"
       // one table per layout: flat, unpartitioned manifested, partitioned
       t(s, dir, "region").write.parquet(s"$wh/region") // flat
@@ -2976,15 +2977,17 @@ object Queries {
       Upsert.upsert(s, s"$wh/cust", delta, Seq("c_custkey"),
         partitionCols = Seq("c_mktsegment"))
       new graft.sources.Catalog(s, wh).writeCatalogManifest()
-      // atomic claim; a lost race just means another session staged it —
-      // but any OTHER rename failure (missing parent, permissions) must
-      // surface here, not later as an unrelated 'no catalog manifest'
-      val claimed = new java.io.File(wh).renameTo(new java.io.File(Q185Wh))
-      if (!claimed && !new java.io.File(Q185Wh).isDirectory)
+      // retire the old dir into the stage (deleted on exit), then
+      // publish; a lost race leaves another JVM's fresh build in place
+      val live = new java.io.File(Q185Wh)
+      if (live.exists() && !live.renameTo(new java.io.File(s"$stage/old")) &&
+          live.exists())
+        throw new IllegalStateException(
+          s"q185: could not retire the old warehouse $Q185Wh")
+      if (!new java.io.File(wh).renameTo(live) && !live.isDirectory)
         throw new IllegalStateException(
           s"q185: could not publish staged warehouse $wh -> $Q185Wh " +
-            "and no winner exists — check parent dir and permissions")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
+            "— check parent dir and permissions")
     }
     Q185Wh
   }

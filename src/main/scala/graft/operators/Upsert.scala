@@ -815,7 +815,6 @@ object Upsert {
     * a crashed writer's cold staging roots. Call under the lease. */
   private def prepareCommit(spark: SparkSession, path: String,
                             partitionCols: Seq[String]): Unit = {
-    recoverSwap(spark, path)
     graft.sources.PartitionSnapshots.ensureManifested(spark, path, partitionCols)
     graft.sources.PartitionSnapshots.cleanupStaging(spark, path)
   }
@@ -1017,13 +1016,4 @@ object Upsert {
     } finally releaseLock(spark, path, token)
   }
 
-  /** Recover from a crash between the two swap renames: if the table dir
-    * is gone but `path__old` survives, restore it. Called before every
-    * upsert; a fully-committed table is untouched. */
-  private def recoverSwap(spark: SparkSession, path: String): Unit = {
-    val p = new Path(path); val f = fs(spark, p)
-    val old = new Path(path + "__old")
-    if (!f.exists(p) && f.exists(old) && !f.rename(old, p))
-      throw new IllegalStateException(s"upsert recovery: rename $old -> $p failed")
-  }
 }

@@ -9,9 +9,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (reference: spark_jobs/gcs_bronze_to_silver.py:73-158 CREATE NAMESPACE /
   * CREATE TABLE IF NOT EXISTS, spark_jobs/gcs_silver_to_gold.py:150-322).
   *
-  * Tables are directories `<warehouse>/<name>`; partitioned tables use
-  * hive-style `col=value` subdirectories so Catalyst's
-  * PruneFileSourcePartitions prunes scans on partition predicates.
+  * Tables are directories `<warehouse>/<name>`. Every table the catalog
+  * creates or writes is a manifested [[PartitionSnapshots]] table,
+  * partitioned or not: created tables are born with a root commit that
+  * pins their schema, and a write statement into a plain parquet dir
+  * first migrates it with zero IO ([[manifested]]). Plain parquet dirs
+  * stay readable as they are; a read resolves the root manifest's
+  * pinned files, pruned by its partition and file stats.
   */
 final class Catalog(spark: SparkSession, warehouse: String) {
 
@@ -20,34 +24,14 @@ final class Catalog(spark: SparkSession, warehouse: String) {
 
   def tablePath(name: String): String = s"$warehouse/$name"
 
-  /** Schema sidecar — the parquet-warehouse stand-in for Iceberg's table
-    * metadata: a DDL-created table is readable (as empty, schema-typed)
-    * before its first data file, which parquet footer inference alone
-    * cannot provide (an empty write emits no footer). */
-  private def sidecarPath(name: String) =
-    new Path(tablePath(name), "_graft_schema.json")
-
-  private def readSidecar(name: String): Option[StructType] = {
-    val p = sidecarPath(name)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(DataType.fromJson(new String(
-        in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-        .asInstanceOf[StructType])
-      finally in.close()
-    }
-  }
-
   /** S12: existence probe (reference: gcs_silver_to_gold.py:100-109 DESCRIBE
-    * try/except) — a readable parquet footer or a DDL schema sidecar, not
-    * just a directory. */
+    * try/except) — a committed root manifest or a readable parquet
+    * footer, not just a directory. */
   def tableExists(name: String): Boolean = {
     val p = new Path(tablePath(name))
-    fs.exists(p) && (fs.exists(sidecarPath(name)) ||
-      // a fully-EMPTY manifested table (TRUNCATE, delete-everything) has
-      // no scannable rows but IS a table — without this, a truncated
-      // table could never be refilled through the routed SQL surface
+    fs.exists(p) && (
+      // an EMPTY manifested table (just created, TRUNCATEd,
+      // delete-everything) has no scannable rows but IS a table
       (PartitionSnapshots.isManifested(spark, tablePath(name)) &&
         PartitionSnapshots.currentRootVersion(spark, tablePath(name))
           .nonEmpty) ||
@@ -55,30 +39,63 @@ final class Catalog(spark: SparkSession, warehouse: String) {
        catch { case _: Exception => false }))
   }
 
-  /** S4: idempotent table creation from a first batch (CREATE IF NOT EXISTS). */
+  /** S4: idempotent table creation from a first batch (CREATE IF NOT
+    * EXISTS): the schema-pinning root commit, then one fast-append of
+    * `df`'s rows. */
   def createIfNotExists(name: String, df: DataFrame,
                         partitionCols: Seq[String] = Nil): Unit =
     if (!tableExists(name)) {
-      val w = df.write.mode(SaveMode.ErrorIfExists)
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(tablePath(name))
+      create(name, df.schema, partitionCols)
+      graft.operators.Upsert.append(spark, tablePath(name), df, partitionCols)
     }
 
-  /** Versioned (snapshot-pointer) tables resolve through
-    * [[graft.operators.Upsert.read]]; flat tables read directly. */
+  /** A new manifested table with no rows: one root commit pinning
+    * `schema`, under the table lease. */
+  private def create(name: String, schema: StructType,
+                     partitionCols: Seq[String]): Unit = {
+    val missing = partitionCols.filterNot(schema.fieldNames.contains)
+    require(missing.isEmpty, s"partition columns not in schema: $missing")
+    leased(tablePath(name))(
+      PartitionSnapshots.createRoot(spark, tablePath(name), schema,
+        partitionCols))
+  }
+
+  /** The table at `name`, migrated first when it is a plain parquet dir:
+    * under the table lease, the marker (keyed by the dir's own hive
+    * layout) and a baseline root manifest naming its files, which stay
+    * where they are. Every write statement runs this before its commit,
+    * so it has only the manifested route to take. Returns the path. */
+  private def manifested(name: String): String = {
+    val path = tablePath(name)
+    if (PartitionSnapshots.currentRootVersion(spark, path).isEmpty)
+      leased(path) {
+        PartitionSnapshots.ensureManifested(spark, path,
+          PartitionSnapshots.layoutCols(spark, path).getOrElse(Nil))
+        PartitionSnapshots.ensureRootManifest(spark, path)
+      }
+    path
+  }
+
+  private def leased[A](path: String)(body: => A): A = {
+    val token = graft.operators.Upsert.acquireLock(spark, path,
+      graft.operators.Upsert.DefaultLockTtlMs)
+    try body
+    finally graft.operators.Upsert.releaseLock(spark, path, token)
+  }
+
+  /** Read through [[graft.operators.Upsert.read]]: a manifested table
+    * resolves its root manifest, a plain parquet dir reads directly. */
   def read(name: String): DataFrame =
     try graft.operators.Upsert.read(spark, tablePath(name))
     catch {
-      // AnalysisException: flat dir with no footers; IllegalArgument:
-      // versioned dir with no committed snapshot yet
+      // AnalysisException: plain dir with no footers; IllegalArgument:
+      // manifested table with no rows
       case e @ (_: org.apache.spark.sql.AnalysisException |
                 _: IllegalArgumentException) =>
-        // no data rows: a DDL-created table (schema sidecar) and a
-        // TRUNCATEd manifested table (every partition EMPTY, schema
-        // pinned in the root) both read as schema-typed empty — a
+        // a created-but-empty or TRUNCATEd table (every partition EMPTY,
+        // schema pinned in the root) reads as schema-typed empty — a
         // legitimately empty table must never poison registerAll()
-        readSidecar(name)
-          .orElse(PartitionSnapshots.tableRowSchema(spark, tablePath(name)))
+        PartitionSnapshots.tableRowSchema(spark, tablePath(name))
           .map(schema => spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
           .getOrElse(throw e)
@@ -290,16 +307,12 @@ final class Catalog(spark: SparkSession, warehouse: String) {
   /** Route a parsed `INSERT INTO / INSERT OVERWRITE t [PARTITION (…)]
     * [(cols)] <query>` to the engine's commit machinery:
     *
-    *   INSERT INTO, manifested   → fast-append (O(new data), no
-    *                               existing file touched)
-    *   INSERT OVERWRITE, manif.  → [[PartitionSnapshots
-    *                               .overwritePartitions]] — DYNAMIC
-    *                               partition overwrite in ONE commit
-    *                               (Iceberg's INSERT OVERWRITE
-    *                               semantics, not Spark's static
-    *                               whole-table default)
-    *   flat tables               → plain parquet append / dynamic
-    *                               overwrite
+    *   INSERT INTO      → fast-append (O(new data), no existing file
+    *                      touched)
+    *   INSERT OVERWRITE → [[PartitionSnapshots.overwritePartitions]] —
+    *                      DYNAMIC partition overwrite in ONE commit
+    *                      (Iceberg's INSERT OVERWRITE semantics, not
+    *                      Spark's static whole-table default)
     *
     * Column semantics are SQL's: a column list maps the query's output
     * to the listed columns by POSITION (unlisted columns NULL); no list
@@ -315,7 +328,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
       s"INSERT: no table '$targetName' in warehouse $warehouse")
     require(!i.ifPartitionNotExists,
       "INSERT: IF NOT EXISTS partitions are not supported")
-    val path = tablePath(targetName)
+    val path = manifested(targetName)
     registerAll()
     val src = org.apache.spark.sql.graft.SqlInternals.ofRows(spark, i.query)
     val schema = rowSchema(targetName)
@@ -354,25 +367,9 @@ final class Catalog(spark: SparkSession, warehouse: String) {
             .getOrElse(lit(static(f.name)).cast(f.dataType).as(f.name))
         }: _*)
       }
-    val manifested = PartitionSnapshots.isManifested(spark, path)
-    val pcols = PartitionSnapshots.partitionCols(spark, path)
-    if (manifested) {
-      if (i.overwrite) PartitionSnapshots.overwritePartitions(spark, path, out)
-      else graft.operators.Upsert.append(spark, path, out, pcols)
-    } else {
-      // plain flat dir: parquet append / whole-dir overwrite. A
-      // hive-partitioned FLAT table refuses — a root-level write would
-      // corrupt its dir layout; manifested tables are the partition-
-      // aware surface.
-      val hasDirs = fs.exists(new Path(path)) &&
-        fs.listStatus(new Path(path)).exists(st =>
-          st.isDirectory && st.getPath.getName.contains("="))
-      require(!hasDirs,
-        s"INSERT: '$targetName' is a hive-partitioned FLAT dir — migrate " +
-          "it to a manifested table for partition-aware inserts")
-      out.write.mode(if (i.overwrite) SaveMode.Overwrite else SaveMode.Append)
-        .parquet(path)
-    }
+    if (i.overwrite) PartitionSnapshots.overwritePartitions(spark, path, out)
+    else graft.operators.Upsert.append(spark, path, out,
+      PartitionSnapshots.partitionCols(spark, path))
     read(targetName)
   }
 
@@ -425,10 +422,10 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     read(targetName)
   }
 
-  /** `CREATE TABLE t (cols…) [PARTITIONED BY (…)]` → the schema-sidecar
-    * DDL table ([[createTableDdl]]: readable as schema-typed empty
-    * before first data). Identity partitioning only; IF NOT EXISTS
-    * honored; an existing table without it refuses. */
+  /** `CREATE TABLE t (cols…) [PARTITIONED BY (…)]` → a manifested table
+    * born with a schema-pinning root commit (readable as schema-typed
+    * empty before first data). Identity partitioning only; IF NOT
+    * EXISTS honored; an existing table without it refuses. */
   private def runCreateTable(
       c: org.apache.spark.sql.catalyst.plans.logical.CreateTable)
       : DataFrame = {
@@ -444,23 +441,12 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     val fields = c.columns.map(cd =>
       org.apache.spark.sql.types.StructField(cd.name, cd.dataType,
         cd.nullable))
-    createTableDdl(name,
-      org.apache.spark.sql.types.StructType(fields.toArray).toDDL, pcols)
-    // a PARTITIONED table is born MANIFESTED — the engine's first-class
-    // layout: INSERTs fast-append, row-level SQL and maintenance all
-    // work from the first commit
-    if (pcols.nonEmpty && !tableExistsData(name))
-      PartitionSnapshots.ensureManifested(spark, tablePath(name), pcols)
+    if (!tableExists(name)) create(name, StructType(fields.toArray), pcols)
     read(name)
   }
 
-  /** Does the table hold any DATA yet (not just DDL metadata)? */
-  private def tableExistsData(name: String): Boolean =
-    try { graft.operators.Upsert.read(spark, tablePath(name)); true }
-    catch { case _: Exception => false }
-
   /** `CREATE TABLE t [PARTITIONED BY (…)] AS <query>` → table from the
-    * query's frame (identity partitioning only). */
+    * query's frame ([[createIfNotExists]]; identity partitioning only). */
   private def runCtas(
       c: org.apache.spark.sql.catalyst.plans.logical.CreateTableAsSelect)
       : DataFrame = {
@@ -475,14 +461,8 @@ final class Catalog(spark: SparkSession, warehouse: String) {
           s"got $other")
     }
     registerAll()
-    val df = org.apache.spark.sql.graft.SqlInternals.ofRows(spark, c.query)
-    if (pcols.nonEmpty) {
-      if (!tableExists(name)) {
-        createTableDdl(name, df.schema.toDDL, pcols)
-        PartitionSnapshots.ensureManifested(spark, tablePath(name), pcols)
-        graft.operators.Upsert.append(spark, tablePath(name), df, pcols)
-      }
-    } else createIfNotExists(name, df, pcols)
+    createIfNotExists(name,
+      org.apache.spark.sql.graft.SqlInternals.ofRows(spark, c.query), pcols)
     read(name)
   }
 
@@ -498,7 +478,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     spark.emptyDataFrame
   }
 
-  /** TRUNCATE on a manifested table is METADATA-ONLY: every partition's
+  /** TRUNCATE is METADATA-ONLY: every partition's
     * state flips to EMPTY in one root commit (readers pinned to prior
     * roots keep their data; retention reaps later) — never a file
     * deletion a time traveler would trip over. */
@@ -508,9 +488,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     val name = nameOfPlan(t.table, "TRUNCATE")
     require(tableExists(name),
       s"TRUNCATE: no table '$name' in warehouse $warehouse")
-    val path = tablePath(name)
-    require(PartitionSnapshots.isManifested(spark, path),
-      s"TRUNCATE: '$name' is not a manifested table")
+    val path = manifested(name)
     val schema = rowSchema(name)
     PartitionSnapshots.dropPartitions(spark, path, _ => true)
     // every partition is now EMPTY: the honest read is a schema-typed
@@ -694,9 +672,8 @@ final class Catalog(spark: SparkSession, warehouse: String) {
 
   /** `SHOW CREATE TABLE t` reconstructed from pinned metadata — the
     * statement that would recreate the table's shape through
-    * [[runCreateTable]] (columns + PARTITIONED BY; manifested layout is
-    * implied by PARTITIONED BY, the born-manifested rule). Metadata-only
-    * like DESCRIBE. */
+    * [[runCreateTable]] (columns + PARTITIONED BY). Metadata-only like
+    * DESCRIBE. */
   private def runShowCreate(
       s: org.apache.spark.sql.catalyst.plans.logical.ShowCreateTable)
       : DataFrame = {
@@ -901,6 +878,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
         "MERGE INTO: WHEN NOT MATCHED BY SOURCE supports UPDATE SET " +
           s"col = expr and DELETE; got: $other")
     }
+    val path = manifested(targetName)
     // canonicalize key case against the target's actual schema — Spark
     // resolution is case-insensitive, the upsert's key columns are not
     val targetCols = rowSchema(targetName).fieldNames
@@ -911,7 +889,6 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     // the USING side resolves like any SELECT: warehouse tables by name,
     // plus whatever temp/global-temp views the caller registered
     registerAll()
-    val path = tablePath(targetName)
     val pcols = PartitionSnapshots.partitionCols(spark, path)
     (m.matchedActions, m.notMatchedActions) match {
       // the reference's two shapes: one straight-line upsert commit
@@ -966,10 +943,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     * are NULL), values may reference both sides through the statement's
     * aliases and are cast to the target column's type. `WITH SCHEMA
     * EVOLUTION` admits new source columns; the union schema rides the
-    * same commit. Non-manifested (flat) targets keep update +
-    * insert support — both row sets land through ONE keyed upsert
-    * commit — but DELETE and BY SOURCE clauses, and key-rewriting
-    * assignments, need the manifest machinery and refuse loudly. */
+    * same commit. */
   private def runGeneralMerge(
       m: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable,
       targetName: String, keys: Seq[String], pcols: Seq[String]): Unit = {
@@ -994,7 +968,6 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     require(tAlias != sAlias,
       s"MERGE INTO: target and source resolve to the same alias " +
         s"'$tAlias' — alias one side (conditions must be attributable)")
-    val manifested = PartitionSnapshots.isManifested(spark, path)
     // dedup BEFORE classification, with the upsert's own deterministic
     // winner rule, so clause conditions see the same source row the
     // commit will apply
@@ -1086,10 +1059,6 @@ final class Catalog(spark: SparkSession, warehouse: String) {
           s"${missingPcols.sorted.mkString(", ")} — WITH SCHEMA EVOLUTION " +
           "never NULL-fills a partition column")
     }
-    require(manifested || !matchedActs.exists(_._3 == 'd'),
-      s"MERGE INTO: a DELETE clause requires a manifested target " +
-        s"('$targetName' has none — only a table written by an upsert " +
-        "with partitionCols carries manifests)")
     def condCol(c: Option[org.apache.spark.sql.catalyst.expressions.Expression])
         : org.apache.spark.sql.Column = c.map(e => expr(e.sql)).getOrElse(lit(true))
     // first-match-wins classification: one when-chain per row set
@@ -1140,25 +1109,14 @@ final class Catalog(spark: SparkSession, warehouse: String) {
           }
         v.as(s"__new_${f.name}")
       }
-    // key- or partition-rewriting assignments only work where the old
-    // row can be positionally retired (manifested tables); a flat-table
-    // keyed upsert would leave the old key's row behind
-    val rewritesKey = (matchedActs ++ bySourceActs).exists(_._4.exists(as =>
-      as.keys.exists(keys.contains)))
-    require(manifested || !rewritesKey,
-      "MERGE INTO: UPDATE SET on an ON key needs a manifested target")
     // MATCHED/INSERT legs only ever join/anti-join the target on the ON
     // keys, so the row-pos scan stats-prunes by the source's key values
     // (the merge path's own lookup discipline: an excluded partition
     // provably holds no match, and the insert anti-join is unaffected —
     // key pruning keeps every possibly-matching row, so "no match in
     // the pruned frame" still means "no match anywhere").
-    val tgt0 =
-      if (manifested)
-        PartitionSnapshots.readWithRowPosPruned(spark, path, keys.head,
-          src.select(org.apache.spark.sql.functions.col(keys.head)))
-      else read(targetName)
-    val tgt = tgt0.alias(tAlias)
+    val tgt = PartitionSnapshots.readWithRowPosPruned(spark, path, keys.head,
+      src.select(col(keys.head))).alias(tAlias)
     // The BY SOURCE leg is the one scan that needs rows BEYOND the
     // source keys — but only rows some clause condition could fire on.
     // When every clause carries a condition, compile their OR against
@@ -1176,19 +1134,18 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     }
     val joinCond = keys.map(k =>
       col(s"$sAlias.$k") === col(s"$tAlias.$k")).reduce(_ && _)
-    val posCols = if (manifested)
-      Seq(col(s"$tAlias._pos_path"), col(s"$tAlias._pos_ordinal")) else Nil
+    val posCols = Seq(col(s"$tAlias._pos_path"), col(s"$tAlias._pos_ordinal"))
     // materialize each classified set ONCE, before the commit: the act
     // tag, the row's file position, and every replacement value resolve
     // against the PRE-merge snapshot (localCheckpoint strips the alias
     // scoping, so everything alias-qualified computes before it)
     def materialize(df: DataFrame,
                     acts: Seq[(String, Option[org.apache.spark.sql.catalyst.expressions.Expression], Char, Assigns)],
-                    haveTarget: Boolean, withPos: Boolean): DataFrame =
+                    haveTarget: Boolean): DataFrame =
       classify(df, acts)
         .where(col("__graft_act") =!= "keep")
-        .select((if (withPos) posCols else Nil) ++
-          Seq(col("__graft_act")) ++ newVals(acts, haveTarget): _*)
+        .select(posCols ++ Seq(col("__graft_act")) ++
+          newVals(acts, haveTarget): _*)
         .localCheckpoint()
     // MATCHED + NOT-MATCHED legs classify in ONE pass over a single
     // src ⟕ tgt outer join: the old inner + anti pair scanned the pruned
@@ -1221,14 +1178,8 @@ final class Catalog(spark: SparkSession, warehouse: String) {
       }
     val bySource =
       if (bySourceActs.isEmpty) None
-      else {
-        require(manifested,
-          s"MERGE INTO: WHEN NOT MATCHED BY SOURCE needs a manifested " +
-            s"target ('$targetName' has none — only a table written by an " +
-            "upsert with partitionCols carries manifests)")
-        Some(materialize(tgtBySource.join(src, joinCond, "left_anti"),
-          bySourceActs, haveTarget = true, withPos = true))
-      }
+      else Some(materialize(tgtBySource.join(src, joinCond, "left_anti"),
+        bySourceActs, haveTarget = true))
     // the non-delete classified rows ARE the replacement/new rows
     def rows(df: DataFrame): DataFrame =
       df.where(!col("__graft_act").startsWith("d"))
@@ -1241,7 +1192,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     // re-entered Catalyst + AQE for a planned query over the same rows
     def flags(df: DataFrame): (Boolean, Boolean) = {
       val actIdx = df.schema.fieldIndex("__graft_act")
-      val posIdx = df.schema.fieldNames.indexOf("_pos_path")
+      val posIdx = df.schema.fieldIndex("_pos_path")
       val rdd = df.queryExecution.analyzed match {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
         case _ => df.queryExecution.toRdd
@@ -1250,7 +1201,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
         var doomed = false; var news = false
         while (it.hasNext && !(doomed && news)) {
           val r = it.next()
-          if (posIdx >= 0 && !r.isNullAt(posIdx)) doomed = true
+          if (!r.isNullAt(posIdx)) doomed = true
           if (r.getUTF8String(actIdx).toString.charAt(0) != 'd') news = true
         }
         Iterator.single((doomed, news))
@@ -1258,32 +1209,23 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     }
     val (hasDoomed, hasNew) = parts.map(flags)
       .fold((false, false))((a, b) => (a._1 || b._1, a._2 || b._2))
-    if (manifested) {
-      val evolvedSchema =
-        if (evolve) Some(StructType(outFields.toArray)) else None
-      if (hasDoomed) {
-        // insert-act rows carry NULL positions in the fused checkpoint —
-        // only genuinely matched (update/delete) rows retire a position
-        val doomed = parts
-          .map(_.where(col("_pos_path").isNotNull)
-            .select(col("_pos_path"), col("_pos_ordinal")))
-          .reduce(_ union _)
-        // ONE root swap retires every updated/deleted row's position and
-        // publishes every replacement/inserted row — the atomic commit
-        PartitionSnapshots.replaceRows(spark, path, doomed, newRows,
-          evolvedSchema = evolvedSchema)
-      } else if (hasNew)
-        // nothing matched: inserts alone, one fast-append commit
-        graft.operators.Upsert.upsert(spark, path, newRows, keys,
-          insertOnly = true, partitionCols = pcols,
-          evolveSchema = m.withSchemaEvolution)
-    } else {
-      // flat target: updates document-replace and inserts land
-      // through ONE keyed upsert commit (still a single visibility point)
-      if (hasNew)
-        graft.operators.Upsert.upsert(spark, path, newRows, keys,
-          partitionCols = pcols, evolveSchema = m.withSchemaEvolution)
-    }
+    if (hasDoomed) {
+      // insert-act rows carry NULL positions in the fused checkpoint —
+      // only genuinely matched (update/delete) rows retire a position
+      val doomed = parts
+        .map(_.where(col("_pos_path").isNotNull)
+          .select(col("_pos_path"), col("_pos_ordinal")))
+        .reduce(_ union _)
+      // ONE root swap retires every updated/deleted row's position and
+      // publishes every replacement/inserted row — the atomic commit
+      PartitionSnapshots.replaceRows(spark, path, doomed, newRows,
+        evolvedSchema =
+          if (evolve) Some(StructType(outFields.toArray)) else None)
+    } else if (hasNew)
+      // nothing matched: inserts alone, one fast-append commit
+      graft.operators.Upsert.upsert(spark, path, newRows, keys,
+        insertOnly = true, partitionCols = pcols,
+        evolveSchema = m.withSchemaEvolution)
   }
 
   /** Route a parsed `DELETE FROM t [WHERE …]` to the metadata-cheapest
@@ -1299,9 +1241,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     *     ([[PartitionSnapshots.readWithRowPos]]) and the commit is a
     *     POSITIONAL delete — still no data file rewritten.
     *
-    * Manifested tables only (the delete flavors live in the manifest
-    * machinery); a flat table fails loudly. Returns the post-delete
-    * table. */
+    * Returns the post-delete table. */
   private def runDeleteSql(
       d: org.apache.spark.sql.catalyst.plans.logical.DeleteFromTable)
       : DataFrame = {
@@ -1321,11 +1261,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     }
     require(tableExists(targetName),
       s"DELETE FROM: no table '$targetName' in warehouse $warehouse")
-    val path = tablePath(targetName)
-    require(PartitionSnapshots.isManifested(spark, path),
-      s"DELETE FROM: '$targetName' is not a manifested table — row-level " +
-        "deletes need the manifest machinery (write the table with an " +
-        "upsert with partitionCols)")
+    val path = manifested(targetName)
     val pcols = PartitionSnapshots.partitionCols(spark, path)
     val tSchema = rowSchema(targetName)
     def canon(c: String): Option[String] =
@@ -1521,8 +1457,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     * re-run's WHERE matching nothing). Assignments may reference other
     * columns (`SET v = v + 1`) and may move rows across partitions
     * (the appended rows land under their new dirs; hidden transforms
-    * re-derive). Manifested tables only. Returns the post-update
-    * table. */
+    * re-derive). Returns the post-update table. */
   private def runUpdateSql(
       u: org.apache.spark.sql.catalyst.plans.logical.UpdateTable)
       : DataFrame = {
@@ -1540,11 +1475,7 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     }
     require(tableExists(targetName),
       s"UPDATE: no table '$targetName' in warehouse $warehouse")
-    val path = tablePath(targetName)
-    require(PartitionSnapshots.isManifested(spark, path),
-      s"UPDATE: '$targetName' is not a manifested table — row-level " +
-        "updates need the manifest machinery (write the table with an " +
-        "upsert with partitionCols)")
+    val path = manifested(targetName)
     val pcols = PartitionSnapshots.partitionCols(spark, path)
     val tSchema = rowSchema(targetName)
     def canon(c: String): String =
@@ -1577,20 +1508,13 @@ final class Catalog(spark: SparkSession, warehouse: String) {
 
   /** S4 as SQL text: CREATE TABLE IF NOT EXISTS from a DDL column list
     * (mirrors the reference's Iceberg DDL, gcs_bronze_to_silver.py:73-158;
-    * `schemaDdl` is the same "col TYPE, ..." body). The schema lands in the
-    * sidecar so the table reads as schema-typed empty before first data —
-    * an empty parquet write carries no footer to infer from. */
+    * `schemaDdl` is the same "col TYPE, ..." body). The root commit pins
+    * the schema, so the table reads as schema-typed empty before first
+    * data. */
   def createTableDdl(name: String, schemaDdl: String,
                      partitionCols: Seq[String] = Nil): Unit =
-    if (!tableExists(name)) {
-      val schema = StructType.fromDDL(schemaDdl)
-      val missing = partitionCols.filterNot(schema.fieldNames.contains)
-      require(missing.isEmpty, s"partition columns not in schema: $missing")
-      fs.mkdirs(new Path(tablePath(name)))
-      val out = fs.create(sidecarPath(name), true)
-      try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    if (!tableExists(name))
+      create(name, StructType.fromDDL(schemaDdl), partitionCols)
 
   /** CREATE OR REPLACE VIEW `name` AS `selectSql` over warehouse tables
     * (reference: gold_to_bigquery.py:185-209 FLAT_VIEW_SQL). */

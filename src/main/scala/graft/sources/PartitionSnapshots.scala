@@ -244,17 +244,18 @@ object PartitionSnapshots {
     * columns against `cols`). Writing the marker IS the whole migration —
     * existing flat partitions (or a flat unpartitioned table's root files,
     * or a whole-table `_versions` table's slots) become the partitions'
-    * implicit v0 states, nothing moves. Call under the table's writer
+    * implicit v0 states, nothing moves. A plain dir must already be laid
+    * out by `cols`: marked otherwise, its `k=v` dirs (or its root files)
+    * would silently stop being read. Call under the table's writer
     * lease. */
   private[graft] def ensureManifested(spark: SparkSession, table: String,
                                       cols: Seq[String]): Unit = {
+    val have = layoutCols(spark, table).getOrElse(cols)
+    require(have == cols,
+      s"partition manifests at $table are keyed by $have, not $cols")
     val root = new Path(table)
     val f = fs(spark, root)
     f.mkdirs(root)
-    val have = if (isManifested(spark, table)) partitionCols(spark, table)
-      else cols
-    require(have == cols,
-      s"partition manifests at $table are keyed by $have, not $cols")
     val p = new Path(table, Marker)
     if (!f.exists(p)) {
       val out = f.create(p, true)
@@ -262,6 +263,44 @@ object PartitionSnapshots {
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
+  }
+
+  /** The partition columns `table` is keyed by: its marker's, or for a
+    * plain parquet dir the ones its hive layout names (Nil for flat
+    * files). None for an empty or absent dir, which any key fits. */
+  private[graft] def layoutCols(spark: SparkSession,
+                                table: String): Option[Seq[String]] = {
+    val root = new Path(table)
+    val f = fs(spark, root)
+    // read down the first `k=v` branch
+    def hiveCols(dir: Path): Seq[String] =
+      f.listStatus(dir).find(st => st.isDirectory &&
+          !hidden(st.getPath.getName) && st.getPath.getName.contains("="))
+        .map { st =>
+          val n = st.getPath.getName
+          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .unescapePathName(n.substring(0, n.indexOf('='))) +:
+            hiveCols(st.getPath)
+        }.getOrElse(Nil)
+    if (isManifested(spark, table)) Some(partitionCols(spark, table))
+    else if (!f.exists(root)) None
+    else Some(hiveCols(root)).filter(_.nonEmpty || hasDataFiles(spark, root))
+  }
+
+  /** Birth of an empty table: one root commit pinning `schema`, then the
+    * marker keying the table by `cols`. The root is published BEFORE the
+    * marker names the partition columns, so this one pin keeps their
+    * declared types (an empty table has no dir values to type them
+    * from); the next commit that pins a schema drops them, and dir
+    * values type them from then on. A table that has a root gets no new
+    * one. Call under the table's writer lease. */
+  private[graft] def createRoot(spark: SparkSession, table: String,
+                                schema: org.apache.spark.sql.types.StructType,
+                                cols: Seq[String]): Unit = {
+    if (currentRootVersion(spark, table).isEmpty)
+      publishRoot(spark, table, Map.empty, Map.empty,
+        graft.operators.Upsert.DefaultRetainVersions, Some(schema))
+    ensureManifested(spark, table, cols)
   }
 
   /** The directory of partition `rel` — the table root itself for the
@@ -1367,11 +1406,14 @@ object PartitionSnapshots {
       .filterNot(f => pinned.fieldNames.contains(f.name))
       .filterNot(f => hiddenNames.contains(f.name))
     val rels = rootManifest(spark, table).get.keys.toSeq
+    // a pinned partition column (a new table's first root, see
+    // [[createRoot]]) keeps its pinned type, as [[groupScan]] reads it
     val pcols = inferPcolFields(rels,
       partitionCols(spark, table).filterNot(hiddenNames.contains))
+      .map(f => pinned.find(_.name == f.name).getOrElse(f))
     Some(StructType(
-      pinned.fields ++ promoted.filterNot(f => pcols.exists(_.name == f.name))
-        ++ pcols))
+      pinned.fields.filterNot(f => pcols.exists(_.name == f.name)) ++
+        promoted.filterNot(f => pcols.exists(_.name == f.name)) ++ pcols))
   }
 
   /** Partition-column fields typed by METADATA-ONLY inference over the
@@ -1511,9 +1553,13 @@ object PartitionSnapshots {
         // every partition excluded (or empty): an empty frame with the
         // full row-pos shape, so the caller's plan stays well-typed
         import org.apache.spark.sql.types._
-        val pcolFields = partitionCols(spark, table).map(c =>
-          StructField(c, StringType))
-        val base = pinned.map(_.fields.toSeq).getOrElse(Nil) ++ pcolFields ++
+        val pcols = partitionCols(spark, table)
+        val pinnedFields = pinned.map(_.fields.toSeq).getOrElse(Nil)
+        // a new table's first root pins its partition columns' types
+        val pcolFields = pcols.map(c => pinnedFields.find(_.name == c)
+          .getOrElse(StructField(c, StringType)))
+        val base = pinnedFields.filterNot(f => pcols.contains(f.name)) ++
+          pcolFields ++
           Seq(StructField("_pos_path", StringType),
             StructField("_pos_ordinal", LongType))
         spark.createDataFrame(
@@ -3657,8 +3703,7 @@ object PartitionSnapshots {
     * ceil(bytes / targetFileBytes) files and committed as a NEW version
     * through the ordinary commit path (per-partition slot + pointer, one
     * new root manifest): readers pinned on the pre-compaction version
-    * keep their immutable files — no in-place swap window, unlike
-    * [[graft.operators.Compaction.compactDir]]'s flat-table path.
+    * keep their immutable files — no in-place swap window.
     * Row-preserving by construction (read → coalesce → rewrite of the
     * same rows; coalesce merges scan splits, no shuffle). Partitions at
     * or under `minFiles` are untouched — a steady-state daily run
@@ -3859,7 +3904,7 @@ object PartitionSnapshots {
       val base = rootManifest(spark, table)
         .getOrElse(scanStates(spark, table, cols))
       def parseRel(rel: String): Map[String, String] =
-        rel.split("/").toSeq.map { seg =>
+        rel.split("/").toSeq.filter(_.nonEmpty).map { seg =>
           val i = seg.indexOf('=')
           ExternalCatalogUtils.unescapePathName(seg.substring(0, i)) ->
             ExternalCatalogUtils.unescapePathName(seg.substring(i + 1))

@@ -119,22 +119,29 @@ class MergeSqlSpec extends SparkSpec {
       """MERGE INTO t USING msql_bad_src s ON t.k < s.k
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    // BY SOURCE clauses retire target rows positionally — a FLAT table
-    // has no manifest machinery for that and must refuse
-    an[IllegalArgumentException] should be thrownBy cat.sql(
-      """MERGE INTO t USING msql_bad_src s ON t.k = s.k
+    // BY SOURCE, matched DELETE and ON-key assignments work on a plain
+    // dir too: the statement migrates it to a manifested table first
+    def onPlain(name: String, merge: String): Set[(Int, Double)] = {
+      Seq((1, 1.0), (3, 3.0)).toDF("k", "v").write.parquet(s"$wh/$name")
+      cat.sql(merge.replace("<t>", name))
+      PartitionSnapshots.isManifested(spark, s"$wh/$name") shouldBe true
+      cat.read(name).collect().map(r => (r.getInt(0), r.getDouble(1))).toSet
+    }
+    onPlain("bys",
+      """MERGE INTO <t> t USING msql_bad_src s ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *
-        |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
-    // a matched DELETE clause likewise refuses on a flat table
-    an[IllegalArgumentException] should be thrownBy cat.sql(
-      """MERGE INTO t USING msql_bad_src s ON t.k = s.k
-        |WHEN MATCHED AND s.v < 0 THEN DELETE
-        |WHEN MATCHED THEN UPDATE SET *""".stripMargin)
-    // assigning an ON key would strand the old row on a flat table
-    an[IllegalArgumentException] should be thrownBy cat.sql(
-      """MERGE INTO t USING msql_bad_src s ON t.k = s.k
-        |WHEN MATCHED THEN UPDATE SET k = s.k + 100""".stripMargin)
+        |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin) shouldBe
+      Set((1, 2.0))
+    onPlain("del",
+      """MERGE INTO <t> t USING msql_bad_src s ON t.k = s.k
+        |WHEN MATCHED AND s.v > 0 THEN DELETE
+        |WHEN MATCHED THEN UPDATE SET *""".stripMargin) shouldBe
+      Set((3, 3.0))
+    onPlain("rekey",
+      """MERGE INTO <t> t USING msql_bad_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET k = s.k + 100""".stripMargin) shouldBe
+      Set((101, 1.0), (3, 3.0))
     // assignment to a column the target does not have
     an[IllegalArgumentException] should be thrownBy cat.sql(
       """MERGE INTO t USING msql_bad_src s ON t.k = s.k
@@ -325,11 +332,11 @@ class MergeSqlSpec extends SparkSpec {
     cat.sql("DELETE FROM t WHERE part = 'p2'").count() shouldBe 14L
     PartitionSnapshots.rootManifest(spark, rt).get
       .apply("part=p2") shouldBe "EMPTY"
-    // flat tables refuse loudly (every upsert table is manifested; a
-    // plain parquet dir is not)
-    Seq((1, 1.0)).toDF("k", "v").write.parquet(s"$wh/flat")
-    an[IllegalArgumentException] should be thrownBy
-      cat.sql("DELETE FROM flat WHERE k = 1")
+    // a plain parquet dir is migrated to a manifested table first
+    Seq((1, 1.0), (2, 2.0)).toDF("k", "v").write.parquet(s"$wh/flat")
+    cat.sql("DELETE FROM flat WHERE k = 1")
+      .collect().map(r => (r.getInt(0), r.getDouble(1))) shouldBe
+      Array((2, 2.0))
   }
 
   test("UPDATE statement: cross-column assignment, partition migration, loud refusals") {
@@ -363,13 +370,14 @@ class MergeSqlSpec extends SparkSpec {
     val head = PartitionSnapshots.currentRootVersion(spark, s"$wh/t").get
     cat.sql("UPDATE t SET v = 0.0 WHERE k = 999").count() shouldBe 10L
     PartitionSnapshots.currentRootVersion(spark, s"$wh/t").get shouldBe head
-    // unknown assigned column / non-manifested target refuse loudly
+    // an unknown assigned column refuses loudly
     an[IllegalArgumentException] should be thrownBy
       cat.sql("UPDATE t SET nope = 1 WHERE k = 1")
-    // (every upsert table is manifested; a plain parquet dir is not)
-    Seq((1, 1.0)).toDF("k", "v").write.parquet(s"$wh/flat")
-    an[IllegalArgumentException] should be thrownBy
-      cat.sql("UPDATE flat SET v = 2.0 WHERE k = 1")
+    // a plain parquet dir is migrated to a manifested table first
+    Seq((1, 1.0), (2, 2.0)).toDF("k", "v").write.parquet(s"$wh/flat")
+    cat.sql("UPDATE flat SET v = 5.0 WHERE k = 1")
+      .collect().map(r => (r.getInt(0), r.getDouble(1))).toSet shouldBe
+      Set((1, 5.0), (2, 2.0))
   }
 
   test("point UPDATE/DELETE: stats-pruned scan, ONE touched file, O(affected) commit") {

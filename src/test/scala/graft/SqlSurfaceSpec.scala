@@ -160,12 +160,86 @@ class SqlSurfaceSpec extends SparkSpec {
     cat.sql("CREATE TABLE c PARTITIONED BY (part) AS SELECT * FROM t")
     PartitionSnapshots.isManifested(spark, s"$wh/c") shouldBe true
     cat.read("c").count() shouldBe 1L
-    // hive-partitioned FLAT dirs refuse INSERT (a root write would
-    // corrupt the layout)
+    // a hive-partitioned plain dir is migrated keyed by its own layout:
+    // the INSERT lands as a new partition beside the old files
     Seq((1, "p1", 1.0)).toDF("k", "part", "v").write
       .partitionBy("part").parquet(s"$wh/flatp")
-    an[IllegalArgumentException] should be thrownBy
-      cat.sql("INSERT INTO flatp VALUES (2, 2.0, 'p2')")
+    cat.sql("INSERT INTO flatp VALUES (2, 2.0, 'p2')")
+      .collect().map(r => (r.getAs[Int]("k"), r.getAs[String]("part"),
+        r.getAs[Double]("v"))).toSet shouldBe
+      Set((1, "p1", 1.0), (2, "p2", 2.0))
+    PartitionSnapshots.partitionCols(spark, s"$wh/flatp") shouldBe Seq("part")
+  }
+
+  test("TRUNCATE an unpartitioned table: schema-typed empty, then refilled by INSERT") {
+    val wh = tmpDir("sqltrunc")
+    Upsert.upsert(spark, s"$wh/u", Seq((1, 1.0), (2, 2.0)).toDF("k", "v"),
+      Seq("k"))
+    val cat = new Catalog(spark, wh)
+    val empty = cat.sql("TRUNCATE TABLE u")
+    empty.count() shouldBe 0L
+    cat.read("u").count() shouldBe 0L
+    cat.read("u").schema.map(f => (f.name, f.dataType)) shouldBe
+      Seq(("k", IntegerType), ("v", DoubleType))
+    cat.sql("INSERT INTO u VALUES (3, 3.0)")
+      .collect().map(r => (r.getInt(0), r.getDouble(1))) shouldBe
+      Array((3, 3.0))
+  }
+
+  test("every Catalog write leaves a manifested table") {
+    val wh = tmpDir("sqlmanif")
+    val cat = new Catalog(spark, wh)
+    Seq((1, "a"), (2, "b")).toDF("id", "region").createOrReplaceTempView("mf_src")
+    // (table, statement, expected (id, region) rows); every table reads
+    // as (id INT, region STRING), the partition column last
+    val cases: Seq[(String, () => Any, Set[(Int, String)])] = Seq(
+      ("c_flat", () => cat.sql("CREATE TABLE c_flat (id INT, region STRING)"),
+        Set()),
+      ("c_part", () => cat.sql(
+        "CREATE TABLE c_part (id INT) PARTITIONED BY (region STRING)"), Set()),
+      ("ctas_flat", () => cat.sql(
+        "CREATE TABLE ctas_flat AS SELECT * FROM mf_src"),
+        Set((1, "a"), (2, "b"))),
+      ("ctas_part", () => cat.sql(
+        "CREATE TABLE ctas_part PARTITIONED BY (region) AS SELECT * FROM mf_src"),
+        Set((1, "a"), (2, "b"))),
+      ("api", () => cat.createIfNotExists("api",
+        Seq((1, "a")).toDF("id", "region"), Seq("region")), Set((1, "a"))),
+      ("ddl", () => cat.createTableDdl("ddl", "id INT, region STRING"), Set()),
+      ("merge_new", () => {
+        // the general MERGE leg over a created, still empty table
+        cat.sql("CREATE TABLE merge_new (id INT) PARTITIONED BY (region STRING)")
+        cat.sql("""MERGE INTO merge_new t USING mf_src s ON t.id = s.id
+                  |WHEN MATCHED AND t.region = 'a' THEN DELETE
+                  |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      }, Set((1, "a"), (2, "b"))),
+      ("ins_plain", () => {
+        Seq((1, "a")).toDF("id", "region").write.parquet(s"$wh/ins_plain")
+        cat.sql("INSERT INTO ins_plain VALUES (2, 'b')")
+      }, Set((1, "a"), (2, "b"))),
+      ("merge_plain", () => {
+        Seq((1, "x")).toDF("id", "region").write.parquet(s"$wh/merge_plain")
+        cat.sql("""MERGE INTO merge_plain t USING mf_src s ON t.id = s.id
+                  |WHEN MATCHED THEN UPDATE SET *
+                  |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      }, Set((1, "a"), (2, "b"))))
+    cases.foreach { case (name, run, rows) =>
+      withClue(s"$name: ") {
+        run()
+        val path = s"$wh/$name"
+        PartitionSnapshots.isManifested(spark, path) shouldBe true
+        PartitionSnapshots.currentRootVersion(spark, path) should not be empty
+        new java.io.File(s"$path/_graft_schema.json").exists() shouldBe false
+        val df = cat.read(name)
+        df.schema.map(f => (f.name, f.dataType)) shouldBe
+          Seq(("id", IntegerType), ("region", StringType))
+        df.collect().map(r => (r.getAs[Int]("id"), r.getAs[String]("region")))
+          .toSet shouldBe rows
+      }
+    }
+    // an empty partitioned table types its partition column as declared
+    cat.sql("CREATE TABLE c_day (id INT) PARTITIONED BY (day DATE)")
+      .schema("day").dataType shouldBe DateType
   }
 
   test("snapshot and flat tables: INSERT routes through their own commit flavors") {

@@ -67,16 +67,37 @@ class UpsertSpec extends SparkSpec {
         "part=p1")) shouldBe false
   }
 
-  test("upsert recovers a table stranded mid-swap") {
-    val path = tmpDir("upsertr") + "/t"
-    Upsert.upsert(spark, path, target, Seq("k"))
-    // simulate a pre-versioning crash between the two swap renames: table
-    // dir moved aside (recovery must restore it before merging)
-    new java.io.File(path).renameTo(new java.io.File(path + "__old")) shouldBe true
-    Upsert.upsert(spark, path, source, Seq("k"))
-    val out = Upsert.read(spark, path)
-    out.count() shouldBe 3 // recovery restored the 2 old rows, merge applied source
-    out.where($"k" === 1).count() shouldBe 1
+  test("a plain hive dir is never marked by columns its layout lacks") {
+    val base = tmpDir("upsertlayout")
+    def plain(name: String): String = {
+      Seq((1, "p1", 10), (2, "p2", 20)).toDF("k", "p", "v").write
+        .partitionBy("p").parquet(s"$base/$name")
+      s"$base/$name"
+    }
+    def rows(path: String) = Upsert.read(spark, path).collect()
+      .map(r => (r.getAs[Int]("k"), r.getAs[Any]("p").toString,
+        r.getAs[Int]("v"))).toSet
+    // unpartitioned upsert into a partitionBy("p") dir: marked as is,
+    // its p=… dirs would stop being read — refused, the dir untouched
+    val api = plain("api")
+    an[IllegalArgumentException] should be thrownBy Upsert.upsert(spark, api,
+      Seq((3, "p1", 30)).toDF("k", "p", "v"), Seq("k"))
+    rows(api) shouldBe Set((1, "p1", 10), (2, "p2", 20))
+    // and the reverse: a flat dir is not keyed by a column it lacks
+    val flat = s"$base/flat"
+    Seq((1, "p1", 10)).toDF("k", "p", "v").write.parquet(flat)
+    an[IllegalArgumentException] should be thrownBy Upsert.upsert(spark, flat,
+      Seq((3, "p1", 30)).toDF("k", "p", "v"), Seq("k"),
+      partitionCols = Seq("p"))
+    // SQL MERGE migrates the dir keyed by its own layout: no row lost
+    val viaSql = plain("viasql")
+    Seq((3, "p1", 30), (2, "p2", 21)).toDF("k", "p", "v")
+      .createOrReplaceTempView("upsert_layout_src")
+    new graft.sources.Catalog(spark, base).sql(
+      """MERGE INTO viasql t USING upsert_layout_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    rows(viaSql) shouldBe Set((1, "p1", 10), (2, "p2", 21), (3, "p1", 30))
   }
 
   test("merge picks a deterministic winner among duplicate source keys") {
