@@ -1,89 +1,59 @@
 package graft
 
-import graft.operators.Compaction
+import graft.operators.Upsert
+import graft.sources.PartitionSnapshots
 
-/** Small-file compaction: micro-batch litter collapses to few files with
-  * rows preserved exactly; partitioned tables compact per partition. */
+/** Small-file compaction through PartitionSnapshots.compact: micro-batch
+  * parts fold to one file per leaf with rows preserved exactly; partitioned
+  * tables compact per leaf. */
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def parquetFiles(dir: String): Array[String] =
-    new java.io.File(dir).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.getName)
+  private def rows(t: String): Set[Seq[Any]] =
+    Upsert.read(spark, t).collect().map(_.toSeq).toSet
+
+  /** Compacts `t`, checks every leaf in `leaves` folded its `batches`
+    * parts to one file with the rows unchanged, and that a rerun is a
+    * no-op (folded leaves sit under the minFiles floor). */
+  private def compactsTo(t: String, leaves: Set[String], batches: Int): Unit = {
+    val before = rows(t)
+    val report = PartitionSnapshots.compact(spark, t, minFiles = 2)
+    report.keySet shouldBe leaves
+    report.values.foreach { case (nb, na) =>
+      nb shouldBe batches
+      na shouldBe 1
+    }
+    rows(t) shouldBe before
+    PartitionSnapshots.compact(spark, t, minFiles = 2) shouldBe Map.empty
+  }
 
   test("compaction merges many small files and preserves rows exactly") {
     val t = tmpDir("compact") + "/t"
     // simulate 12 micro-batch appends
     for (b <- 0 until 12)
-      (b * 100 until (b + 1) * 100).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-        .coalesce(1).write.mode("append").parquet(t)
-    parquetFiles(t).length should be >= 12
-    val before = spark.read.parquet(t).collect().map(_.toSeq).toSet
-
-    val (nBefore, nAfter) = Compaction.compactDir(spark, t)
-    nBefore should be >= 12
-    nAfter shouldBe 1 // tiny data, one target file
-    parquetFiles(t).length shouldBe 1
-    spark.read.parquet(t).collect().map(_.toSeq).toSet shouldBe before
-
-    // under minFiles → no-op
-    Compaction.compactDir(spark, t) shouldBe ((1, 1))
-  }
-
-  test("compaction recovers a directory stranded mid-swap") {
-    val base = tmpDir("compactr")
-    val t = s"$base/t"
-    (1L to 50L).map(i => (i, s"v$i")).toDF("k", "v")
-      .coalesce(1).write.parquet(t)
-    val rows = spark.read.parquet(t).collect().map(_.toSeq).toSet
-    // simulate a crash between the two renames: table dir moved aside
-    new java.io.File(t).renameTo(new java.io.File(s"$base/.t__precompact")) shouldBe true
-    val (nb, na) = Compaction.compactDir(spark, t, minFiles = 0)
-    nb should be >= 1
-    spark.read.parquet(t).collect().map(_.toSeq).toSet shouldBe rows
-  }
-
-  test("compactTable recovers a table root stranded mid-swap") {
-    val base = tmpDir("compactrt")
-    val t = s"$base/t"
-    (1L to 30L).map(i => (i, s"v$i")).toDF("k", "v").coalesce(1).write.parquet(t)
-    val rows = spark.read.parquet(t).collect().map(_.toSeq).toSet
-    new java.io.File(t).renameTo(new java.io.File(s"$base/.t__precompact")) shouldBe true
-    // table-level entry point must self-heal before listing
-    Compaction.compactTable(spark, t, minFiles = 0)
-    spark.read.parquet(t).collect().map(_.toSeq).toSet shouldBe rows
+      Upsert.append(spark, t, (b * 100 until (b + 1) * 100)
+        .map(i => (i.toLong, s"v$i")).toDF("k", "v").coalesce(1), Nil)
+    compactsTo(t, Set(""), 12)
+    Upsert.read(spark, t).inputFiles.length shouldBe 1
   }
 
   test("multi-level partitioned tables compact their leaf directories") {
     val t = tmpDir("compactml") + "/t"
     for (b <- 0 until 5)
-      Seq((b.toLong, "p1", 10, b * 1.0), (b.toLong, "p2", 20, b * 2.0))
-        .toDF("k", "a", "b", "v")
-        .coalesce(1).write.mode("append").partitionBy("a", "b").parquet(t)
-    val before = spark.read.parquet(t).collect().map(_.toSeq).toSet
-    val report = Compaction.compactTable(spark, t, minFiles = 2)
-    report.keySet shouldBe Set("a=p1/b=10", "a=p2/b=20")
-    report.values.foreach { case (nb, na) => nb shouldBe 5; na shouldBe 1 }
-    spark.read.parquet(t).collect().map(_.toSeq).toSet shouldBe before
+      Upsert.append(spark, t,
+        Seq((b.toLong, "p1", 10, b * 1.0), (b.toLong, "p2", 20, b * 2.0))
+          .toDF("k", "a", "b", "v").coalesce(1), Seq("a", "b"))
+    compactsTo(t, Set("a=p1/b=10", "a=p2/b=20"), 5)
   }
 
   test("partitioned compaction rewrites each partition independently") {
     val t = tmpDir("compactp") + "/t"
     for (b <- 0 until 6)
-      Seq((b.toLong, "p1", b * 1.0), (b.toLong, "p2", b * 2.0))
-        .toDF("k", "part", "v")
-        .coalesce(1).write.mode("append").partitionBy("part").parquet(t)
-    val before = spark.read.parquet(t).collect().map(_.toSeq).toSet
-
-    val report = Compaction.compactTable(spark, t)
-    report.keySet shouldBe Set("part=p1", "part=p2")
-    report.values.foreach { case (nb, na) =>
-      nb should be >= 6
-      na shouldBe 1
-    }
-    // partition column survives (it lives in dir names, untouched)
-    val after = spark.read.parquet(t)
-    after.collect().map(_.toSeq).toSet shouldBe before
-    after.where($"part" === "p1").count() shouldBe 6
+      Upsert.append(spark, t,
+        Seq((b.toLong, "p1", b * 1.0), (b.toLong, "p2", b * 2.0))
+          .toDF("k", "part", "v").coalesce(1), Seq("part"))
+    compactsTo(t, Set("part=p1", "part=p2"), 6)
+    // the partition column survives (it lives in the leaf path)
+    Upsert.read(spark, t).where($"part" === "p1").count() shouldBe 6
   }
 }

@@ -341,41 +341,6 @@ class PartitionSnapshotsSpec extends SparkSpec {
     PartitionSnapshots.read(spark, path, asOf = 1L).count() shouldBe 81L
   }
 
-  test("compaction folds micro-batch parts to one file per leaf, rows exact") {
-    // (partition columns, batches, one batch's rows) → expected leaves
-    val cases = Seq(
-      (Seq.empty[String], 12, (b: Int) =>
-        (b * 100 until (b + 1) * 100).map(i => (i.toLong, "x", 0, s"v$i"))),
-      (Seq("a"), 6, (b: Int) =>
-        Seq((b.toLong, "p1", 0, "v"), (b.toLong, "p2", 0, "w"))),
-      (Seq("a", "b"), 5, (b: Int) =>
-        Seq((b.toLong, "p1", 10, "v"), (b.toLong, "p2", 20, "w"))))
-    val leaves = Seq(Set(""), Set("a=p1", "a=p2"),
-      Set("a=p1/b=10", "a=p2/b=20"))
-    cases.zip(leaves).foreach { case ((pcols, batches, rows), expected) =>
-      withClue(s"partitionCols=$pcols: ") {
-        val t = tmpDir("pmancompactall") + "/t"
-        val cols = Seq("k", "a", "b", "v")
-        // keep the partition columns and one data column per case
-        val keep = pcols ++ Seq("k", "v")
-        for (b <- 0 until batches)
-          Upsert.append(spark, t, rows(b).toDF(cols: _*)
-            .select(keep.map(org.apache.spark.sql.functions.col): _*)
-            .coalesce(1), pcols)
-        val before = Upsert.read(spark, t).collect().map(_.toSeq).toSet
-        val report = PartitionSnapshots.compact(spark, t, minFiles = 2)
-        report.keySet shouldBe expected
-        report.values.foreach { case (nb, na) =>
-          nb shouldBe batches
-          na shouldBe 1
-        }
-        Upsert.read(spark, t).collect().map(_.toSeq).toSet shouldBe before
-        // folded leaves sit under the minFiles floor: a no-op rerun
-        PartitionSnapshots.compact(spark, t, minFiles = 2) shouldBe Map.empty
-      }
-    }
-  }
-
   test("changelog diffs manifests first: same-state partitions are never read") {
     val path = tmpDir("pmanchanges") + "/t"
     Upsert.upsert(spark, path,
