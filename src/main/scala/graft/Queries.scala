@@ -2745,7 +2745,7 @@ object Queries {
   }
 
   /** FAST APPEND + insert-only MERGE as append ([[Upsert.append]] /
-    * [[graft.sources.PartitionSnapshots.commitAppendStaged]] — Iceberg's
+    * [[graft.sources.PartitionSnapshots.commitStaged]] — Iceberg's
     * fast-append at version-dir granularity): the seed is appended to
     * twice — a plain append of late arrivals, then an insert-only MERGE
     * whose overlap is skipped and whose new keys land as a new PART of

@@ -367,11 +367,12 @@ object Upsert {
     * the table with an unreadable empty directory). With `evolveSchema`,
     * new source columns are added to the table (see [[align]]); without it
     * a schema drift fails the merge loudly (the reference's fixed-DDL
-    * behavior). */
-  /** `audit` (write-audit-publish, partitioned tables only): runs against
+    * behavior).
+    *
+    * `audit` (write-audit-publish, partitioned tables only) runs against
     * the complete would-be post-merge snapshot BEFORE anything is
-    * published; must return an [[Expectations.check]]-style report with
-    * a `passed` column. Any failed rule aborts the commit with
+    * published and must return an [[Expectations.check]]-style report
+    * with a `passed` column. Any failed rule aborts the commit with
     * [[graft.sources.PartitionSnapshots.AuditFailedException]] and the
     * table stays byte-for-byte unchanged. */
   def upsert(spark: SparkSession, path: String, source: DataFrame,
@@ -561,20 +562,18 @@ object Upsert {
     // must be the caller's, partitioned or not
     prepareCommit(spark, path, partitionCols)
     // readers of a touched partition keep their pinned immutable version;
-    // touched partitions that lost every row publish an EMPTY version
-    // instead of a reader-visible delete
+    // each touched partition keeps only its file-scoped survivors, and one
+    // that lost every row publishes an EMPTY version instead of a
+    // reader-visible delete
     def commitMerged(df: DataFrame, touched: Set[String],
-                     survivors: Map[String, Seq[(String, Seq[String])]] =
+                     survivors: Map[String, PartitionSnapshots.Parts] =
                        Map.empty): Unit =
-      stageThen(spark, path, token, df, partitionCols) { staging =>
-        audit match {
-          case Some(a) => PartitionSnapshots.commitStagedAudited(spark, path,
-            staging, partitionCols, touched, retainVersions, a,
-            Some(df.schema))
-          case None => PartitionSnapshots.commitStaged(spark, path, staging,
-            partitionCols, touched, retainVersions, Some(df.schema), branch,
-            survivors)
-        }
+      PartitionSnapshots.stageThen(spark, path, token, df,
+          partitionCols) { staging =>
+        PartitionSnapshots.commitStaged(spark, path, Some(staging),
+          partitionCols, retainVersions,
+          touched.map(rel => rel -> survivors.getOrElse(rel, Nil)).toMap,
+          schema = Some(df.schema), branch = branch, audit = audit)
       }
     // hidden-partitioning: derive any transform dir columns the caller's
     // frame cannot know about — computed once here at write time, hidden
@@ -686,10 +685,11 @@ object Upsert {
       // it would against the full table. No emptiness probe: a batch of
       // only known keys stages nothing (or one empty file) and the
       // append commit skips it.
-      stageThen(spark, path, token, src.join(lookupTarget, keys, "left_anti"),
-          partitionCols) { staging =>
-        PartitionSnapshots.commitAppendStaged(spark, path, staging,
-          partitionCols, retainVersions, Some(src.schema), branch = branch)
+      PartitionSnapshots.stageThen(spark, path, token,
+          src.join(lookupTarget, keys, "left_anti"), partitionCols) { staging =>
+        PartitionSnapshots.commitStaged(spark, path, Some(staging),
+          partitionCols, retainVersions, schema = Some(src.schema),
+          branch = branch)
       }
       return
     }
@@ -817,24 +817,6 @@ object Upsert {
                             partitionCols: Seq[String]): Unit = {
     graft.sources.PartitionSnapshots.ensureManifested(spark, path, partitionCols)
     graft.sources.PartitionSnapshots.cleanupStaging(spark, path)
-  }
-
-  /** Stage `df` ONCE (hive layout, partition cols stripped into dirs;
-    * plain files for an unpartitioned table) under a hidden `_staging-*`
-    * root, re-check the lease, then hand the staged dirs to a
-    * PartitionSnapshots commit (slot seal + root manifest swap). The
-    * staged write lands beside the table's data, never over it, so
-    * `df`'s plan may read the table's current state. */
-  private def stageThen(spark: SparkSession, path: String, token: String,
-                        df: DataFrame, partitionCols: Seq[String])
-                       (commit: String => Unit): Unit = {
-    val staging = s"$path/_staging-${java.util.UUID.randomUUID()}"
-    packedWriter(spark, df, partitionCols, SaveMode.ErrorIfExists)
-      .partitionBy(partitionCols: _*).parquet(staging)
-    try {
-      assertHeld(spark, path, token) // last check before the commit
-      commit(staging)
-    } finally fs(spark, new Path(staging)).delete(new Path(staging), true)
   }
 
   /** APPEND `df` to the manifested table at `path` — O(new data), the
@@ -986,12 +968,13 @@ object Upsert {
         case None => dfT
       }
       // `out` is already conformed to the union schema when evolving
-      stageThen(spark, path, token, out, partitionCols) { staging =>
-        PartitionSnapshots.commitAppendStaged(spark, path, staging,
-          partitionCols, retainVersions, Some(out.schema),
-          txn.map { case (appId, v) =>
+      PartitionSnapshots.stageThen(spark, path, token, out,
+          partitionCols) { staging =>
+        PartitionSnapshots.commitStaged(spark, path, Some(staging),
+          partitionCols, retainVersions, schema = Some(out.schema),
+          branch = branch, props = txn.map { case (appId, v) =>
             Map(s"graft.txn.$appId" -> v.toString)
-          }.getOrElse(Map.empty), branch)
+          }.getOrElse(Map.empty))
       }
     } finally releaseLock(spark, path, token)
   }
@@ -1009,9 +992,11 @@ object Upsert {
     val token = acquireLock(spark, path, lockTtlMs)
     try {
       prepareCommit(spark, path, Nil)
-      stageThen(spark, path, token, df, Nil) { staging =>
-        graft.sources.PartitionSnapshots.commitStaged(spark, path, staging,
-          Nil, Set(""), retainVersions, Some(df.schema))
+      graft.sources.PartitionSnapshots.stageThen(spark, path, token, df,
+          Nil) { staging =>
+        graft.sources.PartitionSnapshots.commitStaged(spark, path,
+          Some(staging), Nil, retainVersions, Map("" -> Nil),
+          schema = Some(df.schema))
       }
     } finally releaseLock(spark, path, token)
   }

@@ -101,6 +101,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partition table writes a 2-line file, not a 30 000-line one —
   * Iceberg's manifest-list amortization, done as a parent chain.
   *
+  * Every data commit runs through ONE core, [[commitStaged]], and the
+  * writes differ in one thing only — what each touched partition CARRIES
+  * of its prior parts: an append all of them, a file-scoped merge its
+  * survivors, a rewrite, overwrite or drop nothing, a delete every part
+  * stamped with its new delete ref. A touched partition's new state is
+  * its carried parts plus the part freshly sealed for it.
+  *
   * Root manifests are retained and vacuumed like any snapshot chain
   * (`asOf` time travel across whole-table states), chain-aware: a kept
   * delta always keeps its parents down to a full manifest, and an old
@@ -289,11 +296,11 @@ object PartitionSnapshots {
 
   /** Birth of an empty table: one root commit pinning `schema`, then the
     * marker keying the table by `cols`. The root is published BEFORE the
-    * marker names the partition columns, so this one pin keeps their
-    * declared types (an empty table has no dir values to type them
-    * from); the next commit that pins a schema drops them, and dir
-    * values type them from then on. A table that has a root gets no new
-    * one. Call under the table's writer lease. */
+    * marker names the partition columns, so the pin keeps their declared
+    * types, and every later commit carries them forward ([[publishRoot]])
+    * — a `region STRING` partition reads as STRING even once its dirs
+    * hold `region=7`. A table that has a root gets no new one. Call
+    * under the table's writer lease. */
   private[graft] def createRoot(spark: SparkSession, table: String,
                                 schema: org.apache.spark.sql.types.StructType,
                                 cols: Seq[String]): Unit = {
@@ -433,96 +440,95 @@ object PartitionSnapshots {
     * rewrites only the intersecting files there (file-scoped survivors
     * hold the rest in place) and re-stages the rewritten rows under the
     * NEW spec — Iceberg's lazy migration, no big-bang rewrite ever.
-    * Single-writer: call under the table's lease (Upsert.withLock or an
-    * exclusive maintenance window). */
+    * Takes the table's writer lease, so no commit interleaves with the
+    * marker flip (a concurrent writer gets a ConcurrentWriteException). */
   def evolvePartitionSpec(spark: SparkSession, table: String,
-                          newCols: Seq[String]): Unit = {
-    require(isManifested(spark, table),
-      s"evolvePartitionSpec: $table is not a manifested table")
-    val have = partitionCols(spark, table)
-    require(have.nonEmpty,
-      s"evolvePartitionSpec: $table is unpartitioned — its root-level " +
-        "partition cannot parent partition dirs")
-    // each entry is an identity column OR a hidden transform —
-    // `bucket(N, col)` / `days(col)` / `truncate(W, col)` (Iceberg's
-    // hidden partitioning: the dir column is derived at write, hidden
-    // at read). The marker records the DIR column names.
-    val parsed = newCols.map(parseSpecEntry)
-    val dirCols = parsed.map(_._1)
-    val transforms = parsed.flatMap(_._2)
-    require(dirCols.nonEmpty && dirCols != have,
-      s"evolvePartitionSpec: new spec $dirCols must differ from $have")
-    require(dirCols.startsWith(have),
-      s"evolvePartitionSpec: supported evolution widens the spec — " +
-        s"$dirCols must extend $have (Iceberg-style additive partitioning)")
-    val cur = currentRootVersion(spark, table).getOrElse(
-      throw new IllegalStateException(
-        s"evolvePartitionSpec: $table has no committed root manifest"))
-    val pinned = pinnedSchema(spark, table, cur).getOrElse(
-      throw new IllegalStateException(
-        s"evolvePartitionSpec: $table's root slot pins no schema"))
-    val promoted = dirCols.filterNot(have.contains)
-    val promotedTransforms = transforms.filter(t => promoted.contains(t.name))
-    val fields = promoted.map { c =>
-      promotedTransforms.find(_.name == c) match {
-        case Some(t) =>
-          // a TRANSFORM promotes nothing: its SOURCE stays a data
-          // column; the dir column is derived and old files simply
-          // lack it (mixed-layout reads conform it as recorded here)
-          val src = pinned.find(_.name == t.source).getOrElse(
+                          newCols: Seq[String]): Unit =
+    leased(spark, table, "evolvePartitionSpec") { _ =>
+      val have = partitionCols(spark, table)
+      require(have.nonEmpty,
+        s"evolvePartitionSpec: $table is unpartitioned — its root-level " +
+          "partition cannot parent partition dirs")
+      // each entry is an identity column OR a hidden transform —
+      // `bucket(N, col)` / `days(col)` / `truncate(W, col)` (Iceberg's
+      // hidden partitioning: the dir column is derived at write, hidden
+      // at read). The marker records the DIR column names.
+      val parsed = newCols.map(parseSpecEntry)
+      val dirCols = parsed.map(_._1)
+      val transforms = parsed.flatMap(_._2)
+      require(dirCols.nonEmpty && dirCols != have,
+        s"evolvePartitionSpec: new spec $dirCols must differ from $have")
+      require(dirCols.startsWith(have),
+        s"evolvePartitionSpec: supported evolution widens the spec — " +
+          s"$dirCols must extend $have (Iceberg-style additive partitioning)")
+      val cur = currentRootVersion(spark, table).getOrElse(
+        throw new IllegalStateException(
+          s"evolvePartitionSpec: $table has no committed root manifest"))
+      val pinned = pinnedSchema(spark, table, cur).getOrElse(
+        throw new IllegalStateException(
+          s"evolvePartitionSpec: $table's root slot pins no schema"))
+      val promoted = dirCols.filterNot(have.contains)
+      val promotedTransforms = transforms.filter(t => promoted.contains(t.name))
+      val fields = promoted.map { c =>
+        promotedTransforms.find(_.name == c) match {
+          case Some(t) =>
+            // a TRANSFORM promotes nothing: its SOURCE stays a data
+            // column; the dir column is derived and old files simply
+            // lack it (mixed-layout reads conform it as recorded here)
+            val src = pinned.find(_.name == t.source).getOrElse(
+              throw new IllegalArgumentException(
+                s"evolvePartitionSpec: ${t.kind} source '${t.source}' must " +
+                  s"be a data column of the pinned schema " +
+                  s"(${pinned.fieldNames.toSeq})"))
+            if (t.kind == "days")
+              require(src.dataType ==
+                  org.apache.spark.sql.types.TimestampType ||
+                src.dataType == org.apache.spark.sql.types.TimestampNTZType ||
+                src.dataType == org.apache.spark.sql.types.DateType ||
+                src.dataType == org.apache.spark.sql.types.StringType,
+                s"days(${t.source}): source must be date/timestamp-like, " +
+                  s"got ${src.dataType}")
+            require(!pinned.fieldNames.contains(t.name) &&
+              !have.contains(t.name),
+              s"evolvePartitionSpec: derived name '${t.name}' collides " +
+                "with an existing column")
+            org.apache.spark.sql.types.StructField(t.name,
+              t.dirType(src.dataType))
+          case None => pinned.find(_.name == c).getOrElse(
             throw new IllegalArgumentException(
-              s"evolvePartitionSpec: ${t.kind} source '${t.source}' must " +
-                s"be a data column of the pinned schema " +
-                s"(${pinned.fieldNames.toSeq})"))
-          if (t.kind == "days")
-            require(src.dataType ==
-                org.apache.spark.sql.types.TimestampType ||
-              src.dataType == org.apache.spark.sql.types.TimestampNTZType ||
-              src.dataType == org.apache.spark.sql.types.DateType ||
-              src.dataType == org.apache.spark.sql.types.StringType,
-              s"days(${t.source}): source must be date/timestamp-like, " +
-                s"got ${src.dataType}")
-          require(!pinned.fieldNames.contains(t.name) &&
-            !have.contains(t.name),
-            s"evolvePartitionSpec: derived name '${t.name}' collides " +
-              "with an existing column")
-          org.apache.spark.sql.types.StructField(t.name,
-            t.dirType(src.dataType))
-        case None => pinned.find(_.name == c).getOrElse(
-          throw new IllegalArgumentException(
-            s"evolvePartitionSpec: promoted column '$c' must be a data " +
-              s"column of the pinned schema (${pinned.fieldNames.toSeq})"))
+              s"evolvePartitionSpec: promoted column '$c' must be a data " +
+                s"column of the pinned schema (${pinned.fieldNames.toSeq})"))
+        }
       }
+      val f = fs(spark, new Path(table))
+      // record transforms FIRST (a crash after this write but before the
+      // marker flip leaves transforms no dir column references: harmless),
+      // then the evolution record, then flip the marker — the single
+      // visibility point for writers
+      if (promotedTransforms.nonEmpty) {
+        val tp = new Path(table, TransformsFile)
+        val priorT = if (f.exists(tp)) readText(spark, tp) else ""
+        val to = f.create(tp, true)
+        try to.write(
+          (priorT + promotedTransforms.map(_.render).mkString("\n") + "\n")
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally to.close()
+      }
+      // append the evolution record (crash between the two writes leaves a
+      // record matching the still-current marker: harmless), then flip
+      val hist = new Path(table, SpecsFile)
+      val prior = if (f.exists(hist)) readText(spark, hist) else ""
+      val line = s"${dirCols.mkString(",")}\t" +
+        org.apache.spark.sql.types.StructType(fields).json
+      val out = f.create(hist, true)
+      try out.write((prior + line + "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      val mo = f.create(new Path(table, Marker), true)
+      try mo.write(dirCols.mkString(",")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally mo.close()
     }
-    val f = fs(spark, new Path(table))
-    // record transforms FIRST (a crash after this write but before the
-    // marker flip leaves transforms no dir column references: harmless),
-    // then the evolution record, then flip the marker — the single
-    // visibility point for writers
-    if (promotedTransforms.nonEmpty) {
-      val tp = new Path(table, TransformsFile)
-      val priorT = if (f.exists(tp)) readText(spark, tp) else ""
-      val to = f.create(tp, true)
-      try to.write(
-        (priorT + promotedTransforms.map(_.render).mkString("\n") + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally to.close()
-    }
-    // append the evolution record (crash between the two writes leaves a
-    // record matching the still-current marker: harmless), then flip
-    val hist = new Path(table, SpecsFile)
-    val prior = if (f.exists(hist)) readText(spark, hist) else ""
-    val line = s"${dirCols.mkString(",")}\t" +
-      org.apache.spark.sql.types.StructType(fields).json
-    val out = f.create(hist, true)
-    try out.write((prior + line + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val mo = f.create(new Path(table, Marker), true)
-    try mo.write(dirCols.mkString(",")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally mo.close()
-  }
 
   /** Columns ever PROMOTED into the partition spec by an evolution, with
     * the data types recorded at evolution time — what a reader needs to
@@ -1406,7 +1412,7 @@ object PartitionSnapshots {
       .filterNot(f => pinned.fieldNames.contains(f.name))
       .filterNot(f => hiddenNames.contains(f.name))
     val rels = rootManifest(spark, table).get.keys.toSeq
-    // a pinned partition column (a new table's first root, see
+    // a pinned partition column (a DDL-declared type, see
     // [[createRoot]]) keeps its pinned type, as [[groupScan]] reads it
     val pcols = inferPcolFields(rels,
       partitionCols(spark, table).filterNot(hiddenNames.contains))
@@ -1555,7 +1561,7 @@ object PartitionSnapshots {
         import org.apache.spark.sql.types._
         val pcols = partitionCols(spark, table)
         val pinnedFields = pinned.map(_.fields.toSeq).getOrElse(Nil)
-        // a new table's first root pins its partition columns' types
+        // a DDL-created table pins its partition columns' types
         val pcolFields = pcols.map(c => pinnedFields.find(_.name == c)
           .getOrElse(StructField(c, StringType)))
         val base = pinnedFields.filterNot(f => pcols.contains(f.name)) ++
@@ -1910,12 +1916,8 @@ object PartitionSnapshots {
     * touched, zero data files read or written). */
   private def schemaDdl(spark: SparkSession, table: String, what: String)
                        (next: org.apache.spark.sql.types.StructType =>
-                              org.apache.spark.sql.types.StructType): Unit = {
-    require(isManifested(spark, table),
-      s"$what: $table is not a manifested table")
-    val token = graft.operators.Upsert.acquireLock(spark, table,
-      graft.operators.Upsert.DefaultLockTtlMs)
-    try {
+                              org.apache.spark.sql.types.StructType): Unit =
+    leased(spark, table, what) { _ =>
       val cur = currentRootVersion(spark, table).getOrElse(
         throw new IllegalStateException(
           s"$what: $table has no committed root manifest"))
@@ -1925,8 +1927,7 @@ object PartitionSnapshots {
       val entries = resolveManifest(spark, s"$table/$RootDir", cur)
       publishRoot(spark, table, entries, Map.empty,
         graft.operators.Upsert.DefaultRetainVersions, Some(next(pinned)))
-    } finally graft.operators.Upsert.releaseLock(spark, table, token)
-  }
+    }
 
   /** NON-ADDITIVE SCHEMA EVOLUTION, part 1: RENAME (Iceberg's rename,
     * without field ids). One metadata-only commit pins the schema with
@@ -1993,17 +1994,10 @@ object PartitionSnapshots {
   def overwritePartitions(spark: SparkSession, table: String, df: DataFrame,
                           retainVersions: Int =
                             graft.operators.Upsert.DefaultRetainVersions)
-      : Unit = {
-    require(isManifested(spark, table),
-      s"overwritePartitions: $table is not a manifested table")
-    val cols = partitionCols(spark, table)
-    val token = graft.operators.Upsert.acquireLock(spark, table,
-      graft.operators.Upsert.DefaultLockTtlMs)
-    try {
+      : Unit =
+    leased(spark, table, "overwritePartitions") { lease =>
+      val cols = partitionCols(spark, table)
       ensureManifested(spark, table, cols) // marks a whole-table _versions table
-      cleanupStaging(spark, table)
-      val base = rootManifest(spark, table)
-        .getOrElse(scanStates(spark, table, cols))
       val out = applyTransforms(spark, table, df)
       // the schema this commit pins follows the Upsert.align contract:
       // additive UNION with the current pinned schema (a df carrying a
@@ -2027,43 +2021,13 @@ object PartitionSnapshots {
             org.apache.spark.sql.types.StructType(prior.fields ++
               out.schema.fields.filterNot(f => pf.contains(f.name)))
         }
-      val staging = s"$table/_staging-${java.util.UUID.randomUUID()}"
-      graft.operators.Upsert.packedWriter(spark, out, cols,
-          org.apache.spark.sql.SaveMode.ErrorIfExists)
-        .partitionBy(cols: _*).parquet(staging)
-      try {
-        graft.operators.Upsert.assertHeld(spark, table, token)
-        val staged = partitionDirs(spark, staging, cols.size)
-        if (staged.isEmpty) return
-        val sealedSlots = depthWaves(staged).flatMap { g =>
-          inParallel(g)(rel =>
-            rel -> sealSlot(spark, relPath(table, rel), new Path(relPath(staging, rel))))
-        }
-        val sealedDirs = sealedSlots.map { case (rel, v) =>
-          rel -> Snapshots.versionPath(relPath(table, rel), v)
-        }
-        val folded = harvestAndSidecar(spark, sealedDirs.map(_._2))
-        // REPLACE: the staged slot is the partition's whole new state
-        val touched = sealedSlots.map { case (rel, v) =>
-          rel -> fmtParts(Seq((f"v$v%08d", Seq.empty[String])))
-        }.toMap
-        val touchedStats = sealedDirs.map { case (rel, dir) =>
-          rel -> encodeStats(folded(dir))
-        }.toMap
-        publishRoot(spark, table, base ++ touched, touched,
-          math.max(1, retainVersions), Some(pinSchema), touchedStats)
-        inParallel(sealedSlots) { case (rel, v) =>
-          Snapshots.publish(spark, relPath(table, rel), v)
-        }
-        val prot = referencedVersions(spark, table)
-        inParallel(sealedSlots) { case (rel, _) =>
-          finishPartitionCommit(spark, table, rel,
-            math.max(1, retainVersions), prot)
-        }
-      } finally fs(spark, new Path(staging)).delete(new Path(staging), true)
+      // REPLACE: each staged partition's fresh part is its whole new state
+      lease.stageThen(out, cols) { staging =>
+        commitStaged(spark, table, Some(staging), cols, retainVersions,
+          replaceStaged = true, schema = Some(pinSchema))
+      }
       vacuumDeletes(spark, table)
-    } finally graft.operators.Upsert.releaseLock(spark, table, token)
-  }
+    }
 
   /** NON-ADDITIVE SCHEMA EVOLUTION, part 2: DROP. One metadata-only
     * commit pins the schema without the field — old files keep the
@@ -2305,8 +2269,9 @@ object PartitionSnapshots {
     // DATA columns only: partition columns keep their hive path-value
     // typing (a date=2024-01-01 dir reads as DATE however the writer's
     // in-memory column was typed), which Spark supplies for columns the
-    // user schema omits. Schemas passed here usually derive from a
-    // FRAME, which strips what only the table metadata knows — rename
+    // user schema omits — save one the parent pins, a type the table was
+    // declared with ([[createRoot]]), which stays pinned as declared.
+    // Schemas passed here usually derive from a FRAME, which strips what only the table metadata knows — rename
     // ALIASES (a coalesce output carries no field metadata) and WIDENED
     // types (a narrow-typed source would silently re-narrow the pin) —
     // so both inherit from the parent's pinned schema by name.
@@ -2344,8 +2309,9 @@ object PartitionSnapshots {
         })
     }
     schema.map { st0 =>
-      val st = org.apache.spark.sql.types.StructType(
-        st0.fields.filterNot(fld => pcols.contains(fld.name)))
+      val st = org.apache.spark.sql.types.StructType(st0.fields.flatMap(fld =>
+        if (!pcols.contains(fld.name)) Some(fld)
+        else parentPinned.flatMap(_.find(_.name == fld.name))))
       // TOMBSTONE DISCIPLINE (the one choke point every schema-carrying
       // commit passes): a live incoming field whose name — or any of
       // whose parent-recorded aliases — matches a DROPPED field's
@@ -2463,254 +2429,233 @@ object PartitionSnapshots {
       .foreach(st => f.delete(st.getPath, true))
   }
 
-  /** Rename complete data at `from` into `pt`'s next version slot and
-    * SEAL it (_SUCCESS — committed, but the partition pointer is not yet
-    * swapped); returns the claimed version. The rename is whole-dir
-    * atomic, so every sealed (and even every unsealed) slot holds
-    * complete data. */
-  private def sealSlot(spark: SparkSession, pt: String, from: Path): Long = {
+  /** Rename complete data at `from` into `pt`'s next free version slot
+    * WITHOUT committing it (no _SUCCESS, pointer untouched); returns the
+    * claimed version. The rename is whole-dir atomic, so every claimed
+    * slot holds complete data. A write-audit-publish claim (`wap`) carries
+    * [[WapMarker]] in from staging (placed BEFORE this rename, so no crash
+    * window exists in which the slot looks like an ordinary interrupted
+    * commit), and first reaps the cold marked slots a crashed auditor
+    * abandoned — the one moment a writer provably owns the partition and
+    * lists its versions anyway. */
+  private def claimSlot(spark: SparkSession, pt: String, from: Path,
+                        wap: Boolean): Long = {
     val f = fs(spark, from)
     f.mkdirs(new Path(pt, VersionsDir))
+    if (wap)
+      Snapshots.allVersionDirs(spark, pt)
+        .filter(isPendingAudit(spark, pt, _))
+        .map(v => new Path(Snapshots.versionPath(pt, v)))
+        .filter(p => System.currentTimeMillis() -
+          f.getFileStatus(p).getModificationTime > 15 * 60 * 1000L)
+        .foreach(p => f.delete(p, true))
     var attempt = 0
     while (attempt < 50) {
       val next = Snapshots.allVersionDirs(spark, pt).lastOption.getOrElse(0L) + 1
-      val slot = new Path(Snapshots.versionPath(pt, next))
-      if (CommitIo.current.claimSlot(f, from, slot)) {
-        f.create(new Path(slot, "_SUCCESS"), true).close()
-        return next
-      }
+      if (CommitIo.current.claimSlot(f, from,
+          new Path(Snapshots.versionPath(pt, next)))) return next
       attempt += 1
     }
     throw new IllegalStateException(
       s"partition commit: could not claim a version slot at $pt")
   }
 
-  /** Commit a staged `partitionBy` write. Ordering makes the ROOT pointer
-    * swap the single commit point, so no crash can leave the root
-    * manifest permanently behind a partition pointer (the next commit
-    * would fold that stale base forward forever, and retention could then
-    * vacuum a version the live root still names):
-    *
-    *  1. every staged partition dir (and an empty dir per `emptied`
-    *     partition — touched, zero surviving rows — the reader-safe
-    *     replacement for deleting it) is renamed into that partition's
-    *     next version slot and SEALED, pointers untouched;
-    *  2. ONE new root manifest folds the touched partitions' new states
-    *     into the previous manifest (seeded by a directory walk for the
-    *     table's first commit) and the root pointer swap makes the whole
-    *     commit visible atomically — a crash BEFORE this is a clean
-    *     abort: sealed-but-unrooted slots are never folded into later
-    *     manifests and age out under retention;
-    *  3. per-partition pointers swap — a read CACHE for partition-level
-    *     readers; a crash between 2 and 3 leaves a pointer serving the
-    *     previous complete version (bounded staleness at partition
-    *     granularity, the contract those readers already have) until the
-    *     partition's next commit heals it, while table-level readers are
-    *     already on the new root;
-    *  4. hygiene: retention per touched partition, and the implicit-v0
-    *     flat files of a migrated table are removed once `retain` real
-    *     versions exist (v0 ages out like any other snapshot). */
-  private[graft] def commitStaged(spark: SparkSession, table: String,
-                                  stagingRoot: String, cols: Seq[String],
-                                  emptied: Set[String],
-                                  retainVersions: Int,
-                                  schema: Option[org.apache.spark.sql.types.StructType]
-                                    = None,
-                                  branch: Option[String] = None,
-                                  survivors: Map[String, Seq[(String, Seq[String])]]
-                                    = Map.empty): Unit = {
-    val f = fs(spark, new Path(table))
-    val retain = math.max(1, retainVersions)
-    val staged = partitionDirs(spark, stagingRoot, cols.size)
-    // base BEFORE sealing: on a first commit, scanStates' fallback must
-    // see the pre-commit states, not the slots this commit is creating.
-    // A branch commit folds forward from the BRANCH head's manifest.
-    val base = branch match {
-      case Some(n) => rootManifest(spark, table,
-        branchRef(spark, table, n).getOrElse(throw new IllegalArgumentException(
-          s"commit to unknown branch '$n' at $table"))._1).get
-      case None => rootManifest(spark, table)
-        .getOrElse(scanStates(spark, table, cols))
-    }
-    def kept(rel: String) = survivors.getOrElse(rel, Nil)
-    val blanked = (emptied -- staged.toSet).toSeq
-    // a touched partition with zero NEW rows but surviving file-scoped
-    // parts keeps exactly the survivors — no EMPTY slot is sealed for it
-    val (blankedKeep, blankedEmpty) = blanked.partition(kept(_).nonEmpty)
-    blankedEmpty.foreach(rel => f.mkdirs(new Path(relPath(stagingRoot, rel))))
-    // seal on the bounded pool, DEEPEST depth groups first: a retired-
-    // spec staged dir can parent a new-spec staged dir, and a parent
-    // rename must never swallow a child (per-depth waves keep the rule)
-    val sealedSlots = depthWaves((staged ++ blankedEmpty).toSeq)
-      .flatMap { g =>
-        inParallel(g)(rel =>
-          rel -> sealSlot(spark, relPath(table, rel), new Path(relPath(stagingRoot, rel))))
-      }
-    // a partition's new state: its SURVIVING parts (file-scoped MERGE —
-    // untouched files of prior versions, kept by token with their
-    // pending delete refs) plus the freshly sealed part. A staged rel
-    // the caller did NOT list as touched (`emptied`) was never read —
-    // rows MIGRATED into it (a key moving partitions, or lazy spec
-    // migration out of a retired layout): its prior parts must survive,
-    // so the new part APPENDS (delete refs carried — the new rows are
-    // sequenced after them and hold none).
-    def priorOf(rel: String): Seq[(String, Seq[String])] =
-      if (emptied.contains(rel)) kept(rel)
-      else base.get(rel).map(parseParts(_).filterNot(_._1 == Empty))
-        .getOrElse(Nil)
-    val touched =
-      staged.map { rel =>
-        val v = f"v${sealedSlots.toMap.apply(rel)}%08d"
-        rel -> fmtParts(priorOf(rel) :+ ((v, Seq.empty[String])))
-      }.toMap ++
-      blankedEmpty.map(_ -> Empty) ++
-      blankedKeep.map(rel => rel -> fmtParts(kept(rel)))
-    // footer harvest of the sealed slots (touched partitions only, zero
-    // Spark jobs) — the manifest's record_count / bounds fields, plus
-    // the per-file sidecar ([[writeFileStats]], the file-level manifest).
-    // Flat file-level waves: the seed commit of a big table harvests
-    // every file it wrote, and per-dir loops would serialize on skew.
-    val sealedDirs = sealedSlots.collect {
-      case (rel, v) if !blankedEmpty.contains(rel) =>
-        rel -> Snapshots.versionPath(relPath(table, rel), v)
-    }
-    val folded = harvestAndSidecar(spark, sealedDirs.map(_._2))
-    val sealedDirOf = sealedDirs.toMap
-    val sealedStats = sealedSlots.map { case (rel, _) =>
-      rel -> (if (blankedEmpty.contains(rel)) PartStats(0L, Map.empty)
-              else folded(sealedDirOf(rel)))
-    }.toMap
-    // survivor parts contribute their recorded bounds from the file-level
-    // sidecars (one metadata read per dir); rows stay exact — a pending
-    // delete ref on a survivor part makes rowCount decline honestly
-    val sidecarCache =
-      new java.util.concurrent.ConcurrentHashMap[String, Map[String, PartStats]]()
-    def dirFileStats(dir: String): Map[String, PartStats] =
-      sidecarCache.computeIfAbsent(dir, d => fileStats(spark, d).toMap)
-    val touchedStats = inParallel(
-      (sealedStats.keySet ++ blankedKeep).toSeq.sorted) { rel =>
-      // all-or-nothing: one unknowable surviving part makes the whole
-      // partition's stats absent ("cannot prune"), never an undercount
-      val carried = if (blankedEmpty.contains(rel)) Nil else priorOf(rel)
-      val survStats = carried.map { case (b, _) =>
-        stateDataPath(table, rel, b).flatMap { p =>
-          if (b.contains('/')) {
-            val dir = p.substring(0, p.lastIndexOf('/'))
-            val name = p.substring(p.lastIndexOf('/') + 1)
-            dirFileStats(dir).get(name)
-          } else Some(foldStats(fileStats(spark, p)))
-        }
-      }
-      if (survStats.exists(_.isEmpty)) None
-      else {
-        val all = survStats.flatten ++ sealedStats.get(rel).toSeq
-        Some(rel -> encodeStats(all.reduceOption(mergeStats)
-          .getOrElse(PartStats(0L, Map.empty))))
-      }
-    }.flatten.toMap
-    publishRoot(spark, table, base ++ touched, touched, retain, schema,
-      touchedStats, branch = branch) // commit point
-    if (branch.isEmpty) {
-      // branch commits never move partition pointers or run data
-      // retention — main readers and their pinned states are untouched.
-      // Pointer-cache swaps and retention are per-partition independent:
-      // fan out on the bounded pool (the root publish above was the
-      // single serial commit point)
-      inParallel(sealedSlots) { case (rel, v) =>
-        Snapshots.publish(spark, relPath(table, rel), v)
-      }
-      val prot = referencedVersions(spark, table)
-      inParallel(sealedSlots) { case (rel, _) =>
-        finishPartitionCommit(spark, table, rel, retain, prot)
-      }
-    }
+  /** SEAL a claimed slot: drop its audit marker (`wap`), then _SUCCESS —
+    * from here it is an ordinary committed version whose partition
+    * pointer is not yet swapped. */
+  private def sealSlot(spark: SparkSession, slot: Path, wap: Boolean): Unit = {
+    val f = fs(spark, slot)
+    if (wap) f.delete(new Path(slot, WapMarker), false)
+    f.create(new Path(slot, "_SUCCESS"), true).close()
   }
 
-  /** APPEND commit (Iceberg's fast append — O(new data), file-level
-    * granularity at version-dir resolution): each staged partition dir
-    * is sealed into a NEW version slot and the partition's state becomes
-    * the UNION of its prior parts and the new one (`v0001&v0005`) — no
-    * existing file is read, rewritten, or even listed. The ingest path a
-    * streaming micro-batch needs at 100 TB: commit cost is the new
-    * files + one root delta, whatever the partition already holds.
-    * Existing parts keep their pending delete refs; the appended part
-    * carries none (the sequence rule — an earlier delete never
-    * suppresses later data). Stats merge monotonically (rows add,
-    * bounds widen) when the prior entry has them; an unknown prior
-    * leaves the union unknown — honest, never wrong. [[compact]] folds
-    * union partitions back to one dir. */
-  private[graft] def commitAppendStaged(spark: SparkSession, table: String,
-                                        stagingRoot: String, cols: Seq[String],
-                                        retainVersions: Int,
-                                        schema: Option[org.apache.spark.sql.types.StructType],
-                                        props: Map[String, String] = Map.empty,
-                                        branch: Option[String] = None)
-      : Unit = {
+  /** A partition state's parts: (base token, pending delete refs) each —
+    * see [[parseParts]]. */
+  private[graft] type Parts = Seq[(String, Seq[String])]
+
+  /** THE data commit: every write that changes rows — upsert, append,
+    * replace, overwrite, compaction, partition drop, equality and
+    * positional deletes, row replacement — seals, publishes and retains
+    * here. The writes differ in ONE thing, which prior parts each touched
+    * partition ("rel") keeps: a rel's new state is its CARRIED parts plus
+    * the part freshly sealed from `staging`'s dir for it (EMPTY when both
+    * are empty). `touched` names the rels the caller read and what each
+    * carries — a file-scoped merge's survivors, nothing for a rewrite or
+    * drop, every prior part stamped with a new delete ref for a delete.
+    * A staged rel the caller did not list carries ALL its prior parts (an
+    * append: rows that were never read, e.g. a key migrating partitions),
+    * or none with `replaceStaged` (a dynamic partition overwrite).
+    *
+    * Stats are the fresh footer harvest merged with the carried parts':
+    * the parent root's recorded stats when every prior part is carried
+    * (zero files opened — an append's cost stays O(new data)), else the
+    * carried parts' `_filestats` sidecars; one unknowable part leaves the
+    * rel's stats absent, never an undercount. The harvest runs BEFORE the
+    * claim, so each sidecar rides its slot's rename, and a zero-row
+    * staged part seals only where it is its rel's whole new state — an
+    * append of only known keys commits nothing, with no probe job.
+    *
+    * Ordering makes the ROOT pointer swap the single commit point, so no
+    * crash can leave the root manifest permanently behind a partition
+    * pointer (the next commit would fold that stale base forward
+    * forever, and retention could then vacuum a version the live root
+    * still names):
+    *
+    *  1. every staged dir (and an empty dir per touched rel left with
+    *     nothing — the reader-safe replacement for deleting it) is renamed
+    *     into its partition's next version slot and SEALED, pointers
+    *     untouched; with an `audit` (write-audit-publish), the slots are
+    *     claimed unsealed, the audit runs on the complete would-be
+    *     snapshot, and only a passing audit seals them — any failure
+    *     deletes every claimed slot and rethrows (a failed rule as
+    *     [[AuditFailedException]]), leaving the table unchanged;
+    *  2. ONE new root manifest folds the touched rels' new states into the
+    *     parent manifest (seeded by a directory walk for the table's first
+    *     commit; the BRANCH head's for a `branch` commit) and the root
+    *     pointer swap makes the whole commit visible atomically — a crash
+    *     BEFORE this is a clean abort: sealed-but-unrooted slots are never
+    *     folded into later manifests and age out under retention;
+    *  3. per-partition pointers swap — a read CACHE for partition-level
+    *     readers; a crash between 2 and 3 leaves a pointer serving the
+    *     previous complete version until the partition's next commit heals
+    *     it, while table-level readers are already on the new root;
+    *  4. hygiene: retention per sealed partition, and the implicit-v0 flat
+    *     files of a migrated table are removed once `retain` real versions
+    *     exist (v0 ages out like any other snapshot).
+    *
+    * A branch commit stops after 2: the main pointer, the partition
+    * pointers and every main reader are untouched. */
+  private[graft] def commitStaged(
+      spark: SparkSession, table: String, staging: Option[String],
+      cols: Seq[String], retainVersions: Int,
+      touched: Map[String, Parts] = Map.empty,
+      replaceStaged: Boolean = false,
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      branch: Option[String] = None,
+      props: Map[String, String] = Map.empty,
+      audit: Option[DataFrame => DataFrame] = None): Unit = {
+    val f = fs(spark, new Path(table))
     val retain = math.max(1, retainVersions)
-    // footer harvest + per-dir sidecars BEFORE sealing (the sidecar rides
-    // the slot rename): an unpartitioned write of zero rows still stages
-    // one empty file, and its rel is dropped here instead of sealed — so
-    // callers need no emptiness probe (a Spark job) before staging
-    val (staged, stagedStats) = phase("append: staging walk + harvest") {
-      val dirs = partitionDirs(spark, stagingRoot, cols.size)
-      val folded = harvestAndSidecar(spark, dirs.map(relPath(stagingRoot, _)))
-      val fresh = dirs.map(rel => rel -> folded(relPath(stagingRoot, rel)))
-        .filter(_._2.rows > 0)
-      (fresh.map(_._1), fresh.toMap)
-    }
-    if (staged.isEmpty) return
-    val rt = s"$table/$RootDir"
-    // a branch append folds onto the BRANCH head's manifest and stats
+    val wap = audit.nonEmpty
+    // the parent, resolved ONCE for both the base states and the carried
+    // stats — BEFORE claiming: on a first commit, scanStates' fallback
+    // must see the pre-commit states, not the slots this commit creates
     val parentV = branch match {
       case Some(n) => Some(branchRef(spark, table, n).getOrElse(
         throw new IllegalArgumentException(
-          s"append to unknown branch '$n' at $table"))._1)
+          s"commit to unknown branch '$n' at $table"))._1)
       case None => currentRootVersion(spark, table)
     }
-    val base = phase("append: base manifest")(branch match {
-      case Some(_) => rootManifest(spark, table, parentV.get).get
-      case None => rootManifest(spark, table)
-        .getOrElse(scanStates(spark, table, cols))
-    })
-    val priorStats = parentV
-      .map { pv =>
-        resolveManifestFull(spark, rt, pv).toSeq.collect {
-          case (rel, (_, Some(s))) => rel -> s
+    val parent = phase("commit: base manifest")(
+      parentV.map(resolveManifestFull(spark, s"$table/$RootDir", _)))
+    val base = parent.map(_.map { case (rel, (st, _)) => rel -> st })
+      .getOrElse(scanStates(spark, table, cols))
+    def prior(rel: String): Parts =
+      base.get(rel).map(parseParts(_).filterNot(_._1 == Empty)).getOrElse(Nil)
+    val stagedStats = phase("commit: staging walk + harvest")(
+      staging.toSeq.flatMap { s =>
+        val dirs = partitionDirs(spark, s, cols.size)
+        val folded = harvestAndSidecar(spark, dirs.map(relPath(s, _)))
+        dirs.map(rel => rel -> folded(relPath(s, rel)))
+      }.toMap)
+    val carried: Map[String, Parts] =
+      (stagedStats.keySet ++ touched.keySet).map { rel =>
+        rel -> touched.getOrElse(rel, if (replaceStaged) Nil else prior(rel))
+      }.toMap
+    val fresh = stagedStats.filter { case (rel, st) =>
+      st.rows > 0 || carried(rel).isEmpty }
+    val blanks = touched.keySet.filter(rel =>
+      !fresh.contains(rel) && carried(rel).isEmpty)
+    val rels = (fresh.keySet ++ touched.keySet).toSeq.sorted
+    if (rels.isEmpty) return
+    val toClaim = fresh.keys.toSeq ++ blanks
+    lazy val root = staging.getOrElse(throw new IllegalStateException(
+      s"commit at $table: touched partitions left empty need a staging root"))
+    blanks.foreach(rel => f.mkdirs(new Path(relPath(root, rel))))
+    // the WAP marker goes into the STAGED dirs, so the claim rename
+    // carries it atomically
+    if (wap) toClaim.foreach { rel =>
+      f.create(new Path(relPath(root, rel), WapMarker), true).close()
+    }
+    var claimed = List.empty[(String, Long)]
+    val states: Map[String, String] =
+      try {
+        // claim on the bounded pool, DEEPEST depth groups first: a
+        // retired-spec staged dir can parent a new-spec staged dir, and a
+        // parent rename must never swallow a child
+        phase("commit: claim slots")(depthWaves(toClaim).foreach { g =>
+          claimed = inParallel(g)(rel => rel -> claimSlot(spark,
+            relPath(table, rel), new Path(relPath(root, rel)), wap))
+            .toList ::: claimed
+        })
+        val slot = claimed.toMap
+        val st = rels.map { rel =>
+          val parts = carried(rel) ++
+            (if (fresh.contains(rel)) Seq((f"v${slot(rel)}%08d", Nil)) else Nil)
+          rel -> (if (parts.isEmpty) Empty else fmtParts(parts))
         }.toMap
-      }.getOrElse(Map.empty[String, String])
-    // seal on the bounded pool, deepest depth groups first: a parent
-    // rename must never swallow a nested staged rel
-    val sealedSlots = phase("append: seal slots")(depthWaves(staged)
-      .flatMap { g =>
-        inParallel(g)(rel =>
-          rel -> sealSlot(spark, relPath(table, rel), new Path(relPath(stagingRoot, rel))))
-      })
-    val touched = sealedSlots.map { case (rel, v) =>
-      val newPart = (f"v$v%08d", Seq.empty[String])
-      val prior = base.get(rel).map(parseParts).getOrElse(Nil)
-        .filterNot(_._1 == Empty)
-      rel -> fmtParts(prior :+ newPart)
-    }.toMap
-    val touchedStats = sealedSlots.flatMap { case (rel, _) =>
-      val fresh = stagedStats(rel)
-      val priorParts = base.get(rel).map(parseParts).getOrElse(Nil)
-        .filterNot(_._1 == Empty)
-      if (priorParts.isEmpty) Some(rel -> encodeStats(fresh))
-      else priorStats.get(rel).map(decodeStats).map { p =>
-        // widen bounds monotonically; rows add
-        rel -> encodeStats(mergeStats(p, fresh))
-      } // prior stats unknown → leave the union's stats unknown
-    }.toMap
-    phase("append: root publish")(
-      publishRoot(spark, table, base ++ touched, touched, retain, schema,
-        touchedStats, props, branch)) // commit point
-    if (branch.isEmpty) {
-      phase("append: pointer swaps")(inParallel(sealedSlots) { case (rel, v) =>
+        audit.foreach { a =>
+          // delete-aware: what is validated is exactly what readers would
+          // scan; report rows are one per rule — a bounded collect
+          val failures = readEntries(spark, table, base ++ st, schema)
+            .map(a(_).filter(!org.apache.spark.sql.functions.col("passed"))
+              .collect())
+            .getOrElse(Array.empty[org.apache.spark.sql.Row])
+          if (failures.nonEmpty)
+            throw new AuditFailedException(
+              s"audit rejected the commit to $table; nothing published. " +
+                s"Failed rules: ${failures.mkString("; ")}")
+        }
+        st
+      } catch {
+        // ANY audit-commit failure — a failed rule, an audit that itself
+        // throws, a claim that lost its slot race — deletes every claimed
+        // slot before rethrowing: no unaudited slot is left for a
+        // fallback path to trip over (one a mid-wave failure claimed
+        // unseen is reaped cold on the partition's next audited claim)
+        case t: Throwable if wap =>
+          claimed.foreach { case (rel, v) =>
+            f.delete(new Path(Snapshots.versionPath(relPath(table, rel), v)), true)
+          }
+          throw t
+      }
+    phase("commit: seal slots")(inParallel(claimed) { case (rel, v) =>
+      sealSlot(spark, new Path(Snapshots.versionPath(relPath(table, rel), v)),
+        wap)
+    })
+    val sidecars =
+      new java.util.concurrent.ConcurrentHashMap[String, Map[String, PartStats]]()
+    def sidecarOf(dir: String): Map[String, PartStats] =
+      sidecars.computeIfAbsent(dir, d => fileStats(spark, d).toMap)
+    val touchedStats = phase("commit: carried stats")(inParallel(rels) { rel =>
+      val kept = carried(rel)
+      val keptStats: Seq[Option[PartStats]] =
+        if (kept.isEmpty) Nil
+        else if (kept.map(_._1) == prior(rel).map(_._1))
+          Seq(parent.flatMap(_.get(rel)).flatMap(_._2).map(decodeStats))
+        else kept.map { case (b, _) =>
+          stateDataPath(table, rel, b).flatMap { p =>
+            if (b.contains('/'))
+              sidecarOf(p.substring(0, p.lastIndexOf('/')))
+                .get(p.substring(p.lastIndexOf('/') + 1))
+            else Some(foldStats(fileStats(spark, p)))
+          }
+        }
+      if (keptStats.exists(_.isEmpty)) None
+      else Some(rel -> encodeStats((keptStats.flatten ++ fresh.get(rel))
+        .reduceOption(mergeStats).getOrElse(PartStats(0L, Map.empty))))
+    }.flatten.toMap)
+    phase("commit: root publish")(publishRoot(spark, table, base ++ states,
+      states, retain, schema, touchedStats, props, branch)) // commit point
+    if (branch.isEmpty && claimed.nonEmpty) {
+      // pointer-cache swaps and retention are per-partition independent:
+      // fan out on the bounded pool (the root publish above was the
+      // single serial commit point)
+      phase("commit: pointer swaps")(inParallel(claimed) { case (rel, v) =>
         Snapshots.publish(spark, relPath(table, rel), v)
       })
-      val prot = phase("append: referenced versions")(
-        referencedVersions(spark, table))
-      phase("append: retention")(inParallel(sealedSlots) { case (rel, _) =>
+      val prot = referencedVersions(spark, table)
+      phase("commit: retention")(inParallel(claimed) { case (rel, _) =>
         finishPartitionCommit(spark, table, rel, retain, prot)
       })
     }
@@ -2755,170 +2700,6 @@ object PartitionSnapshots {
     * published, the table is unchanged, and the report rows that failed
     * are in the message. */
   final class AuditFailedException(msg: String) extends RuntimeException(msg)
-
-  /** Rename complete data at `from` into `pt`'s next version slot WITHOUT
-    * committing it (no _SUCCESS, no pointer swap) — the claim half of a
-    * write-audit-publish commit. The staged dir carries [[WapMarker]]
-    * (placed BEFORE this rename, so no crash window exists in which the
-    * slot looks like an ordinary interrupted commit): until the audit
-    * passes and the seal removes it, every read and state-scan path
-    * skips the slot. Cold marked slots a crashed auditor abandoned are
-    * reaped here, on the partition's next claim — the one moment a
-    * writer provably owns the partition and lists its versions anyway. */
-  private def claimSlot(spark: SparkSession, pt: String, from: Path): Long = {
-    val f = fs(spark, from)
-    f.mkdirs(new Path(pt, VersionsDir))
-    Snapshots.allVersionDirs(spark, pt)
-      .filter(isPendingAudit(spark, pt, _))
-      .map(v => new Path(Snapshots.versionPath(pt, v)))
-      .filter(p => System.currentTimeMillis() -
-        f.getFileStatus(p).getModificationTime > 15 * 60 * 1000L)
-      .foreach(p => f.delete(p, true))
-    var attempt = 0
-    while (attempt < 50) {
-      val next = Snapshots.allVersionDirs(spark, pt).lastOption.getOrElse(0L) + 1
-      if (CommitIo.current.claimSlot(f, from,
-          new Path(Snapshots.versionPath(pt, next)))) return next
-      attempt += 1
-    }
-    throw new IllegalStateException(
-      s"partition claim: could not claim a version slot at $pt")
-  }
-
-  /** WRITE-AUDIT-PUBLISH variant of [[commitStaged]] (Iceberg's WAP
-    * pattern): the staged partitions are renamed into version slots but
-    * NOT committed; `audit` then runs against the complete WOULD-BE
-    * table snapshot (new slots + untouched partitions' pinned states)
-    * and must return an [[graft.operators.Expectations.check]]-style
-    * report with a `passed` column. Only if every rule passed are the
-    * slots sealed (_SUCCESS + per-partition pointer swaps) and the new
-    * root manifest published; a failed audit deletes the unpublished
-    * slots and throws [[AuditFailedException]] — readers never saw the
-    * rejected data, the table is byte-for-byte unchanged. The audit
-    * reads real files at their final paths (not a pre-write DataFrame),
-    * so what is validated is exactly what readers would scan. */
-  private[graft] def commitStagedAudited(
-      spark: SparkSession, table: String, stagingRoot: String,
-      cols: Seq[String], emptied: Set[String], retainVersions: Int,
-      audit: DataFrame => DataFrame,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
-    val f = fs(spark, new Path(table))
-    val retain = math.max(1, retainVersions)
-    // base BEFORE claiming: scanStates' crash-recovery fallback would
-    // otherwise bake the not-yet-audited slots into the untouched entries
-    val base = rootManifest(spark, table)
-      .getOrElse(scanStates(spark, table, cols))
-    val staged = partitionDirs(spark, stagingRoot, cols.size)
-    // blanked partitions (touched, zero surviving rows) ride the same
-    // staged-dir → claim path as data partitions, as empty dirs
-    val blanked = (emptied -- staged.toSet).toSeq
-    blanked.foreach(rel => f.mkdirs(new Path(relPath(stagingRoot, rel))))
-    // the WAP marker goes into the STAGED dirs so the claim rename carries
-    // it atomically — from the first instant a slot exists it is
-    // recognizably unaudited, and no read/state-scan path will serve it
-    (staged ++ blanked).foreach { rel =>
-      f.create(new Path(relPath(stagingRoot, rel), WapMarker), true).close()
-    }
-    var claimed = List.empty[(String, Long)]
-    val entries =
-      try {
-        // claim on the bounded pool, deepest depth groups first: a
-        // parent claim-rename must never swallow a nested staged rel
-        // (retired-spec dirs parent new-spec dirs). A mid-wave failure
-        // may leave claimed slots this list never saw — they carry the
-        // WAP marker and are reaped cold on the partition's next claim,
-        // the same crashed-auditor discipline as ever.
-        depthWaves((staged ++ blanked).toSeq)
-          .foreach { g =>
-            claimed = inParallel(g)(rel =>
-              rel -> claimSlot(spark, relPath(table, rel),
-                new Path(relPath(stagingRoot, rel)))).toList ::: claimed
-          }
-        val cm = claimed.toMap
-        // same migration rule as commitStaged: a staged rel outside the
-        // caller's touched set was never read — its prior parts survive
-        // and the audited part APPENDS
-        def auditedState(rel: String): String = {
-          val prior =
-            if (emptied.contains(rel)) Nil
-            else base.get(rel).map(parseParts(_).filterNot(_._1 == Empty))
-              .getOrElse(Nil)
-          fmtParts(prior :+ ((f"v${cm(rel)}%08d", Seq.empty[String])))
-        }
-        val es = base ++
-          staged.map(rel => rel -> auditedState(rel)) ++
-          blanked.map(_ -> Empty)
-        val failures = readEntries(spark, table, es, schema) match {
-          case None => Array.empty[org.apache.spark.sql.Row]
-          case Some(wouldBe) =>
-            // delete-aware: what is validated is exactly what readers
-            // would scan, minus any pending equality deletes.
-            // report rows are one-per-rule: a bounded driver-side collect
-            audit(wouldBe).filter(!org.apache.spark.sql.functions.col("passed"))
-              .collect()
-        }
-        if (failures.nonEmpty)
-          throw new AuditFailedException(
-            s"audit rejected the commit to $table; nothing published. Failed " +
-              s"rules: ${failures.mkString("; ")}")
-        es
-      } catch {
-        // ANY failure — a failed rule, an audit that itself throws (e.g.
-        // an AnalysisException from a rule naming a missing column), a
-        // claim that lost its slot race — deletes every claimed slot
-        // before rethrowing: the table is byte-for-byte unchanged and no
-        // unaudited slot is left for a fallback path to trip over
-        case t: Throwable =>
-          claimed.foreach { case (rel, v) =>
-            f.delete(new Path(Snapshots.versionPath(relPath(table, rel), v)), true)
-          }
-          throw t
-      }
-    // seal: drop the marker, then _SUCCESS — from here the slots are
-    // ordinary committed versions and the ordering mirrors commitStaged
-    inParallel(claimed) { case (rel, v) =>
-      val slot = new Path(Snapshots.versionPath(relPath(table, rel), v))
-      f.delete(new Path(slot, WapMarker), false)
-      f.create(new Path(slot, "_SUCCESS"), true).close()
-    }
-    // flat file-level harvest waves + per-dir sidecars (see commitStaged)
-    val auditedDirs = claimed.collect {
-      case (rel, v) if !blanked.contains(rel) =>
-        rel -> Snapshots.versionPath(relPath(table, rel), v)
-    }
-    val auditedFolded = harvestAndSidecar(spark, auditedDirs.map(_._2))
-    val auditedDirOf = auditedDirs.toMap
-    val auditedStats = inParallel(claimed) { case (rel, v) =>
-      if (blanked.contains(rel))
-        Some(rel -> encodeStats(PartStats(0L, Map.empty)))
-      else {
-        val fresh = auditedFolded(auditedDirOf(rel))
-        val priorParts =
-          if (emptied.contains(rel)) Nil
-          else base.get(rel).map(parseParts(_).filterNot(_._1 == Empty))
-            .getOrElse(Nil)
-        val prior = priorParts.map { case (b, _) =>
-          stateDataPath(table, rel, b).map(p => foldStats(fileStats(spark, p)))
-        }
-        // append case: merge carried parts' stats; one unknowable part
-        // leaves the partition's stats absent (never an undercount)
-        if (prior.exists(_.isEmpty)) None
-        else Some(rel ->
-          encodeStats((prior.flatten :+ fresh).reduce(mergeStats)))
-      }
-    }.flatten.toMap
-    publishRoot(spark, table, entries,
-      claimed.toMap.map { case (rel, v) =>
-        rel -> (if (blanked.contains(rel)) Empty else entries(rel))
-      }, retain, schema, auditedStats) // commit point
-    inParallel(claimed) { case (rel, v) =>
-      Snapshots.publish(spark, relPath(table, rel), v)
-    }
-    val prot = referencedVersions(spark, table)
-    inParallel(claimed) { case (rel, _) =>
-      finishPartitionCommit(spark, table, rel, retain, prot)
-    }
-  }
 
   /** Partition rel-paths ("d=2024-01-01") whose pinned state differs
     * between two root snapshots — the METADATA-ONLY work-list for
@@ -3294,10 +3075,8 @@ object PartitionSnapshots {
   def fastForwardRoot(spark: SparkSession, table: String,
                       name: String, rebase: Boolean = false,
                       retainVersions: Int =
-                        graft.operators.Upsert.DefaultRetainVersions): Long = {
-    val token = graft.operators.Upsert.acquireLock(spark, table,
-      graft.operators.Upsert.DefaultLockTtlMs)
-    try {
+                        graft.operators.Upsert.DefaultRetainVersions): Long =
+    leased(spark, table, "fastForwardRoot") { _ =>
       val rt = s"$table/$RootDir"
       val (head, base) = branchRef(spark, table, name).getOrElse(
         throw new IllegalArgumentException(
@@ -3323,8 +3102,7 @@ object PartitionSnapshots {
       }
       writeBranchRef(spark, table, name, head = head, base = head)
       head
-    } finally graft.operators.Upsert.releaseLock(spark, table, token)
-  }
+    }
 
   /** The `rebase = true` leg of [[fastForwardRoot]] — caller holds the
     * table lease. Validates disjointness, then publishes ONE new main
@@ -3620,12 +3398,8 @@ object PartitionSnapshots {
     * what surviving roots actually name. Takes the writer lease. */
   def expireRoots(spark: SparkSession, table: String, olderThanMs: Long,
                   retainVersions: Int =
-                    graft.operators.Upsert.DefaultRetainVersions): Seq[Long] = {
-    require(isManifested(spark, table),
-      s"expireRoots: $table is not a manifested table")
-    val token = graft.operators.Upsert.acquireLock(spark, table,
-      graft.operators.Upsert.DefaultLockTtlMs)
-    try {
+                    graft.operators.Upsert.DefaultRetainVersions): Seq[Long] =
+    leased(spark, table, "expireRoots") { _ =>
       val rt = s"$table/$RootDir"
       val f = fs(spark, new Path(rt))
       val committed = Snapshots.versions(spark, rt)
@@ -3680,8 +3454,7 @@ object PartitionSnapshots {
         vacuumDeletes(spark, table)
       }
       expired
-    } finally graft.operators.Upsert.releaseLock(spark, table, token)
-  }
+    }
 
   /** Instant whole-table rollback: repoint the ROOT at an older manifest
     * — every partition snaps back to the state that manifest pinned, in
@@ -3690,12 +3463,9 @@ object PartitionSnapshots {
     * survive until retention vacuums them; the next merge reads the
     * rolled-back state and commits forward from it. Takes the table's
     * writer lease — rollback is a write. */
-  def rollbackRoot(spark: SparkSession, table: String, v: Long): Unit = {
-    val token = graft.operators.Upsert.acquireLock(spark, table,
-      graft.operators.Upsert.DefaultLockTtlMs)
-    try Snapshots.rollback(spark, s"$table/$RootDir", v)
-    finally graft.operators.Upsert.releaseLock(spark, table, token)
-  }
+  def rollbackRoot(spark: SparkSession, table: String, v: Long): Unit =
+    leased(spark, table, "rollbackRoot")(_ =>
+      Snapshots.rollback(spark, s"$table/$RootDir", v))
 
   /** Reader-safe small-file compaction for a manifested table — the
     * rewrite_data_files analogue. Each partition whose pinned data dir
@@ -3736,14 +3506,10 @@ object PartitionSnapshots {
               retainVersions: Int = graft.operators.Upsert.DefaultRetainVersions,
               sortWithin: Seq[String] = Nil,
               smallFileBytes: Long = Long.MaxValue)
-      : Map[String, (Int, Int)] = {
-    require(isManifested(spark, table), s"$table is not a manifested table")
-    val token = graft.operators.Upsert.acquireLock(spark, table,
-      graft.operators.Upsert.DefaultLockTtlMs)
-    try {
+      : Map[String, (Int, Int)] =
+    leased(spark, table, "compact") { lease =>
       val cols = partitionCols(spark, table)
-      val entries = rootManifest(spark, table)
-        .getOrElse(scanStates(spark, table, cols))
+      val entries = lease.base
       // per rel: (read sides as (paths, deleteRefs), surviving parts,
       // files before, bytes to rewrite)
       val todo = inParallel(entries.toSeq.sortBy(_._1)) { case (rel, state) =>
@@ -3817,15 +3583,19 @@ object PartitionSnapshots {
       // conform — a raw footer-sampled read would silently NULL the
       // renamed column of whichever era lost the sample and commit the
       // loss permanently. No basePath: the staged rel re-derives its
-      // dir segments, exactly like the raw read before.
+      // dir segments, exactly like the raw read before — so the rel's own
+      // dir columns, which no file of it holds, leave the read schema
+      // even where the pin carries them.
       val foldPinned = currentRootVersion(spark, table)
         .flatMap(pinnedSchema(spark, table, _))
       val foldPromoted = promotedSpecCols(spark, table)
       todo.foreach { case (rel, sidesIn, _, _, bytes) =>
         val nOut = math.max(1,
           math.ceil(bytes.toDouble / targetFileBytes).toInt)
+        val relPinned = foldPinned.map(st => org.apache.spark.sql.types
+          .StructType(st.filterNot(f => relCols(rel).contains(f.name))))
         val sides = sidesIn.map { case (paths, dels) =>
-          val (df0, aliasOf) = groupScan(spark, table, foldPinned,
+          val (df0, aliasOf) = groupScan(spark, table, relPinned,
             foldPromoted, relCols(rel), paths, useBasePath = false)
           applyDeleteRefs(spark, table, df0, dels, aliasOf = aliasOf)
         }
@@ -3845,16 +3615,13 @@ object PartitionSnapshots {
           .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
           .parquet(relPath(staging, rel))
       }
-      val survivors = todo.collect {
-        case (rel, _, keep, _, _) if keep.nonEmpty => rel -> keep
-      }.toMap
       try {
-        graft.operators.Upsert.assertHeld(spark, table, token)
-        // rewritten rels are TOUCHED (replace semantics): an unlisted
-        // staged rel would otherwise append to the parts it just folded
-        commitStaged(spark, table, staging, cols,
-          emptied = todo.map(_._1).toSet, retainVersions = retainVersions,
-          survivors = survivors)
+        lease.assertHeld()
+        // rewritten rels are TOUCHED: each keeps only its unselected
+        // files (an unlisted staged rel would append to the parts it
+        // just folded)
+        commitStaged(spark, table, Some(staging), cols, retainVersions,
+          touched = todo.map { case (rel, _, keep, _, _) => rel -> keep }.toMap)
       } finally
         fs(spark, new Path(staging)).delete(new Path(staging), true)
       vacuumDeletes(spark, table)
@@ -3872,8 +3639,7 @@ object PartitionSnapshots {
         }.sum).getOrElse(before)
         rel -> (before, after)
       }.toMap
-    } finally graft.operators.Upsert.releaseLock(spark, table, token)
-  }
+    }
 
   /** Metadata-only partition DROP (Iceberg's `DROP PARTITION` /
     * delete-by-partition-predicate): every manifest partition whose
@@ -3892,17 +3658,10 @@ object PartitionSnapshots {
   def dropPartitions(spark: SparkSession, table: String,
                      pred: Map[String, String] => Boolean,
                      retainVersions: Int =
-                       graft.operators.Upsert.DefaultRetainVersions): Seq[String] = {
-    require(isManifested(spark, table),
-      s"dropPartitions: $table is not a manifested table")
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val cols = partitionCols(spark, table)
-    val token = graft.operators.Upsert.acquireLock(spark, table,
-      graft.operators.Upsert.DefaultLockTtlMs)
-    try {
-      cleanupStaging(spark, table)
-      val base = rootManifest(spark, table)
-        .getOrElse(scanStates(spark, table, cols))
+                       graft.operators.Upsert.DefaultRetainVersions): Seq[String] =
+    leased(spark, table, "dropPartitions") { lease =>
+      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      val base = lease.base
       def parseRel(rel: String): Map[String, String] =
         rel.split("/").toSeq.filter(_.nonEmpty).map { seg =>
           val i = seg.indexOf('=')
@@ -3920,13 +3679,12 @@ object PartitionSnapshots {
       val f = fs(spark, new Path(table))
       f.mkdirs(new Path(staging))
       try {
-        graft.operators.Upsert.assertHeld(spark, table, token)
-        commitStaged(spark, table, staging, cols,
-          emptied = dropped.toSet, retainVersions = retainVersions)
+        lease.assertHeld()
+        commitStaged(spark, table, Some(staging), partitionCols(spark, table),
+          retainVersions, touched = dropped.map(_ -> Nil).toMap)
       } finally f.delete(new Path(staging), true)
       dropped
-    } finally graft.operators.Upsert.releaseLock(spark, table, token)
-  }
+    }
 
   /** EQUALITY-DELETE commit (merge-on-read — Iceberg v2's equality
     * deletes): remove every row whose key columns match a row of `keys`
@@ -3955,20 +3713,14 @@ object PartitionSnapshots {
     * Single-writer: takes the table's lease. */
   def deleteKeys(spark: SparkSession, table: String, keys: DataFrame,
                  retainVersions: Int =
-                   graft.operators.Upsert.DefaultRetainVersions): Boolean = {
-    require(isManifested(spark, table),
-      s"deleteKeys: $table is not a manifested table")
-    val cols = partitionCols(spark, table)
-    val keyCols = keys.columns.toSeq
-    require(keyCols.nonEmpty && keyCols.intersect(cols).isEmpty,
-      s"deleteKeys: key columns $keyCols must be data columns, not " +
-        s"partition columns $cols")
-    val token = graft.operators.Upsert.acquireLock(spark, table,
-      graft.operators.Upsert.DefaultLockTtlMs)
-    try {
-      cleanupStaging(spark, table)
-      val base = rootManifest(spark, table)
-        .getOrElse(scanStates(spark, table, cols))
+                   graft.operators.Upsert.DefaultRetainVersions): Boolean =
+    leased(spark, table, "deleteKeys") { lease =>
+      val cols = partitionCols(spark, table)
+      val keyCols = keys.columns.toSeq
+      require(keyCols.nonEmpty && keyCols.intersect(cols).isEmpty,
+        s"deleteKeys: key columns $keyCols must be data columns, not " +
+          s"partition columns $cols")
+      val base = lease.base
       // STATS-PRUNED touched-partition scan (same machinery as the
       // merge's matched-key lookup): partitions whose manifest key
       // bounds provably exclude every delete key cannot hold a doomed
@@ -4039,37 +3791,19 @@ object PartitionSnapshots {
       f.mkdirs(new Path(s"$table/$DeletesDir"))
       val tmp = s"$table/$DeletesDir/.staging-${java.util.UUID.randomUUID()}"
       k.write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists).parquet(tmp)
-      val id = claimDeleteSlot(spark, table, new Path(tmp))
+      val id = claimDeleteSlot(spark, table, new Path(tmp), "deleteKeys")
       // the new ref lands on EVERY current part: the delete applies to
       // all data that exists now; parts appended later never carry it
-      // (the sequence rule, encoded structurally)
-      // every touched rel must resolve in the base manifest — a miss
-      // means the reconstructed dir name diverged from the writer's hive
-      // naming, and a fabricated FLAT+dNN entry would point reads at a
-      // nonexistent directory while the targeted rows silently survive
-      val touched = touchedRels.toSeq.sorted.map { rel =>
-        val state = base.getOrElse(rel, throw new IllegalStateException(
-          s"deleteKeys: touched partition '$rel' is not in $table's " +
-            "manifest — partition-value rendering diverged from the " +
-            "writer's directory naming; refusing to commit"))
-        rel -> fmtParts(parseParts(state)
-          .map { case (b, dels) => (b, dels :+ id) })
-      }.toMap
-      // carry the touched partitions' footer stats forward: the bounds
-      // still describe the base files (rows becomes an upper bound — a
-      // delete only shrinks the true set; rowCount reports accordingly)
-      val rt = s"$table/$RootDir"
-      val priorStats = currentRootVersion(spark, table)
-        .map(v => resolveManifestFull(spark, rt, v).collect {
-          case (rel, (_, Some(st))) if touched.contains(rel) => rel -> st
-        }).getOrElse(Map.empty[String, String])
-      graft.operators.Upsert.assertHeld(spark, table, token)
-      publishRoot(spark, table, base ++ touched, touched,
-        math.max(1, retainVersions), touchedStats = priorStats) // commit point
+      // (the sequence rule, encoded structurally). The touched rels'
+      // footer stats carry forward: the bounds still describe the base
+      // files (rows becomes an upper bound — a delete only shrinks the
+      // true set; rowCount reports accordingly)
+      lease.assertHeld()
+      commitStaged(spark, table, None, cols, retainVersions,
+        touched = touchedRels.map(rel => rel -> withRef(base(rel), id)).toMap)
       vacuumDeletes(spark, table)
       true
-    } finally graft.operators.Upsert.releaseLock(spark, table, token)
-  }
+    }
 
   /** POSITIONAL DELETE commit (Iceberg v2's position deletes — the
     * second merge-on-read delete flavor): remove specific rows by
@@ -4089,93 +3823,15 @@ object PartitionSnapshots {
     * rewrite/compaction MATERIALIZES it (plain state, ref retired) —
     * the same sequence rule as equality deletes, so [[vacuumDeletes]]
     * reaps the file once no retained root names it. Positions must
-    * name files of CURRENT parts (a stale handle fails loudly).
-    * Single-writer: takes the table's lease. */
+    * name files of CURRENT parts (a stale handle fails loudly). It is
+    * [[replaceRows]] with no new rows. Single-writer: takes the table's
+    * lease. */
   def deletePositions(spark: SparkSession, table: String,
                       positions: DataFrame,
                       retainVersions: Int =
-                        graft.operators.Upsert.DefaultRetainVersions): Boolean = {
-    require(isManifested(spark, table),
-      s"deletePositions: $table is not a manifested table")
-    require(positions.columns.toSet.contains("_pos_path") &&
-      positions.columns.toSet.contains("_pos_ordinal"),
-      "deletePositions: positions must carry _pos_path + _pos_ordinal " +
-        "(from readWithRowPos)")
-    import org.apache.spark.sql.functions.{col, element_at, split}
-    val token = graft.operators.Upsert.acquireLock(spark, table,
-      graft.operators.Upsert.DefaultLockTtlMs)
-    try {
-      cleanupStaging(spark, table)
-      val base = rootManifest(spark, table)
-        .getOrElse(scanStates(spark, table, partitionCols(spark, table)))
-      val rootPath = new Path(table).toUri.getPath
-      // one row per touched FILE (bounded — never per deleted row):
-      // parse each file's partition rel from its table-relative path
-      val files = positions.select(col("_pos_path")).distinct()
-        .collect().map(_.getString(0))
-      if (files.isEmpty) return false
-      val parsedFiles = files.map { uri =>
-        val p = new Path(uri).toUri.getPath
-        require(p.startsWith(rootPath + "/"),
-          s"deletePositions: file $uri is not under table $table")
-        val segs = p.stripPrefix(rootPath + "/").split("/").toSeq
-        segs.indexOf(VersionsDir) match {
-          case -1 => (segs.dropRight(1).mkString("/"), // FLAT legacy file
-            None: Option[String], segs.last)
-          case i  => (segs.take(i).mkString("/"),
-            Some(segs(i + 1)), segs.last)
-        }
-      }
-      // validate at FILE granularity: each doomed file's version must be
-      // a CURRENT part of its partition's state (plain vNNN token, its
-      // own file-scoped survivor token, or FLAT). A handle whose file was
-      // rewritten or compacted away since the read is STALE — committing
-      // a ref for it would silently delete nothing; refuse loudly.
-      parsedFiles.toSeq.sortBy(_._1).foreach { case (rel, verOpt, name) =>
-        val bases = base.get(rel).map(parseParts(_).map(_._1)).getOrElse(
-          throw new IllegalArgumentException(
-            s"deletePositions: file partition '$rel' is not in $table's " +
-              "manifest — the position handles are stale; re-read"))
-        val live = verOpt match {
-          case None => bases.contains(Flat)
-          case Some(v) => bases.exists(b => b == v || b == s"$v/$name")
-        }
-        require(live,
-          s"deletePositions: file '$name' (${verOpt.getOrElse(Flat)}) is " +
-            s"no longer a current part of '$rel' (state: ${base(rel)}) — " +
-            "the position handles are stale (rewritten or compacted since " +
-            "they were read); re-read and re-derive")
-      }
-      val touchedRels = parsedFiles.map(_._1).toSet
-      val rows = positions
-        .select(element_at(split(col("_pos_path"), "/"), -1).as("_del_file"),
-          col("_pos_ordinal").cast("long").as("_del_pos"),
-          org.apache.spark.sql.functions
-            .regexp_replace(col("_pos_path"), ".*" +
-              java.util.regex.Pattern.quote(rootPath + "/"), "")
-            .as("_del_path"))
-        .dropDuplicates("_del_path", "_del_pos")
-      val f = fs(spark, new Path(table))
-      f.mkdirs(new Path(s"$table/$DeletesDir"))
-      val tmp = s"$table/$DeletesDir/.staging-${java.util.UUID.randomUUID()}"
-      rows.write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists).parquet(tmp)
-      val id = claimDeleteSlot(spark, table, new Path(tmp), prefix = "p")
-      val touched = touchedRels.toSeq.sorted.map { rel =>
-        rel -> fmtParts(parseParts(base(rel))
-          .map { case (b, dels) => (b, dels :+ id) })
-      }.toMap
-      val rt = s"$table/$RootDir"
-      val priorStats = currentRootVersion(spark, table)
-        .map(v => resolveManifestFull(spark, rt, v).collect {
-          case (rel, (_, Some(st))) if touched.contains(rel) => rel -> st
-        }).getOrElse(Map.empty[String, String])
-      graft.operators.Upsert.assertHeld(spark, table, token)
-      publishRoot(spark, table, base ++ touched, touched,
-        math.max(1, retainVersions), touchedStats = priorStats) // commit point
-      vacuumDeletes(spark, table)
-      true
-    } finally graft.operators.Upsert.releaseLock(spark, table, token)
-  }
+                        graft.operators.Upsert.DefaultRetainVersions): Boolean =
+    replaceRowsAs("deletePositions", spark, table, positions, None,
+      retainVersions, None)
 
   /** ATOMIC row replacement — ONE root publish that both retires the
     * given row positions (a positional delete ref on every current
@@ -4205,54 +3861,61 @@ object PartitionSnapshots {
                   retainVersions: Int =
                     graft.operators.Upsert.DefaultRetainVersions,
                   evolvedSchema: Option[org.apache.spark.sql.types.StructType]
-                    = None): Boolean = {
-    require(isManifested(spark, table),
-      s"replaceRows: $table is not a manifested table")
+                    = None): Boolean =
+    replaceRowsAs("replaceRows", spark, table, positions, Some(newRows),
+      retainVersions, evolvedSchema)
+
+  /** [[replaceRows]] reporting as `what`; no `newRows` stages nothing. */
+  private def replaceRowsAs(what: String, spark: SparkSession, table: String,
+                            positions: DataFrame, newRows: Option[DataFrame],
+                            retainVersions: Int,
+                            evolvedSchema: Option[org.apache.spark.sql.types.StructType])
+      : Boolean = {
     require(positions.columns.toSet.contains("_pos_path") &&
       positions.columns.toSet.contains("_pos_ordinal"),
-      "replaceRows: positions must carry _pos_path + _pos_ordinal " +
+      s"$what: positions must carry _pos_path + _pos_ordinal " +
         "(from readWithRowPos)")
     import org.apache.spark.sql.functions.{col, element_at, split}
-    val cols = partitionCols(spark, table)
-    val token = graft.operators.Upsert.acquireLock(spark, table,
-      graft.operators.Upsert.DefaultLockTtlMs)
-    try {
-      cleanupStaging(spark, table)
-      val base = rootManifest(spark, table)
-        .getOrElse(scanStates(spark, table, cols))
+    leased(spark, table, what) { lease =>
+      val base = lease.base
       val rootPath = new Path(table).toUri.getPath
-      // one row per touched FILE (bounded): validate each doomed file is
-      // a CURRENT part of its partition — stale handles refuse loudly
+      // one row per touched FILE (bounded — never per deleted row):
+      // parse each file's partition rel from its table-relative path
       val files = positions.select(col("_pos_path")).distinct()
         .collect().map(_.getString(0))
       if (files.isEmpty) return false
       val parsedFiles = files.map { uri =>
         val p = new Path(uri).toUri.getPath
         require(p.startsWith(rootPath + "/"),
-          s"replaceRows: file $uri is not under table $table")
+          s"$what: file $uri is not under table $table")
         val segs = p.stripPrefix(rootPath + "/").split("/").toSeq
         segs.indexOf(VersionsDir) match {
-          case -1 => (segs.dropRight(1).mkString("/"),
+          case -1 => (segs.dropRight(1).mkString("/"), // FLAT legacy file
             None: Option[String], segs.last)
           case i  => (segs.take(i).mkString("/"),
             Some(segs(i + 1)), segs.last)
         }
       }
+      // validate at FILE granularity: each doomed file's version must be
+      // a CURRENT part of its partition's state (plain vNNN token, its
+      // own file-scoped survivor token, or FLAT). A handle whose file was
+      // rewritten or compacted away since the read is STALE — committing
+      // a ref for it would silently delete nothing; refuse loudly.
       parsedFiles.toSeq.sortBy(_._1).foreach { case (rel, verOpt, name) =>
         val bases = base.get(rel).map(parseParts(_).map(_._1)).getOrElse(
           throw new IllegalArgumentException(
-            s"replaceRows: file partition '$rel' is not in $table's " +
+            s"$what: file partition '$rel' is not in $table's " +
               "manifest — the position handles are stale; re-read"))
         val live = verOpt match {
           case None => bases.contains(Flat)
           case Some(v) => bases.exists(b => b == v || b == s"$v/$name")
         }
         require(live,
-          s"replaceRows: file '$name' (${verOpt.getOrElse(Flat)}) is no " +
+          s"$what: file '$name' (${verOpt.getOrElse(Flat)}) is no " +
             s"longer a current part of '$rel' (state: ${base(rel)}) — " +
-            "stale position handles; re-read and re-derive")
+            "the position handles are stale (rewritten or compacted since " +
+            "they were read); re-read and re-derive")
       }
-      val delRels = parsedFiles.map(_._1).toSet
       // stage the delete file (claimed but UNREFERENCED until the publish)
       val rows = positions
         .select(element_at(split(col("_pos_path"), "/"), -1).as("_del_file"),
@@ -4267,84 +3930,47 @@ object PartitionSnapshots {
       val tmpDel = s"$table/$DeletesDir/.staging-${java.util.UUID.randomUUID()}"
       rows.write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
         .parquet(tmpDel)
-      val id = claimDeleteSlot(spark, table, new Path(tmpDel), prefix = "p")
-      // stage + seal the replacement rows (hidden partitioning re-derives)
-      val outRows = applyTransforms(spark, table, newRows)
-      val staging = s"$table/_staging-${java.util.UUID.randomUUID()}"
-      graft.operators.Upsert.packedWriter(spark, outRows, cols,
-          org.apache.spark.sql.SaveMode.ErrorIfExists)
-        .partitionBy(cols: _*).parquet(staging)
-      try {
-        graft.operators.Upsert.assertHeld(spark, table, token)
-        val staged = partitionDirs(spark, staging, cols.size)
-        val sealedSlots = depthWaves(staged).flatMap { g =>
-          inParallel(g)(rel =>
-            rel -> sealSlot(spark, relPath(table, rel), new Path(relPath(staging, rel))))
-        }
-        val sealedDirs = sealedSlots.map { case (rel, v) =>
-          rel -> Snapshots.versionPath(relPath(table, rel), v)
-        }
-        val folded = harvestAndSidecar(spark, sealedDirs.map(_._2))
-        val sealedDirOf = sealedDirs.toMap
-        val sealedOf = sealedSlots.toMap
-        // combined touched states: every prior part of a delete-touched
-        // rel gains the ref (the delete applies to data that exists NOW);
-        // the freshly sealed part carries none (sequenced after it)
-        val touched = (delRels ++ sealedOf.keySet).toSeq.sorted.map { rel =>
-          val prior = base.get(rel).map(parseParts(_).filterNot(_._1 == Empty))
-            .getOrElse(Nil)
-          val withRefs =
-            if (delRels.contains(rel))
-              prior.map { case (b, dels) => (b, dels :+ id) }
-            else prior
-          val parts = withRefs ++
-            sealedOf.get(rel).map(v => (f"v$v%08d", Seq.empty[String])).toSeq
-          rel -> fmtParts(parts)
-        }.toMap
-        // stats: prior bounds stay valid (a delete only shrinks the true
-        // set — rowCount already treats ref-carrying states as upper
-        // bounds); appended parts widen monotonically when prior known
-        val rt = s"$table/$RootDir"
-        val priorStats = currentRootVersion(spark, table)
-          .map(v => resolveManifestFull(spark, rt, v).collect {
-            case (rel, (_, Some(st))) if touched.contains(rel) => rel -> st
-          }).getOrElse(Map.empty[String, String])
-        val touchedStats = touched.keys.flatMap { rel =>
-          val fresh = sealedDirOf.get(rel).map(folded)
-          val priorParts = base.get(rel).map(parseParts(_)
-            .filterNot(_._1 == Empty)).getOrElse(Nil)
-          (fresh, priorParts) match {
-            case (Some(fs0), Nil) => Some(rel -> encodeStats(fs0))
-            case (Some(fs0), _) => priorStats.get(rel).map(decodeStats)
-              .map(p => rel -> encodeStats(mergeStats(p, fs0)))
-            case (None, _) => priorStats.get(rel).map(rel -> _)
+      val id = claimDeleteSlot(spark, table, new Path(tmpDel), what, "p")
+      // every prior part of a delete-touched rel gains the ref (the
+      // delete applies to data that exists NOW); a freshly sealed part
+      // carries none (sequenced after it), and its stats widen the
+      // prior bounds, which stay valid (a delete only shrinks the true
+      // set — rowCount already treats ref-carrying states as upper bounds)
+      val cols = partitionCols(spark, table)
+      val touched = parsedFiles.map(_._1).distinct
+        .map(rel => rel -> withRef(base(rel), id)).toMap
+      newRows match {
+        case Some(df) =>
+          // hidden partitioning re-derives the replacement rows' dirs
+          lease.stageThen(applyTransforms(spark, table, df), cols) { staging =>
+            commitStaged(spark, table, Some(staging), cols, retainVersions,
+              touched, schema = evolvedSchema)
           }
-        }.toMap
-        publishRoot(spark, table, base ++ touched, touched,
-          math.max(1, retainVersions), evolvedSchema, touchedStats) // commit point
-        inParallel(sealedSlots) { case (rel, v) =>
-          Snapshots.publish(spark, relPath(table, rel), v)
-        }
-        val prot = referencedVersions(spark, table)
-        inParallel(sealedSlots) { case (rel, _) =>
-          finishPartitionCommit(spark, table, rel,
-            math.max(1, retainVersions), prot)
-        }
-      } finally fs(spark, new Path(staging)).delete(new Path(staging), true)
+        case None =>
+          lease.assertHeld()
+          commitStaged(spark, table, None, cols, retainVersions, touched)
+      }
       vacuumDeletes(spark, table)
       true
-    } finally graft.operators.Upsert.releaseLock(spark, table, token)
+    }
   }
+
+  /** A state's current parts, each stamped with delete ref `id`. */
+  private def withRef(state: String, id: String): Parts =
+    parseParts(state).filterNot(_._1 == Empty)
+      .map { case (b, dels) => (b, dels :+ id) }
 
   // one shared number space for BOTH delete flavors: d = equality
   // (key-valued), p = positional (file + row ordinal)
   private val DeleteName = "^[dp](\\d{8,})$".r
 
   /** Rename complete delete keys at `from` into the next `_deletes` slot;
-    * returns the claimed id ("d00000001"). Same claim discipline as the
-    * data slots — the rename is whole-dir atomic. */
+    * returns the claimed id ("d00000001", or "p…" for positional deletes
+    * with `prefix` "p"). Same claim discipline as the data slots — the
+    * rename is whole-dir atomic. `what` names the failing op. */
   private def claimDeleteSlot(spark: SparkSession, table: String,
-                              from: Path, prefix: String = "d"): String = {
+                              from: Path, what: String,
+                              prefix: String = "d"): String = {
     val f = fs(spark, from)
     val dir = new Path(s"$table/$DeletesDir")
     var attempt = 0
@@ -4358,7 +3984,7 @@ object PartitionSnapshots {
     }
     f.delete(from, true)
     throw new IllegalStateException(
-      s"deleteKeys: could not claim a delete slot at $table")
+      s"$what: could not claim a delete slot at $table")
   }
 
   /** Reap delete files no RETAINED root manifest references (a rewrite
@@ -4418,12 +4044,8 @@ object PartitionSnapshots {
     * paths without deleting. Returns table-relative paths, sorted. */
   def removeOrphans(spark: SparkSession, table: String,
                     olderThanMs: Long = 24L * 3600 * 1000,
-                    dryRun: Boolean = false): Seq[String] = {
-    require(isManifested(spark, table),
-      s"removeOrphans: $table is not a manifested table")
-    val token = graft.operators.Upsert.acquireLock(spark, table,
-      graft.operators.Upsert.DefaultLockTtlMs)
-    try {
+                    dryRun: Boolean = false): Seq[String] =
+    leased(spark, table, "removeOrphans") { _ =>
       val rt = s"$table/$RootDir"
       val roots = Snapshots.versions(spark, rt)
       require(roots.nonEmpty,
@@ -4509,7 +4131,59 @@ object PartitionSnapshots {
       if (!dryRun)
         inParallel(out)(rel => f.delete(new Path(relPath(table, rel)), true))
       out
-    } finally graft.operators.Upsert.releaseLock(spark, table, token)
+    }
+
+  /** Run `body` under the table's single-writer lease — the one preamble
+    * of every write and maintenance op here: refuses a table that is not
+    * manifested, throws [[graft.operators.Upsert.ConcurrentWriteException]]
+    * while another writer holds the lease, and releases it however
+    * `body` ends. */
+  private def leased[A](spark: SparkSession, table: String, what: String)
+                       (body: Lease => A): A = {
+    require(isManifested(spark, table),
+      s"$what: $table is not a manifested table")
+    val token = graft.operators.Upsert.acquireLock(spark, table,
+      graft.operators.Upsert.DefaultLockTtlMs)
+    try body(new Lease(spark, table, token))
+    finally graft.operators.Upsert.releaseLock(spark, table, token)
+  }
+
+  /** One operation's hold on a table's writer lease ([[leased]]). */
+  private final class Lease(spark: SparkSession, table: String,
+                            token: String) {
+    /** The manifest a data commit starts from — the current root's, or a
+      * directory walk's before the table's first root — read after
+      * sweeping the cold staging roots a crashed writer left. */
+    lazy val base: Map[String, String] = {
+      cleanupStaging(spark, table)
+      rootManifest(spark, table)
+        .getOrElse(scanStates(spark, table, partitionCols(spark, table)))
+    }
+    def assertHeld(): Unit =
+      graft.operators.Upsert.assertHeld(spark, table, token)
+    def stageThen(df: DataFrame, cols: Seq[String])
+                 (commit: String => Unit): Unit =
+      PartitionSnapshots.stageThen(spark, table, token, df, cols)(commit)
+  }
+
+  /** Stage `df` ONCE (hive layout, partition columns stripped into dirs;
+    * plain files for an unpartitioned table) under a hidden `_staging-*`
+    * root, re-check the lease, then hand the staged dirs to
+    * [[commitStaged]]; the staging root goes however the commit ends.
+    * The staged write lands beside the table's data, never over it, so
+    * `df`'s plan may read the table's current state. */
+  private[graft] def stageThen(spark: SparkSession, table: String,
+                               token: String, df: DataFrame,
+                               cols: Seq[String])
+                              (commit: String => Unit): Unit = {
+    val staging = s"$table/_staging-${java.util.UUID.randomUUID()}"
+    graft.operators.Upsert.packedWriter(spark, df, cols,
+        org.apache.spark.sql.SaveMode.ErrorIfExists)
+      .partitionBy(cols: _*).parquet(staging)
+    try {
+      graft.operators.Upsert.assertHeld(spark, table, token) // last check
+      commit(staging)
+    } finally fs(spark, new Path(staging)).delete(new Path(staging), true)
   }
 
   /** Remove staging roots a crashed writer abandoned (cold ones only —

@@ -1769,4 +1769,23 @@ class PartitionSnapshotsSpec extends SparkSpec {
     metaT("ts").dataType shouldBe
       Upsert.read(spark, tp).schema("ts").dataType
   }
+
+  test("evolvePartitionSpec takes the writer lease: refused while held, marker unchanged") {
+    val path = tmpDir("pspeclease") + "/t"
+    Upsert.upsert(spark, path,
+      Seq((1, "2024-01-01", 3, 10)).toDF("k", "date", "hour", "v"),
+      Seq("k"), partitionCols = Seq("date"))
+    val marker = java.nio.file.Paths.get(s"$path/_partition_manifests")
+    val before = java.nio.file.Files.readString(marker)
+    val token = Upsert.acquireLock(spark, path, Upsert.DefaultLockTtlMs)
+    try {
+      an[Upsert.ConcurrentWriteException] should be thrownBy
+        PartitionSnapshots.evolvePartitionSpec(spark, path, Seq("date", "hour"))
+      java.nio.file.Files.readString(marker) shouldBe before
+      new java.io.File(s"$path/_partition_specs").exists() shouldBe false
+    } finally Upsert.releaseLock(spark, path, token)
+    // once the lease is free the evolution goes through
+    PartitionSnapshots.evolvePartitionSpec(spark, path, Seq("date", "hour"))
+    PartitionSnapshots.partitionCols(spark, path) shouldBe Seq("date", "hour")
+  }
 }

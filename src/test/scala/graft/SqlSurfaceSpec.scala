@@ -242,6 +242,40 @@ class SqlSurfaceSpec extends SparkSpec {
       .schema("day").dataType shouldBe DateType
   }
 
+  test("a DDL-declared partition column keeps its declared type across commits") {
+    val wh = tmpDir("sqlpintype")
+    val cat = new Catalog(spark, wh)
+    val t = s"$wh/t"
+    cat.sql("CREATE TABLE t (k INT) PARTITIONED BY (region STRING)")
+    cat.sql("INSERT INTO t VALUES (1, '7')")
+    cat.read("t").schema("region").dataType shouldBe StringType
+    // typed by its dir value '7', region would cast 'x' to INT and fail
+    cat.sql("INSERT INTO t VALUES (2, 'x')")
+    cat.sql("INSERT INTO t VALUES (3, '7')")
+    def rows: Set[(Int, String)] = cat.read("t").collect()
+      .map(r => (r.getAs[Int]("k"), r.getAs[String]("region"))).toSet
+    rows shouldBe Set((1, "7"), (2, "x"), (3, "7"))
+    // the pin's readers: row-position reads (a positional DELETE, an
+    // UPDATE), the change feed, and compaction's fold read
+    val before = PartitionSnapshots.currentRootVersion(spark, t).get
+    cat.sql("DELETE FROM t WHERE k >= 3")
+    cat.sql("UPDATE t SET k = 20 WHERE k = 2")
+    rows shouldBe Set((1, "7"), (20, "x"))
+    val after = PartitionSnapshots.currentRootVersion(spark, t).get
+    PartitionSnapshots.changes(spark, t, before, after).collect()
+      .map(r => (r.getAs[Int]("k"), r.getAs[String]("region"),
+        r.getAs[String]("change_type"))).toSet shouldBe
+      Set((3, "7", "delete"), (2, "x", "delete"), (20, "x", "insert"))
+    PartitionSnapshots.compact(spark, t, minFiles = 1).keySet shouldBe
+      Set("region=7", "region=x")
+    rows shouldBe Set((1, "7"), (20, "x"))
+    cat.read("t").schema("region").dataType shouldBe StringType
+    // the folded files hold data columns only; the dir carries region
+    val state = PartitionSnapshots.rootManifest(spark, t).get("region=7")
+    spark.read.parquet(s"$t/region=7/_versions/$state").columns shouldBe
+      Array("k")
+  }
+
   test("snapshot and flat tables: INSERT routes through their own commit flavors") {
     val wh = tmpDir("sqlinsf")
     val cat = new Catalog(spark, wh)

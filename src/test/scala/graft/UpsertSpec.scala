@@ -398,6 +398,60 @@ class UpsertSpec extends SparkSpec {
       .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSet shouldBe
       Set((1, "a", 10), (2, "b2", 99), (3, "c", 30), (7, "g", 70))
   }
+
+  test("append and insert-only commits open no prior part; a file-scoped " +
+      "merge opens only its survivors' sidecars") {
+    import graft.sources.PartitionSnapshots
+    import org.apache.spark.sql.functions.col
+    val path = tmpDir("upsertcost") + "/t"
+    // p1: three appended parts of two files each (disjoint key ranges);
+    // p2: one part
+    def batch(lo: Int, part: String) = (lo until lo + 10)
+      .map(k => (k, part, k * 1.0)).toDF("k", "part", "v")
+      .repartitionByRange(2, col("k"))
+    Seq((0, "p1"), (10, "p1"), (20, "p1"), (100, "p2")).foreach {
+      case (lo, part) => Upsert.append(spark, path, batch(lo, part), Seq("part"))
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.opencount.impl", classOf[OpenCountingFs].getName)
+    conf.setBoolean("fs.opencount.impl.disable.cache", true)
+    val counted = s"opencount://$path"
+    /** The table's data files and sidecars that `op` opened, of those
+      * that existed before it ran. */
+    def priorOpened(op: => Unit): Set[String] = {
+      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+      val prior = try st.iterator().asScala.map(_.toString)
+        .filter(p => p.endsWith(".parquet") || p.endsWith("/_filestats"))
+        .toSet
+      finally st.close()
+      OpenCountingFs.opened.clear()
+      op
+      OpenCountingFs.opened.asScala
+        .map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath).toSet
+        .intersect(prior)
+    }
+    priorOpened(Upsert.append(spark, counted, batch(30, "p1"),
+      Seq("part"))) shouldBe empty
+    // new keys outside every recorded bound: the lookup prunes to nothing
+    priorOpened(Upsert.upsert(spark, counted, batch(200, "p1"), Seq("k"),
+      insertOnly = true, partitionCols = Seq("part"))) shouldBe empty
+    // key 3 lives in the first part's first file: that file rewrites, its
+    // sibling and every later part survive in place
+    val merged = priorOpened(Upsert.upsert(spark, counted,
+      Seq((3, "p1", -3.0)).toDF("k", "part", "v"), Seq("k"),
+      partitionCols = Seq("part")))
+    val parts = PartitionSnapshots.parseParts(
+      PartitionSnapshots.rootManifest(spark, path).get("part=p1")).map(_._1)
+    parts.head should startWith("v00000001/part-")
+    val survivorSidecars = parts.dropRight(1).map(b =>
+      s"$path/part=p1/_versions/${b.takeWhile(_ != '/')}/_filestats").toSet
+    val sidecars = merged.filter(_.endsWith("/_filestats"))
+    sidecars should not be empty
+    sidecars.subsetOf(survivorSidecars) shouldBe true
+    Upsert.read(spark, path).where(col("k") === 3).select("v").head()
+      .getDouble(0) shouldBe -3.0
+    Upsert.read(spark, path).count() shouldBe 60L
+  }
 }
 
 /** The local file system under the `opencount:` scheme, recording every
