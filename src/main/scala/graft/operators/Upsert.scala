@@ -323,19 +323,11 @@ object Upsert {
   /** [[read]] that answers None instead of throwing when the table is
     * absent, empty, or has no committed version yet. */
   def readOption(spark: SparkSession, path: String): Option[DataFrame] =
-    readTable(spark, path).map(
-      graft.sources.PartitionSnapshots.dropHidden(spark, path, _))
-
-  /** Best-effort read of an existing table; None when the dir is absent,
-    * no partition holds rows, or a flat dir holds no readable footers
-    * (e.g. an aborted empty write left only _SUCCESS behind — schema
-    * inference would throw). INTERNAL: manifested tables keep their
-    * hidden transform dir columns (the merge legs select them) — public
-    * callers go through [[readOption]], which strips them. */
-  private def readTable(spark: SparkSession, path: String): Option[DataFrame] =
     if (!tableExists(spark, path)) None
     else if (graft.sources.PartitionSnapshots.isManifested(spark, path))
-      graft.sources.PartitionSnapshots.readRawOption(spark, path)
+      graft.sources.PartitionSnapshots.readOption(spark, path)
+    // a flat dir with no readable footers (an aborted empty write left
+    // only _SUCCESS behind) would throw at schema inference
     else try Some(spark.read.parquet(path))
     catch { case _: org.apache.spark.sql.AnalysisException => None }
 
@@ -485,26 +477,14 @@ object Upsert {
             // only partitions whose bounds can contain a source key are
             // constructed and scanned for the conflict validation
             def matchedLeg(asOf: Long): DataFrame = {
-              val pred = PartitionSnapshots.pinnedMergeKeyField(
-                  spark, path, asOf, keys)
-                .flatMap(f => PartitionSnapshots.keyExclusion(
-                  spark, srcC, f.name, f.dataType,
-                  PartitionSnapshots.fieldAliases(f)))
-              val frame =
-                (pred, PartitionSnapshots.rootManifest(spark, path, asOf)) match {
-                  case (Some(p), Some(entries)) =>
-                    val stats = PartitionSnapshots.rootStats(spark, path, asOf)
-                    val kept = entries.keySet.filter(rel =>
-                      stats.get(rel).forall(ps => !p(ps)))
-                    if (kept.isEmpty) None
-                    else PartitionSnapshots.readPartitionsRaw(spark, path,
-                      kept, asOf)
-                  case _ => PartitionSnapshots.readRawOption(spark, path,
-                    asOf)
-                }
-              frame.map(_.join(srcC.select(keys.map(col): _*).distinct(),
+              val root = PartitionSnapshots.resolveRoot(spark, path, asOf)
+              PartitionSnapshots.scan(spark, root,
+                  PartitionSnapshots.keyPredicate(spark, root.schema,
+                    keys.filterNot(partitionCols.contains), srcC),
+                  hidden = true)
+                .map(_.join(srcC.select(keys.map(col): _*).distinct(),
                   keys, "left_semi")
-                .select(partitionCols.map(col): _*).distinct())
+                  .select(partitionCols.map(col): _*).distinct())
                 .getOrElse(own.limit(0))
             }
             // lookup at BOTH ends of the validation interval: the head
@@ -520,14 +500,11 @@ object Upsert {
               .distinct()
           }
         }
-        val tupleSegs = partitionSegments(partitionCols,
+        val tupleSegs = PartitionSnapshots.partitionSegments(partitionCols,
           orConflict(touchedDf.collect().toSeq))
-        val overlap = changed.filter { rel =>
-          val cols = PartitionSnapshots.relCols(rel)
-          if (!cols.forall(partitionCols.contains)) true // unprovable → conflict
-          else tupleSegs.exists(m => rel.split("/").toSeq.zip(cols)
-            .forall { case (seg, c) => m.get(c).contains(seg) })
-        }
+        val overlap = changed.filter(rel =>
+          !PartitionSnapshots.relCols(rel).forall(partitionCols.contains) ||
+            holdsTuple(rel, tupleSegs)) // unprovable → conflict
         if (overlap.nonEmpty)
           throw new CommitConflictException(
             s"upsertOptimistic: another writer changed " +
@@ -551,11 +528,6 @@ object Upsert {
                            audit: Option[DataFrame => DataFrame] = None,
                            branch: Option[String] = None): Unit = {
     import graft.sources.PartitionSnapshots
-    // a branch merge targets the BRANCH head's snapshot, never main
-    val branchHead: Option[Long] = branch.map(n =>
-      PartitionSnapshots.rootBranches(spark, path).getOrElse(n,
-        throw new IllegalArgumentException(
-          s"upsert: no branch '$n' at $path — createBranch first")))
     // zero-IO migration (a legacy flat or whole-table `_versions` table
     // gets its marker; nothing moves until each partition's first
     // commit) — and the one layout guard: the marker's partition columns
@@ -579,12 +551,16 @@ object Upsert {
     // frame cannot know about — computed once here at write time, hidden
     // again by every public read (no-op for untransformed tables)
     val srcT = PartitionSnapshots.applyTransforms(spark, path, src0)
-    // manifest of the target line (None before the table's first root
-    // commit) — drives the metadata-only existence probe, the
-    // stats-pruned key lookup, and the file-scoped planner
-    val base: Option[Map[String, String]] = branchHead match {
-      case Some(v) => PartitionSnapshots.rootManifest(spark, path, v)
-      case None => PartitionSnapshots.rootManifest(spark, path)
+    // the target line's root (a branch merge targets the BRANCH head,
+    // never main), resolved ONCE for the whole plan (before the table's
+    // first root commit: its on-disk states). Its manifest drives the
+    // metadata-only existence probe, the stats-pruned key lookup, and the
+    // file-scoped planner; `base` is None without a root
+    val root = PartitionSnapshots.resolveRoot(spark, path, branch = branch)
+    val base: Option[Map[String, String]] = root.version.map(_ => root.entries)
+    if (!root.entries.values.exists(PartitionSnapshots.stateHasData)) {
+      commitMerged(srcT, Set.empty)
+      return
     }
     // LAZY full-table frame: merely CONSTRUCTING a multi-path DataFrame
     // eagerly lists every data file (~2 s at 1k partitions, ~29 s at
@@ -592,19 +568,7 @@ object Upsert {
     // from metadata + pruned partition reads and never force this;
     // schema evolution, unpartitioned rewrites, and non-prunable keys
     // still do.
-    lazy val existing = branchHead match {
-      case Some(v) => PartitionSnapshots.readRawOption(spark, path, asOf = v)
-      case None => readTable(spark, path)
-    }
-    val tableIsEmpty = base match {
-      case Some(entries) =>
-        !entries.values.exists(PartitionSnapshots.stateHasData)
-      case None => existing.isEmpty
-    }
-    if (tableIsEmpty) {
-      commitMerged(srcT, Set.empty)
-      return
-    }
+    lazy val existing = PartitionSnapshots.scan(spark, root, hidden = true)
     // schema evolution must inspect and conform the real frame — it
     // forces the listing; every other path defers
     val aligned = if (evolveSchema) Some(align(existing.get, srcT)) else None
@@ -618,34 +582,21 @@ object Upsert {
     // serves. Falls back to the real frame when nothing is pinned.
     val targetSchema: org.apache.spark.sql.types.StructType =
       if (evolveSchema || base.isEmpty) target.schema
-      else PartitionSnapshots.mergeReadSchema(spark, path, branchHead,
-        src.schema, partitionCols).getOrElse(target.schema)
-    // an unpartitioned table rewrites its one partition whole: key
-    // pruning would only add the exclusion's key-collect job
-    val prunableKey =
-      if (partitionCols.isEmpty) None
-      else keys.find { k =>
-        !partitionCols.contains(k) &&
-          (targetSchema.find(_.name == k).map(_.dataType) match {
-            case Some(org.apache.spark.sql.types.ByteType |
-                      org.apache.spark.sql.types.ShortType |
-                      org.apache.spark.sql.types.IntegerType |
-                      org.apache.spark.sql.types.LongType |
-                      org.apache.spark.sql.types.FloatType |
-                      org.apache.spark.sql.types.DoubleType |
-                      org.apache.spark.sql.types.StringType) => true
-            case _ => false
-          })
-      }
+      else PartitionSnapshots.mergeReadSchema(spark, root, src.schema,
+        partitionCols).getOrElse(target.schema)
+    def emptyTarget: DataFrame = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], targetSchema)
     // computed ONCE; reused by the stats-pruned lookup here, the
     // insert-only anti-join, and the file-scoped planner below (the
     // shared exclusion builder runs small src aggregates + a bounded
-    // ≤100k distinct-key collect — see PartitionSnapshots.keyExclusion)
-    val keyPred: Option[
-        graft.sources.PartitionSnapshots.PartStats => Boolean] =
-      prunableKey.flatMap(kc => PartitionSnapshots.keyExclusion(
-        spark, src, kc, targetSchema(kc).dataType,
-        PartitionSnapshots.fieldAliases(targetSchema(kc))))
+    // ≤100k distinct-key collect — see PartitionSnapshots.keyExclusion).
+    // An unpartitioned table rewrites its one partition whole: key
+    // pruning would only add the exclusion's key-collect job. None also
+    // means all-NULL or non-ASCII keys.
+    val keyPred: Option[PartitionSnapshots.PartStats => Boolean] =
+      if (partitionCols.isEmpty) None
+      else PartitionSnapshots.keyPredicate(spark, Some(targetSchema),
+        keys.filterNot(partitionCols.contains), src)
     // STATS-PRUNED matched-key lookup: the semi/anti-join that finds
     // matched keys is the dominant cost of a small MERGE into a big
     // table (measured: ~29 s of a 29 s single-key merge at 65k files —
@@ -657,24 +608,10 @@ object Upsert {
     // strings), a partition with ABSENT stats is always kept, and a
     // pruned-to-nothing lookup just means a pure-insert batch (an
     // EMPTY schema-typed frame — never a full listing).
-    lazy val lookupTarget: DataFrame = (for {
-      entries <- base
-      pred <- keyPred
-    } yield {
-      val stats = PartitionSnapshots.rootStats(spark, path,
-        branchHead.getOrElse(-1L))
-      val kept = entries.keySet
-        .filter(rel => stats.get(rel).forall(ps => !pred(ps)))
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          targetSchema)
-      else PartitionSnapshots.readPartitionsRaw(spark, path, kept,
-        branchHead.getOrElse(-1L)).getOrElse(
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          targetSchema))
-    }).getOrElse(target)
+    lazy val lookupTarget: DataFrame = keyPred.filter(_ => base.nonEmpty)
+      .map(p => PartitionSnapshots.scan(spark, root, Some(p), hidden = true)
+        .getOrElse(emptyTarget))
+      .getOrElse(target)
     if (insertOnly && audit.isEmpty) {
       // WHEN NOT MATCHED INSERT is a fast APPEND: only the genuinely-new
       // keys' rows are staged and sealed as new version parts — no
@@ -693,15 +630,8 @@ object Upsert {
       }
       return
     }
-    // Timestamp partition values are formatted by the writer with a
-    // pattern Row.toString doesn't reproduce — reject them loudly instead
-    // of silently missing the touched partitions' on-disk dirs below.
-    // (Partition by the derived DATE instead, as the pipeline does.)
-    targetSchema.fields.filter(f => partitionCols.contains(f.name)).foreach { f =>
-      require(f.dataType != org.apache.spark.sql.types.TimestampType &&
-        f.dataType != org.apache.spark.sql.types.TimestampNTZType,
-        s"upsert: timestamp-typed partition column '${f.name}' is not supported")
-    }
+    PartitionSnapshots.requireNoTimestampPartitions("upsert", targetSchema,
+      partitionCols)
     def mkMerged(affected: DataFrame): DataFrame =
       if (insertOnly) affected.unionByName(src.join(affected, keys, "left_anti"))
       else src.unionByName(affected.join(src, keys, "left_anti"))
@@ -723,91 +653,62 @@ object Upsert {
         .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi")
         .select(partitionCols.map(col): _*).distinct())
       .distinct()
-    val tupleSegs = partitionSegments(partitionCols, touched.collect().toSeq)
+    val tupleSegs = PartitionSnapshots.partitionSegments(partitionCols,
+      touched.collect().toSeq)
     val touchedDirs = tupleSegs.map(m => partitionCols.map(m).mkString("/")).toSet
     // partitions under RETIRED specs (the table's partition spec was
     // evolved): a manifest rel whose own layout is a proper prefix of
-    // the current spec may hold matched keys — it is touched when its
-    // dir segments agree with some touched tuple on the rel's OWN
-    // columns. Its intersecting files rewrite (re-staged under the
-    // NEW spec — Iceberg's lazy migration); the rest survive in place.
+    // the current spec may hold matched keys. Its intersecting files
+    // rewrite (re-staged under the NEW spec — Iceberg's lazy
+    // migration); the rest survive in place.
     val legacyTouched: Set[String] = base.map(_.collect {
       case (rel, state) if state != "EMPTY" &&
         PartitionSnapshots.relCols(rel) != partitionCols &&
         PartitionSnapshots.relCols(rel).forall(partitionCols.contains) &&
-        tupleSegs.exists(m => rel.split("/").toSeq
-          .zip(PartitionSnapshots.relCols(rel))
-          .forall { case (seg, c) => m.get(c).contains(seg) }) => rel
+        holdsTuple(rel, tupleSegs) => rel
     }.toSet).getOrElse(Set.empty)
     val allTouched = touchedDirs ++ legacyTouched
     // FILE-SCOPED MERGE (Iceberg file-level rewrite): within each
     // touched partition only the files whose manifest-recorded key
     // bounds can contain a source key are read and rewritten; the
     // rest survive as file-scoped state tokens — their bytes, paths,
-    // and mtimes untouched. Engaged when a prunable non-partition
-    // key column exists — NUMERIC (interval + point-set tests,
-    // ulp-margin-safe) or STRING (the reference's sha-256 hex IDs:
-    // footer bounds are exact-or-widened and pure-ASCII bounds
-    // compare byte-identically on both sides) — and the commit
-    // isn't a WAP audit (which validates whole would-be snapshots).
-    // Falls back to the whole-partition rewrite otherwise. A table
-    // with retired-spec partitions ALWAYS routes through the
-    // path-explicit planner (a nothing-excluded predicate when the
-    // key is not prunable): old-spec rows are read from their own
-    // dirs and re-staged under the current spec, never left behind.
-    // prunableKey / keyPred are hoisted above `touched` (they also
-    // drive the stats-pruned matched-key lookup); keyPred = None
-    // with a prunable key present means all-NULL or non-ASCII keys
-    val fileScoped: Option[(Map[String, Seq[(String, Seq[String])]],
-                            Option[DataFrame])] =
-      (base, prunableKey) match {
-        case (Some(bm), Some(kc)) if audit.isEmpty =>
-          keyPred match {
-            case Some(pred) => Some(PartitionSnapshots.planFileScoped(
-              spark, path, bm, allTouched, pred, Some(targetSchema)))
-            case None if legacyTouched.nonEmpty =>
-              Some(PartitionSnapshots.planFileScoped(spark, path, bm,
-                allTouched, _ => false, Some(targetSchema)))
-            case None => None // all-NULL keys match nothing
-          }
-        case (Some(bm), _) if legacyTouched.nonEmpty =>
-          // nothing-excluded predicate: no survivors — the whole-
-          // partition rewrite, but read path-explicitly so retired-
-          // spec dirs never mix layouts in one scan
-          Some(PartitionSnapshots.planFileScoped(spark, path, bm,
-            allTouched, _ => false, Some(targetSchema)))
-        case _ => None
-      }
+    // and mtimes untouched. Engaged when the key predicate exists — a
+    // NUMERIC key (interval + point-set tests, ulp-margin-safe) or a
+    // STRING one (the reference's sha-256 hex IDs: footer bounds are
+    // exact-or-widened and pure-ASCII bounds compare byte-identically
+    // on both sides) — and the commit isn't a WAP audit (which
+    // validates whole would-be snapshots). Falls back to the
+    // whole-partition rewrite otherwise. A table with retired-spec
+    // partitions ALWAYS routes through the path-explicit planner (a
+    // nothing-excluded predicate without a usable key predicate):
+    // old-spec rows are read from their own dirs and re-staged under
+    // the current spec, never left behind.
+    val fileScoped = base.flatMap { bm =>
+      keyPred.filter(_ => audit.isEmpty)
+        .orElse(if (legacyTouched.nonEmpty) Some((_: Any) => false) else None)
+        .map(pred => PartitionSnapshots.planFileScoped(spark, path, bm,
+          allTouched, pred, Some(targetSchema)))
+    }
     fileScoped match {
       case Some((survivors, rewriteDf)) =>
-        commitMerged(mkMerged(rewriteDf.getOrElse(
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            targetSchema))), allTouched, survivors)
+        commitMerged(mkMerged(rewriteDf.getOrElse(emptyTarget)), allTouched,
+          survivors)
       case None =>
         commitMerged(mkMerged(target.join(broadcast(touched), partitionCols,
           "left_semi")), allTouched)
     }
   }
 
-  /** Each partition tuple of `rows` (values in `partitionCols` order) as
-    * column → on-disk `col=value` dir segment. Names go through the same
-    * escaping Spark's writer uses (ExternalCatalogUtils): NULL →
-    * __HIVE_DEFAULT_PARTITION__, and URL-escaped specials (space, ':',
-    * '%') match the on-disk name — a raw "$c=$v" would silently miss
-    * them and leave stale rows. */
-  private def partitionSegments(partitionCols: Seq[String],
-                                rows: Seq[org.apache.spark.sql.Row])
-      : Seq[Map[String, String]] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    rows.map { r =>
-      partitionCols.zip(r.toSeq).map { case (c, v) =>
-        val dirVal =
-          if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-          else ExternalCatalogUtils.escapePathName(v.toString)
-        c -> s"${ExternalCatalogUtils.escapePathName(c)}=$dirVal"
-      }.toMap
-    }
+  /** Whether manifest rel `rel` can hold a row of one of the partition
+    * tuples in `tuples` ([[PartitionSnapshots.partitionSegments]]): its
+    * dir segments agree with the tuple on the rel's OWN columns — an
+    * exact match for a current-spec rel, a prefix match for a retired-spec
+    * parent of a partition-spec evolution. */
+  private def holdsTuple(rel: String,
+                         tuples: Seq[Map[String, String]]): Boolean = {
+    val segs = rel.split("/").toSeq.zip(
+      graft.sources.PartitionSnapshots.relCols(rel))
+    tuples.exists(m => segs.forall { case (seg, c) => m.get(c).contains(seg) })
   }
 
   /** Migrate the table at `path` to the manifested layout keyed by
@@ -906,26 +807,13 @@ object Upsert {
                          branch: Option[String],
                          maxWaitMs: Long): Unit = {
     import graft.sources.PartitionSnapshots
-    // same guard as the rewrite path: later partition-value rendering
-    // (deleteKeys, upsert's touched-partition delete) cannot reproduce
-    // the writer's timestamp dir format — never let such a table exist
-    df.schema.fields.filter(f => partitionCols.contains(f.name)).foreach { f =>
-      require(f.dataType != org.apache.spark.sql.types.TimestampType &&
-        f.dataType != org.apache.spark.sql.types.TimestampNTZType,
-        s"append: timestamp-typed partition column '${f.name}' is not " +
-          "supported (partition by the derived DATE instead)")
-    }
+    // later partition-value rendering (deleteKeys, upsert's touched
+    // partitions) cannot name a timestamp dir — never let such a table exist
+    PartitionSnapshots.requireNoTimestampPartitions("append", df.schema,
+      partitionCols)
     if (df.isEmpty) return
     val token = acquireLockWaiting(spark, path, lockTtlMs, maxWaitMs)
     try {
-      // a branch append aligns against the BRANCH head's schema, never
-      // main's (mirrors upsertLocked's branch-merge read): a branch that
-      // evolved its schema beyond main must not have later appends
-      // rejected against — or silently re-pinned to — main's columns
-      val branchHead: Option[Long] = branch.map(n =>
-        PartitionSnapshots.rootBranches(spark, path).getOrElse(n,
-          throw new IllegalArgumentException(
-            s"append: no branch '$n' at $path — createBranch first")))
       prepareCommit(spark, path, partitionCols)
       val alreadyCommitted = txn.exists { case (appId, v) =>
         PartitionSnapshots.lastTxnVersion(spark, path,
@@ -942,16 +830,17 @@ object Upsert {
       // O(accumulated parts) PER micro-batch — measured O(n²) across a
       // commit-chain drill before this. The pinned union schema + spec
       // columns is exactly the shape readEntries serves; only pre-
-      // schema-pinning tables fall back to the real frame.
-      lazy val existing: Option[DataFrame] = branchHead match {
-        case Some(v) => PartitionSnapshots.readRawOption(spark, path,
-          asOf = v)
-        case None => readTable(spark, path)
-      }
+      // schema-pinning tables fall back to the real frame. A branch
+      // append aligns against the BRANCH head's schema, never
+      // main's (mirrors upsertLocked's branch-merge read): a branch that
+      // evolved its schema beyond main must not have later appends
+      // rejected against — or silently re-pinned to — main's columns
+      val root = PartitionSnapshots.resolveRoot(spark, path, branch = branch)
       val tableSchema: Option[org.apache.spark.sql.types.StructType] =
-        PartitionSnapshots.mergeReadSchema(spark, path, branchHead,
-            dfT.schema, partitionCols)
-          .orElse(existing.map(_.schema))
+        PartitionSnapshots.mergeReadSchema(spark, root, dfT.schema,
+            partitionCols)
+          .orElse(PartitionSnapshots.scan(spark, root, hidden = true)
+            .map(_.schema))
       val out = tableSchema match {
         case Some(ts) if evolveSchema =>
           // align() uses the target side only for its SCHEMA — an empty

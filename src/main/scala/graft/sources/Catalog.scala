@@ -304,6 +304,27 @@ final class Catalog(spark: SparkSession, warehouse: String) {
       s"$what: target must be a table name, got ${other.nodeName}")
   }
 
+  /** The SQL name a statement's table side answers to: its alias, else
+    * its own (last) name — an UNALIASED side is addressable by it, so
+    * clause conditions like `src.v < 0` resolve against it. */
+  private def aliasOf(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      dflt: String): String = p match {
+    case org.apache.spark.sql.catalyst.plans.logical
+        .SubqueryAlias(id, _) => id.name
+    case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
+      u.multipartIdentifier.last
+    case _ => dflt
+  }
+
+  private def conjuncts(
+      e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
+    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
+      conjuncts(l) ++ conjuncts(r)
+    case x => Seq(x)
+  }
+
   /** Route a parsed `INSERT INTO / INSERT OVERWRITE t [PARTITION (…)]
     * [(cols)] <query>` to the engine's commit machinery:
     *
@@ -834,26 +855,14 @@ final class Catalog(spark: SparkSession, warehouse: String) {
   private def runMergeSql(
       m: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable)
       : DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-    import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
-    import org.apache.spark.sql.catalyst.plans.logical.{DeleteAction, InsertStarAction, LogicalPlan, MergeAction, SubqueryAlias, UpdateStarAction}
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case SubqueryAlias(_, child) => strip(child)
-      case other => other
-    }
-    val targetName = strip(m.targetTable) match {
-      // multi-part names (the reference's `bronze.bronze_db.articles`)
-      // resolve by their final segment against THIS warehouse
-      case u: UnresolvedRelation => u.multipartIdentifier.last
-      case other => throw new IllegalArgumentException(
-        s"MERGE INTO: target must be a table name, got ${other.nodeName}")
-    }
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.EqualTo
+    import org.apache.spark.sql.catalyst.plans.logical.{DeleteAction, InsertStarAction, MergeAction, UpdateStarAction}
+    // multi-part names (the reference's `bronze.bronze_db.articles`)
+    // resolve by their final segment against THIS warehouse
+    val targetName = nameOfPlan(m.targetTable, "MERGE INTO")
     require(tableExists(targetName),
       s"MERGE INTO: no table '$targetName' in warehouse $warehouse")
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
     val rawKeys = conjuncts(m.mergeCondition).map {
       case EqualTo(l: UnresolvedAttribute, r: UnresolvedAttribute)
           if l.nameParts.last.equalsIgnoreCase(r.nameParts.last) =>
@@ -947,18 +956,11 @@ final class Catalog(spark: SparkSession, warehouse: String) {
   private def runGeneralMerge(
       m: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable,
       targetName: String, keys: Seq[String], pcols: Seq[String]): Unit = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.plans.logical.{DeleteAction, InsertAction, InsertStarAction, LogicalPlan, SubqueryAlias, UpdateAction, UpdateStarAction}
     import org.apache.spark.sql.functions.{col, expr, lit, when}
     import org.apache.spark.sql.types.{StructField, StructType}
     val path = tablePath(targetName)
-    // an UNALIASED table side is addressable by its own (last) name in
-    // SQL — clause conditions like `src.v < 0` must resolve against it
-    def aliasOf(p: LogicalPlan, dflt: String): String = p match {
-      case SubqueryAlias(id, _) => id.name
-      case u: UnresolvedRelation => u.multipartIdentifier.last
-      case _ => dflt
-    }
     def stripAlias(p: LogicalPlan): LogicalPlan = p match {
       case SubqueryAlias(_, child) => stripAlias(child)
       case other => other
@@ -1018,6 +1020,23 @@ final class Catalog(spark: SparkSession, warehouse: String) {
         case (other, _) => throw new IllegalArgumentException(
           s"MERGE INTO: unsupported not-matched action $other")
       }
+    // NOT MATCHED clauses see the source row alone. The fused outer join
+    // below would resolve a target reference there to the unmatched
+    // row's NULL target columns — refuse it instead of inserting NULL.
+    // A name that is neither (`current_date` parses as an attribute)
+    // is left to Spark's own resolution.
+    m.notMatchedActions.flatMap(a => a.condition.toSeq ++ (a match {
+      case InsertAction(_, as) => as.map(_.value)
+      case _ => Nil
+    })).flatMap(_.collect { case u: UnresolvedAttribute => u }).foreach { u =>
+      val parts = u.nameParts
+      val c = if (parts.size > 1 && parts.head.equalsIgnoreCase(sAlias))
+        parts(1) else parts.head
+      require(!(parts.size > 1 && parts.head.equalsIgnoreCase(tAlias)) &&
+        (srcField(c).isDefined || !tSchema.fieldNames.exists(_.equalsIgnoreCase(c))),
+        s"MERGE INTO: WHEN NOT MATCHED may reference only source columns; " +
+          s"'${u.sql}' is a column of target '$tAlias'")
+    }
     val bySourceActs: Seq[(String, Option[org.apache.spark.sql.catalyst.expressions.Expression], Char, Assigns)] =
       m.notMatchedBySourceActions.zipWithIndex.map {
         case (UpdateAction(c, as, _), i) => (s"u$i", c, 'u', Some(assignMap(as)))
@@ -1115,22 +1134,30 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     // provably holds no match, and the insert anti-join is unaffected —
     // key pruning keeps every possibly-matching row, so "no match in
     // the pruned frame" still means "no match anywhere").
-    val tgt = PartitionSnapshots.readWithRowPosPruned(spark, path, keys.head,
-      src.select(col(keys.head))).alias(tAlias)
+    // both target legs read ONE root: the statement classifies against
+    // a single snapshot
+    val root = PartitionSnapshots.resolveRoot(spark, path)
+    val tgt = PartitionSnapshots.rowPosScan(spark, root,
+      PartitionSnapshots.keyPredicate(spark, root.schema, Seq(keys.head),
+        src.select(col(keys.head)))).alias(tAlias)
     // The BY SOURCE leg is the one scan that needs rows BEYOND the
     // source keys — but only rows some clause condition could fire on.
     // When every clause carries a condition, compile their OR against
-    // the manifest bounds and scan only the admitting files
-    // ([[PartitionSnapshots.readWithRowPosWhere]]); an unconditional
-    // clause classifies every unmatched row, so only then is the full
-    // scan semantically required.
+    // the manifest bounds ([[PartitionSnapshots.condPossible]]) and scan
+    // only the admitting partitions and files: margin-safe, so rows in
+    // an excluded file could neither fire a clause nor be harmed by not
+    // being scanned. An unconditional clause classifies every unmatched
+    // row, so only then is the full scan semantically required.
     lazy val tgtBySource = {
       val conds = bySourceActs.map(_._2)
-      (if (conds.nonEmpty && conds.forall(_.isDefined))
-         PartitionSnapshots.readWithRowPosWhere(spark, path,
-           conds.flatten.reduce(
-             org.apache.spark.sql.catalyst.expressions.Or(_, _)))
-       else PartitionSnapshots.readWithRowPos(spark, path)).alias(tAlias)
+      val possible =
+        if (conds.isEmpty || conds.exists(_.isEmpty)) None
+        else root.schema.flatMap(PartitionSnapshots.condPossible(_,
+          conds.flatten.reduce(
+            org.apache.spark.sql.catalyst.expressions.Or(_, _))))
+      PartitionSnapshots.rowPosScan(spark, root,
+        possible.map(p => (st: PartitionSnapshots.PartStats) => !p(st)))
+        .alias(tAlias)
     }
     val joinCond = keys.map(k =>
       col(s"$sAlias.$k") === col(s"$tAlias.$k")).reduce(_ && _)
@@ -1169,7 +1196,17 @@ final class Catalog(spark: SparkSession, warehouse: String) {
             lit(guarded.head._1._1))) {
           case (acc, (a, g)) => acc.when(g && condCol(a._2), lit(a._1))
         }.otherwise(lit("keep"))
-        Some(src.join(tgt, joinCond, "left_outer")
+        val joined = src.join(tgt, joinCond, "left_outer")
+        // `hit` reads a NULL target key as "no match": sound only while
+        // the join is `===`, which never matches a NULL key (a null-safe
+        // `<=>` would classify a NULL-keyed matched pair as an insert)
+        assert(joined.queryExecution.analyzed.collectFirst {
+          case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+            j.condition
+        }.flatten.forall(_.find(_.isInstanceOf[
+          org.apache.spark.sql.catalyst.expressions.EqualNullSafe]).isEmpty),
+          "MERGE INTO: the fused hit marker needs a non-null-safe ON join")
+        Some(joined
           .withColumn("__graft_act", act)
           .where(col("__graft_act") =!= "keep")
           .select(posCols ++ Seq(col("__graft_act")) ++
@@ -1245,125 +1282,121 @@ final class Catalog(spark: SparkSession, warehouse: String) {
   private def runDeleteSql(
       d: org.apache.spark.sql.catalyst.plans.logical.DeleteFromTable)
       : DataFrame = {
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-    import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, In, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
-    import org.apache.spark.sql.functions.{col, explode, expr}
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case SubqueryAlias(_, child) => strip(child)
-      case other => other
-    }
-    val targetName = strip(d.table) match {
-      case u: UnresolvedRelation => u.multipartIdentifier.last
-      case other => throw new IllegalArgumentException(
-        s"DELETE FROM: target must be a table name, got ${other.nodeName}")
-    }
+    import org.apache.spark.sql.functions.{col, expr}
+    val targetName = nameOfPlan(d.table, "DELETE FROM")
     require(tableExists(targetName),
       s"DELETE FROM: no table '$targetName' in warehouse $warehouse")
     val path = manifested(targetName)
     val pcols = PartitionSnapshots.partitionCols(spark, path)
-    val tSchema = rowSchema(targetName)
-    def canon(c: String): Option[String] =
-      tSchema.fieldNames.find(_.equalsIgnoreCase(c))
-    // `col = lit` / `col IN (lits)` — the shapes with a cheaper-than-scan
-    // route; everything else goes through the positional-scan fallback
-    def keyedShape(e: Expression): Option[(String, Seq[Literal])] = e match {
-      case EqualTo(a: UnresolvedAttribute, l: Literal) =>
-        Some((a.nameParts.last, Seq(l)))
-      case EqualTo(l: Literal, a: UnresolvedAttribute) =>
-        Some((a.nameParts.last, Seq(l)))
-      case In(a: UnresolvedAttribute, vs)
-          if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        Some((a.nameParts.last, vs.map(_.asInstanceOf[Literal])))
-      case _ => None
-    }
-    // COERCION SAFETY: for a STRING column compared to a non-string
-    // literal, SQL coerces the COLUMN up (cast(k as double) = 5.0), so
-    // k='05' matches k = 5 — a keyed route built from the round-tripped
-    // literal '5' would silently miss it. Such shapes fall through to
-    // the positional route, whose full predicate is Spark's own.
-    def coercionSafe(c: String, lits: Seq[org.apache.spark.sql.catalyst.expressions.Literal]): Boolean =
-      tSchema(c).dataType != org.apache.spark.sql.types.StringType ||
-        lits.forall(_.dataType == org.apache.spark.sql.types.StringType)
-    keyedShape(d.condition) match {
-      case Some((c0, lits))
-          if lits.forall(_.value != null) && canon(c0).isDefined &&
-            coercionSafe(canon(c0).get, lits) =>
-        val c = canon(c0).get
-        // Literals re-render through their own SQL form (typed), then
-        // cast to the column's type — keeping ONLY values that survive
-        // the ROUND TRIP back to the literal's type: SQL equality
-        // coerces the column UP, so `int_col = 5.5` matches nothing,
-        // and a bare down-cast (5.5 → 5) would silently delete the
-        // wrong rows/partitions. The round trip is probed DRIVER-SIDE
-        // over the (bounded, literal) value list, and the key frame is
-        // rebuilt from the survivors alone — leaving the comparison
-        // cast in the frame's lineage would let constraint inference
-        // copy it onto the TABLE side of the delete's semi-join, where
-        // a narrow literal type (ANSI Decimal(2,1)) overflows on real
-        // column values. A literal failing the round trip matches
-        // nothing and is simply dropped.
-        val dt = tSchema(c).dataType
-        // INTEGRAL literal into an equal-or-wider INTEGRAL column is
-        // lossless by construction — it survives the round trip with its
-        // decimal rendering unchanged, so the common GDPR shape
-        // (`k IN (7, 11, 13)` against a BIGINT key) skips the probe
-        // query entirely. Anything narrowing or cross-family still pays
-        // the one planned probe below.
-        import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-        def rank(d: org.apache.spark.sql.types.DataType): Int = d match {
-          case ByteType => 1; case ShortType => 2
-          case IntegerType => 3; case LongType => 4; case _ => 99
-        }
-        val trivial = rank(dt) < 99 && lits.forall(l => rank(l.dataType) <= rank(dt))
-        val surviving: Seq[(String, String)] = if (trivial) {
-          lits.map(l => (l.sql, String.valueOf(l.value)))
-        } else {
-          val arr = lits.map(_.sql).mkString(", ")
-          // posexplode pairs each probe row with its literal by EMITTED
-          // index — zip-by-collect-order would silently delete the wrong
-          // keys if a multi-partition explode ever reordered rows
-          val probe = spark.sql(
-            s"""SELECT pos, try_cast(col AS ${dt.sql}) AS t,
-               |       try_cast(col AS ${dt.sql}) = col AS ok
-               |FROM (SELECT posexplode(array($arr)))""".stripMargin)
-            .collect() // `t = col` is SQL's own up-coercion: the round trip
-            .map(r => r.getInt(0) -> r).toMap
-          lits.zipWithIndex.collect {
-            case (l, i) if probe.get(i).exists(r =>
-              !r.isNullAt(1) && !r.isNullAt(2) && r.getBoolean(2)) =>
-              (l.sql, String.valueOf(probe(i).get(1)))
-          }
-        }
+    keyedPredicate(d.condition, rowSchema(targetName)) match {
+      case Some(kp) =>
+        // a literal failing the round trip matches nothing: dropped
+        val surviving = kp.surviving
         if (surviving.nonEmpty) {
-          if (pcols.contains(c)) {
+          if (pcols.contains(kp.col)) {
             // whole partitions: metadata-only drop, zero rows scanned —
             // dir values render from the TYPED value, like the writer's
             val vals = surviving.map(_._2).toSet
             PartitionSnapshots.dropPartitions(spark, path,
-              m => m.get(c).exists(vals.contains))
+              m => m.get(kp.col).exists(vals.contains))
           } else {
-            // equality-delete commit: stats-pruned, no file rewritten
-            val arr2 = surviving.map(_._1).mkString(", ")
+            // equality-delete commit: stats-pruned, no file rewritten.
+            // The key frame is rebuilt from the survivors alone — leaving
+            // the comparison cast in the frame's lineage would let
+            // constraint inference copy it onto the TABLE side of the
+            // delete's semi-join, where a narrow literal type (ANSI
+            // Decimal(2,1)) overflows on real column values
+            val arr = surviving.map(_._1).mkString(", ")
             PartitionSnapshots.deleteKeys(spark, path, spark.sql(
-              s"SELECT try_cast(o AS ${dt.sql}) AS `$c` " +
-                s"FROM (SELECT explode(array($arr2)) AS o)"))
+              s"SELECT try_cast(o AS ${kp.dt.sql}) AS `${kp.col}` " +
+                s"FROM (SELECT explode(array($arr)) AS o)"))
           }
         }
-      case _ =>
+      case None =>
         // arbitrary predicate: one column-pruned, MANIFEST-STATS-pruned
         // scan finds the doomed row positions; the commit is positional
         // — still no rewrite
-        val alias = aliasOf2(d.table, targetName)
         val doomed = prunedRowPosRead(targetName, Some(d.condition))
-          .alias(alias).where(expr(d.condition.sql))
+          .alias(aliasOf(d.table, targetName)).where(expr(d.condition.sql))
           .select(col("_pos_path"), col("_pos_ordinal"))
         PartitionSnapshots.deletePositions(spark, path, doomed)
     }
     read(targetName)
   }
 
+  /** A `col = lit` / `col IN (lits)` predicate the keyed routes (partition
+    * drop, equality delete, stats-pruned scan) can serve: the column's
+    * canonical name and type in the target's row schema, and the
+    * literals. */
+  private final class KeyedPredicate(
+      val col: String, val dt: DataType,
+      lits: Seq[org.apache.spark.sql.catalyst.expressions.Literal]) {
+    /** SQL's own round trip of each literal through the column's type,
+      * one row per literal: (pos, typed value t, whether t = the literal
+      * — SQL's up-coercion, so `int_col = 5.5` fails where a bare
+      * down-cast 5.5 → 5 would silently hit the wrong rows). posexplode
+      * pairs each row with its literal by EMITTED index. */
+    def probe: DataFrame = spark.sql(
+      s"""SELECT pos, try_cast(col AS ${dt.sql}) AS t,
+         |       try_cast(col AS ${dt.sql}) = col AS ok
+         |FROM (SELECT posexplode(array(${lits.map(_.sql).mkString(", ")})))"""
+        .stripMargin)
+
+    /** The literals that survive the round trip, as (SQL text, typed
+      * value), probed driver-side. An INTEGRAL literal into an
+      * equal-or-wider INTEGRAL column is lossless by construction, so the
+      * common GDPR shape (`k IN (7, 11, 13)` against a BIGINT key) skips
+      * the probe query. */
+    def surviving: Seq[(String, String)] = {
+      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+      def rank(d: DataType): Int = d match {
+        case ByteType => 1; case ShortType => 2
+        case IntegerType => 3; case LongType => 4; case _ => 99
+      }
+      if (rank(dt) < 99 && lits.forall(l => rank(l.dataType) <= rank(dt)))
+        lits.map(l => (l.sql, String.valueOf(l.value)))
+      else {
+        val rows = probe.collect().map(r => r.getInt(0) -> r).toMap
+        lits.zipWithIndex.collect {
+          case (l, i) if rows.get(i).exists(r =>
+              !r.isNullAt(1) && !r.isNullAt(2) && r.getBoolean(2)) =>
+            (l.sql, String.valueOf(rows(i).get(1)))
+        }
+      }
+    }
+
+    /** The surviving values as a one-column frame named `col`; the probe
+      * runs inside whatever job reads it. */
+    def keys: DataFrame = probe.where("ok").selectExpr(s"t AS `$col`")
+  }
+
+  /** `e` as a [[KeyedPredicate]] over `tSchema`: None for other shapes,
+    * NULL literals, unknown columns, and a STRING column compared to a
+    * non-string literal — SQL coerces the COLUMN up there
+    * (cast(k as double) = 5.0), so k='05' matches k = 5 and a keyed route
+    * built from the round-tripped literal '5' would silently miss it. */
+  private def keyedPredicate(
+      e: org.apache.spark.sql.catalyst.expressions.Expression,
+      tSchema: StructType): Option[KeyedPredicate] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, In, Literal}
+    import org.apache.spark.sql.types.StringType
+    val shape = e match {
+      case EqualTo(a: UnresolvedAttribute, l: Literal) => Some((a, Seq(l)))
+      case EqualTo(l: Literal, a: UnresolvedAttribute) => Some((a, Seq(l)))
+      case In(a: UnresolvedAttribute, vs)
+          if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
+        Some((a, vs.map(_.asInstanceOf[Literal])))
+      case _ => None
+    }
+    for {
+      (a, lits) <- shape
+      c <- tSchema.fieldNames.find(_.equalsIgnoreCase(a.nameParts.last))
+      dt = tSchema(c).dataType
+      if lits.forall(_.value != null) &&
+        (dt != StringType || lits.forall(_.dataType == StringType))
+    } yield new KeyedPredicate(c, dt, lits)
+  }
 
   /** Target ROW schema for the routed statements — metadata-only for
     * manifested tables ([[PartitionSnapshots.tableRowSchema]]: the
@@ -1376,69 +1409,25 @@ final class Catalog(spark: SparkSession, warehouse: String) {
       .getOrElse(read(targetName).schema)
   }
 
-  private def aliasOf2(
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      dflt: String): String = p match {
-    case org.apache.spark.sql.catalyst.plans.logical
-        .SubqueryAlias(id, _) => id.name
-    case _ => dflt
-  }
-
   /** The positional-statement scan, manifest-stats PRUNED when the
-    * predicate allows: if some CONJUNCT of `cond` is `col = lit` /
-    * `col IN (lits)` over a data column, the row-pos read is restricted
-    * to partitions whose recorded bounds can hold a literal that
-    * SURVIVES the round trip through the column's type (the DELETE
-    * router's coercion discipline — a non-surviving literal matches
-    * nothing, so pruning by survivors is conservative). The caller
-    * still applies its FULL predicate; pruning only restricts which
-    * partitions are constructed and listed — the difference between a
-    * point UPDATE/DELETE costing O(all files) and O(candidate
-    * partitions) on a 65k-file table. */
+    * predicate allows: if some CONJUNCT of `cond` is a
+    * [[KeyedPredicate]] over a data column, the row-pos read is
+    * restricted to partitions and files whose recorded bounds can hold a
+    * literal that SURVIVES the round trip through the column's type (a
+    * non-surviving literal matches nothing, so pruning by survivors is
+    * conservative). The caller still applies its FULL predicate;
+    * pruning only restricts which partitions are constructed and listed
+    * — the difference between a point UPDATE/DELETE costing O(all
+    * files) and O(candidate partitions) on a 65k-file table. */
   private def prunedRowPosRead(targetName: String,
       cond: Option[org.apache.spark.sql.catalyst.expressions.Expression])
       : DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, In, Literal}
     val path = tablePath(targetName)
     val tSchema = rowSchema(targetName)
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
-    def keyed(e: Expression): Option[(String, Seq[Literal])] = e match {
-      case EqualTo(a: UnresolvedAttribute, l: Literal) =>
-        Some((a.nameParts.last, Seq(l)))
-      case EqualTo(l: Literal, a: UnresolvedAttribute) =>
-        Some((a.nameParts.last, Seq(l)))
-      case In(a: UnresolvedAttribute, vs)
-          if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        Some((a.nameParts.last, vs.map(_.asInstanceOf[Literal])))
-      case _ => None
-    }
-    // same COERCION SAFETY rule as the DELETE router: a string column
-    // compared to a non-string literal coerces the COLUMN up, so bounds
-    // pruning by the round-tripped literal would drop matching rows
-    val hit = cond.toSeq.flatMap(conjuncts).flatMap(keyed(_).toSeq)
-      .collectFirst {
-        case (c0, lits) if lits.forall(_.value != null) &&
-          tSchema.fieldNames.exists(_.equalsIgnoreCase(c0)) &&
-          (tSchema(tSchema.fieldNames.find(_.equalsIgnoreCase(c0)).get)
-            .dataType != org.apache.spark.sql.types.StringType ||
-           lits.forall(_.dataType ==
-             org.apache.spark.sql.types.StringType)) =>
-          (tSchema.fieldNames.find(_.equalsIgnoreCase(c0)).get, lits)
-      }
-    hit match {
-      case Some((c, lits)) =>
-        val dt = tSchema(c).dataType
-        val arr = lits.map(_.sql).mkString(", ")
-        val keysDf = spark.sql(
-          s"""SELECT t AS `$c` FROM (
-             |  SELECT try_cast(col AS ${dt.sql}) AS t,
-             |         try_cast(col AS ${dt.sql}) = col AS ok
-             |  FROM (SELECT posexplode(array($arr)))) WHERE ok""".stripMargin)
-        PartitionSnapshots.readWithRowPosPruned(spark, path, c, keysDf)
+    cond.toSeq.flatMap(conjuncts).flatMap(keyedPredicate(_, tSchema))
+      .headOption match {
+      case Some(kp) =>
+        PartitionSnapshots.readWithRowPosPruned(spark, path, kp.col, kp.keys)
       case None => PartitionSnapshots.readWithRowPos(spark, path)
     }
   }
@@ -1461,18 +1450,9 @@ final class Catalog(spark: SparkSession, warehouse: String) {
   private def runUpdateSql(
       u: org.apache.spark.sql.catalyst.plans.logical.UpdateTable)
       : DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.functions.{col, expr, lit}
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case SubqueryAlias(_, child) => strip(child)
-      case other => other
-    }
-    val targetName = strip(u.table) match {
-      case r: UnresolvedRelation => r.multipartIdentifier.last
-      case other => throw new IllegalArgumentException(
-        s"UPDATE: target must be a table name, got ${other.nodeName}")
-    }
+    val targetName = nameOfPlan(u.table, "UPDATE")
     require(tableExists(targetName),
       s"UPDATE: no table '$targetName' in warehouse $warehouse")
     val path = manifested(targetName)
@@ -1492,8 +1472,8 @@ final class Catalog(spark: SparkSession, warehouse: String) {
         }
         name -> expr(a.value.sql).cast(tSchema(name).dataType)
       }.toMap
-    val alias = aliasOf2(u.table, targetName)
-    val pos = prunedRowPosRead(targetName, u.condition).alias(alias)
+    val pos = prunedRowPosRead(targetName, u.condition)
+      .alias(aliasOf(u.table, targetName))
     // ONE materialized scan of the affected rows (row identity + data
     // columns together) — the doomed-position and replacement legs both
     // derive from it; its plan reads files the commit will suppress

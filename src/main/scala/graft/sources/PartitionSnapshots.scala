@@ -44,8 +44,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * root manifest below is what makes the commit atomic across partitions.
   *
   * Migration from a flat hive layout moves NOTHING: writing the marker
-  * file is the whole migration. Flat partition files serve as an implicit
-  * version 0 through `resolvedDataPath`'s fallback chain; the first real
+  * file is the whole migration. Until the table's first root commit, its
+  * on-disk partition states ([[scanStates]]: each partition's committed
+  * slot, else its newest servable slot, else its flat files — the
+  * implicit version 0) stand in for the root manifest, and every read
+  * serves them through the same scan; the first real
   * commit to a partition supersedes them with a published snapshot (the
   * pointer swap is the only visible transition — no rename window, no
   * per-file move a racing reader could half-see), and the flat files are
@@ -89,9 +92,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  2. **Listing-free reads.** Resolving a read is one pointer + at most
   *     [[RebaseEvery]] small manifest files — no per-partition directory
   *     walk — the O(1) metadata path an object store with 30 000
-  *     partitions needs. The directory-walk path remains only as the
-  *     fallback for tables whose root manifest has not been written yet
-  *     (pre-upgrade commits).
+  *     partitions needs. Every read resolves its [[Root]] once and serves
+  *     it through one [[scan]]; only a table with no root yet walks its
+  *     directories, for the on-disk states above.
   *
   * Commit METADATA is O(touched), not O(partitions): most commits write
   * a DELTA manifest holding only the touched partitions' entries plus
@@ -210,18 +213,6 @@ object PartitionSnapshots {
       out
     }
 
-  /** Commit-phase profiler, enabled by GRAFT_COMMIT_PROFILE=1 — prints
-    * one line per commit phase so drills can attribute commit latency
-    * (zero overhead when unset). */
-  private[graft] def phase[A](label: String)(f: => A): A =
-    if (!sys.env.contains("GRAFT_COMMIT_PROFILE")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[commit-phase] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** The ONE copy of the deepest-first rule for per-partition ops whose
     * RELS may NEST (a retired-spec dir parenting new-spec dirs after
     * partition-spec evolution): rels grouped by path depth, DEEPEST
@@ -304,8 +295,9 @@ object PartitionSnapshots {
   private[graft] def createRoot(spark: SparkSession, table: String,
                                 schema: org.apache.spark.sql.types.StructType,
                                 cols: Seq[String]): Unit = {
-    if (currentRootVersion(spark, table).isEmpty)
-      publishRoot(spark, table, Map.empty, Map.empty,
+    val root = resolveRoot(spark, table)
+    if (root.version.isEmpty)
+      publishRoot(spark, table, root, Map.empty, Map.empty,
         graft.operators.Upsert.DefaultRetainVersions, Some(schema))
     ensureManifested(spark, table, cols)
   }
@@ -555,6 +547,41 @@ object PartitionSnapshots {
         .unescapePathName(seg.substring(0, seg.indexOf('=')))
     }
 
+  /** Each partition tuple of `rows` (values in `cols` order) as column →
+    * on-disk `col=value` dir segment. Names go through the same escaping
+    * Spark's writer uses (ExternalCatalogUtils): NULL →
+    * __HIVE_DEFAULT_PARTITION__, and URL-escaped specials (space, ':',
+    * '%') match the on-disk name — a raw "$c=$v" would silently miss
+    * them and leave stale rows. */
+  private[graft] def partitionSegments(cols: Seq[String],
+                                       rows: Seq[org.apache.spark.sql.Row])
+      : Seq[Map[String, String]] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    rows.map { r =>
+      cols.zip(r.toSeq).map { case (c, v) =>
+        val dirVal =
+          if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+          else ExternalCatalogUtils.escapePathName(v.toString)
+        c -> s"${ExternalCatalogUtils.escapePathName(c)}=$dirVal"
+      }.toMap
+    }
+  }
+
+  /** Refuse timestamp-typed partition columns among `cols` of `schema`:
+    * the writer formats their dir values with a pattern `Row.toString`
+    * does not reproduce, so [[partitionSegments]] would name a dir that
+    * is not on disk and miss the touched partitions. */
+  private[graft] def requireNoTimestampPartitions(what: String,
+      schema: org.apache.spark.sql.types.StructType, cols: Seq[String])
+      : Unit = {
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    schema.fields.filter(f => cols.contains(f.name)).foreach { f =>
+      require(f.dataType != TimestampType && f.dataType != TimestampNTZType,
+        s"$what: timestamp-typed partition column '${f.name}' is not " +
+          "supported (partition by the derived DATE instead)")
+    }
+  }
+
   private def hidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".")
 
@@ -610,37 +637,12 @@ object PartitionSnapshots {
     Snapshots.allVersionDirs(spark, pt).reverse
       .find(v => !isPendingAudit(spark, pt, v))
 
-  /** The COMPLETE data directory for one partition, or None when the
-    * partition holds no rows (dropped / empty version). Fallback chain:
-    *   1. the partition's committed snapshot (pointer, else newest with
-    *      _SUCCESS — [[Snapshots.currentVersion]]'s own fallback),
-    *   2. a complete-but-unpublished version slot (crash between the
-    *      whole-dir rename into the slot and the pointer swap; bounded
-    *      staleness, never partial — the [[Snapshots]] staging contract;
-    *      slots still awaiting their write-audit-publish verdict are
-    *      excluded — rejected-in-flight data must never serve),
-    *   3. the flat hive files themselves (the implicit v0 of a migrated
-    *      table that has not been committed to yet). */
-  private def resolvedDataPath(spark: SparkSession, table: String,
-                               rel: String): Option[String] = {
-    val pt = relPath(table, rel)
-    Snapshots.currentVersion(spark, pt)
-      .orElse(latestServableSlot(spark, pt)) match {
-      case Some(v) =>
-        val vp = Snapshots.versionPath(pt, v)
-        if (hasDataFiles(spark, new Path(vp))) Some(vp) else None
-      case None =>
-        if (hasDataFiles(spark, new Path(pt))) Some(pt) else None
-    }
-  }
-
   /** Read the table as one consistent snapshot: the current root manifest
     * names every partition's pinned state and the scan touches exactly
     * those immutable dirs (time travel: pass `asOf` = a [[rootVersions]]
     * entry). Partition columns are recovered from the `k=v` path segments
-    * via `basePath`, exactly as a flat hive read types them. Tables from
-    * before the root-manifest upgrade fall back to the per-partition
-    * directory walk. */
+    * via `basePath`, exactly as a flat hive read types them. A table with
+    * no root yet serves its on-disk partition states. */
   def read(spark: SparkSession, table: String, asOf: Long = -1L): DataFrame =
     readOption(spark, table, asOf).getOrElse(
       throw new IllegalArgumentException(
@@ -651,28 +653,7 @@ object PartitionSnapshots {
     * partitions are invisible to queries). */
   def readOption(spark: SparkSession, table: String,
                  asOf: Long = -1L): Option[DataFrame] =
-    readRawOption(spark, table, asOf).map(dropHidden(spark, table, _))
-
-  /** [[readOption]] KEEPING hidden transform dir columns — the merge
-    * legs and deleteKeys need them to compute touched partitions. */
-  private[graft] def readRawOption(spark: SparkSession, table: String,
-                                   asOf: Long = -1L): Option[DataFrame] = {
-    if (!isManifested(spark, table)) return None
-    rootManifest(spark, table, asOf) match {
-      case Some(entries) =>
-        val rv = if (asOf > 0) asOf
-          else currentRootVersion(spark, table).get
-        readEntries(spark, table, entries, pinnedSchema(spark, table, rv),
-          stats = rootStats(spark, table, rv))
-      case None =>
-        require(asOf <= 0, s"no root manifest at $table to time-travel")
-        val cols = partitionCols(spark, table)
-        val paths = partitionDirs(spark, table, cols.size)
-          .flatMap(rel => resolvedDataPath(spark, table, rel))
-        if (paths.isEmpty) None
-        else Some(spark.read.option("basePath", table).parquet(paths: _*))
-    }
-  }
+    scan(spark, resolveRoot(spark, table, asOf))
 
   /** Publish a BASELINE root manifest of the table's current on-disk
     * partition states without touching any data file — the metadata-only
@@ -686,36 +667,18 @@ object PartitionSnapshots {
                            graft.operators.Upsert.DefaultRetainVersions): Long = {
     require(isManifested(spark, table),
       s"ensureRootManifest: $table is not a manifested table")
-    currentRootVersion(spark, table).getOrElse {
-      val entries = scanStates(spark, table, partitionCols(spark, table))
-      publishRoot(spark, table, entries, entries,
-        math.max(1, retainVersions))
-      currentRootVersion(spark, table).get
-    }
+    val root = resolveRoot(spark, table)
+    root.version.getOrElse(publishRoot(spark, table, root, root.entries,
+      root.entries, math.max(1, retainVersions)))
   }
 
   /** Read ONLY the given partitions of a root state — the incremental
     * export mirror's per-partition resolver: same delete-aware,
     * layout-grouped read as [[read]], restricted to `rels`. None when
     * none of them holds rows. */
-  /** [[readPartitions]] KEEPING hidden transform dir columns — the
-    * merge's stats-pruned matched-key lookup selects them. */
-  private[graft] def readPartitionsRaw(spark: SparkSession, table: String,
-                                       rels: Set[String],
-                                       asOf: Long = -1L): Option[DataFrame] =
-    rootManifest(spark, table, asOf).flatMap { entries =>
-      val rv = if (asOf > 0) asOf else currentRootVersion(spark, table).get
-      readEntries(spark, table, entries.view.filterKeys(rels).toMap,
-        pinnedSchema(spark, table, rv), stats = rootStats(spark, table, rv))
-    }
-
   def readPartitions(spark: SparkSession, table: String, rels: Set[String],
                      asOf: Long = -1L): Option[DataFrame] =
-    rootManifest(spark, table, asOf).flatMap { entries =>
-      val rv = if (asOf > 0) asOf else currentRootVersion(spark, table).get
-      readEntries(spark, table, entries.view.filterKeys(rels).toMap,
-        pinnedSchema(spark, table, rv), stats = rootStats(spark, table, rv))
-    }.map(dropHidden(spark, table, _))
+    scan(spark, resolveRoot(spark, table, asOf).only(rels))
 
   /** Committed root-manifest versions, ascending — each is a whole-table
     * snapshot [[read]] can pin with `asOf`. Includes branch-staged
@@ -797,16 +760,105 @@ object PartitionSnapshots {
     * hops. */
   def rootManifest(spark: SparkSession, table: String,
                    asOf: Long = -1L): Option[Map[String, String]] = {
-    val rt = s"$table/$RootDir"
-    val v =
-      if (asOf > 0) {
-        require(Snapshots.versions(spark, rt).contains(asOf),
-          s"root manifest v$asOf does not exist at $table " +
-            s"(have ${Snapshots.versions(spark, rt)})")
-        Some(asOf)
-      } else currentRootVersion(spark, table)
-    v.map(resolveManifest(spark, rt, _))
+    val root = resolveRoot(spark, table, asOf)
+    root.version.map(_ => root.entries)
   }
+
+  /** One resolved root — the snapshot a read serves, resolved ONCE: its
+    * version (None before the table's first root commit), the folded
+    * (partition → state) entries with their footer stats, and the schema
+    * pinned in the same slot, so entries, stats and schema always
+    * describe one commit. Without a root, a manifested table's entries
+    * are its on-disk partition states ([[scanStates]]), with no stats and
+    * no pinned schema. Each part is read on first use. */
+  private[graft] final class Root(spark: SparkSession, val table: String,
+      val version: Option[Long],
+      resolve: () => Map[String, (String, Option[String])]) {
+    /** rel → (state, encoded stats), as the manifest carries them. */
+    private[PartitionSnapshots] lazy val states = resolve()
+    lazy val entries: Map[String, String] =
+      states.map { case (rel, (st, _)) => rel -> st }
+    lazy val stats: Map[String, PartStats] =
+      if (version.isEmpty) Map.empty // on-disk states carry none: no walk
+      else states.collect { case (rel, (_, Some(s))) => rel -> decodeStats(s) }
+    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+      version.flatMap(pinnedSchema(spark, table, _))
+    /** This root restricted to the partitions `rels`. */
+    def only(rels: Set[String]): Root = new Root(spark, table, version,
+      () => states.view.filterKeys(rels).toMap)
+  }
+
+  /** The root at version `v`, or the on-disk states for None (nothing,
+    * for a table that is not manifested). */
+  private def rootAt(spark: SparkSession, table: String,
+                     v: Option[Long]): Root =
+    new Root(spark, table, v, () => v match {
+      case Some(rv) => resolveManifestFull(spark, s"$table/$RootDir", rv)
+      case None =>
+        if (!isManifested(spark, table)) Map.empty
+        else scanStates(spark, table, partitionCols(spark, table))
+          .map { case (rel, st) => rel -> (st, None) }
+    })
+
+  /** Resolve the root a read or commit works from: `branch`'s head when
+    * given, else root version `asOf` (a missing one throws, as
+    * [[Snapshots.read]] does), else the version the main pointer serves.
+    * Tag reads pass their tagged version as `asOf`. */
+  private[graft] def resolveRoot(spark: SparkSession, table: String,
+                                 asOf: Long = -1L,
+                                 branch: Option[String] = None): Root =
+    branch match {
+      case Some(n) => rootAt(spark, table, Some(branchRef(spark, table, n)
+        .getOrElse(throw new IllegalArgumentException(
+          s"no branch '$n' at $table — createBranch first"))._1))
+      case None if asOf > 0 =>
+        val have = Snapshots.versions(spark, s"$table/$RootDir")
+        require(have.contains(asOf),
+          s"root manifest v$asOf does not exist at $table (have $have)")
+        rootAt(spark, table, Some(asOf))
+      case None => rootAt(spark, table, currentRootVersion(spark, table))
+    }
+
+  /** THE manifested read: `root`'s entries served through [[readEntries]]
+    * under its pinned schema, with its stats as the planner's size hints.
+    * `excluded` drops every partition whose recorded stats prove it free
+    * of the rows the caller wants, and with `files` narrows the survivors
+    * to their candidate files through the `_filestats` sidecars
+    * ([[filePruneEntries]]); the caller's own predicate still applies in
+    * full, so pruning only skips IO. `rowPos` attaches each row's file and
+    * in-file ordinal; `hidden` keeps the hidden transform dir columns the
+    * merge legs select; `pinned = false` reads raw (footer-inferred
+    * schema, no size hints). None when no kept partition holds rows. */
+  private[graft] def scan(spark: SparkSession, root: Root,
+                          excluded: Option[PartStats => Boolean] = None,
+                          files: Boolean = false, rowPos: Boolean = false,
+                          hidden: Boolean = false, pinned: Boolean = true)
+      : Option[DataFrame] = {
+    val kept = excluded.fold(root.entries) { p =>
+      val rels = root.entries.filter { case (rel, _) =>
+        root.stats.get(rel).forall(!p(_)) }
+      if (files) filePruneEntries(spark, root.table, rels, p) else rels
+    }
+    readEntries(spark, root.table, kept, if (pinned) root.schema else None,
+      rowPos, if (pinned) root.stats else Map.empty)
+      .map(df => if (hidden) df else dropHidden(spark, root.table, df))
+  }
+
+  /** The positional statements' read: [[scan]] with row positions,
+    * partition- and file-pruned by `excluded`; a read that prunes to
+    * nothing is an empty frame of the same shape, so the caller's plan
+    * stays well-typed. */
+  private[graft] def rowPosScan(spark: SparkSession, root: Root,
+                                excluded: Option[PartStats => Boolean])
+      : DataFrame =
+    scan(spark, root, excluded, files = true, rowPos = true).getOrElse {
+      import org.apache.spark.sql.types._
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(rowSchema(spark, root).map(_.fields.toSeq).getOrElse(Nil) ++
+          Seq(StructField("_pos_path", StringType),
+            StructField("_pos_ordinal", LongType))))
+    }
 
   private def readText(spark: SparkSession, p: Path): String = {
     val in = fs(spark, p).open(p)
@@ -1073,14 +1125,25 @@ object PartitionSnapshots {
     }
   }
 
-  /** The first merge-key column the pinned schema can type for
-    * exclusion-predicate building — the prunable-key probe shared by
-    * callers that have only the table path + key names. */
-  private[graft] def pinnedMergeKeyField(spark: SparkSession, table: String,
-                                         v: Long, keys: Seq[String])
-      : Option[org.apache.spark.sql.types.StructField] =
-    pinnedSchema(spark, table, v).flatMap(pinned =>
-      keys.flatMap(c => pinned.fields.find(_.name == c)).headOption)
+  /** THE key predicate of a keyed lookup — the merge's matched-key
+    * lookup and file-scoped plan, deleteKeys' touched-partition scan,
+    * the positional statements' scans: the first of `keys` that `schema`
+    * types as a prunable column, tested through [[keyExclusion]] against
+    * `keysDf`'s values under that column's aliases. None without such a
+    * column, or when the values cannot prune. Partition columns carry no
+    * file bounds, so callers leave them out of `keys`. */
+  private[graft] def keyPredicate(spark: SparkSession,
+      schema: Option[org.apache.spark.sql.types.StructType],
+      keys: Seq[String], keysDf: DataFrame): Option[PartStats => Boolean] = {
+    import org.apache.spark.sql.types._
+    schema.flatMap(st => keys.flatMap(k => st.find(_.name == k)).find(f =>
+      f.dataType match {
+        case StringType | ByteType | ShortType | IntegerType | LongType |
+             FloatType | DoubleType => true
+        case _ => false
+      })).flatMap(f =>
+      keyExclusion(spark, keysDf, f.name, f.dataType, fieldAliases(f)))
+  }
 
   /** Does this state string name ANY live data (a non-EMPTY part)? The
     * metadata-only table-existence probe the merge path uses instead of
@@ -1093,14 +1156,12 @@ object PartitionSnapshots {
     * union schema (data columns) + promoted spec columns + the partition
     * columns as `srcSchema` types them. None when no schema is pinned
     * (pre-schema-pinning tables fall back to the real frame). */
-  private[graft] def mergeReadSchema(spark: SparkSession, table: String,
-                                     branchHead: Option[Long],
+  private[graft] def mergeReadSchema(spark: SparkSession, root: Root,
                                      srcSchema: org.apache.spark.sql.types.StructType,
                                      partitionCols: Seq[String])
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val rv = branchHead.orElse(currentRootVersion(spark, table))
-    rv.flatMap(v => pinnedSchema(spark, table, v)).flatMap { pinned =>
-      val promoted = promotedSpecCols(spark, table)
+      : Option[org.apache.spark.sql.types.StructType] =
+    root.schema.flatMap { pinned =>
+      val promoted = promotedSpecCols(spark, root.table)
         .filterNot(f => pinned.fieldNames.contains(f.name))
         .filterNot(f => partitionCols.contains(f.name))
       val pFields = partitionCols.map(c => srcSchema.fields.find(_.name == c))
@@ -1115,7 +1176,6 @@ object PartitionSnapshots {
         pinned.fields.filterNot(f => partitionCols.contains(f.name)) ++
           promoted ++ pFields.flatten))
     }
-  }
 
   /** Single-part view of a state (the common case): its FIRST part's
     * base and delete refs. Callers that must handle append unions use
@@ -1133,6 +1193,21 @@ object PartitionSnapshots {
       case v     => Some(s"${relPath(table, rel)}/$VersionsDir/$v")
     }
 
+  /** Schema of a delete-ref file, memoized per (path, dir mtime): a bare
+    * `spark.read.parquet` runs a footer-inference JOB per call, and a
+    * stacked-refs read re-applies the same immutable refs once per scan —
+    * measured at 9 inference jobs in one MERGE+DELETE statement. Delete
+    * dirs are written once under a claimed slot; the mtime key makes a
+    * recreated table at a reused path miss rather than serve stale
+    * schemas. Bounded: one entry per path — keyed on path alone with the
+    * mtime stored in the VALUE, so a path whose dir mtime moves replaces
+    * its old entry instead of accumulating one per (path, mtime) forever
+    * (a long-lived session touching many delete refs would otherwise
+    * leak driver memory one stale schema at a time). */
+  private val deleteSchemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String,
+      (Long, org.apache.spark.sql.types.StructType)]
+
   /** Apply ONE pending delete ref to a scan-rooted DataFrame — the
     * merge-on-read step shared by every delete-aware read. Equality ids
     * (`dNNNNNNNN`) anti-join on the delete file's key columns (Iceberg
@@ -1141,22 +1216,6 @@ object PartitionSnapshots {
     * `_metadata` columns (Iceberg v2 position deletes).
     * `df` must sit directly on the parquet scan (projections are fine;
     * joins/unions would lose `_metadata`), which every caller satisfies. */
-  /** Schema of a delete-ref file, memoized per (path, dir mtime): a bare
-    * `spark.read.parquet` runs a footer-inference JOB per call, and a
-    * stacked-refs read re-applies the same immutable refs once per scan —
-    * measured at 9 inference jobs in one MERGE+DELETE statement. Delete
-    * dirs are written once under a claimed slot; the mtime key makes a
-    * recreated table at a reused path miss rather than serve stale
-    * schemas. */
-  /** Bounded: one entry per path — keyed on path alone with the mtime
-    * stored in the VALUE, so a path whose dir mtime moves replaces its
-    * old entry instead of accumulating one per (path, mtime) forever
-    * (a long-lived session touching many delete refs would otherwise
-    * leak driver memory one stale schema at a time). */
-  private val deleteSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Long, org.apache.spark.sql.types.StructType)]
-
   private def applyDeleteRef(spark: SparkSession, table: String,
                              df: DataFrame, id: String,
                              aliasOf: Map[String, String] = Map.empty)
@@ -1373,18 +1432,21 @@ object PartitionSnapshots {
     * the handle [[deletePositions]] consumes: filter this frame to the
     * rows to remove, then hand the two columns back. Already-deleted
     * positions never appear (the read is merge-on-read like any other). */
-  def readWithRowPos(spark: SparkSession, table: String): DataFrame = {
-    require(isManifested(spark, table),
-      s"readWithRowPos: $table is not a manifested table")
-    val entries = rootManifest(spark, table).getOrElse(
-      throw new IllegalArgumentException(
-        s"readWithRowPos: no committed root manifest at $table"))
-    val rv = currentRootVersion(spark, table).get
-    readEntries(spark, table, entries, pinnedSchema(spark, table, rv),
-      rowPos = true, stats = rootStats(spark, table, rv))
-      .map(dropHidden(spark, table, _)).getOrElse(
-      throw new IllegalArgumentException(
+  def readWithRowPos(spark: SparkSession, table: String): DataFrame =
+    scan(spark, rowPosRoot(spark, table, "readWithRowPos"), rowPos = true)
+      .getOrElse(throw new IllegalArgumentException(
         s"readWithRowPos: no partition of $table holds rows"))
+
+  /** The current root of a table the positional reads serve: refused
+    * unless the table is manifested and has a committed root. */
+  private def rowPosRoot(spark: SparkSession, table: String,
+                         what: String): Root = {
+    require(isManifested(spark, table),
+      s"$what: $table is not a manifested table")
+    val root = resolveRoot(spark, table)
+    require(root.version.nonEmpty,
+      s"$what: no committed root manifest at $table")
+    root
   }
 
   /** The full ROW schema of a manifested table WITHOUT constructing the
@@ -1399,28 +1461,30 @@ object PartitionSnapshots {
     * zero file listings. None when no schema is pinned (pre-upgrade
     * tables fall back to the real frame). */
   private[graft] def tableRowSchema(spark: SparkSession, table: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    import org.apache.spark.sql.types._
-    val rv = currentRootVersion(spark, table).getOrElse(return None)
-    val pinned = pinnedSchema(spark, table, rv).getOrElse(return None)
-    // hidden transform dir columns (e.g. k__bucket4) are part of the
-    // SPEC but never of the row schema — every read frame strips them
-    // via [[dropHidden]]; including them here would make routed
-    // UPDATE/MERGE select columns the frame lacks
-    val hiddenNames = specTransforms(spark, table).map(_.name).toSet
-    val promoted = promotedSpecCols(spark, table)
-      .filterNot(f => pinned.fieldNames.contains(f.name))
-      .filterNot(f => hiddenNames.contains(f.name))
-    val rels = rootManifest(spark, table).get.keys.toSeq
-    // a pinned partition column (a DDL-declared type, see
-    // [[createRoot]]) keeps its pinned type, as [[groupScan]] reads it
-    val pcols = inferPcolFields(rels,
-      partitionCols(spark, table).filterNot(hiddenNames.contains))
-      .map(f => pinned.find(_.name == f.name).getOrElse(f))
-    Some(StructType(
-      pinned.fields.filterNot(f => pcols.exists(_.name == f.name)) ++
-        promoted.filterNot(f => pcols.exists(_.name == f.name)) ++ pcols))
-  }
+      : Option[org.apache.spark.sql.types.StructType] =
+    rowSchema(spark, resolveRoot(spark, table))
+
+  /** [[tableRowSchema]] of a resolved root. */
+  private[graft] def rowSchema(spark: SparkSession, root: Root)
+      : Option[org.apache.spark.sql.types.StructType] =
+    root.schema.map { pinned =>
+      // hidden transform dir columns (e.g. k__bucket4) are part of the
+      // SPEC but never of the row schema — every read frame strips them
+      // via [[dropHidden]]; including them here would make routed
+      // UPDATE/MERGE select columns the frame lacks
+      val hiddenNames = specTransforms(spark, root.table).map(_.name).toSet
+      val promoted = promotedSpecCols(spark, root.table)
+        .filterNot(f => pinned.fieldNames.contains(f.name))
+        .filterNot(f => hiddenNames.contains(f.name))
+      // a pinned partition column (a DDL-declared type, see
+      // [[createRoot]]) keeps its pinned type, as [[groupScan]] reads it
+      val pcols = inferPcolFields(root.entries.keys.toSeq,
+        partitionCols(spark, root.table).filterNot(hiddenNames.contains))
+        .map(f => pinned.find(_.name == f.name).getOrElse(f))
+      org.apache.spark.sql.types.StructType(
+        pinned.fields.filterNot(f => pcols.exists(_.name == f.name)) ++
+          promoted.filterNot(f => pcols.exists(_.name == f.name)) ++ pcols)
+    }
 
   /** Partition-column fields typed by METADATA-ONLY inference over the
     * manifest rel paths' `k=v` segments, mirroring Spark's partition
@@ -1478,10 +1542,10 @@ object PartitionSnapshots {
     }
   }
 
-  /** [[readWithRowPos]] restricted by manifest stats: partitions whose
-    * recorded bounds for `keyCol` provably exclude every value in
-    * `keysDf`'s single column are never constructed, listed, or scanned
-    * — the point-UPDATE/DELETE scan analogue of the merge path's
+  /** [[readWithRowPos]] restricted by manifest stats: partitions and
+    * files whose recorded bounds for `keyCol` provably exclude every
+    * value in `keysDf`'s single column are never constructed, listed, or
+    * scanned — the point-UPDATE/DELETE scan analogue of the merge path's
     * stats-pruned lookup. Margin-safe by the shared [[keyExclusion]]
     * contract (absent stats ⇒ keep; alias-aware for renamed keys), so
     * restriction never changes which rows the caller's OWN predicate
@@ -1489,89 +1553,9 @@ object PartitionSnapshots {
     * like [[readWithRowPos]]'s. */
   def readWithRowPosPruned(spark: SparkSession, table: String,
                            keyCol: String, keysDf: DataFrame): DataFrame = {
-    require(isManifested(spark, table),
-      s"readWithRowPosPruned: $table is not a manifested table")
-    val rv = currentRootVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(
-        s"readWithRowPosPruned: no committed root manifest at $table"))
-    val pinned = pinnedSchema(spark, table, rv)
-    val pred = pinned.flatMap(_.fields.find(_.name == keyCol))
-      .flatMap(f => keyExclusion(spark, keysDf, f.name, f.dataType,
-        fieldAliases(f)))
-    readRowPosExcluding(spark, table, pred)
-  }
-
-  /** [[readWithRowPos]] restricted by an arbitrary row CONDITION's
-    * stats compilation ([[condPossible]]) — the conditional
-    * `WHEN NOT MATCHED BY SOURCE AND <c>` scan: partitions and files
-    * whose recorded bounds prove NO row can satisfy `cond` are never
-    * constructed or read. Margin-safe end-to-end: an unsupported
-    * condition shape, a missing bound, or a non-ASCII string bound all
-    * read "maybe", so restriction can only skip IO — rows in an
-    * excluded file could neither fire a clause (the bounds refute the
-    * condition) nor be harmed by not being scanned (unmatched rows with
-    * no firing clause keep their files untouched). An unconditional
-    * clause has no `cond` to refute — callers pass the full scan then. */
-  private[graft] def readWithRowPosWhere(spark: SparkSession, table: String,
-      cond: org.apache.spark.sql.catalyst.expressions.Expression)
-      : DataFrame = {
-    require(isManifested(spark, table),
-      s"readWithRowPosWhere: $table is not a manifested table")
-    val rv = currentRootVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(
-        s"readWithRowPosWhere: no committed root manifest at $table"))
-    val possible = pinnedSchema(spark, table, rv)
-      .flatMap(st => condPossible(st, cond))
-    readRowPosExcluding(spark, table,
-      possible.map(p => (st: PartStats) => !p(st)))
-  }
-
-  /** Shared body of the pruned row-pos reads: drop partitions the
-    * exclusion predicate refutes at rel level, narrow the survivors to
-    * candidate FILES via the per-file sidecars ([[filePruneEntries]]),
-    * and serve the rest with row positions attached. The caller's own
-    * predicate re-applies in full, so the restriction only skips IO;
-    * row ordinals are PER-FILE, so a file-scoped read serves identical
-    * positions. All-excluded reads return an empty frame with the full
-    * row-pos shape, keeping the caller's plan well-typed. */
-  private def readRowPosExcluding(spark: SparkSession, table: String,
-      pred: Option[PartStats => Boolean]): DataFrame = {
-    val entries = rootManifest(spark, table).getOrElse(
-      throw new IllegalArgumentException(
-        s"readWithRowPos: no committed root manifest at $table"))
-    val rv = currentRootVersion(spark, table).get
-    val pinned = pinnedSchema(spark, table, rv)
-    val kept = pred match {
-      case Some(p) =>
-        val stats = rootStats(spark, table)
-        entries.view.filterKeys(rel => stats.get(rel).forall(ps => !p(ps)))
-          .toMap
-      case None => entries
-    }
-    val scanEntries = pred match {
-      case Some(p) => filePruneEntries(spark, table, kept, p)
-      case None => kept
-    }
-    readEntries(spark, table, scanEntries, pinned, rowPos = true,
-        stats = rootStats(spark, table))
-      .map(dropHidden(spark, table, _))
-      .getOrElse {
-        // every partition excluded (or empty): an empty frame with the
-        // full row-pos shape, so the caller's plan stays well-typed
-        import org.apache.spark.sql.types._
-        val pcols = partitionCols(spark, table)
-        val pinnedFields = pinned.map(_.fields.toSeq).getOrElse(Nil)
-        // a DDL-created table pins its partition columns' types
-        val pcolFields = pcols.map(c => pinnedFields.find(_.name == c)
-          .getOrElse(StructField(c, StringType)))
-        val base = pinnedFields.filterNot(f => pcols.contains(f.name)) ++
-          pcolFields ++
-          Seq(StructField("_pos_path", StringType),
-            StructField("_pos_ordinal", LongType))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(base.toArray))
-      }
+    val root = rowPosRoot(spark, table, "readWithRowPosPruned")
+    rowPosScan(spark, root,
+      keyPredicate(spark, root.schema, Seq(keyCol), keysDf))
   }
 
   /** Compile a (parsed, unresolved) row condition into a conservative
@@ -1687,35 +1671,6 @@ object PartitionSnapshots {
     if (usable) Some(compiled) else None
   }
 
-  /** FILE-SCOPED MERGE planning (Iceberg's file-level rewrite selection,
-    * evaluated from the [[writeFileStats]] sidecars — the per-file
-    * manifests): split each touched partition's state into
-    *
-    *  - SURVIVORS: parts — or individual files of a partially-surviving
-    *    part, as `vNNNNNNNN/<file>` file-scoped state tokens — whose
-    *    recorded key bounds the `excluded` predicate proves free of
-    *    every source key ([[numericKeyExcluded]] / [[stringKeyExcluded]]
-    *    — interval + optional point-set tests). Their bytes are never
-    *    read, rewritten, or moved; they keep their pending delete refs
-    *    and their original paths/mtimes. A part all of whose files
-    *    survive keeps its ORIGINAL token (no state churn).
-    *  - the REWRITE SET: every other file, returned delete-applied as
-    *    one DataFrame (partition columns recovered via basePath) for the
-    *    caller to merge with the source and re-stage.
-    *
-    * FLAT parts never survive (legacy pre-manifest files — the first
-    * MERGE folds them into a real version); EMPTY parts contribute
-    * nothing; a file with absent or non-numeric bounds is rewritten —
-    * absent stats mean "cannot prune", never "skip". At 100 TB this is
-    * what makes a small keyed MERGE O(files its keys intersect) instead
-    * of O(touched partitions): a 1-row update into a 10 000-file
-    * partition rewrites one file and re-manifests the other 9 999.
-    *
-    * Storage note: a version dir stays retention-protected WHOLE while
-    * any of its files survives by token, so a rewritten sibling's bytes
-    * linger until compaction folds the dir's last survivors — the same
-    * space-vs-write-amplification trade Iceberg makes, reclaimed by the
-    * ordinary [[compact]] cadence. */
   /** Exclusion tests for [[planFileScoped]]: may a file with the given
     * recorded bounds for the key column be PROVEN free of source keys?
     * Both are margin-safe — a borderline or unparseable bound means
@@ -1800,36 +1755,76 @@ object PartitionSnapshots {
       spark: SparkSession, table: String, entries: Map[String, String],
       excluded: PartStats => Boolean): Map[String, String] = {
     val pruned = inParallel(entries.toSeq.sortBy(_._1)) { case (rel, state) =>
-      val parts = parseParts(state).flatMap { case (b, dels) =>
-        if (b == Empty || b == Flat) Seq((b, dels))
-        else if (b.contains('/')) { // already file-scoped
-          val p = s"${relPath(table, rel)}/$VersionsDir/$b"
-          val dir = p.substring(0, p.lastIndexOf('/'))
-          val name = p.substring(p.lastIndexOf('/') + 1)
-          if (fileStats(spark, dir).toMap.get(name).exists(excluded)) Nil
-          else Seq((b, dels))
-        } else {
-          val dir = s"${relPath(table, rel)}/$VersionsDir/$b"
-          val perFile = fileStats(spark, dir)
-          val candidates = perFile.filterNot(f => excluded(f._2))
-          if (candidates.size == perFile.size) Seq((b, dels))
-          else candidates.map { case (n, _) => (s"$b/$n", dels) }
-        }
+      rel -> parseParts(state).flatMap { case (b, dels) =>
+        val files = splitPart(spark, table, rel, b, excluded)
+        // a part with no provably key-free file reads whole, token unchanged
+        if (!files.exists(_._3)) Seq((b, dels))
+        else files.collect { case (tok, _, false) => (tok, dels) }
       }
-      rel -> parts
     }
     pruned.collect { case (rel, ps) if ps.nonEmpty =>
       rel -> fmtParts(ps)
     }.toMap
   }
 
+  /** THE per-file split that keyed scans ([[filePruneEntries]]) and the
+    * file-scoped merge plan ([[planFileScoped]]) share: each data file of
+    * part `base` of partition `rel` as (its file-scoped state token, its
+    * path, whether its `_filestats` sidecar bounds prove it `excluded`).
+    * A dir part splits into its sidecar's files, a file-scoped token is
+    * its one file (absent from the sidecar: not excluded); EMPTY and FLAT
+    * parts carry no sidecar and split into nothing. */
+  private def splitPart(spark: SparkSession, table: String, rel: String,
+                        base: String, excluded: PartStats => Boolean)
+      : Seq[(String, String, Boolean)] =
+    if (base == Empty || base == Flat) Nil
+    else {
+      val v = base.takeWhile(_ != '/')
+      val dir = s"${relPath(table, rel)}/$VersionsDir/$v"
+      if (base.contains('/')) {
+        val name = base.substring(v.length + 1)
+        Seq((base, s"$dir/$name",
+          fileStats(spark, dir).toMap.get(name).exists(excluded)))
+      } else fileStats(spark, dir).map { case (name, st) =>
+        (s"$v/$name", s"$dir/$name", excluded(st))
+      }
+    }
+
+  /** FILE-SCOPED MERGE planning (Iceberg's file-level rewrite selection,
+    * evaluated from the [[writeFileStats]] sidecars — the per-file
+    * manifests): split each touched partition's state into
+    *
+    *  - SURVIVORS: parts — or individual files of a partially-surviving
+    *    part, as `vNNNNNNNN/<file>` file-scoped state tokens — whose
+    *    recorded key bounds the `excluded` predicate proves free of
+    *    every source key ([[numericKeyExcluded]] / [[stringKeyExcluded]]
+    *    — interval + optional point-set tests). Their bytes are never
+    *    read, rewritten, or moved; they keep their pending delete refs
+    *    and their original paths/mtimes. A part all of whose files
+    *    survive keeps its ORIGINAL token (no state churn).
+    *  - the REWRITE SET: every other file, returned delete-applied as
+    *    one DataFrame (partition columns recovered via basePath) for the
+    *    caller to merge with the source and re-stage.
+    *
+    * FLAT parts never survive (legacy pre-manifest files — the first
+    * MERGE folds them into a real version); EMPTY parts contribute
+    * nothing; a file with absent or non-numeric bounds is rewritten —
+    * absent stats mean "cannot prune", never "skip". At 100 TB this is
+    * what makes a small keyed MERGE O(files its keys intersect) instead
+    * of O(touched partitions): a 1-row update into a 10 000-file
+    * partition rewrites one file and re-manifests the other 9 999.
+    *
+    * Storage note: a version dir stays retention-protected WHOLE while
+    * any of its files survives by token, so a rewritten sibling's bytes
+    * linger until compaction folds the dir's last survivors — the same
+    * space-vs-write-amplification trade Iceberg makes, reclaimed by the
+    * ordinary [[compact]] cadence. */
   private[graft] def planFileScoped(
       spark: SparkSession, table: String, base: Map[String, String],
       touchedRels: Set[String],
       excluded: PartStats => Boolean,
       schema: Option[org.apache.spark.sql.types.StructType])
       : (Map[String, Seq[(String, Seq[String])]], Option[DataFrame]) = {
-    import org.apache.spark.sql.functions.broadcast
     // per-rel selection fans out on the bounded pool — the planning
     // cost of a 1000-partition MERGE is sidecar-read latency, which is
     // per-partition independent. Rewrite groups carry (delete refs,
@@ -1839,40 +1834,21 @@ object PartitionSnapshots {
     val perRel: Seq[(String, Seq[(String, Seq[String])],
                      Seq[((Seq[String], Seq[String]), String)])] =
       inParallel(touchedRels.toSeq.sorted) { rel =>
-        base.get(rel) match {
-          case None => (rel, Nil, Nil)
-          case Some(state) =>
-            val keep = Seq.newBuilder[(String, Seq[String])]
-            val rewrite = Seq.newBuilder[((Seq[String], Seq[String]), String)]
-            parseParts(state).foreach { case (b, dels) =>
-              if (b == Empty) () // no data to keep or read
-              else if (b == Flat)
-                stateDataPath(table, rel, b).foreach(p =>
-                  rewrite += (((dels, relCols(rel)), p)))
-              else if (b.contains('/')) {
-                // already file-scoped: survives whole or rewrites whole
-                val p = s"${relPath(table, rel)}/$VersionsDir/$b"
-                val dir = p.substring(0, p.lastIndexOf('/'))
-                val name = p.substring(p.lastIndexOf('/') + 1)
-                if (fileStats(spark, dir).toMap.get(name).exists(excluded))
-                  keep += ((b, dels))
-                else rewrite += (((dels, relCols(rel)), p))
-              } else {
-                val dir = s"${relPath(table, rel)}/$VersionsDir/$b"
-                val perFile = fileStats(spark, dir)
-                val (live, dead) = perFile.partition(f => excluded(f._2))
-                if (dead.isEmpty && perFile.nonEmpty)
-                  keep += ((b, dels)) // whole part survives, token unchanged
-                else {
-                  live.foreach { case (name, _) =>
-                    keep += ((s"$b/$name", dels)) }
-                  dead.foreach { case (name, _) =>
-                    rewrite += (((dels, relCols(rel)), s"$dir/$name")) }
-                }
-              }
-            }
-            (rel, keep.result(), rewrite.result())
+        val keep = Seq.newBuilder[(String, Seq[String])]
+        val rewrite = Seq.newBuilder[((Seq[String], Seq[String]), String)]
+        base.get(rel).toSeq.flatMap(parseParts).foreach { case (b, dels) =>
+          val files = splitPart(spark, table, rel, b, excluded)
+          if (b == Flat) // legacy files never survive: the merge folds them
+            stateDataPath(table, rel, b).foreach(p =>
+              rewrite += (((dels, relCols(rel)), p)))
+          else if (files.nonEmpty && files.forall(_._3))
+            keep += ((b, dels)) // whole part survives, token unchanged
+          else files.foreach { case (tok, p, ex) =>
+            if (ex) keep += ((tok, dels))
+            else rewrite += (((dels, relCols(rel)), p))
+          }
         }
+        (rel, keep.result(), rewrite.result())
       }
     val survivors =
       perRel.collect { case (rel, k, _) if k.nonEmpty => rel -> k }.toMap
@@ -1889,13 +1865,6 @@ object PartitionSnapshots {
     (survivors, df)
   }
 
-  /** The union schema pinned in root version `rv`'s slot (written by
-    * every commit since schema pinning; None for pre-upgrade slots,
-    * where reads fall back to footer inference). Iceberg keeps schemas
-    * in table metadata for the same two reasons: additive evolution
-    * (files that predate a column must read it as NULL, which inference
-    * from an arbitrary first footer silently drops) and metadata-speed
-    * reads (no footer sampling across 30 000 partitions). */
   private val AliasKey = "graft.aliases"
 
   /** Historical names a field answered to before renames — recorded as
@@ -1918,14 +1887,13 @@ object PartitionSnapshots {
                        (next: org.apache.spark.sql.types.StructType =>
                               org.apache.spark.sql.types.StructType): Unit =
     leased(spark, table, what) { _ =>
-      val cur = currentRootVersion(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"$what: $table has no committed root manifest"))
-      val pinned = pinnedSchema(spark, table, cur).getOrElse(
+      val root = resolveRoot(spark, table)
+      if (root.version.isEmpty) throw new IllegalStateException(
+        s"$what: $table has no committed root manifest")
+      val pinned = root.schema.getOrElse(
         throw new IllegalStateException(
           s"$what: $table's root slot pins no schema"))
-      val entries = resolveManifest(spark, s"$table/$RootDir", cur)
-      publishRoot(spark, table, entries, Map.empty,
+      publishRoot(spark, table, root, root.entries, Map.empty,
         graft.operators.Upsert.DefaultRetainVersions, Some(next(pinned)))
     }
 
@@ -2106,6 +2074,13 @@ object PartitionSnapshots {
         pinned.fields.updated(i, f.copy(dataType = to)))
     }
 
+  /** The union schema pinned in root version `rv`'s slot (written by
+    * every commit since schema pinning; None for pre-upgrade slots,
+    * where reads fall back to footer inference). Iceberg keeps schemas
+    * in table metadata for the same two reasons: additive evolution
+    * (files that predate a column must read it as NULL, which inference
+    * from an arbitrary first footer silently drops) and metadata-speed
+    * reads (no footer sampling across 30 000 partitions). */
   def pinnedSchema(spark: SparkSession, table: String,
                    rv: Long): Option[org.apache.spark.sql.types.StructType] =
     pinnedSchemaRaw(spark, table, rv).map(st =>
@@ -2195,25 +2170,22 @@ object PartitionSnapshots {
     * trails the newest committed version) the FULL `entries` map is
     * rebased. Old manifests age out under the same `retain` window as
     * the data versions they name — chain-aware: a kept delta always
-    * keeps its parents down to a full manifest. */
+    * keeps its parents down to a full manifest. `parentRoot` is the root
+    * the commit folds onto (a branch commit's is the BRANCH head).
+    * Returns the published version. */
   private def publishRoot(spark: SparkSession, table: String,
+                          parentRoot: Root,
                           entries: Map[String, String],
                           touched: Map[String, String], retain: Int,
                           schema: Option[org.apache.spark.sql.types.StructType]
                             = None,
                           touchedStats: Map[String, String] = Map.empty,
                           props: Map[String, String] = Map.empty,
-                          branch: Option[String] = None): Unit = {
+                          branch: Option[String] = None): Long = {
     val rt = s"$table/$RootDir"
     val f = fs(spark, new Path(rt))
     val committed = Snapshots.versions(spark, rt)
-    // a branch commit's parent is the BRANCH head, not the main pointer
-    val parent = branch match {
-      case Some(n) => Some(branchRef(spark, table, n).getOrElse(
-        throw new IllegalArgumentException(
-          s"commit to unknown branch '$n' at $table"))._1)
-      case None => currentRootVersion(spark, table)
-    }
+    val parent = parentRoot.version
     // walk the parent's actual delta chain: for main the contiguous
     // tail and the walk agree; for a branch whose head is no longer the
     // newest slot only the walk is meaningful
@@ -2236,12 +2208,9 @@ object PartitionSnapshots {
     // a full rebase carries every untouched partition's stats forward
     // from the parent fold; a delta line replaces state+stats together
     val stats: Map[String, String] =
-      (if (asDelta) Map.empty[String, String]
-       else parent.map { pv =>
-         resolveManifestFull(spark, rt, pv).toSeq.collect {
-           case (rel, (_, Some(s))) => rel -> s
-         }.toMap
-       }.getOrElse(Map.empty[String, String])) ++ touchedStats
+      (if (asDelta || parent.isEmpty) Map.empty[String, String]
+       else parentRoot.states.collect { case (rel, (_, Some(s))) => rel -> s }
+      ) ++ touchedStats
     def fmt(m: Map[String, String]): String = m.toSeq.sortBy(_._1)
       .map { case (rel, state) =>
         stats.get(rel) match {
@@ -2361,16 +2330,19 @@ object PartitionSnapshots {
       val slot = new Path(Snapshots.versionPath(rt, next))
       if (CommitIo.current.claimSlot(f, tmp, slot)) {
         f.create(new Path(slot, "_SUCCESS"), true).close()
-        branch match {
+        val main = branch match {
           case Some(n) =>
             // commit point for a branch: advance only the branch ref —
             // the main pointer and every main reader are untouched
             val (_, base) = branchRef(spark, table, n).get
             writeBranchRef(spark, table, n, head = next, base = base)
-          case None => Snapshots.publish(spark, rt, next)
+            Snapshots.currentVersion(spark, rt)
+          case None =>
+            Snapshots.publish(spark, rt, next)
+            Some(next)
         }
-        vacuumRoot(spark, rt, retain)
-        return
+        main.foreach(vacuumRoot(spark, rt, retain, _))
+        return next
       }
       attempt += 1
     }
@@ -2384,10 +2356,10 @@ object PartitionSnapshots {
     * each kept delta folds through — deleting a parent out from under a
     * live delta would break every read of it. Chains are bounded by
     * [[RebaseEvery]], so the extra retention is at most one rebase
-    * window. */
-  private def vacuumRoot(spark: SparkSession, rt: String, retain: Int): Unit = {
+    * window. `cur` is the version the main pointer serves. */
+  private def vacuumRoot(spark: SparkSession, rt: String, retain: Int,
+                         cur: Long): Unit = {
     val committed = Snapshots.versions(spark, rt)
-    val cur = Snapshots.currentVersion(spark, rt).getOrElse(return)
     // tagged roots and branch heads are retention-exempt until dropped
     val tagged = {
       val dir = new Path(s"$rt/$TagsDir")
@@ -2540,24 +2512,15 @@ object PartitionSnapshots {
     // the parent, resolved ONCE for both the base states and the carried
     // stats — BEFORE claiming: on a first commit, scanStates' fallback
     // must see the pre-commit states, not the slots this commit creates
-    val parentV = branch match {
-      case Some(n) => Some(branchRef(spark, table, n).getOrElse(
-        throw new IllegalArgumentException(
-          s"commit to unknown branch '$n' at $table"))._1)
-      case None => currentRootVersion(spark, table)
-    }
-    val parent = phase("commit: base manifest")(
-      parentV.map(resolveManifestFull(spark, s"$table/$RootDir", _)))
-    val base = parent.map(_.map { case (rel, (st, _)) => rel -> st })
-      .getOrElse(scanStates(spark, table, cols))
+    val parent = resolveRoot(spark, table, branch = branch)
+    val base = parent.entries
     def prior(rel: String): Parts =
       base.get(rel).map(parseParts(_).filterNot(_._1 == Empty)).getOrElse(Nil)
-    val stagedStats = phase("commit: staging walk + harvest")(
-      staging.toSeq.flatMap { s =>
-        val dirs = partitionDirs(spark, s, cols.size)
-        val folded = harvestAndSidecar(spark, dirs.map(relPath(s, _)))
-        dirs.map(rel => rel -> folded(relPath(s, rel)))
-      }.toMap)
+    val stagedStats = staging.toSeq.flatMap { s =>
+      val dirs = partitionDirs(spark, s, cols.size)
+      val folded = harvestAndSidecar(spark, dirs.map(relPath(s, _)))
+      dirs.map(rel => rel -> folded(relPath(s, rel)))
+    }.toMap
     val carried: Map[String, Parts] =
       (stagedStats.keySet ++ touched.keySet).map { rel =>
         rel -> touched.getOrElse(rel, if (replaceStaged) Nil else prior(rel))
@@ -2583,11 +2546,11 @@ object PartitionSnapshots {
         // claim on the bounded pool, DEEPEST depth groups first: a
         // retired-spec staged dir can parent a new-spec staged dir, and a
         // parent rename must never swallow a child
-        phase("commit: claim slots")(depthWaves(toClaim).foreach { g =>
+        depthWaves(toClaim).foreach { g =>
           claimed = inParallel(g)(rel => rel -> claimSlot(spark,
             relPath(table, rel), new Path(relPath(root, rel)), wap))
             .toList ::: claimed
-        })
+        }
         val slot = claimed.toMap
         val st = rels.map { rel =>
           val parts = carried(rel) ++
@@ -2619,20 +2582,20 @@ object PartitionSnapshots {
           }
           throw t
       }
-    phase("commit: seal slots")(inParallel(claimed) { case (rel, v) =>
+    inParallel(claimed) { case (rel, v) =>
       sealSlot(spark, new Path(Snapshots.versionPath(relPath(table, rel), v)),
         wap)
-    })
+    }
     val sidecars =
       new java.util.concurrent.ConcurrentHashMap[String, Map[String, PartStats]]()
     def sidecarOf(dir: String): Map[String, PartStats] =
       sidecars.computeIfAbsent(dir, d => fileStats(spark, d).toMap)
-    val touchedStats = phase("commit: carried stats")(inParallel(rels) { rel =>
+    val touchedStats = inParallel(rels) { rel =>
       val kept = carried(rel)
       val keptStats: Seq[Option[PartStats]] =
         if (kept.isEmpty) Nil
         else if (kept.map(_._1) == prior(rel).map(_._1))
-          Seq(parent.flatMap(_.get(rel)).flatMap(_._2).map(decodeStats))
+          Seq(parent.stats.get(rel))
         else kept.map { case (b, _) =>
           stateDataPath(table, rel, b).flatMap { p =>
             if (b.contains('/'))
@@ -2644,20 +2607,20 @@ object PartitionSnapshots {
       if (keptStats.exists(_.isEmpty)) None
       else Some(rel -> encodeStats((keptStats.flatten ++ fresh.get(rel))
         .reduceOption(mergeStats).getOrElse(PartStats(0L, Map.empty))))
-    }.flatten.toMap)
-    phase("commit: root publish")(publishRoot(spark, table, base ++ states,
-      states, retain, schema, touchedStats, props, branch)) // commit point
+    }.flatten.toMap
+    val head = publishRoot(spark, table, parent, base ++ states, states,
+      retain, schema, touchedStats, props, branch) // commit point
     if (branch.isEmpty && claimed.nonEmpty) {
       // pointer-cache swaps and retention are per-partition independent:
       // fan out on the bounded pool (the root publish above was the
       // single serial commit point)
-      phase("commit: pointer swaps")(inParallel(claimed) { case (rel, v) =>
+      inParallel(claimed) { case (rel, v) =>
         Snapshots.publish(spark, relPath(table, rel), v)
-      })
-      val prot = referencedVersions(spark, table)
-      phase("commit: retention")(inParallel(claimed) { case (rel, _) =>
+      }
+      val prot = referencedVersions(spark, table, head)
+      inParallel(claimed) { case (rel, _) =>
         finishPartitionCommit(spark, table, rel, retain, prot)
-      })
+      }
     }
   }
 
@@ -2779,14 +2742,8 @@ object PartitionSnapshots {
     * whose entries carry no stats (pre-stats commits, FLAT migrations)
     * are absent. */
   def rootStats(spark: SparkSession, table: String,
-                asOf: Long = -1L): Map[String, PartStats] = {
-    val rt = s"$table/$RootDir"
-    val v = if (asOf > 0) asOf
-      else currentRootVersion(spark, table).getOrElse(return Map.empty)
-    resolveManifestFull(spark, rt, v).collect {
-      case (rel, (_, Some(s))) => rel -> decodeStats(s)
-    }
-  }
+                asOf: Long = -1L): Map[String, PartStats] =
+    resolveRoot(spark, table, asOf).stats
 
   /** METADATA-ONLY row count (Iceberg's count(*) pushdown): the sum of
     * every live partition's manifest-recorded record count — zero data
@@ -2827,25 +2784,19 @@ object PartitionSnapshots {
                        lo: Double, hi: Double,
                        asOf: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val all = read(spark, table, asOf)
-    val stats = rootStats(spark, table, asOf)
-    val entries = rootManifest(spark, table, asOf).getOrElse(
-      return all.where(col(column).between(lo, hi)))
-    val kept = entries.filter { case (rel, _) =>
-      stats.get(rel).flatMap(_.cols.get(column)) match {
-        case Some((mn, mx)) =>
-          (ParquetStats.numeric(mn), ParquetStats.numeric(mx)) match {
-            case (Some(a), Some(b)) => b >= lo && a <= hi
-            case _ => true
-          }
-        case None => true
-      }
+    val root = resolveRoot(spark, table, asOf)
+    def excluded(st: PartStats): Boolean = st.cols.get(column).exists {
+      case (mn, mx) =>
+        (ParquetStats.numeric(mn), ParquetStats.numeric(mx)) match {
+          case (Some(a), Some(b)) => b < lo || a > hi
+          case _ => false
+        }
     }
-    val rv = if (asOf > 0) asOf
-      else currentRootVersion(spark, table).get
-    readEntries(spark, table, kept, pinnedSchema(spark, table, rv))
-      .map(_.where(col(column).between(lo, hi)))
-      .getOrElse(all.limit(0).where(col(column).between(lo, hi)))
+    scan(spark, root, Some(excluded))
+      .orElse(scan(spark, root).map(_.limit(0))) // every partition pruned
+      .getOrElse(throw new IllegalArgumentException(
+        s"no committed partition snapshots at $table"))
+      .where(col(column).between(lo, hi))
   }
 
   private val TagsDir = "_tags"
@@ -3135,7 +3086,7 @@ object PartitionSnapshots {
       else throw new graft.operators.Upsert.CommitConflictException(
         s"fastForwardRoot(rebase): branch '$name' and main evolved the " +
           s"schema DIFFERENTLY since fork v$base — re-fork and re-apply")
-    val curFull = resolveManifestFull(spark, rt, cur)
+    val main = rootAt(spark, table, Some(cur))
     val headFull = resolveManifestFull(spark, rt, head)
     // a drop commits EMPTY, never removes the rel — every branch-changed
     // rel resolves at the head (Empty fallback is belt-and-braces)
@@ -3145,14 +3096,12 @@ object PartitionSnapshots {
     val touchedStats = branchChanged.toSeq.flatMap { rel =>
       headFull.get(rel).flatMap(_._2).map(rel -> _)
     }.toMap
-    val entries = curFull.map { case (rel, (st, _)) => rel -> st } ++
-      touchedEntries
-    publishRoot(spark, table, entries, touchedEntries, retain,
+    val newMain = publishRoot(spark, table, main,
+      main.entries ++ touchedEntries, touchedEntries, retain,
       schema = schemaForRebase, touchedStats = touchedStats,
       props = Map("graft.rebase.branch" -> name,
         "graft.rebase.from" -> f"v$head%08d",
         "graft.rebase.base" -> f"v$base%08d"))
-    val newMain = currentRootVersion(spark, table).get
     writeBranchRef(spark, table, name, head = newMain, base = newMain)
     newMain
   }
@@ -3359,11 +3308,13 @@ object PartitionSnapshots {
     * data; tags pin their versions indefinitely (tagRoot's contract).
     * Deliberately NOT every retained root: untagged time travel keeps
     * its documented expire-snapshots semantics — a root older than the
-    * partition retention window may fail LOUDLY to resolve. */
-  private def referencedVersions(spark: SparkSession, table: String)
+    * partition retention window may fail LOUDLY to resolve. `head` is
+    * the version the main pointer serves. */
+  private def referencedVersions(spark: SparkSession, table: String,
+                                 head: Long)
       : Map[String, (Set[Long], Boolean)] = {
     val rt = s"$table/$RootDir"
-    val live = currentRootVersion(spark, table).toSet ++
+    val live = Set(head) ++
       rootTags(spark, table).values ++ rootBranches(spark, table).values
     val acc = scala.collection.mutable.Map.empty[String, (Set[Long], Boolean)]
     live.foreach { v =>
@@ -3586,8 +3537,7 @@ object PartitionSnapshots {
       // dir segments, exactly like the raw read before — so the rel's own
       // dir columns, which no file of it holds, leave the read schema
       // even where the pin carries them.
-      val foldPinned = currentRootVersion(spark, table)
-        .flatMap(pinnedSchema(spark, table, _))
+      val foldPinned = lease.root.schema
       val foldPromoted = promotedSpecCols(spark, table)
       todo.foreach { case (rel, sidesIn, _, _, bytes) =>
         val nOut = math.max(1,
@@ -3721,64 +3671,27 @@ object PartitionSnapshots {
         s"deleteKeys: key columns $keyCols must be data columns, not " +
           s"partition columns $cols")
       val base = lease.base
-      // STATS-PRUNED touched-partition scan (same machinery as the
-      // merge's matched-key lookup): partitions whose manifest key
-      // bounds provably exclude every delete key cannot hold a doomed
-      // row — only the remainder is constructed and scanned. Absent
-      // stats keep the partition; all-pruned means no key matches
-      // anywhere (the documented no-op `false`).
-      val kDedup = keys.dropDuplicates(keyCols)
-      val pruneCol = currentRootVersion(spark, table)
-        .flatMap(pinnedSchema(spark, table, _))
-        .flatMap(pinned => keyCols.flatMap(c =>
-          pinned.fields.find(_.name == c)).headOption)
-      val pred = pruneCol.flatMap(f =>
-        keyExclusion(spark, kDedup, f.name, f.dataType,
-          fieldAliases(f)))
-      val kept = pred match {
-        case Some(p) =>
-          val stats = rootStats(spark, table)
-          base.view.filterKeys(rel =>
-            stats.get(rel).forall(ps => !p(ps))).toMap
-        case None => base
-      }
-      // the scan below exists only to find which partitions actually
-      // hold a doomed row — narrow it further to the candidate FILES
-      // via the per-file sidecars ([[filePruneEntries]]): partition
-      // bounds admit a key whenever ANY file might hold it, but only
-      // the admitting files need reading
-      val scanEntries = pred match {
-        case Some(p) => filePruneEntries(spark, table, kept, p)
-        case None => kept
-      }
-      val current = readEntries(spark, table, scanEntries)
-        .getOrElse(return false)
+      // STATS-PRUNED touched-partition scan (the merge's key predicate):
+      // partitions and files whose key bounds provably exclude every
+      // delete key cannot hold a doomed row — only the remainder is
+      // constructed and scanned, raw. Absent stats keep the partition;
+      // all-pruned means no key matches anywhere (the documented no-op
+      // `false`).
+      val k = keys.dropDuplicates(keyCols)
+      val root = lease.root
+      val current = scan(spark, root,
+        keyPredicate(spark, root.schema, keyCols, k), files = true,
+        hidden = true, pinned = false).getOrElse(return false)
       keyCols.foreach(c => require(current.columns.contains(c),
         s"deleteKeys: key column '$c' is not a column of $table"))
-      // Same guard as upsert's rewrite path: timestamp partition values
-      // are formatted by the writer with a pattern Row.toString doesn't
-      // reproduce — the rel reconstruction below would miss the on-disk
-      // name and target a fabricated partition. Reject loudly.
-      current.schema.fields.filter(f => cols.contains(f.name)).foreach { f =>
-        require(f.dataType != org.apache.spark.sql.types.TimestampType &&
-          f.dataType != org.apache.spark.sql.types.TimestampNTZType,
-          s"deleteKeys: timestamp-typed partition column '${f.name}' is " +
-            "not supported (partition by the derived DATE instead)")
-      }
-      val k = kDedup
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      requireNoTimestampPartitions("deleteKeys", current.schema, cols)
       import org.apache.spark.sql.functions.{broadcast, col}
       // touched partitions: column-pruned semi-join (bounded collect —
       // one row per touched PARTITION, never per key)
-      val touchedRels = current
+      val touchedRels = partitionSegments(cols, current
         .join(broadcast(k), keyCols, "left_semi")
-        .select(cols.map(col): _*).distinct().collect()
-        .map(r => cols.zip(r.toSeq).map { case (c, v) =>
-          val dirVal =
-            if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-            else ExternalCatalogUtils.escapePathName(v.toString)
-          s"${ExternalCatalogUtils.escapePathName(c)}=$dirVal"
-        }.mkString("/")).toSet
+        .select(cols.map(col): _*).distinct().collect().toSeq)
+        .map(m => cols.map(m).mkString("/")).toSet
       if (touchedRels.isEmpty) return false
       // validate BEFORE staging the delete file (no slot leaked on abort)
       touchedRels.toSeq.sorted.foreach(rel =>
@@ -4151,14 +4064,15 @@ object PartitionSnapshots {
   /** One operation's hold on a table's writer lease ([[leased]]). */
   private final class Lease(spark: SparkSession, table: String,
                             token: String) {
-    /** The manifest a data commit starts from — the current root's, or a
-      * directory walk's before the table's first root — read after
-      * sweeping the cold staging roots a crashed writer left. */
-    lazy val base: Map[String, String] = {
+    /** The root a data commit starts from — its entries are the current
+      * root's, or the on-disk states before the table's first root —
+      * resolved after sweeping the cold staging roots a crashed writer
+      * left. */
+    lazy val root: Root = {
       cleanupStaging(spark, table)
-      rootManifest(spark, table)
-        .getOrElse(scanStates(spark, table, partitionCols(spark, table)))
+      resolveRoot(spark, table)
     }
+    def base: Map[String, String] = root.entries
     def assertHeld(): Unit =
       graft.operators.Upsert.assertHeld(spark, table, token)
     def stageThen(df: DataFrame, cols: Seq[String])

@@ -182,6 +182,31 @@ class MergeSqlSpec extends SparkSpec {
     PartitionSnapshots.currentRootVersion(spark, s"$wh/t").get shouldBe pre + 1
   }
 
+  test("WHEN NOT MATCHED clauses refuse target references instead of inserting NULL") {
+    val wh = tmpDir("msqlnmt")
+    Upsert.upsert(spark, s"$wh/t", Seq((1, 10.0)).toDF("k", "v"), Seq("k"))
+    Seq((1, 1.0), (2, 2.0)).toDF("k", "v")
+      .createOrReplaceTempView("msql_nmt_src")
+    val cat = new Catalog(spark, wh)
+    def rows = cat.read("t").collect()
+      .map(r => (r.getInt(0), Option(r.get(1)))).toSet
+    // an unmatched source row has no target row to read
+    an[IllegalArgumentException] should be thrownBy cat.sql(
+      """MERGE INTO t t USING msql_nmt_src s ON t.k = s.k
+        |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, t.v)""".stripMargin)
+    an[IllegalArgumentException] should be thrownBy cat.sql(
+      """MERGE INTO t t USING msql_nmt_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET v = s.v
+        |WHEN NOT MATCHED AND t.v IS NULL THEN INSERT *""".stripMargin)
+    rows shouldBe Set((1, Some(10.0)))
+    // source references (and names Spark resolves itself) still insert
+    cat.sql(
+      """MERGE INTO t t USING msql_nmt_src s ON t.k = s.k
+        |WHEN NOT MATCHED AND s.v > 0 AND current_date IS NOT NULL
+        |  THEN INSERT (k, v) VALUES (s.k, s.v * 10)""".stripMargin)
+    rows shouldBe Set((1, Some(10.0)), (2, Some(20.0)))
+  }
+
   test("assignment-list MERGE on a FLAT table lands through one keyed upsert") {
     val wh = tmpDir("msqlasgf")
     Upsert.upsert(spark, s"$wh/t",

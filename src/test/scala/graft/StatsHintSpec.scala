@@ -86,6 +86,13 @@ class StatsHintSpec extends SparkSpec {
     pruned.keySet shouldBe Set("part=p1")
     val parts = pruned("part=p1").split("&")
     parts.length shouldBe 1
+    // the file-scoped merge plan keeps the other side of the same split:
+    // the part the scan dropped survives whole, under its own token
+    val (survivors, _) = PartitionSnapshots.planFileScoped(spark, t, entries,
+      Set("part=p1"), pred, None)
+    survivors("part=p1").map(_._1) should contain(
+      entries("part=p1").split("&")(1))
+    survivors("part=p1").map(_._1) should not contain parts.head
 
     // a key in NO part prunes the rel away entirely
     val none = PartitionSnapshots.keyExclusion(spark,

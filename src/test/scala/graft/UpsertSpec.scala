@@ -399,6 +399,43 @@ class UpsertSpec extends SparkSpec {
       Set((1, "a", 10), (2, "b2", 99), (3, "c", 30), (7, "g", 70))
   }
 
+  test("a read resolves its root once; a keyed upsert reads the root " +
+      "pointer once to plan and once to commit") {
+    import graft.sources.PartitionSnapshots
+    val path = tmpDir("upsertroot") + "/t"
+    Upsert.upsert(spark, path, Seq((1, "p1", 10), (2, "p2", 20))
+      .toDF("k", "part", "v"), Seq("k"), partitionCols = Seq("part"))
+    Upsert.upsert(spark, path, Seq((3, "p1", 30)).toDF("k", "part", "v"),
+      Seq("k"), partitionCols = Seq("part"))
+    // the current root is a delta folding onto a full manifest
+    val chain = Seq(s"$path/_root/_versions/v00000001/manifest",
+      s"$path/_root/_versions/v00000002/delta")
+    chain.foreach(new java.io.File(_).isFile shouldBe true)
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.opencount.impl", classOf[OpenCountingFs].getName)
+    conf.setBoolean("fs.opencount.impl.disable.cache", true)
+    val counted = s"opencount://$path"
+    /** The root-chain files `op` opened, once per open. */
+    def rootOpens(op: => Unit): Seq[String] = {
+      OpenCountingFs.opened.clear()
+      op
+      OpenCountingFs.opened.asScala.toSeq
+        .map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath)
+        .filter(_.contains("/_root/"))
+    }
+    val read = rootOpens(PartitionSnapshots.read(spark, counted).collect())
+    read.count(_ == s"$path/_root/_current") shouldBe 1
+    read.filter(p => p.endsWith("/manifest") || p.endsWith("/delta"))
+      .sorted shouldBe chain
+    val upsert = rootOpens(Upsert.upsert(spark, counted,
+      Seq((1, "p1", 11)).toDF("k", "part", "v"), Seq("k"),
+      partitionCols = Seq("part")))
+    upsert.count(_ == s"$path/_root/_current") should be <= 2
+    Upsert.read(spark, path).collect()
+      .map(r => (r.getAs[Int]("k"), r.getAs[Int]("v"))).toSet shouldBe
+      Set((1, 11), (2, 20), (3, 30))
+  }
+
   test("append and insert-only commits open no prior part; a file-scoped " +
       "merge opens only its survivors' sidecars") {
     import graft.sources.PartitionSnapshots
